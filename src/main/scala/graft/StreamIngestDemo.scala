@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   *      containment threshold, the window width and the gram width are
   *      each index's DDL),
   *   2. the remaining 80% arrives as a Structured Streaming flow in
-  *      rate-limited waves, fanned into `streamIntoBm25` /
-  *      `streamIntoIvf` / `streamIntoSignLsh` / `streamIntoPq` /
-  *      `streamIntoContainment` / `streamIntoWindows` /
-  *      `streamIntoPhrase` (commit-marker batches — each wave is visible
-  *      to the next load the moment its marker lands),
+  *      rate-limited waves, fanned through the one `IndexStore.stream`
+  *      hook into `appendBatchBm25` / `appendBatchIvf` /
+  *      `appendBatchSignLsh` / `appendBatchPq` / `appendBatchContainment`
+  *      / `appendBatchWindows` / `appendBatchPhrase` (commit-marker
+  *      batches — each wave is visible to the next load the moment its
+  *      marker lands),
   *   3. MID-STREAM, after each wave, the serving-side queries run against
   *      consistent snapshots (`load*`): BM25 top-10, ball-cover-exact
   *      batch kNN over the growing IVF, incremental near-dup dedup of the
@@ -92,22 +93,24 @@ object StreamIngestDemo {
     // shared buffer, so fanning one stream into three sinks would race
     val docStreams = Seq.fill(4)(MemoryStream[(Long, String)](spark))
     val embStreams = Seq.fill(3)(MemoryStream[(Long, Seq[Double])](spark))
+    val docDfs = docStreams.map(_.toDF().toDF("doc_id", "text"))
+    val embDfs = embStreams.map(_.toDF().toDF("vec_id", "embedding"))
     val queries = Seq(
-      IndexStore.streamIntoBm25(docStreams(0).toDF().toDF("doc_id", "text"),
-        "doc_id", "text", dir("bm25"), dir("ck_bm25")),
-      IndexStore.streamIntoContainment(docStreams(1).toDF().toDF("doc_id", "text"),
-        "doc_id", "text", dir("cont"), dir("ck_cont")),
-      IndexStore.streamIntoWindows(docStreams(2).toDF().toDF("doc_id", "text"),
-        "doc_id", "text", dir("win"), dir("ck_win")),
-      IndexStore.streamIntoPhrase(docStreams(3).toDF().toDF("doc_id", "text"),
-        "doc_id", "text", dir("phrase"), dir("ck_phrase")),
-      IndexStore.streamIntoIvf(embStreams(0).toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", dir("ivf"), dir("ck_ivf")),
-      IndexStore.streamIntoSignLsh(embStreams(1).toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", graft.embed.Embedder.TestdataDim,
-        dir("lsh"), dir("ck_lsh")),
-      IndexStore.streamIntoPq(embStreams(2).toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", dir("pq"), dir("ck_pq")),
+      IndexStore.stream(docDfs(0), dir("ck_bm25"))(
+        IndexStore.appendBatchBm25(_, "doc_id", "text", dir("bm25"), _)),
+      IndexStore.stream(docDfs(1), dir("ck_cont"))(
+        IndexStore.appendBatchContainment(_, "doc_id", "text", dir("cont"), _)),
+      IndexStore.stream(docDfs(2), dir("ck_win"))(
+        IndexStore.appendBatchWindows(_, "doc_id", "text", dir("win"), _)),
+      IndexStore.stream(docDfs(3), dir("ck_phrase"))(
+        IndexStore.appendBatchPhrase(_, "doc_id", "text", dir("phrase"), _)),
+      IndexStore.stream(embDfs(0), dir("ck_ivf"))(
+        IndexStore.appendBatchIvf(_, "vec_id", "embedding", dir("ivf"), _)),
+      IndexStore.stream(embDfs(1), dir("ck_lsh"))(
+        IndexStore.appendBatchSignLsh(_, "vec_id", "embedding",
+          graft.embed.Embedder.TestdataDim, dir("lsh"), _)),
+      IndexStore.stream(embDfs(2), dir("ck_pq"))(
+        IndexStore.appendBatchPq(_, "vec_id", "embedding", dir("pq"), _)),
     )
 
     val restDocs = docs.where(col("doc_id") % 5 =!= 0)

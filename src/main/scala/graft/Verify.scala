@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is reported on stderr and as one `{"name", "exception",
+  * "message"}` record in `failures.json` beside `oracle_sql.json` (an
+  * empty array when every query ran); the remaining queries still run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (local iteration only; the driver passes 2): a
@@ -25,13 +28,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some((name, e))
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,6 +56,12 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures.map {
+      case (name, e) =>
+        s"{${q("name")}: ${q(name)}, ${q("exception")}: " +
+          s"${q(e.getClass.getName)}, ${q("message")}: " +
+          s"${Option(e.getMessage).fold("null")(q)}}"
+    }.mkString("[", ",\n", "]\n"))
     spark.stop()
   }
 }

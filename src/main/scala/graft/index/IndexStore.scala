@@ -2,7 +2,8 @@ package graft.index
 
 import graft.search.TextSearch
 import graft.search.TextSearch.Bm25Index
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.util.Par
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index DDL as batch jobs — the Spark rendition of the reference's
@@ -50,32 +51,34 @@ object IndexStore {
       c: String): org.apache.spark.sql.DataFrame =
     df.hint("rebalance", col(c))
 
-  /** Run independent per-family actions from a small thread pool
-    * (optimization guide §2.6 — overlap independent jobs): Spark's
-    * scheduler happily runs several jobs at once inside one application;
-    * the fleet loops were only sequential because the driver called them
-    * sequentially, so each family's job tail idled the whole cluster
-    * before the next family started. A few actions in flight lets the
-    * next family's tasks back-fill freed executors. Results keep input
-    * order; the first failure is rethrown (its cause, not the
-    * ExecutionException wrapper) after pending work is cancelled —
-    * per-family idempotency (commit markers) already makes a partially
-    * applied fleet re-runnable, which is the same property that makes
-    * concurrent submission safe. */
-  private def inParallel[A, B](xs: Seq[A], maxInFlight: Int = 8)(
-      f: A => B): Seq[B] =
-    if (xs.lengthCompare(1) <= 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(xs.size, maxInFlight))
-      try {
-        val futs = xs.map(x => pool.submit(
-          new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
-        futs.map(fu => try fu.get() catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        })
-      } finally pool.shutdownNow()
-    }
+  /** Streaming upkeep for every persisted family: each micro-batch of
+    * `df` becomes one wave, `wave(batch, foreachBatch id)`. Pass the
+    * family's append (`appendBatchBm25(_, "id", "text", path, _)`) to
+    * keep an index current as documents arrive — each completed batch is
+    * visible to the next load — or its delete
+    * (`deleteBatchIvf(_, "id", "emb", path, _, issuer = checkpoint)`) to
+    * drain a GDPR request queue at micro-batch cadence and cost. Deletes
+    * commit in their family's delete-marker namespace, so an erasure
+    * stream never collides with an append stream's ids; the families
+    * whose deletes take an `issuer` remap a fresh checkpoint's ids
+    * (batch ids from 0) onto the family's committed clock
+    * ([[resolveDeleteWave]]) instead of crash-looping behind ingest
+    * waves that are already ahead. Grams deletes are deliberately not
+    * fed from a queue: its fingerprint-only deletion cannot dedupe
+    * repeated ids, and a queue-fed stream is exactly where repeats
+    * happen (two requests naming one user); wave-at-a-time calls keep
+    * that boundary visible. The summary family refuses deletion
+    * outright ([[deleteBatchSummary]]). */
+  def stream(df: org.apache.spark.sql.DataFrame, checkpoint: String)(
+      wave: (org.apache.spark.sql.DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        wave(b, id)
+      }
+      .start()
 
   // ------------------------------------------------------------------ BM25
   //
@@ -270,9 +273,9 @@ object IndexStore {
     * or predates provenance recording — otherwise the batch remaps past
     * the colliding marker and its deletions still apply.
     *
-    * Issuer discipline: the [[streamDeletesIntoBm25]]-family wrappers
-    * pass their CHECKPOINT PATH as the issuer, so independent erasure
-    * streams are automatically distinct. Direct deleteBatch* callers
+    * Issuer discipline: erasure streams ([[stream]]) pass their
+    * CHECKPOINT PATH as the issuer, so independent erasure streams are
+    * automatically distinct. Direct deleteBatch* callers
     * share the default issuer: run at most one direct-call erasure
     * issuer per family (or pass distinct issuers), and never reuse a
     * caller-controlled wave id across issuers — two same-issuer calls
@@ -364,22 +367,6 @@ object IndexStore {
       .partitionBy("batch")
       .parquet(s"$path/stats")
   }
-
-  /** Streaming index upkeep: incoming documents (append-only stream) keep
-    * the persisted BM25 index current via `foreachBatch` — the streaming
-    * rendition of the reference's offline `indexes.py` lifecycle. Searches
-    * [[loadBm25]] a fresh snapshot per query, so each completed batch is
-    * immediately visible. */
-  def streamIntoBm25(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchBm25(b, idCol, textCol, path, id)
-      }
-      .start()
 
   /** Consistent snapshot at the latest commit marker: only committed
     * batches are visible (partition-pruned `batch IN (...)`), so loading
@@ -539,16 +526,26 @@ object IndexStore {
     * run it in the index's offline maintenance window, not concurrently
     * with readers. Post-condition: one batch=-1 partition per table,
     * identical search results. */
-  /** Shared delete-then-rename swap for every compact* variant: replace
-    * each live table dir under `path` with its freshly staged counterpart,
-    * then drop the staging dir. ONE definition of the swap protocol — the
-    * crash-window caveat (offline maintenance, not concurrent with
-    * readers) lives with the callers' scaladoc. */
-  private def swapStaged(spark: SparkSession, path: String, staged: String,
-      dirs: Seq[String]): Unit = {
+  /** The shared compaction tail of every compact* variant. When the
+    * family keeps a dedicated fingerprint sidecar, `fprintMarker` names
+    * its commit-marker dir and the recorded fingerprint is staged to
+    * survive the fold ([[stageFprint]]). Then each live table dir in
+    * `dirs` is replaced by its counterpart staged under `path/.compact`
+    * (delete-then-rename — the crash-window caveat, offline maintenance
+    * not concurrent with readers, lives with the callers' scaladoc), the
+    * staging dir is dropped, and the `purge` dirs are physically deleted:
+    * the tombstones the snapshot already excluded, and any family-own
+    * leftovers. A crash before the purge leaves orphans the folded
+    * markers no longer commit — no loader reads them. */
+  private def finishFold(spark: SparkSession, path: String,
+      fprintMarker: Option[String], dirs: Seq[String], purge: Seq[String])
+      : Unit = {
+    val staged = s"$path/.compact"
+    val fprintDirs = fprintMarker.toSeq.flatMap(m =>
+      stageFprint(spark, path, s"$path/$m", staged))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    for (d <- dirs) {
+    for (d <- dirs ++ fprintDirs) {
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
       // rename returns FALSE on failure rather than throwing (HDFS
       // semantics) — at this point the live dir is already deleted, so a
@@ -562,6 +559,7 @@ object IndexStore {
           s"is intact under $staged — restore by moving its dirs into place")
     }
     fs.delete(new org.apache.hadoop.fs.Path(staged), true)
+    purge.foreach(d => fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
   }
 
   def compactBm25(spark: SparkSession, path: String): Unit = {
@@ -574,19 +572,12 @@ object IndexStore {
     val staged = s"$path/.compact"
     writeBase(snapshot, staged)
     writeAsofFloor(spark, floor, s"$staged/asof_floor")
-    val fprintDirs = stageFprint(spark, path, s"$path/stats", staged)
     // asof_floor swaps FIRST: a crash mid-swap then over-refuses
     // (floor advanced, history still intact) instead of serving folded
     // data under a stale floor — the silent wrong answer the floor
     // exists to prevent
-    swapStaged(spark, path, staged,
-      Seq("asof_floor", "postings", "term_df", "stats") ++ fprintDirs)
-    // tombstones are physically purged (the snapshot excluded them); a
-    // crash before this delete leaves orphans the folded markers no
-    // longer commit — no loader reads them
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("stats"),
+      Seq("asof_floor", "postings", "term_df", "stats"), Seq("tombstones"))
   }
 
   // -------------------------------------------------------------- sign-LSH
@@ -681,21 +672,6 @@ object IndexStore {
       .parquet(s"$path/commits")
   }
 
-  /** Streaming index upkeep for the near-dup sketch table — the sign-LSH
-    * twin of [[streamIntoBm25]]: incoming vectors keep the persisted index
-    * current via `foreachBatch`; each completed batch is immediately
-    * visible to the next [[loadSignLsh]]. */
-  def streamIntoSignLsh(embs: org.apache.spark.sql.DataFrame, idCol: String,
-      embCol: String, dim: Int, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchSignLsh(b, idCol, embCol, dim, path, id)
-      }
-      .start()
-
   /** Consistent snapshot at the latest commit markers (same contract as
     * [[loadBm25]]); the returned relation has the [[saveSignLsh]] input
     * shape (id, sk, band, bkey) with band partition pruning available. */
@@ -726,11 +702,8 @@ object IndexStore {
   def compactSignLsh(spark: SparkSession, path: String): Unit = {
     val staged = s"$path/.compact"
     saveSignLsh(loadSignLsh(spark, path), staged)
-    val fprintDirs = stageFprint(spark, path, s"$path/commits", staged)
-    swapStaged(spark, path, staged, Seq("sketches", "commits") ++ fprintDirs)
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("commits"), Seq("sketches", "commits"),
+      Seq("tombstones"))
   }
 
   // ----------------------------------------------------- containment prefix
@@ -826,20 +799,6 @@ object IndexStore {
     writeContainmentBase(p, threshold, path, batchId, overwriteAll = false)
   }
 
-  /** Streaming index upkeep — the containment twin of [[streamIntoBm25]]:
-    * incoming documents keep the persisted prefix index current via
-    * `foreachBatch`; each completed batch is immediately visible. */
-  def streamIntoContainment(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchContainment(b, idCol, textCol, path, id)
-      }
-      .start()
-
   private def containmentThreshold(spark: SparkSession, path: String): Double = {
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -926,12 +885,8 @@ object IndexStore {
     val staged = s"$path/.compact"
     writeContainmentBase(snapshot.postings.select("id", "h"),
       snapshot.threshold, staged, batchId = -1L, overwriteAll = true)
-    val fprintDirs = stageFprint(spark, path, s"$path/sizes", staged)
-    swapStaged(spark, path, staged,
-      Seq("postings", "prefixes", "meta", "sizes") ++ fprintDirs)
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("sizes"),
+      Seq("postings", "prefixes", "meta", "sizes"), Seq("tombstones"))
   }
 
   // ----------------------------------------------------------- gram hashes
@@ -1008,18 +963,6 @@ object IndexStore {
         .select("h"),
       k, path, batchId, overwriteAll = false)
   }
-
-  /** Streaming index upkeep — the gram twin of [[streamIntoContainment]]. */
-  def streamIntoGrams(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchGrams(b, idCol, textCol, path, id)
-      }
-      .start()
 
   private def gramWidth(spark: SparkSession, path: String): Int = {
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
@@ -1099,8 +1042,9 @@ object IndexStore {
     val staged = s"$path/.compact"
     writeGramsBase(snapshot.hashes.select("h"), snapshot.k, staged,
       batchId = -1L, overwriteAll = true)
-    val fprintDirs = stageFprint(spark, path, s"$path/marks", staged)
-    swapStaged(spark, path, staged, Seq("hashes", "meta", "marks") ++ fprintDirs)
+    // grams deletes keep no tombstones — nothing to purge
+    finishFold(spark, path, Some("marks"), Seq("hashes", "meta", "marks"),
+      Nil)
   }
 
   // ---------------------------------------------------------------- phrase
@@ -1175,18 +1119,6 @@ object IndexStore {
       k, path, batchId, overwriteAll = false)
   }
 
-  /** Streaming index upkeep — the positional twin of [[streamIntoGrams]]. */
-  def streamIntoPhrase(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchPhrase(b, idCol, textCol, path, id)
-      }
-      .start()
-
   private def phraseWidth(spark: SparkSession, path: String): Int = {
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1250,12 +1182,8 @@ object IndexStore {
     val staged = s"$path/.compact"
     writePhraseBase(snapshot.postings.select("id", "pos", "h"), snapshot.k,
       staged, batchId = -1L, overwriteAll = true)
-    val fprintDirs = stageFprint(spark, path, s"$path/marks", staged)
-    swapStaged(spark, path, staged,
-      Seq("postings", "meta", "marks") ++ fprintDirs)
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("marks"), Seq("postings", "meta", "marks"),
+      Seq("tombstones"))
   }
 
   // ---------------------------------------------------------------- windows
@@ -1400,21 +1328,6 @@ object IndexStore {
       w, path, batchId, overwriteAll = false)
   }
 
-  /** Streaming index upkeep — the window member of the
-    * [[streamIntoBm25]]/[[streamIntoGrams]] family: incoming documents are
-    * windowed as they arrive; each completed batch is immediately visible
-    * to the next [[loadWindows]]. */
-  def streamIntoWindows(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchWindows(b, idCol, textCol, path, id)
-      }
-      .start()
-
   private def windowTokens(spark: SparkSession, path: String): Int = {
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1492,12 +1405,8 @@ object IndexStore {
     val staged = s"$path/.compact"
     writeWindowsBase(snapshot.windows, snapshot.windowTokens, staged,
       batchId = -1L, overwriteAll = true)
-    val fprintDirs = stageFprint(spark, path, s"$path/marks", staged)
-    swapStaged(spark, path, staged,
-      Seq("windows", "meta", "marks") ++ fprintDirs)
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("marks"), Seq("windows", "meta", "marks"),
+      Seq("tombstones"))
   }
 
   // ------------------------------------------------------------------- IVF
@@ -1755,49 +1664,161 @@ object IndexStore {
       appends: Long, deletes: Long, splits: Long, merges: Long,
       fingerprintN: Option[Long], tombstonesPending: Boolean)
 
-  /** Each family's commit-marker table — the one source of truth for
-    * "committed" everywhere in this store. */
-  // the ONE family → marker-dir map (describeFamily, planCompaction): a
-  // second copy would drift — a family priceable but not inventoriable,
-  // or vice versa. "sign-lsh"/"signlsh" are accepted as spellings of the
-  // same family.
-  private val familyMarkerDir = Map(
-    "ivf" -> "sizes", "bm25" -> "stats", "pq" -> "counts",
-    "prefix" -> "marks", "signlsh" -> "commits", "sign-lsh" -> "commits",
-    "containment" -> "sizes", "grams" -> "marks", "phrase" -> "marks",
-    "windows" -> "marks", "stats" -> "commits", "summary" -> "marks",
-    "zorder" -> "marks", "quantile" -> "marks", "gquantile" -> "marks",
-    "wordcount" -> "marks", "wc" -> "marks", "lm" -> "marks",
-    "lm3" -> "marks")
+  /** What one persisted family supports in the fleet operations, declared
+    * ONCE: [[describeFamily]], [[planCompaction]], [[executeCompaction]],
+    * [[executeErasureWave]], [[erasureAudit]] and [[maintenanceWave]] all
+    * resolve a name through [[familyOf]], so a family can never be
+    * priceable but not inventoriable, erasable but not auditable, and so
+    * on.
+    *   - `names`: the accepted spellings (aliases of one family).
+    *   - `marker`: its commit-marker table — the one source of truth for
+    *     "committed" everywhere in this store.
+    *   - `fprint`: the table holding its per-batch fingerprint `n`; the
+    *     prefix, summary, quantile and fold-only families' marks double
+    *     as it, every other family keeps a dedicated fprint sidecar.
+    *   - `foldTables`: what a fold reads + rewrites, when that is not the
+    *     Σ-fprint-n corpus default (Nil) — the committed rows of these
+    *     tables; `Left` = why the generic advisor must not price it.
+    *   - `compact`: its fold.
+    *   - `erase`: its id-keyed delete wave, or why its erasure is not
+    *     id-addressed.
+    *   - `audit`: how an erasure certificate probes it. */
+  private final case class Family(names: Seq[String], marker: String,
+      fprint: String, foldTables: Either[String, Seq[String]],
+      compact: (SparkSession, String) => Unit, erase: Either[String, Erase],
+      audit: Audit)
+
+  /** An id-keyed delete wave over `arity` data columns:
+    * `run(wave, idCol, cols, path, batchId)`. */
+  private final case class Erase(arity: Int,
+      run: (DataFrame, String, Seq[String], String, Long) => Unit)
+  private object Erase {
+    def one(f: (DataFrame, String, String, String, Long) => Unit)
+        : Either[String, Erase] =
+      Right(Erase(1, (w, id, c, p, b) => f(w, id, c.head, p, b)))
+  }
+
+  private sealed trait Audit
+  /** Probe the family's LIVE id relation (its own tombstone-filtered
+    * loader). */
+  private final case class LiveIds(load: (SparkSession, String) => DataFrame)
+      extends Audit
+  /** The fold has no id column: certify from the erased-id ledger. */
+  private case object Ledger extends Audit
+  /** Count retained sampled rows carrying an erased id's hash60. */
+  private final case class Sampled(
+      residual: (SparkSession, String, Set[Long]) => Long) extends Audit
+  /** Refused: an audit "pass" would claim a guarantee the family cannot
+    * give. */
+  private final case class Unauditable(reason: String) extends Audit
+
+  private val Families: Seq[Family] = {
+    val noIdLinkage = Unauditable("has no id linkage — its erasure story " +
+      "is documented at its deleteBatch function and cannot be audited " +
+      "by id; auditing it would certify a guarantee the family cannot give")
+    Seq(
+      Family(Seq("ivf"), "sizes", "fprint", Right(Nil), compactIvf,
+        Erase.one(deleteBatchIvf(_, _, _, _, _)),
+        LiveIds(loadIvf(_, _).assignments.select(col("id")))),
+      Family(Seq("bm25"), "stats", "fprint", Right(Nil), compactBm25,
+        Erase.one(deleteBatchBm25(_, _, _, _, _)),
+        LiveIds(loadBm25(_, _).postings.select(col("id")))),
+      Family(Seq("pq"), "counts", "fprint", Right(Nil), compactPq,
+        Erase.one(deleteBatchPq(_, _, _, _, _)),
+        LiveIds(loadPq(_, _).codes.select(col("id")))),
+      Family(Seq("prefix"), "marks", "marks", Right(Nil), compactPrefix,
+        Erase.one(deleteBatchPrefix),
+        LiveIds(loadPrefix(_, _).select(col("id")))),
+      Family(Seq("signlsh", "sign-lsh"), "commits", "fprint", Right(Nil),
+        compactSignLsh, Erase.one(deleteBatchSignLsh),
+        LiveIds(loadSignLsh(_, _).select(col("id")))),
+      Family(Seq("containment"), "sizes", "fprint", Right(Nil),
+        compactContainment, Erase.one(deleteBatchContainment),
+        LiveIds { (spark, path) =>
+          val c = loadContainment(spark, path)
+          c.postings.select(col("id"))
+            .unionByName(c.prefixes.select(col("id")))
+            .unionByName(c.sizes.select(col("id")))
+        }),
+      Family(Seq("grams"), "marks", "fprint", Right(Nil), compactGrams,
+        Left("its deletion is fingerprint-only and veto-only " +
+          "(deleteBatchGrams)"), noIdLinkage),
+      Family(Seq("phrase"), "marks", "fprint", Right(Nil), compactPhrase,
+        Erase.one(deleteBatchPhrase),
+        LiveIds(loadPhrase(_, _).postings.select(col("id")))),
+      Family(Seq("windows"), "marks", "fprint", Right(Nil), compactWindows,
+        Erase.one(deleteBatchWindows),
+        LiveIds(loadWindows(_, _).windows.select(col("id")))),
+      Family(Seq("stats"), "commits", "fprint", Right(Nil), compactStats,
+        Left("it subtracts value counts (deleteBatchStats)"), noIdLinkage),
+      Family(Seq("summary"), "marks", "marks", Right(Nil), compactSummary,
+        Left("it refuses deletion (deleteBatchSummary)"), noIdLinkage),
+      Family(Seq("zorder"), "marks", "marks",
+        Left("the z-order layout's tail cost is a full tail SCAN per box " +
+          "query, not partition-open overhead — price it with " +
+          "planZOrderCompaction (the generic advisor would systematically " +
+          "under-fold)"),
+        compactZOrder,
+        Left("it is content-addressed (deleteBatchZOrder; verify via " +
+          "loadZOrderChecked over the survivors)"),
+        Unauditable("is a CONTENT-addressed layout, not id-addressed — " +
+          "erasure removes rows by whole-content hash (deleteBatchZOrder), " +
+          "so the verification surface is loadZOrderChecked over the " +
+          "surviving corpus, not an id residual probe")),
+      // the quantile samples are hash-keyed, not id-keyed: their fold
+      // rewrites the persisted sample (q), and their audit counts SAMPLED
+      // rows still carrying an erased id's hash
+      Family(Seq("quantile"), "marks", "marks", Right(Seq("q")),
+        compactQuantile, Erase.one(deleteBatchQuantile),
+        Sampled((spark, path, erased) => loadQuantile(spark, path).sample
+          .count(hv => erased(hv._1)).toLong)),
+      Family(Seq("gquantile"), "marks", "marks", Right(Seq("q")),
+        compactGroupedQuantile,
+        Right(Erase(2, (w, id, c, p, b) =>
+          deleteBatchGroupedQuantile(w, id, c(0), c(1), p, b))),
+        Sampled((spark, path, erased) =>
+          loadGroupedQuantile(spark, path).samples.values
+            .map(_.count(hv => erased(hv._1))).sum.toLong)),
+      // the fold-only families rewrite their count-delta tables, and carry
+      // no id column for a live probe
+      Family(Seq("wordcount", "wc"), "marks", "marks", Right(Seq("wc")),
+        compactWordCounts, Erase.one(deleteBatchWordCounts(_, _, _, _, _)),
+        Ledger),
+      Family(Seq("lm"), "marks", "marks", Right(Seq("bg", "uni")), compactLm,
+        Erase.one(deleteBatchLm(_, _, _, _, _)), Ledger),
+      Family(Seq("lm3"), "marks", "marks", Right(Seq("tg", "bg", "uni")),
+        compactLm3, Erase.one(deleteBatchLm3(_, _, _, _, _)), Ledger))
+  }
+
+  /** The family a caller's spelling names — the one lookup, and the one
+    * refusal for a name no family answers to. */
+  private def familyOf(name: String): Family =
+    Families.find(_.names.contains(name)).getOrElse(
+      throw new IllegalArgumentException(s"unknown index family '$name' — " +
+        "known: " + Families.flatMap(_.names).sorted.mkString(", ")))
 
   def describeFamily(spark: SparkSession, family: String, path: String)
       : FamilyState = {
-    val marker = familyMarkerDir.getOrElse(family,
-      throw new IllegalArgumentException(
-        s"unknown family '$family' — known: " +
-          familyMarkerDir.keys.toSeq.sorted.mkString(", ")))
+    val f = familyOf(family)
     // distinct: marker tables carry one row per cluster/field/group, not
     // one per batch
-    val batches = committedBatches(spark, s"$path/$marker").distinct
+    val batches = committedBatches(spark, s"$path/${f.marker}").distinct
     // the maintenance namespaces ([[deleteMarkerId]] doc): id ≤ −2 with
     // ((−id)+1) mod 3 = 0 → delete, 1 → split, 2 → merge
     def waves(kind: Int): Long =
       batches.count(b => b <= -2 && ((-b) + 1) % 3 == kind).toLong
+    // None = uncheckable: saved without its source corpus
     val fpN: Option[Long] =
-      if (hasDataFiles(spark, s"$path/fprint")) {
-        val r = spark.read.parquet(s"$path/fprint")
-          .where(col("batch").cast("long").isin(batches: _*))
-          .agg(sum(col("n"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      } else if (hasDataFiles(spark, s"$path/$marker")) {
-        val df = spark.read.parquet(s"$path/$marker")
+      if (!hasDataFiles(spark, s"$path/${f.fprint}")) None
+      else {
+        val df = spark.read.parquet(s"$path/${f.fprint}")
         if (!df.columns.contains("n") || !df.columns.contains("fp")) None
         else {
           val r = df.where(col("batch").cast("long").isin(batches: _*))
             .agg(sum(col("n"))).head()
           if (r.isNullAt(0)) None else Some(r.getLong(0))
         }
-      } else None
+      }
     FamilyState(family, batches.contains(-1L),
       batches.count(_ >= 0).toLong, waves(0), waves(1), waves(2), fpN,
       hasDataFiles(spark, s"$path/tombstones"))
@@ -1837,15 +1858,24 @@ object IndexStore {
     * as a meaningless zero: grams (membership hashes carry no ids — its
     * deletion is fingerprint-only and veto-only by contract), summary
     * (sketches are not invertible; deletion itself is refused), stats
-    * (value counts, not rows). Their erasure story is documented at
-    * their delete functions; an audit "pass" here would claim a
-    * guarantee the family cannot give. */
+    * (value counts, not rows) — and so is the CONTENT-addressed zorder
+    * layout. Their erasure story is documented at their delete
+    * functions; an audit "pass" here would claim a guarantee the family
+    * cannot give. */
   def erasureAudit(spark: SparkSession,
       erased: org.apache.spark.sql.DataFrame, idCol: String,
       families: Seq[(String, String)],
       live: Map[String, org.apache.spark.sql.DataFrame] = Map.empty)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
+    // refuse non-auditable and unknown families before any job runs
+    val probes = families.map { case (family, path) =>
+      (family, path) -> (familyOf(family).audit match {
+        case Unauditable(reason) => throw new IllegalArgumentException(
+          s"the $family family $reason")
+        case audit => audit
+      })
+    }.zipWithIndex
     // ids are compared by their STRING rendering — the family-neutral
     // canonical form every persisted hash already uses
     // (hash60(cast(id as string))), so long, int and string id columns
@@ -1872,62 +1902,6 @@ object IndexStore {
         "id addresses no row; an audit that silently dropped it would " +
         "certify a wave it never checked")
     val erasedN = hdr.getLong(0)
-    // `live` short-circuits the family's loader with an ALREADY-LOADED
-    // live-id relation (r16): callers that just loaded the index for the
-    // staleness guard would otherwise pay the full sidecar/marker load a
-    // SECOND time inside the audit. The match arms stay the validator —
-    // non-auditable families refuse regardless of what `live` carries.
-    def liveIds(family: String, path: String)
-        : org.apache.spark.sql.DataFrame = family match {
-      case "ivf" => live.getOrElse(family,
-        loadIvf(spark, path).assignments.select(col("id")))
-      case "pq" => live.getOrElse(family,
-        loadPq(spark, path).codes.select(col("id")))
-      case "prefix" => live.getOrElse(family,
-        loadPrefix(spark, path).select(col("id")))
-      case "signlsh" | "sign-lsh" => live.getOrElse(family,
-        loadSignLsh(spark, path).select(col("id")))
-      case "bm25" => live.getOrElse(family,
-        loadBm25(spark, path).postings.select(col("id")))
-      case "phrase" => live.getOrElse(family,
-        loadPhrase(spark, path).postings.select(col("id")))
-      case "windows" => live.getOrElse(family,
-        loadWindows(spark, path).windows.select(col("id")))
-      case "containment" => live.getOrElse(family, {
-        val c = loadContainment(spark, path)
-        c.postings.select(col("id"))
-          .unionByName(c.prefixes.select(col("id")))
-          .unionByName(c.sizes.select(col("id")))
-      })
-      case "grams" | "summary" | "stats" =>
-        throw new IllegalArgumentException(
-          s"the $family family has no id linkage — its erasure story is " +
-            "documented at its deleteBatch function and cannot be " +
-            "audited by id; auditing it would certify a guarantee the " +
-            "family cannot give")
-      case "zorder" =>
-        throw new IllegalArgumentException(
-          "the zorder layout is CONTENT-addressed, not id-addressed — " +
-            "erasure removes rows by whole-content hash " +
-            "(deleteBatchZOrder), so the verification surface is " +
-            "loadZOrderChecked over the surviving corpus, not an id " +
-            "residual probe")
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown family '$other' — auditable families: ivf, pq, " +
-            "prefix, signlsh/sign-lsh, bm25, phrase, windows, " +
-            "containment, quantile, gquantile, wordcount, lm, lm3")
-    }
-    // the quantile samples are hash-keyed, not id-keyed: an erased id's
-    // row may legitimately be absent (never sampled), but a SAMPLED row
-    // still carrying the erased id's hash60 is a retained value — the
-    // residual counts those. `__erased` is already the string rendering,
-    // so this is byte-identical to the append-time
-    // hash60(cast(id as string)). Bounded driver work: the sample is ≤ k
-    // (≤ groups × k) pairs and the wave's hash set is broadcast-sized.
-    lazy val erasedHashes: Set[Long] = ids
-      .select(graft.functions.Text.hash60(col("__erased")))
-      .collect().map(_.getLong(0)).toSet
     // ID-LINKAGE families all share one probe shape (live ids ⋉ erased →
     // distinct count). r16, guide §2.6: instead of one count JOB per
     // family (each a full driver round-trip — the r15 verdict's item 7),
@@ -1935,52 +1909,53 @@ object IndexStore {
     // and run ONE job whose grouped counts answer every family at once.
     // The broadcast of the erased set is shared across branches. Tagging
     // by POSITION (not name) keeps duplicate family entries distinct.
-    // Validation stays ahead of any job: liveIds() throws for
-    // non-auditable/unknown families while the plans are being built.
-    val isLedger = Set("wordcount", "wc", "lm", "lm3")
-    val isDriverSample = Set("quantile", "gquantile")
-    val idLinkage = families.zipWithIndex.filter { case ((f, _), _) =>
-      !isLedger(f) && !isDriverSample(f) }
-    // plan building itself reads each family's sidecars/markers — do it
-    // from the pool too (the loads are independent I/O), and refuse
-    // non-auditable families here, before any probe job is submitted
-    val branches = inParallel(idLinkage) { case ((family, path), i) =>
-      liveIds(family, path)
-        .select(lit(i).as("__i"), col("id").cast("string").as("id"))
+    // `live` short-circuits the family's loader with an ALREADY-LOADED
+    // live-id relation (r16): callers that just loaded the index for the
+    // staleness guard would otherwise pay the full sidecar/marker load a
+    // SECOND time inside the audit. The family table stays the validator
+    // — non-auditable families were refused above, whatever `live`
+    // carries. Plan building itself reads each family's sidecars/markers
+    // — do it from the pool too (the loads are independent I/O).
+    val branches = Par.all(probes.collect {
+      case (((family, path), LiveIds(load)), i) => () =>
+        live.getOrElse(family, load(spark, path))
+          .select(lit(i).as("__i"), col("id").cast("string").as("id"))
+    })
+    // the quantile samples are hash-keyed, not id-keyed: an erased id's
+    // row may legitimately be absent (never sampled), but a SAMPLED row
+    // still carrying the erased id's hash60 is a retained value — the
+    // residual counts those. `__erased` is already the string rendering,
+    // so this is byte-identical to the append-time
+    // hash60(cast(id as string)). Bounded driver work: the sample is ≤ k
+    // (≤ groups × k) pairs and the wave's hash set is broadcast-sized.
+    // Lazy val initialization is synchronized, so under the concurrent
+    // probes below the first quantile probe collects it once and the
+    // rest read the memo.
+    lazy val erasedHashes: Set[Long] = ids
+      .select(graft.functions.Text.hash60(col("__erased")))
+      .collect().map(_.getLong(0)).toSet
+    // the fold-only families have no id column, so "still visible in the
+    // live loader" is not probeable — the certificate is LEDGER-based
+    // instead: an erased id is certified iff a COMMITTED delete wave
+    // recorded its tombstone (the ledger is also what keeps its counts
+    // subtracted exactly once — deleteBatchWordCounts), so residual =
+    // requested ids with NO committed ledger entry (a half-applied or
+    // missed wave surfaces as a positive count). Content-level
+    // verification remains the checked loader over the survivors
+    // ([[loadWordCountsChecked]]).
+    def ledgerResidual(path: String): Long = {
+      val committed = committedBatches(spark, s"$path/marks")
+      if (!hasDataFiles(spark, s"$path/tombstones")) erasedN
+      else erasedN - ids.join(
+          spark.read.parquet(s"$path/tombstones")
+            .where(col("batch").cast("long").isin(committed: _*))
+            .select(col("id").cast("string").as("__erased")),
+          Seq("__erased"), "left_semi")
+        .count()
     }
     // the one union probe and the ledger/driver-sample probes (which
     // read tombstone ledgers / driver-held samples, not live id
-    // relations) are all independent — overlapped (§2.6). `erasedHashes`
-    // stays correct under concurrency: lazy val initialization is
-    // synchronized, so the first quantile probe collects it once and
-    // the rest read the memo.
-    def specialResidual(family: String, path: String): Long = family match {
-      case "wordcount" | "wc" | "lm" | "lm3" =>
-        // the wc fold has no id column, so "still visible in the live
-        // loader" is not probeable — the certificate is LEDGER-based
-        // instead: an erased id is certified iff a COMMITTED delete
-        // wave recorded its tombstone (the ledger is also what keeps
-        // its counts subtracted exactly once — deleteBatchWordCounts),
-        // so residual = requested ids with NO committed ledger entry
-        // (a half-applied or missed wave surfaces as a positive
-        // count). Content-level verification remains the checked
-        // loader over the survivors ([[loadWordCountsChecked]]).
-        val committed = committedBatches(spark, s"$path/marks")
-        if (!hasDataFiles(spark, s"$path/tombstones")) erasedN
-        else ids.join(
-            spark.read.parquet(s"$path/tombstones")
-              .where(col("batch").cast("long").isin(committed: _*))
-              .select(col("id").cast("string").as("__erased")),
-            Seq("__erased"), "left_semi")
-          .count() match { case m => erasedN - m }
-      case "quantile" =>
-        loadQuantile(spark, path).sample
-          .count(hv => erasedHashes(hv._1)).toLong
-      case "gquantile" =>
-        loadGroupedQuantile(spark, path).samples.values
-          .map(_.count(hv => erasedHashes(hv._1))).sum.toLong
-      case other => sys.error(s"not a special-probe family: $other")
-    }
+    // relations) are all independent — overlapped (§2.6)
     val probeThunks: Seq[() => Map[Int, Long]] =
       (if (branches.isEmpty) Nil
        else Seq(() => branches.reduce(_ unionByName _)
@@ -1990,12 +1965,13 @@ object IndexStore {
          .select("__i", "id").distinct()
          .groupBy("__i").agg(count(lit(1)).as("r"))
          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)) ++
-      families.zipWithIndex
-        .filter { case ((f, _), _) => isLedger(f) || isDriverSample(f) }
-        .map { case ((family, path), i) =>
-          () => Map(i -> specialResidual(family, path)) }
-    val residuals: Map[Int, Long] =
-      inParallel(probeThunks)(_.apply()).flatten.toMap
+      probes.collect {
+        case (((_, path), Ledger), i) =>
+          () => Map(i -> ledgerResidual(path))
+        case (((_, path), Sampled(residual)), i) =>
+          () => Map(i -> residual(spark, path, erasedHashes))
+      }
+    val residuals: Map[Int, Long] = Par.all(probeThunks).flatten.toMap
     families.zipWithIndex.map { case ((family, _), i) =>
       (family, erasedN, residuals.getOrElse(i, 0L))
     }.toDF("family", "erased_n", "residual")
@@ -2189,7 +2165,7 @@ object IndexStore {
     *   3. the old cell's assignment partition dirs deleted — physical
     *      cleanup of rows already unreachable since step 2.
     *
-    * Run in the index's maintenance window (the [[swapStaged]]
+    * Run in the index's maintenance window (the [[finishFold]]
     * offline-window contract); a crash anywhere is repaired by
     * re-running with the same batchId — the marker guard detects the
     * committed wave, recovers the children from their own committed
@@ -2516,147 +2492,6 @@ object IndexStore {
       .select("id"))
   }
 
-  /** Streaming ERASURE upkeep — the delete-side twin of
-    * [[streamIntoIvf]]: each micro-batch of (id, vector) rows to forget
-    * lands as one delete wave ([[deleteBatchIvf]], the foreachBatch id
-    * seeding the wave id — [[resolveDeleteWave]] remaps ids behind the
-    * family's committed clock onto it, so a FRESH erasure checkpoint
-    * (batch ids from 0) against an index whose ingest waves are already
-    * ahead drains instead of crash-looping; the delete marker namespace
-    * keeps committed ids disjoint from any APPEND stream's). A
-    * GDPR request queue then IS a stream: erasure lands at micro-batch
-    * cadence and cost, and each completed wave is invisible to the next
-    * [[loadIvf]]. */
-  def streamDeletesIntoIvf(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deletes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        deleteBatchIvf(b, idCol, embCol, path, id, issuer = checkpoint)
-      }
-      .start()
-
-  /** [[streamDeletesIntoIvf]] for the text index. */
-  def streamDeletesIntoBm25(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deletes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        deleteBatchBm25(b, idCol, textCol, path, id, issuer = checkpoint)
-      }
-      .start()
-
-  // [[streamDeletesIntoIvf]] twins for the remaining deletable families
-  // — every family with an append stream hook gets the erasure stream
-  // hook, so a GDPR queue drains into ALL of a corpus's indexes with the
-  // same plumbing. The one deliberate exception: grams has NO hook —
-  // its fingerprint-only deletion cannot dedupe repeated ids, and a
-  // queue-fed stream is exactly where repeats happen (two requests
-  // naming one user); wave-at-a-time calls keep that boundary visible.
-  // The summary family refuses deletion outright ([[deleteBatchSummary]]).
-
-  private def deleteStream(deletes: org.apache.spark.sql.DataFrame,
-      checkpoint: String)(
-      apply: (org.apache.spark.sql.DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deletes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        apply(b, id)
-      }
-      .start()
-
-  def streamDeletesIntoSignLsh(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchSignLsh(_, idCol, embCol, path, _))
-
-  def streamDeletesIntoPq(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchPq(_, idCol, embCol, path, _))
-
-  def streamDeletesIntoPrefix(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchPrefix(_, idCol, embCol, path, _))
-
-  def streamDeletesIntoPhrase(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchPhrase(_, idCol, textCol, path, _))
-
-  def streamDeletesIntoWindows(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchWindows(_, idCol, textCol, path, _))
-
-  def streamDeletesIntoContainment(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchContainment(_, idCol, textCol, path, _))
-
-  def streamDeletesIntoStats(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, contentCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchStats(_, idCol, contentCol, path, _))
-
-  def streamDeletesIntoQuantile(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, valueCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchQuantile(_, idCol, valueCol, path, _))
-
-  def streamDeletesIntoGroupedQuantile(
-      deletes: org.apache.spark.sql.DataFrame, idCol: String,
-      groupCol: String, valueCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchGroupedQuantile(_, idCol, groupCol, valueCol, path, _))
-
-  def streamDeletesIntoZOrder(deletes: org.apache.spark.sql.DataFrame,
-      path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(deleteBatchZOrder(_, path, _))
-
-  /** Streaming erasure for the word-count vocab family — unlockable
-    * since the round-13 erased-id ledger: a GDPR queue's repeated ids
-    * across micro-batches now dedupe per wave instead of
-    * double-subtracting (exactly the repeat shape a queue feeds), so
-    * the family joins the [[streamDeletesIntoIvf]] hook roster. */
-  def streamDeletesIntoWordCounts(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchWordCounts(_, idCol, textCol, path, _, issuer = checkpoint))
-
-  /** Streaming index upkeep for the vector index — the IVF member of the
-    * [[streamIntoBm25]]/[[streamIntoSignLsh]] family: incoming vectors are
-    * assigned to their nearest cell as they arrive; each completed batch is
-    * immediately visible to the next [[loadIvf]]. */
-  def streamIntoIvf(embs: org.apache.spark.sql.DataFrame, idCol: String,
-      embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchIvf(b, idCol, embCol, path, id)
-      }
-      .start()
-
   /** Consistent snapshot at the latest commit markers (same contract as
     * [[loadBm25]]): only committed batches' assignments are visible, and
     * cluster sizes are the merged per-batch deltas — so probe-depth math
@@ -2909,26 +2744,18 @@ object IndexStore {
     val staged = s"$path/.compact"
     saveIvf(snapshot, staged)
     writeAsofFloor(spark, floor, s"$staged/asof_floor")
-    val fprintDirs = stageFprint(spark, path, s"$path/sizes", staged)
     // the drift ledger is deliberately NOT in the swap list: compaction
     // is a LAYOUT fold — the centroids stay the training run's — so
     // "drift since training" must survive it; folding the waves into the
     // baseline would silently raise it and mask exactly the drift the
     // ledger exists to expose
-    // asof_floor first — see compactBm25's fail-safe ordering note
-    swapStaged(spark, path, staged,
-      Seq("asof_floor", "assignments", "centroids", "meta", "sizes") ++
-        fprintDirs)
-    // tombstones are now physically purged (the snapshot excluded them);
-    // a crash before this delete leaves orphans that the folded sizes
-    // markers no longer commit — no loader reads them. The split-wave
-    // centroid sidecars go the same way: the fold wrote their children's
-    // centroids into the base table, and their wave ids are no longer
-    // committed.
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/splits"), true)
+    // asof_floor first — see compactBm25's fail-safe ordering note. The
+    // split-wave centroid sidecars are purged with the tombstones: the
+    // fold wrote their children's centroids into the base table, and
+    // their wave ids are no longer committed.
+    finishFold(spark, path, Some("sizes"),
+      Seq("asof_floor", "assignments", "centroids", "meta", "sizes"),
+      Seq("tombstones", "splits"))
   }
 
   // ------------------------------------------- quantization drift monitor
@@ -3157,21 +2984,6 @@ object IndexStore {
       .parquet(s"$path/counts")
   }
 
-  /** Streaming index upkeep for the compressed-vector index — the PQ member
-    * of the [[streamIntoBm25]]/[[streamIntoSignLsh]]/[[streamIntoIvf]]
-    * family: incoming vectors are encoded as they arrive; each completed
-    * batch is immediately visible to the next [[loadPq]]. */
-  def streamIntoPq(embs: org.apache.spark.sql.DataFrame, idCol: String,
-      embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchPq(b, idCol, embCol, path, id)
-      }
-      .start()
-
   /** Consistent snapshot at the latest commit markers (the [[loadBm25]]
     * contract): only committed batches' codes are visible, and `n` is the
     * merged per-batch delta — so exhaustive-overfetch short-circuit math
@@ -3261,12 +3073,8 @@ object IndexStore {
     val snapshot = loadPq(spark, path)
     val staged = s"$path/.compact"
     savePq(snapshot, staged)
-    val fprintDirs = stageFprint(spark, path, s"$path/counts", staged)
-    swapStaged(spark, path, staged,
-      Seq("codes", "codebooks", "meta", "counts") ++ fprintDirs)
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("counts"),
+      Seq("codes", "codebooks", "meta", "counts"), Seq("tombstones"))
   }
 
   // ----------------------------------------------------- Matryoshka prefix
@@ -3393,25 +3201,6 @@ object IndexStore {
       .partitionBy("batch").parquet(s"$path/marks")
   }
 
-  /** Streaming index upkeep for the Matryoshka prefix — the ninth
-    * family's member of the [[streamIntoBm25]]/[[streamIntoIvf]] hook
-    * family (until round 10 the one family a streaming ingest pipeline
-    * had to hand-roll foreachBatch for): incoming vectors are projected
-    * to the DDL'd prefix width as they arrive; each completed batch's
-    * mark commits its fingerprint delta, so the next
-    * [[loadPrefixChecked]] accepts the appended state. Requires a
-    * [[savePrefix]] base (prefixDims is the index DDL). */
-  def streamIntoPrefix(embs: org.apache.spark.sql.DataFrame, idCol: String,
-      embCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchPrefix(b, idCol, embCol, path, id)
-      }
-      .start()
-
   /** (count, Σ xxhash64(id, vector)) over a corpus — decimal(38,0) sum so
     * arbitrarily many 2⁶³-scale hashes never overflow (the components
     * label-sum discipline). Deterministic across sessions: xxhash64 over
@@ -3506,10 +3295,8 @@ object IndexStore {
     Seq((n, fp.toString, -1L)).toDF("n", "fp", "batch")
       .write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(s"$staged/marks")
-    swapStaged(spark, path, staged, Seq("prefix", "meta", "marks"))
-    val tfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    tfs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, None, Seq("prefix", "meta", "marks"),
+      Seq("tombstones"))
   }
 
   // ------------------------------------------------- field-statistics catalog
@@ -3695,20 +3482,6 @@ object IndexStore {
       .parquet(s"$path/commits")
   }
 
-  /** Streaming catalog upkeep — the stats twin of [[streamIntoBm25]]:
-    * incoming rows keep the persisted counts current via `foreachBatch`,
-    * so plan-time selectivity reads stay one ingest wave fresh. */
-  def streamIntoStats(rows: org.apache.spark.sql.DataFrame, idCol: String,
-      contentCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchStats(b, idCol, contentCol, path, id)
-      }
-      .start()
-
   /** Consistent catalog snapshot at the latest commit markers: committed
     * per-batch deltas summed to (field, value, cnt). The relation is
     * bounded by Σ distinct values — safe to collect or broadcast. */
@@ -3814,20 +3587,16 @@ object IndexStore {
         .write.mode(SaveMode.Overwrite).parquet(s"$staged/histmeta")
       Seq("histmeta")
     }
-    val fprintDirs = stageFprint(spark, path, s"$path/commits", staged)
     Seq((1, -1L)).toDF("ok", "batch")
       .write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(s"$staged/commits")
-    swapStaged(spark, path, staged,
-      Seq("stats", "fields", "commits") ++ histDirs ++ fprintDirs)
     // the erasure-dedupe ledger is purged with the fold, like every
     // family's tombstones: the counts are physically merged, so the
     // idempotency window is between compactions (a post-fold re-delete
     // of a long-gone id drifts the fingerprint and the checked loader
     // refuses — the guard, not a gap)
-    org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, Some("commits"),
+      Seq("stats", "fields", "commits") ++ histDirs, Seq("tombstones"))
   }
 
   /** Total rows the catalog covers for `field` (Σ cnt over its values —
@@ -4143,19 +3912,6 @@ object IndexStore {
     writeZOrderMark(batch, path, batchId, overwriteAll = false)
   }
 
-  /** Streaming layout upkeep: each micro-batch lands as a committed tail
-    * wave via [[appendBatchZOrder]] — the layout twin of the
-    * [[streamIntoBm25]] hook family. */
-  def streamIntoZOrder(rows: org.apache.spark.sql.DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchZOrder(b, path, id)
-      }
-      .start()
-
   /** The layout's content-address: xxhash64 over ALL data columns in
     * sorted-name order — the SAME per-row bytes [[zorderFingerprint]]
     * sums, so content-addressed erasure and the staleness guard can
@@ -4371,13 +4127,11 @@ object IndexStore {
     Seq((n, fp.toString, -1L)).toDF("n", "fp", "batch")
       .write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(s"$staged/marks")
-    swapStaged(spark, path, staged, Seq("base", "meta", "marks"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tail"), true)
-    // the content-tombstone ledger is physically purged — the folded
-    // base excluded its rows (loadZOrder anti-joins before the fold)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    // the tail folded into the base; the content-tombstone ledger is
+    // purged — the folded base excluded its rows (loadZOrder anti-joins
+    // before the fold)
+    finishFold(spark, path, None, Seq("base", "meta", "marks"),
+      Seq("tail", "tombstones"))
   }
 
   /** Price folding the z-order tail, from sidecar rows + the workload's
@@ -4585,19 +4339,6 @@ object IndexStore {
         "hashes — rebuild the summary over the surviving stream " +
         "(saveSummary) instead of deleting from it")
 
-  /** Streaming summary upkeep — the sketch family's member of the
-    * [[streamIntoBm25]] hook family. */
-  def streamIntoSummary(items: org.apache.spark.sql.DataFrame,
-      itemCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    items.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchSummary(b, itemCol, path, id)
-      }
-      .start()
-
   /** Fold the committed deltas into one [[SummaryIndex]] — driver-side
     * over ≤ batches·(kMg + kKmv) rows, never a corpus scan. The MG fold
     * order is the committed-batch order (deterministic; ANY order obeys
@@ -4767,7 +4508,7 @@ object IndexStore {
     Seq((n, fp.toString, -1L)).toDF("n", "fp", "batch")
       .write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(s"$staged/marks")
-    swapStaged(spark, path, staged, Seq("mg", "kmv", "meta", "marks"))
+    finishFold(spark, path, None, Seq("mg", "kmv", "meta", "marks"), Nil)
   }
 
   // -------------------------------------- fold-only-family erased-id ledger
@@ -4983,19 +4724,6 @@ object IndexStore {
       overwriteAll = false, negate = true)
   }
 
-  /** Streaming vocab upkeep — the word-count member of the
-    * [[streamIntoBm25]] hook family. */
-  def streamIntoWordCounts(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchWordCounts(b, idCol, textCol, path, id)
-      }
-      .start()
-
   /** The folded (word, cnt) relation over the committed waves — equals a
     * from-scratch [[graft.text.Vocab.wordCounts]] over exactly the
     * committed corpus (sums cancel deleted waves; words at ≤ 0 drop).
@@ -5067,8 +4795,8 @@ object IndexStore {
     val hasLedger = ledgerStageForCompaction(spark, path, batches, staged)
     writeAsofFloor(spark, floor, s"$staged/asof_floor")
     // asof_floor first — see compactBm25's fail-safe ordering note
-    swapStaged(spark, path, staged, Seq("asof_floor", "wc", "marks") ++
-      (if (hasLedger) Seq("tombstones") else Seq.empty))
+    finishFold(spark, path, None, Seq("asof_floor", "wc", "marks") ++
+      (if (hasLedger) Seq("tombstones") else Seq.empty), Nil)
   }
 
   // ------------------------------------------------- bigram LM family
@@ -5191,26 +4919,6 @@ object IndexStore {
       overwriteAll = false, negate = true)
   }
 
-  /** Streaming LM upkeep — the [[streamIntoBm25]] hook family. */
-  def streamIntoLm(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchLm(b, idCol, textCol, path, id)
-      }
-      .start()
-
-  /** Streaming erasure for the LM family — safe for queue repeats by the
-    * erased-id ledger, like [[streamDeletesIntoWordCounts]]. */
-  def streamDeletesIntoLm(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchLm(_, idCol, textCol, path, _, issuer = checkpoint))
-
   /** The folded model over the committed waves — equals
     * [[graft.text.LanguageModel.train]] over exactly the committed
     * corpus: bigram fold (sum, drop ≤ 0), prefix counts DERIVED from the
@@ -5301,8 +5009,8 @@ object IndexStore {
     val hasLedger = ledgerStageForCompaction(spark, path, batches, staged)
     writeAsofFloor(spark, floor, s"$staged/asof_floor")
     // asof_floor first — see compactBm25's fail-safe ordering note
-    swapStaged(spark, path, staged, Seq("asof_floor", "bg", "uni", "marks")
-      ++ (if (hasLedger) Seq("tombstones") else Seq.empty))
+    finishFold(spark, path, None, Seq("asof_floor", "bg", "uni", "marks")
+      ++ (if (hasLedger) Seq("tombstones") else Seq.empty), Nil)
   }
 
   // --------------------------------------- trigram-LM family (lm3, fold-only)
@@ -5398,25 +5106,6 @@ object IndexStore {
       overwriteAll = false, negate = true)
   }
 
-  /** Streaming upkeep + streaming erasure — the [[streamIntoBm25]] /
-    * [[streamDeletesIntoWordCounts]] hook family. */
-  def streamIntoLm3(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchLm3(b, idCol, textCol, path, id)
-      }
-      .start()
-
-  def streamDeletesIntoLm3(deletes: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deleteStream(deletes, checkpoint)(
-      deleteBatchLm3(_, idCol, textCol, path, _, issuer = checkpoint))
-
   /** The folded order-3 model over the committed waves — equals
     * [[graft.text.LanguageModel.train3]] over exactly the committed
     * corpus: three folds (sum, drop ≤ 0), N/V derived from the unigram
@@ -5492,9 +5181,9 @@ object IndexStore {
       .parquet(s"$staged/marks")
     val hasLedger = ledgerStageForCompaction(spark, path, batches, staged)
     writeAsofFloor(spark, floor, s"$staged/asof_floor")
-    swapStaged(spark, path, staged,
+    finishFold(spark, path, None,
       Seq("asof_floor", "tg", "bg", "uni", "marks")
-        ++ (if (hasLedger) Seq("tombstones") else Seq.empty))
+        ++ (if (hasLedger) Seq("tombstones") else Seq.empty), Nil)
   }
 
   // ------------------------------------------------ quantile sample sketch
@@ -5685,19 +5374,6 @@ object IndexStore {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(s"$path/marks")
   }
-
-  /** Streaming sketch upkeep — the quantile member of the
-    * [[streamIntoBm25]] hook family. */
-  def streamIntoQuantile(rows: org.apache.spark.sql.DataFrame,
-      idCol: String, valueCol: String, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchQuantile(b, idCol, valueCol, path, id)
-      }
-      .start()
 
   /** Fold the committed deltas into one [[QuantileSketch]] — bounded
     * driver work: ≤ batches·k rows ever shuffle, the final take-k rides a
@@ -5918,19 +5594,6 @@ object IndexStore {
       .partitionBy("batch").parquet(s"$path/marks")
   }
 
-  /** Streaming upkeep — the grouped member of the [[streamIntoBm25]]
-    * hook family. */
-  def streamIntoGroupedQuantile(rows: org.apache.spark.sql.DataFrame,
-      idCol: String, groupCol: String, valueCol: String, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        appendBatchGroupedQuantile(b, idCol, groupCol, valueCol, path, id)
-      }
-      .start()
-
   /** Fold the committed deltas — per-group merged bottom-k FIRST (each
     * group's threshold fixed where the merge theorem holds), tombstoned
     * hashes out AFTER, collect bounded by groups × k. */
@@ -6037,10 +5700,8 @@ object IndexStore {
     Seq((n, fp.toString, -1L)).toDF("n", "fp", "batch")
       .write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(s"$staged/marks")
-    swapStaged(spark, path, staged, Seq("q", "gn", "meta", "marks"))
-    org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, None, Seq("q", "gn", "meta", "marks"),
+      Seq("tombstones"))
   }
 
   /** Fold every committed batch back into a single base partition. The
@@ -6076,10 +5737,8 @@ object IndexStore {
     Seq((n, fp.toString, -1L)).toDF("n", "fp", "batch")
       .write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(s"$staged/marks")
-    swapStaged(spark, path, staged, Seq("q", "meta", "marks"))
-    org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    finishFold(spark, path, None, Seq("q", "meta", "marks"),
+      Seq("tombstones"))
   }
 
   // ----------------------------------------------------- compaction advisor
@@ -6123,22 +5782,10 @@ object IndexStore {
       openCostRows: Double = OpenCostRows): CompactionPlan = {
     require(queriesPerWave >= 0, s"queriesPerWave ≥ 0, got $queriesPerWave")
     require(horizonWaves > 0, s"horizonWaves > 0, got $horizonWaves")
-    require(family != "zorder",
-      "the z-order layout's tail cost is a full tail SCAN per box query, " +
-        "not partition-open overhead — price it with planZOrderCompaction " +
-        "(the generic advisor would systematically under-fold)")
-    val markerDir = familyMarkerDir.getOrElse(family,
-      throw new IllegalArgumentException(
-        s"unknown index family '$family' — one of ${familyMarkerDir.keys.toSeq.sorted.mkString(", ")}"))
-    val batches = committedBatches(spark, s"$path/$markerDir")
-    // per-batch n: the prefix, summary and quantile families' marks double
-    // as their fprint table; every other family keeps a dedicated fprint
-    // sidecar
-    val fprintDir =
-      if (Set("prefix", "summary", "quantile", "gquantile", "wordcount",
-          "wc", "lm", "lm3")(family))
-        s"$path/marks"
-      else s"$path/fprint"
+    val f = familyOf(family)
+    val foldTables = priceableFold(f)
+    val batches = committedBatches(spark, s"$path/${f.marker}")
+    val fprintDir = s"$path/${f.fprint}"
     require(hasDataFiles(spark, fprintDir),
       s"$family index at $path has no fingerprint sidecar — saved without " +
         "its source corpus, so per-batch row counts are unknown; rebuild " +
@@ -6150,30 +5797,17 @@ object IndexStore {
     // sidecar-scale — so they are priced from the committed q rows on
     // disk; pricing a 10⁹-row corpus against a 10⁵-row rewrite would
     // leave a large sketch unfolded forever, the same systematic
-    // under-fold the z-order refusal above exists to prevent.
+    // under-fold the z-order refusal exists to prevent. The same honesty
+    // boundary holds for the fold-only families: their marks n counts
+    // corpus DOCS, but the fold rewrites the vocabulary-bounded count
+    // deltas (wc; the lm/lm3 n-gram tables).
     val totalRows =
-      if (family == "quantile" || family == "gquantile") {
-        if (!hasDataFiles(spark, s"$path/q")) 0L
-        else spark.read.parquet(s"$path/q")
+      if (foldTables.nonEmpty) foldTables.map { d =>
+        if (!hasDataFiles(spark, s"$path/$d")) 0L
+        else spark.read.parquet(s"$path/$d")
           .where(col("batch").cast("long").isin(batches: _*)).count()
-      } else if (family == "wordcount" || family == "wc") {
-        // the marks n counts corpus DOCS per wave (the staleness
-        // contract) but the fold reads + rewrites the vocabulary-bounded
-        // wc deltas — price what the fold touches (the quantile honesty
-        // boundary above)
-        if (!hasDataFiles(spark, s"$path/wc")) 0L
-        else spark.read.parquet(s"$path/wc")
-          .where(col("batch").cast("long").isin(batches: _*)).count()
-      } else if (family == "lm" || family == "lm3") {
-        // same honesty boundary: the fold touches the n-gram delta
-        // tables, not the corpus docs the marks fingerprint counts
-        (if (family == "lm3") Seq("tg", "bg", "uni")
-         else Seq("bg", "uni")).map { d =>
-          if (!hasDataFiles(spark, s"$path/$d")) 0L
-          else spark.read.parquet(s"$path/$d")
-            .where(col("batch").cast("long").isin(batches: _*)).count()
-        }.sum
-      } else spark.read.parquet(fprintDir)
+      }.sum
+      else spark.read.parquet(fprintDir)
         .where(col("batch").cast("long").isin(batches: _*))
         .agg(sum("n")).head() match {
           case r if r.isNullAt(0) => 0L
@@ -6205,30 +5839,17 @@ object IndexStore {
     * folklore. */
   def executeCompaction(spark: SparkSession, path: String,
       plan: CompactionPlan): Boolean = {
+    val f = familyOf(plan.family)
     if (!plan.recommend) return false
-    plan.family match {
-      case "bm25" => compactBm25(spark, path)
-      case "sign-lsh" | "signlsh" => compactSignLsh(spark, path)
-      case "containment" => compactContainment(spark, path)
-      case "grams" => compactGrams(spark, path)
-      case "phrase" => compactPhrase(spark, path)
-      case "windows" => compactWindows(spark, path)
-      case "ivf" => compactIvf(spark, path)
-      case "pq" => compactPq(spark, path)
-      case "prefix" => compactPrefix(spark, path)
-      case "stats" => compactStats(spark, path)
-      case "zorder" => compactZOrder(spark, path)
-      case "summary" => compactSummary(spark, path)
-      case "quantile" => compactQuantile(spark, path)
-      case "gquantile" => compactGroupedQuantile(spark, path)
-      case "wordcount" | "wc" => compactWordCounts(spark, path)
-      case "lm" => compactLm(spark, path)
-      case "lm3" => compactLm3(spark, path)
-      case other => throw new IllegalArgumentException(
-        s"unknown index family '$other'")
-    }
+    f.compact(spark, path)
     true
   }
+
+  /** The tables a generic fold prices for `family` (Nil = Σ fprint n),
+    * refusing a family whose fold the generic advisor must not price. */
+  private def priceableFold(f: Family): Seq[String] =
+    f.foldTables.fold(
+      reason => throw new IllegalArgumentException(reason), identity)
 
   // ------------------------------------------------------ fleet-wave ops
   //
@@ -6280,6 +5901,23 @@ object IndexStore {
     val spark = erased.sparkSession
     require(targets.nonEmpty, "empty target catalog — an erasure wave " +
       "over nothing would still print a certificate")
+    // validate EVERY target (family name, id addressing, column arity)
+    // before any job runs and before any wave reaches the pool (r16
+    // advice): with concurrent submission an invalid target used to throw
+    // only inside its own pool task, AFTER sibling families' delete
+    // waves had already launched and mutated — idempotency makes the
+    // re-run safe, but the refusal must stay ahead of all mutations.
+    val waves = targets.map { t =>
+      val e = familyOf(t.family).erase.fold(reason =>
+        throw new IllegalArgumentException(
+          s"the ${t.family} family's erasure is not id-addressed and " +
+            s"cannot ride an id-keyed wave: $reason — drive it at its own " +
+            "function rather than let a fleet wave claim an erasure it " +
+            "cannot certify"), identity)
+      require(t.cols.length >= e.arity, s"family '${t.family}' at " +
+        s"${t.path} needs ${e.arity} data column(s), got ${t.cols}")
+      t -> e
+    }
     // ONE materialization of the wave: the GDPR shape is an expensive
     // upstream query (join/filter over the master corpus), and without
     // the checkpoint it would re-execute for the NULL gate, per family
@@ -6293,97 +5931,22 @@ object IndexStore {
       s"executeErasureWave: NULL values in erased id column '$idCol' — " +
         "a NULL id addresses no row; refusing before any family's " +
         "delete wave commits")
-    // validate EVERY target's family name before submitting any wave to
-    // the pool (r16 advice): concurrent submission meant an invalid
-    // family (zorder/grams/summary/unknown) used to throw only inside
-    // its own pool task, AFTER sibling families' delete waves had
-    // already launched and mutated — idempotency makes the re-run safe,
-    // but the refusal must stay ahead of all mutations.
-    val idAddressed = Set("ivf", "pq", "prefix", "signlsh", "sign-lsh",
-      "bm25", "phrase", "windows", "containment", "quantile", "gquantile",
-      "wordcount", "wc", "lm", "lm3")
-    targets.foreach { t =>
-      t.family match {
-        case f if idAddressed(f) => ()
-        case "zorder" | "grams" | "summary" | "stats" =>
-          throw new IllegalArgumentException(
-            s"the ${t.family} family's erasure is not id-addressed and " +
-              "cannot ride an id-keyed wave: zorder is content-addressed " +
-              "(deleteBatchZOrder; verify via loadZOrderChecked over the " +
-              "survivors), grams is fingerprint-only/veto-only " +
-              "(deleteBatchGrams), stats subtracts value counts " +
-              "(deleteBatchStats), summary refuses deletion " +
-              "(deleteBatchSummary) — drive those at their own functions " +
-              "rather than let a fleet wave claim an erasure it cannot " +
-              "certify")
-        case other => throw new IllegalArgumentException(
-          s"unknown family '$other' — id-addressed families: ivf, pq, " +
-            "prefix, signlsh/sign-lsh, bm25, phrase, windows, " +
-            "containment, quantile, gquantile, wordcount, lm, lm3")
-      }
-    }
-    def one(t: ErasureTarget): Unit = {
-      def c(i: Int): String = {
-        require(t.cols.length > i, s"family '${t.family}' at ${t.path} " +
-          s"needs ${i + 1} data column(s), got ${t.cols}")
-        t.cols(i)
-      }
-      // PER-FAMILY narrowing — what makes ONE wave span id spaces with
-      // different coverage (the production GDPR shape: every doomed user
-      // has documents, only some have embeddings): rows whose data
-      // column for THIS family is NULL have nothing to subtract from it
-      // and are dropped from its delete only. This narrowing is NOT
-      // silent — the audit below probes the FULL wave against every
-      // family, so an id narrowed away that the family actually still
-      // holds (a vector lost upstream of the wave join) surfaces as a
-      // positive residual and fails the certificate.
-      val wave = fullWave.where(t.cols.map(col(_).isNotNull)
-        .foldLeft(lit(true))(_ && _))
-      t.family match {
-        case "ivf" => deleteBatchIvf(wave, idCol, c(0), t.path, batchId)
-        case "pq" => deleteBatchPq(wave, idCol, c(0), t.path, batchId)
-        case "prefix" =>
-          deleteBatchPrefix(wave, idCol, c(0), t.path, batchId)
-        case "signlsh" | "sign-lsh" =>
-          deleteBatchSignLsh(wave, idCol, c(0), t.path, batchId)
-        case "bm25" => deleteBatchBm25(wave, idCol, c(0), t.path, batchId)
-        case "phrase" =>
-          deleteBatchPhrase(wave, idCol, c(0), t.path, batchId)
-        case "windows" =>
-          deleteBatchWindows(wave, idCol, c(0), t.path, batchId)
-        case "containment" =>
-          deleteBatchContainment(wave, idCol, c(0), t.path, batchId)
-        case "quantile" =>
-          deleteBatchQuantile(wave, idCol, c(0), t.path, batchId)
-        case "gquantile" =>
-          deleteBatchGroupedQuantile(wave, idCol, c(0), c(1), t.path,
-            batchId)
-        case "wordcount" | "wc" =>
-          deleteBatchWordCounts(wave, idCol, c(0), t.path, batchId)
-        case "lm" =>
-          deleteBatchLm(wave, idCol, c(0), t.path, batchId)
-        case "lm3" =>
-          deleteBatchLm3(wave, idCol, c(0), t.path, batchId)
-        case "zorder" | "grams" | "summary" | "stats" =>
-          throw new IllegalArgumentException(
-            s"the ${t.family} family's erasure is not id-addressed and " +
-              "cannot ride an id-keyed wave: zorder is content-addressed " +
-              "(deleteBatchZOrder; verify via loadZOrderChecked over the " +
-              "survivors), grams is fingerprint-only/veto-only " +
-              "(deleteBatchGrams), stats subtracts value counts " +
-              "(deleteBatchStats), summary refuses deletion " +
-              "(deleteBatchSummary) — drive those at their own functions " +
-              "rather than let a fleet wave claim an erasure it cannot " +
-              "certify")
-        case other => throw new IllegalArgumentException(
-          s"unknown family '$other' — id-addressed families: ivf, pq, " +
-            "prefix, signlsh/sign-lsh, bm25, phrase, windows, " +
-            "containment, quantile, gquantile, wordcount, lm, lm3")
-      }
-    }
-    // §2.6: family waves touch disjoint paths and commit their own
-    // markers — independent jobs, overlapped instead of serialized
-    inParallel(targets)(one)
+    // PER-FAMILY narrowing — what makes ONE wave span id spaces with
+    // different coverage (the production GDPR shape: every doomed user
+    // has documents, only some have embeddings): rows whose data column
+    // for THIS family is NULL have nothing to subtract from it and are
+    // dropped from its delete only. This narrowing is NOT silent — the
+    // audit below probes the FULL wave against every family, so an id
+    // narrowed away that the family actually still holds (a vector lost
+    // upstream of the wave join) surfaces as a positive residual and
+    // fails the certificate. §2.6: family waves touch disjoint paths and
+    // commit their own markers — independent jobs, overlapped instead of
+    // serialized.
+    Par.all(waves.map { case (t, e) => () =>
+      e.run(fullWave.where(t.cols.map(col(_).isNotNull)
+          .foldLeft(lit(true))(_ && _)),
+        idCol, t.cols, t.path, batchId)
+    })
     erasureAudit(spark, fullWave, idCol,
       targets.map(t => t.family -> t.path))
   }
@@ -6411,6 +5974,8 @@ object IndexStore {
       execute: Boolean = true): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     require(targets.nonEmpty, "empty target catalog")
+    // refuse unknown and unpriceable families before any fold runs
+    targets.foreach { case (family, _) => priceableFold(familyOf(family)) }
     val rows = targets.map { case (family, path) =>
       val plan = planCompaction(spark, path, family, queriesPerWave,
         horizonWaves, openCostRows)

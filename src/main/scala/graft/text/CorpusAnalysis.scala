@@ -418,8 +418,8 @@ object CorpusAnalysis {
   /** [[sourceOverlapSketched]] with NO scan at all: the matrix from
     * already-persisted per-source summaries
     * ([[graft.index.IndexStore.SummaryIndex]] — one summary family per
-    * source, fed per ingest wave via `appendBatchSummary`/
-    * `streamIntoSummary` over [[shingleItems]]). At 100 TB this is the
+    * source, fed per ingest wave via `appendBatchSummary`, directly or
+    * through the `IndexStore.stream` hook, over [[shingleItems]]). At 100 TB this is the
     * production cadence: each source's KMV min-set accretes at wave
     * cost, and "which datasets copy which" is answered from
     * ≤ nSources × k driver-held longs at report time. All summaries

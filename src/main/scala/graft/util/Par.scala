@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
 
 /** Scale-adaptive parallelism floor for compute-heavy fan-out stages
@@ -58,19 +58,45 @@ object Par {
     * — overlap independent jobs): Spark's scheduler runs several jobs at
     * once inside one application; sequences of driver-side actions are
     * only sequential because the caller's code is. Results keep input
-    * order; the first failure is rethrown (its cause, not the
-    * ExecutionException wrapper) after pending work is cancelled. */
+    * order. The first failure to complete is rethrown (its cause, not the
+    * ExecutionException wrapper) after the rest is cancelled: thunks not
+    * yet started never start, and the Spark jobs the running ones already
+    * submitted are cancelled through a per-call job tag. A tag, not a job
+    * group: the pool threads inherit the caller's local properties, so
+    * the caller's job group (which tracers key on) stays on every job. */
   def all[A](thunks: Seq[() => A], maxInFlight: Int = 8): Seq[A] =
     if (thunks.lengthCompare(1) <= 0) thunks.map(_.apply())
     else {
+      val sc = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+      val tag = s"graft-par-${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(thunks.size, maxInFlight))
+      val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def cancel(): Unit = sc.foreach(
+        _.cancelJobsWithTag(tag, "a sibling Par.all thunk failed"))
       try {
-        val futs = thunks.map(t => pool.submit(
-          new java.util.concurrent.Callable[A] { def call(): A = t() }))
-        futs.map(fu => try fu.get() catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        })
+        val futs = thunks.map(t => done.submit(
+          new java.util.concurrent.Callable[A] {
+            def call(): A = {
+              sc.foreach(_.addJobTag(tag))
+              try t() finally {
+                // a job this thunk submitted after the cancel went out
+                if (failed.get) cancel()
+                sc.foreach(_.removeJobTag(tag))
+              }
+            }
+          }))
+        // completion order, not input order: a fast failure must not
+        // wait behind a slow sibling before the cancel goes out
+        for (_ <- thunks.indices) try done.take().get() catch {
+          case e: java.util.concurrent.ExecutionException =>
+            failed.set(true)
+            cancel()
+            throw e.getCause
+        }
+        futs.map(_.get())
       } finally pool.shutdownNow()
     }
 }

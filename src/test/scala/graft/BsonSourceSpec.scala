@@ -5,29 +5,33 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BSON/mongodump ingestion: byte-level parser semantics on a hand-built
-  * document, then the REAL reference dump (`/root/reference/dump/catalog`)
-  * end-to-end — the migration path for the reference's canonical data. */
+  * document, then a mongodump `catalog` dump end-to-end — the migration
+  * path for the reference's canonical data. The dump is the committed
+  * fixture `src/test/resources/dump/catalog/products.bson.gz` (built by
+  * [[BsonSourceSpec.fixture]]); the reference's real dump
+  * (`/root/reference/dump/catalog`) runs as an extra when it is present. */
 class BsonSourceSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
+  import BsonSourceSpec._
 
-  /** Build a BSON document from (name, tag, payload) elements. */
-  private def doc(elems: (String, Int, Array[Byte])*): Array[Byte] = {
-    val body = elems.flatMap { case (name, tag, payload) =>
-      Array(tag.toByte) ++ name.getBytes("UTF-8") ++ Array(0.toByte) ++ payload
-    }.toArray
-    val len = body.length + 5
-    Array[Byte](
-      (len & 0xff).toByte, ((len >> 8) & 0xff).toByte,
-      ((len >> 16) & 0xff).toByte, ((len >> 24) & 0xff).toByte) ++
-      body ++ Array(0.toByte)
+  private val fixtureDir =
+    new java.io.File(getClass.getResource("/dump/catalog").toURI).getPath
+  private val referenceDir = "/root/reference/dump/catalog"
+  private def dumpDirs: Seq[String] =
+    fixtureDir +: Seq(referenceDir).filter(d =>
+      java.nio.file.Files.isRegularFile(
+        java.nio.file.Paths.get(s"$d/products.bson.gz")))
+
+  private def gunzip(bytes: Array[Byte]): Array[Byte] = {
+    val in = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    try in.readAllBytes() finally in.close()
   }
-  private def i32(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def i64(v: Long): Array[Byte] =
-    (0 until 8).map(i => ((v >> (8 * i)) & 0xff).toByte).toArray
-  private def str(s: String): Array[Byte] =
-    i32(s.length + 1) ++ s.getBytes("UTF-8") ++ Array(0.toByte)
+
+  test("the committed fixture dump is exactly what the byte builders produce") {
+    val gz = java.nio.file.Paths.get(s"$fixtureDir/products.bson.gz")
+    assert(gunzip(java.nio.file.Files.readAllBytes(gz)) sameElements fixture)
+  }
 
   test("parser: every supported BSON type renders to the expected JSON") {
     val inner = doc(("k", 0x10, i32(7)))
@@ -69,17 +73,16 @@ class BsonSourceSpec extends AnyFunSuite with SparkTest {
   }
 
   test("chaos: corrupted dump bytes fail loudly or parse correctly — never hang, never drop") {
-    // fuzz over the REAL dump's bytes: the parser's contract under
+    // fuzz over the dump's bytes: the parser's contract under
     // corruption is loud-failure-or-correct-parse — a mutated stream must
     // never silently yield wrong/fewer documents (the failure mode that
     // would corrupt a migration without anyone noticing), and every parse
     // must terminate (all parser loops advance ≥ 1 byte per iteration)
-    val gz = java.nio.file.Paths.get(
-      "/root/reference/dump/catalog/products.bson.gz")
-    assume(java.nio.file.Files.isRegularFile(gz), "reference dump absent")
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(java.nio.file.Files.readAllBytes(gz)))
-    val bytes = try in.readAllBytes() finally in.close()
+    for (dir <- dumpDirs) chaos(gunzip(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/products.bson.gz"))))
+  }
+
+  private def chaos(bytes: Array[Byte]): Unit = {
     val baseline = BsonSource.parseDocuments(bytes).toVector
     // document boundaries from the length prefixes (the layout contract)
     def lenAt(p: Int): Int =
@@ -157,7 +160,11 @@ class BsonSourceSpec extends AnyFunSuite with SparkTest {
   }
 
   test("reference mongodump ingests end-to-end: catalog collections to queryable JSON") {
-    val dump = BsonSource.readDump(spark, "/root/reference/dump/catalog").cache()
+    dumpDirs.foreach(ingestsEndToEnd)
+  }
+
+  private def ingestsEndToEnd(dir: String): Unit = {
+    val dump = BsonSource.readDump(spark, dir).cache()
     val byColl = dump.groupBy("collection").count()
       .as[(String, Long)].collect().toMap
     assert(byColl.contains("products"), s"collections found: ${byColl.keySet}")
@@ -186,6 +193,98 @@ class BsonSourceSpec extends AnyFunSuite with SparkTest {
       .distinct().as[String].collect().toSet
     assert(days.nonEmpty && days.subsetOf(Set("MONDAY", "TUESDAY", "WEDNESDAY",
       "THURSDAY", "FRIDAY", "SATURDAY", "SUNDAY")))
+    // non-ASCII text survives byte-exact (UTF-8 string lengths)
+    if (dir == fixtureDir)
+      assert(products.where(col("title") === NonAsciiTitle).count() === 1L)
     dump.unpersist(); products.unpersist()
+  }
+}
+
+/** The BSON byte builders and the fixture dump built with them.
+  * Regenerate the committed file with
+  * `sbt "Test/runMain graft.BsonSourceSpec src/test/resources/dump/catalog"`. */
+object BsonSourceSpec {
+
+  /** Build a BSON document from (name, tag, payload) elements. */
+  def doc(elems: (String, Int, Array[Byte])*): Array[Byte] = {
+    val body = elems.flatMap { case (name, tag, payload) =>
+      Array(tag.toByte) ++ name.getBytes("UTF-8") ++ Array(0.toByte) ++ payload
+    }.toArray
+    val len = body.length + 5
+    Array[Byte](
+      (len & 0xff).toByte, ((len >> 8) & 0xff).toByte,
+      ((len >> 16) & 0xff).toByte, ((len >> 24) & 0xff).toByte) ++
+      body ++ Array(0.toByte)
+  }
+  def i32(v: Int): Array[Byte] =
+    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+  def i64(v: Long): Array[Byte] =
+    (0 until 8).map(i => ((v >> (8 * i)) & 0xff).toByte).toArray
+  /** BSON string: int32 UTF-8 byte length (incl. the NUL), bytes, NUL. */
+  def str(s: String): Array[Byte] = {
+    val b = s.getBytes("UTF-8")
+    i32(b.length + 1) ++ b ++ Array(0.toByte)
+  }
+  /** BSON array: a document keyed "0", "1", … */
+  def arr(tag: Int, xs: Seq[Array[Byte]]): Array[Byte] =
+    doc(xs.zipWithIndex.map { case (x, i) => (i.toString, tag, x) }: _*)
+
+  val NonAsciiTitle = "Menú Niños Jalapeño Crème Brûlée 🍔 (Almuerzo)"
+  private val Titles = Seq("Combo Pollo Crujiente (Cena)",
+    "Cajita Feliz Café con Leche (Desayuno)",
+    "Promo Açaí Fresco (Merienda)", "Box Hamburguesa Doble (Almuerzo)",
+    "Duo Piña Colada Helado (Postre)")
+  private val Days = Seq("SUNDAY", "MONDAY", "TUESDAY", "WEDNESDAY",
+    "THURSDAY", "FRIDAY", "SATURDAY")
+  private val Countries = Seq("MX", "PE", "CL", "CO")
+  private val AreaTypes = Seq("DRIVE_THRU", "PICKUP", "DELIVERY", "EAT_IN")
+
+  /** Catalog document `i`: ObjectId `_id`, nested availability and
+    * product arrays; document 0 is the reference dump's first document
+    * (MX drive-thru breakfast menu), document 1 carries [[NonAsciiTitle]]. */
+  private def catalog(i: Int): Array[Byte] = {
+    val oid = i32(1700000000 + i).reverse ++
+      Array.tabulate(8)(j => ((i * 31 + j * 7) & 0xff).toByte)
+    val cc = if (i == 0) "MX" else Countries(i % Countries.size)
+    val id =
+      if (i == 0) "MX-DRIVE_THRU-510851"
+      else s"$cc-${AreaTypes(i % AreaTypes.size)}-${100000 + i * 7919}"
+    val title =
+      if (i == 0) "Menu Ejecutivo Flex (Desayuno)"
+      else if (i == 1) NonAsciiTitle
+      else s"${Titles(i % Titles.size)} #$i"
+    val availability = Days.indices.map { d =>
+      doc(("dayOfWeek", 0x02, str(Days((d + i) % Days.size))),
+        ("timePeriods", 0x04, arr(0x03, Seq(doc(
+          ("startTime", 0x02, str(f"${6 + (i + d) % 4}%02d:00")),
+          ("endTime", 0x02, str(f"${20 + (i + d) % 4}%02d:00")))))))
+    }
+    val products = (0 until 3 + i % 4).map { j =>
+      val amount = 3.5 + (i * 13 + j * 5) % 57
+      doc(("name", 0x02, str(s"Producto $i-$j Pequeño")),
+        ("price", 0x03, doc(
+          ("amount", 0x01, i64(java.lang.Double.doubleToLongBits(amount))),
+          ("formatted", 0x02, str(s"$$$amount".replace('.', ','))))),
+        ("available", 0x08, Array((if ((i + j) % 5 != 0) 1 else 0).toByte)),
+        ("areas", 0x04, arr(0x02, AreaTypes.take(1 + j % 3).map(str))))
+    }
+    doc(("_id", 0x07, oid), ("id", 0x02, str(id)), ("title", 0x02, str(title)),
+      ("countryCode", 0x02, str(cc)),
+      ("availability", 0x04, arr(0x03, availability)),
+      ("products", 0x04, arr(0x03, products)),
+      ("createdAt", 0x09, i64(1700000000000L + i * 86400000L)),
+      ("__v", 0x10, i32(0)))
+  }
+
+  /** The fixture `products` collection: 120 concatenated documents. */
+  def fixture: Array[Byte] = (0 until 120).map(catalog).reduce(_ ++ _)
+
+  def main(args: Array[String]): Unit = {
+    val dir = java.nio.file.Paths.get(args(0))
+    java.nio.file.Files.createDirectories(dir)
+    val out = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(dir.resolve("products.bson.gz")))
+    try out.write(fixture) finally out.close()
   }
 }

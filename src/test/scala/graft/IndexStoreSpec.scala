@@ -240,8 +240,8 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     val half2 = docs.where($"doc_id" % 2 === 1).as[(Long, String)].collect()
     IndexStore.saveWordCounts(half1, "doc_id", "text", dir)
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](spark)
-    val q = IndexStore.streamIntoWordCounts(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("doc_id", "text"), ckpt)(
+      IndexStore.appendBatchWordCounts(_, "doc_id", "text", dir, _))
     try {
       val (b1, b2) = half2.splitAt(half2.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -268,8 +268,8 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     IndexStore.saveBm25(TextSearch.buildIndex(half1, "doc_id", "text"), dir)
     // …then the second half arrives as a stream, split across two batches
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](spark)
-    val q = IndexStore.streamIntoBm25(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("doc_id", "text"), ckpt)(
+      IndexStore.appendBatchBm25(_, "doc_id", "text", dir, _))
     try {
       val (b1, b2) = half2.splitAt(half2.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -964,8 +964,8 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     val half2 = embs.where($"vec_id" % 2 === 1)
       .as[(Long, Seq[Double])].collect()
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])](spark)
-    val q = IndexStore.streamIntoPrefix(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", dir, ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("vec_id", "embedding"), ckpt)(
+      IndexStore.appendBatchPrefix(_, "vec_id", "embedding", dir, _))
     try {
       val (b1, b2) = half2.splitAt(half2.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -1457,9 +1457,9 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     IndexStore.saveStats(half1, "doc_id", "text", Seq("lang", "source"), dir)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String, String)](spark)
-    val q = IndexStore.streamIntoStats(
-      mem.toDF().toDF("doc_id", "text", "lang", "source"),
-      "doc_id", "text", dir, ckpt)
+    val q = IndexStore.stream(
+      mem.toDF().toDF("doc_id", "text", "lang", "source"), ckpt)(
+      IndexStore.appendBatchStats(_, "doc_id", "text", dir, _))
     try {
       val (b1, b2) = half2.splitAt(half2.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
@@ -2046,9 +2046,9 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
       .as[(Long, Seq[Double])].collect()
     val remaining = embs.where($"vec_id" % 7 =!= 0).localCheckpoint(true)
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])](spark)
-    val q = IndexStore.streamDeletesIntoIvf(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", dir,
-      ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("vec_id", "embedding"), ckpt)(
+      IndexStore.deleteBatchIvf(_, "vec_id", "embedding", dir, _,
+        issuer = ckpt))
     try {
       val (w1, w2) = doomed.splitAt(doomed.length / 2)
       mem.addData(w1.toIndexedSeq); q.processAllAvailable()
@@ -2073,9 +2073,8 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     val doomedDocs = docs.where($"doc_id" % 9 === 0)
       .as[(Long, Long)].collect()
     val qmem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)](spark)
-    val qq = IndexStore.streamDeletesIntoQuantile(
-      qmem.toDF().toDF("doc_id", "n_chars"), "doc_id", "n_chars", qDir,
-      qCkpt)
+    val qq = IndexStore.stream(qmem.toDF().toDF("doc_id", "n_chars"), qCkpt)(
+      IndexStore.deleteBatchQuantile(_, "doc_id", "n_chars", qDir, _))
     try {
       val (w1, w2) = doomedDocs.splitAt(doomedDocs.length / 2)
       qmem.addData(w1.toIndexedSeq); qq.processAllAvailable()
@@ -2100,8 +2099,9 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     val doomedText = dText.where($"doc_id" % 8 === 0)
       .as[(Long, String)].collect()
     val wmem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](spark)
-    val wq = IndexStore.streamDeletesIntoWordCounts(
-      wmem.toDF().toDF("doc_id", "text"), "doc_id", "text", wcDir, wcCkpt)
+    val wq = IndexStore.stream(wmem.toDF().toDF("doc_id", "text"), wcCkpt)(
+      IndexStore.deleteBatchWordCounts(_, "doc_id", "text", wcDir, _,
+        issuer = wcCkpt))
     try {
       val (w1, w2) = doomedText.splitAt(doomedText.length / 2)
       wmem.addData(w1.toIndexedSeq); wq.processAllAvailable()
@@ -2141,8 +2141,8 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     val doomed = docs.where($"doc_id" % 5 === 0)
       .as[(Long, String)].collect()
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](spark)
-    val q = IndexStore.streamDeletesIntoBm25(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("doc_id", "text"), ckpt)(
+      IndexStore.deleteBatchBm25(_, "doc_id", "text", dir, _, issuer = ckpt))
     try {
       // two micro-batches (checkpoint ids 0 and 1, both behind wave 7)
       val (w1, w2) = doomed.splitAt(doomed.length / 2)

@@ -171,8 +171,8 @@ class SummarySpec extends AnyFunSuite with SparkTest {
     val tail = items.where(pmod(col("ix"), lit(2)) === 1)
       .select("item").as[String].collect()
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String](spark)
-    val q = IndexStore.streamIntoSummary(mem.toDF().toDF("item"), "item",
-      p, ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("item"), ckpt)(
+      IndexStore.appendBatchSummary(_, "item", p, _))
     try {
       val (b1, b2) = tail.splitAt(tail.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()

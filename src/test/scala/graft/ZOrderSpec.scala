@@ -228,8 +228,8 @@ class ZOrderSpec extends AnyFunSuite with SparkTest {
     val tailRows = incFixture.where($"x" % 5 === 4)
       .as[(Long, Long, Double)].collect()
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)](spark)
-    val q = IndexStore.streamIntoZOrder(
-      mem.toDF().toDF("x", "y", "v"), p, ckpt)
+    val q = IndexStore.stream(mem.toDF().toDF("x", "y", "v"), ckpt)(
+      IndexStore.appendBatchZOrder(_, p, _))
     try {
       val (b1, b2) = tailRows.splitAt(tailRows.length / 2)
       mem.addData(b1.toIndexedSeq); q.processAllAvailable()
