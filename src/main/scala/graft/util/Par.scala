@@ -99,4 +99,17 @@ object Par {
         futs.map(_.get())
       } finally pool.shutdownNow()
     }
+
+  /** [[all]] over three thunks of different types, typed: the same pool,
+    * failure and cancellation contract, results as a tuple. */
+  def all[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
+    val Seq(x, y, z) = all[Any](Seq(() => a, () => b, () => c))
+    (x.asInstanceOf[A], y.asInstanceOf[B], z.asInstanceOf[C])
+  }
+
+  /** [[all]] over four thunks of different types, typed. */
+  def all[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
+    val Seq(w, x, y, z) = all[Any](Seq(() => a, () => b, () => c, () => d))
+    (w.asInstanceOf[A], x.asInstanceOf[B], y.asInstanceOf[C], z.asInstanceOf[D])
+  }
 }
