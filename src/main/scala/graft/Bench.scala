@@ -63,15 +63,13 @@ object Bench {
     }
     // local-iteration filter (unset for driver runs): comma-separated
     // query names — time just those
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val perIterFull = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val perIterFull = SparkEntry.selectQueries(
+        sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+      .map { q =>
         heapPools.foreach(_.resetPeakUsage())
-        val obs = (1 to iters).map(_ => timeOnce(name, fn))
+        val obs = (1 to iters).map(_ => timeOnce(q.name, q.build))
         val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum >> 20
-        (name, obs, peakMb)
+        (q.name, obs, peakMb)
       }
     // ordered Seq, NOT a Map: all three JSON blobs (iters/gc/heap) and the
     // contract line share query order, and a duplicate query name would

@@ -15,9 +15,7 @@ object ExplainDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names =
-      if (args.length > 3) args(3).split(',').map(_.trim).toSeq
-      else SparkEntry.queries.keys.toSeq
+    val selected = SparkEntry.selectQueries(args.lift(3))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -28,8 +26,8 @@ object ExplainDump {
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.warmIndexes(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (name <- names) {
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown '$name'"))
+    for (query <- selected) {
+      val (name, fn) = (query.name, query.build)
       try {
         val txt = fn(spark, sfDir).queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode)

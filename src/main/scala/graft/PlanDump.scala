@@ -18,9 +18,7 @@ object PlanDump {
     val run = args.contains("--run")
     val rest = args.filterNot(_ == "--run")
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-    val names =
-      if (rest.length > 1) rest(1).split(',').map(_.trim).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val selected = SparkEntry.selectQueries(rest.lift(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -49,9 +47,8 @@ object PlanDump {
         }
       }.mkString("\n")
     }
-    for (name <- names) {
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'"))
+    for (query <- selected) {
+      val (name, fn) = (query.name, query.build)
       println(s"==== $name")
       try {
         val qe = fn(spark, sfDir).queryExecution

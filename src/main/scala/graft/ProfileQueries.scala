@@ -20,9 +20,7 @@ object ProfileQueries {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
-    val names =
-      if (args.nonEmpty) args(0).split(',').map(_.trim).toSeq
-      else SparkEntry.queries.keys.toSeq
+    val selected = SparkEntry.selectQueries(args.headOption)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -92,8 +90,8 @@ object ProfileQueries {
         println(f"  JOB[$label] $id%5d ${ns / 1e9}%7.3fs ${desc.take(110)}")
       }
     }
-    val rows = names.map { name =>
-      val fn = SparkEntry.queries(name)
+    val rows = selected.map { query =>
+      val (name, fn) = (query.name, query.build)
       val obs = (1 to iters).map { it =>
         if (it == iters) jobs.clear()
         val (tc, df) = t(fn(spark, sfDir))

@@ -1,43 +1,20 @@
 package graft
 
-import graft.api.FoodFinder
-import graft.dedup.{Dedup, Planner, SubstringDedup}
-import graft.embed.{EmbedJob, Embedder}
-import graft.etl.Flatten
-import graft.functions.{Text, Vectors}
-import graft.index.{IndexStore, Ivf, Pq}
-import graft.multimodal.Multimodal
-import graft.operators.{AsOfJoin, RangeJoin, Sketches}
-import graft.pipeline.{Contamination, Curation}
-import graft.search.{AnnPlanner, LateInteraction, Mmr, Negatives, Rerank, ScoreFusion, TextPlanner, TextSearch, VectorSearch}
-import graft.streaming.EventStreams
-import graft.text.{CorpusAnalysis, LanguageModel, PiiScrub, TextAnalysis, Vocab}
-import graft.util.{Tables, ZOrder}
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's entry points (SURVEY.md §7): `entry`, `queries`,
+  * `oracleSql` and `warmIndexes`.
   *
-  * Every operator from SURVEY.md §2 (plus the north-star LLM-pipeline ops)
-  * gets one `queries` entry and, when ANSI-SQL-expressible, a matching
-  * DuckDB `oracleSql` entry. Column names/aliases are kept identical on
-  * both sides; every ranked query tie-breaks on a unique id; every float
-  * is rounded identically on both sides (see VectorSearch.ScoreDecimals).
+  * The declared queries live in `graft.queries`, one [[Query]] (Spark
+  * build plus DuckDB oracle) per operator, grouped by operator family;
+  * [[registry]] lists them in run order. This object holds what they
+  * share at run time: the session fixture registry, the index warm-up and
+  * the Verify-time self-check.
   */
 object SparkEntry {
-
-  /** Fixed flagship query text — the reference's own CLI smoke query
-    * (`README.md:28`: "nuggets para desayuno"). Embedded once,
-    * deterministically, and interpolated into the oracle SQL as a literal.
-    */
-  private val flagshipQueryVec: Array[Double] =
-    Embedder.default.embed("nuggets para desayuno")
-  private val flagshipQueryVecSql: String = Vectors.vecSql(flagshipQueryVec)
-
-  /** Fixed full-text query — terms from the corpus vocabulary. */
-  private val flagshipQueryText = "fast table scan merge"
 
   // ---------------------------------------------- session fixture registry
 
@@ -58,7 +35,7 @@ object SparkEntry {
   /** Fixture `name` for (`spark`, `arg`), built on first use; [[clearCaches]]
     * runs `release` on the value. The build runs outside any lock (the
     * map's lock-free `getOrElseUpdate`), so it may look up other fixtures
-    * ([[corpusIvfDisk]] builds [[corpusIvf]]) and run concurrently under
+    * (`Shared.corpusIvfDisk` builds `Shared.corpusIvf`) and run concurrently under
     * `Par.all`; of two racing first builds the first to finish is kept. A
     * build that throws records nothing, so the next call builds again. */
   private[graft] def pinnedFixture[A](spark: SparkSession, name: String,
@@ -77,14 +54,14 @@ object SparkEntry {
     * temp dir, one tag per part with every non-alphanumeric character
     * replaced by `_`. The path depends on the corpus, not the session, so
     * sessions over one corpus share it. */
-  private def persistedPath(name: String, parts: String*): String =
+  private[graft] def persistedPath(name: String, parts: String*): String =
     (s"${sys.props("java.io.tmpdir")}/graft_$name" +:
       parts.map(_.replaceAll("[^a-zA-Z0-9]", "_"))).mkString("_")
 
   /** A persisted fixture: `write` builds the index at
     * `persistedPath(name, dir)` once per (session, sfDir); the path is
     * the fixture's value. */
-  private def persisted(spark: SparkSession, dir: String, name: String)(
+  private[graft] def persisted(spark: SparkSession, dir: String, name: String)(
       write: String => Unit): String =
     fixture(spark, name, dir) {
       val p = persistedPath(name, dir)
@@ -92,36 +69,9 @@ object SparkEntry {
       p
     }
 
-  /** Searchable view of the testdata corpus: documents ⋈ embeddings. */
-  private def searchTable(spark: SparkSession, dir: String): FoodFinder.SearchTable =
-    // cached per (session, dir) AND with the dim declared: a fresh
-    // SearchTable per call would re-derive the dimension with a Spark job
-    // per query (resolvedDim caches on the instance), and the testdata dim
-    // is a known constant here — exactly the "declare dim to skip
-    // derivation" contract in the SearchTable scaladoc
-    fixture(spark, "searchtable", dir) {
-      val d = Tables.documents(spark, dir)
-      val e = Tables.embeddings(spark, dir)
-      FoodFinder.SearchTable(
-        d.join(e, d("doc_id") === e("vec_id")).drop("vec_id"),
-        idCol = "doc_id", embCol = "embedding", textCol = "text",
-        dim = Some(EmbDim))
-    }
-
-  /** The corpus BM25 index, built once per (session, sfDir); queries
-    * share the side tables instead of rebuilding corpus statistics each
-    * time. */
-  private def corpusBm25(spark: SparkSession, dir: String): TextSearch.Bm25Index =
-    pinnedFixture[TextSearch.Bm25Index](spark, "bm25mem", dir,
-        idx => { idx.postings.unpersist(); idx.termDf.unpersist() }) {
-      val tbl = searchTable(spark, dir)
-      val idx = TextSearch.buildIndex(tbl.df, tbl.idCol, tbl.textCol)
-      idx.copy(postings = idx.postings.cache(), termDf = idx.termDf.cache())
-    }
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    qHybrid(spark, "/root/testdata/sf0.001")
+    TextQueries.qHybrid.build(spark, "/root/testdata/sf0.001")
 
   /** Drop every fixture registry entry owned by `spark`, running each
     * entry's release action (unpersisting the DataFrames it pinned). The
@@ -167,2444 +117,35 @@ object SparkEntry {
     * queries measure the probe, not the build — and, per the wave-time
     * contract above, the one checked load per family runs here too. */
   def warmIndexes(spark: SparkSession, dir: String): Unit = {
-    val bm = corpusBm25(spark, dir)
+    val bm = Shared.corpusBm25(spark, dir)
     bm.postings.count(); bm.termDf.count()
-    corpusIvf(spark, dir).assignments.count()
-    corpusSignLsh(spark, dir).count()
-    corpusBm25Disk(spark, dir)
-    corpusIvfDisk(spark, dir)
-    corpusPq(spark, dir).codes.count()
-    corpusPqDisk(spark, dir)
-    corpusSparseEmb(spark, dir).count()
-    corpusContainmentDisk(spark, dir)
-    corpusGramsDisk(spark, dir)
-    corpusWindowsDisk(spark, dir)
-    corpusMrlPrefixDisk(spark, dir)
-    corpusPhraseDisk(spark, dir)
-    embStatsDisk(spark, dir).count()
-    docStatsDisk(spark, dir).count()
-    eventStatsDisk(spark, dir).count()
-    lineitemZorderDisk(spark, dir)
-    lineitemZorderIncDisk(spark, dir)
-    corpusSummariesDisk(spark, dir)
-    corpusIvfDeletedDisk(spark, dir)
-    corpusBm25DeletedDisk(spark, dir)
-    corpusQuantileDisk(spark, dir)
-    corpusGroupedQuantileDisk(spark, dir)
-    corpusIvfSplitDisk(spark, dir)
-    corpusBm25AsofDisk(spark, dir)
-    corpusIvfAsofDisk(spark, dir)
-    corpusWordCountsDisk(spark, dir).count()
+    Shared.corpusIvf(spark, dir).assignments.count()
+    DedupQueries.corpusSignLsh(spark, dir).count()
+    Shared.corpusBm25Disk(spark, dir)
+    Shared.corpusIvfDisk(spark, dir)
+    VectorQueries.corpusPq(spark, dir).codes.count()
+    VectorQueries.corpusPqDisk(spark, dir)
+    Shared.corpusSparseEmb(spark, dir).count()
+    DedupQueries.corpusContainmentDisk(spark, dir)
+    Shared.corpusGramsDisk(spark, dir)
+    VectorQueries.corpusWindowsDisk(spark, dir)
+    VectorQueries.corpusMrlPrefixDisk(spark, dir)
+    TextQueries.corpusPhraseDisk(spark, dir)
+    Shared.embStatsDisk(spark, dir).count()
+    Shared.docStatsDisk(spark, dir).count()
+    Shared.eventStatsDisk(spark, dir).count()
+    IndexOpsQueries.lineitemZorderDisk(spark, dir)
+    IndexOpsQueries.lineitemZorderIncDisk(spark, dir)
+    IndexOpsQueries.corpusSummariesDisk(spark, dir)
+    IndexOpsQueries.corpusIvfDeletedDisk(spark, dir)
+    IndexOpsQueries.corpusBm25DeletedDisk(spark, dir)
+    IndexOpsQueries.corpusQuantileDisk(spark, dir)
+    IndexOpsQueries.corpusGroupedQuantileDisk(spark, dir)
+    IndexOpsQueries.corpusIvfSplitDisk(spark, dir)
+    IndexOpsQueries.corpusBm25AsofDisk(spark, dir)
+    IndexOpsQueries.corpusIvfAsofDisk(spark, dir)
+    LmQueries.corpusWordCountsDisk(spark, dir).count()
   }
-
-  // ---------------------------------------------------------------- queries
-
-  /** R7/R8/R5 exact filtered vector top-k (SURVEY §7.1 minimum slice):
-    * embeddings ⋈ documents, pre-filter, cosine score, top-5. */
-  private def qVectorKnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val d = Tables.documents(spark, dir)
-    val joined = e.join(d, e("vec_id") === d("doc_id"))
-    VectorSearch
-      .knn(joined, "vec_id", "embedding", flagshipQueryVec, k = 5,
-        metric = "cosine", preFilter = Some(col("lang") === "en"))
-      .select("vec_id", "text", "score")
-  }
-
-  /** R7/R8 with the euclidean metric (the third index similarity choice,
-    * `indexes.py:28-31`) — score = 1/(1+distance). */
-  private def qVectorKnnEuclidean(spark: SparkSession, dir: String): DataFrame =
-    VectorSearch
-      .knn(Tables.embeddings(spark, dir), "vec_id", "embedding", flagshipQueryVec,
-        k = 5, metric = "euclidean")
-      .select("vec_id", "score")
-
-  /** R7/R8 with the dotProduct metric — score = (1+dot)/2. */
-  private def qVectorKnnDot(spark: SparkSession, dir: String): DataFrame =
-    VectorSearch
-      .knn(Tables.embeddings(spark, dir), "vec_id", "embedding", flagshipQueryVec,
-        k = 5, metric = "dotProduct")
-      .select("vec_id", "score")
-
-  /** R2 distinct + sort (the /api/restaurants pipeline,
-    * `backend/api.py:87-94`) over documents.source. */
-  private def qDistinctSort(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select("source")
-      .where(col("source").isNotNull)
-      .distinct()
-      .orderBy("source")
-
-  /** Baseline relational aggregation (north-star; TPC-H Q1 shape). */
-  private def q1Agg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 4).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 4).as("sum_price"),
-        round(avg(col("l_discount")), 6).as("avg_disc"),
-        count(lit(1)).as("n"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** R10/R11 BM25 relevance ranking (the `$search` stage). */
-  private def qBm25(spark: SparkSession, dir: String): DataFrame =
-    TextSearch
-      .fullTextSearch(Tables.documents(spark, dir), "doc_id", "text", flagshipQueryText, k = 10)
-      .withColumnRenamed("id", "doc_id")
-
-  /** R10+R14 fulltext mode with post-filter placement (`$search` → `$match`
-    * → `$limit`, `backend/api.py:255-280`). */
-  private def qFulltextPostfilter(spark: SparkSession, dir: String): DataFrame =
-    FoodFinder
-      .fulltext(searchTable(spark, dir), flagshipQueryText, k = 10,
-        filter = Some(col("lang") === "en"),
-        index = Some(corpusBm25(spark, dir)))
-      .withColumnRenamed("id", "doc_id")
-
-  /** R12/R13/R14 hybrid `$scoreFusion`: sigmoid-normalized 10·vector+text,
-    * vector branch pre-filtered, fused result post-filtered, flattened
-    * scoreDetails columns. */
-  private def qHybrid(spark: SparkSession, dir: String): DataFrame =
-    FoodFinder
-      .hybrid(searchTable(spark, dir), flagshipQueryVec, flagshipQueryText, k = 5,
-        filter = Some(col("lang") === "en"),
-        index = Some(corpusBm25(spark, dir)))
-      .withColumnRenamed("id", "doc_id")
-
-  /** Hybrid with RANK fusion (`$rankFusion`, the rank-based sibling of the
-    * reference's `$scoreFusion`): identical branches and filter placement
-    * as q_hybrid, combination = Σ 1/(60 + rank_p) over the pipelines that
-    * returned the doc. */
-  private def qHybridRrf(spark: SparkSession, dir: String): DataFrame =
-    FoodFinder
-      .hybridRankFusion(searchTable(spark, dir), flagshipQueryVec, flagshipQueryText,
-        k = 5, filter = Some(col("lang") === "en"),
-        index = Some(corpusBm25(spark, dir)))
-      .withColumnRenamed("id", "doc_id")
-
-  /** R1 unwind/flatten: nested (collect_list) → exploded back flat —
-    * the catalog→product_detail ETL exercised on orders⋈lineitem. */
-  private def qFlatten(spark: SparkSession, dir: String): DataFrame = {
-    val nested = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_orderkey", "o_custkey")
-      .agg(collect_list(struct(col("l_linenumber"), col("l_partkey"), col("l_quantity"))).as("items"))
-    Flatten.unwind(nested, "items", "item")
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("item.l_linenumber").as("l_linenumber"),
-        col("item.l_partkey").as("l_partkey"),
-        col("item.l_quantity").as("l_quantity"))
-      // testdata l_linenumber is NOT unique within an order — sort on every
-      // column so the dump is deterministically ordered for the hash compare
-      .orderBy("o_orderkey", "l_linenumber", "l_partkey", "l_quantity", "o_custkey")
-  }
-
-  /** North-star text analysis: whitespace + BPE-ish token counts and the
-    * frozen quality heuristic, per document. */
-  private def qTextStats(spark: SparkSession, dir: String): DataFrame =
-    // stage the token array once (an attribute): the per-metric
-    // filter/aggregate lambdas are not CSE'd, so inline tokenization
-    // would re-run the regex split per metric
-    Tables.documents(spark, dir)
-      .withColumn("__toks", Text.tokens(col("text")))
-      .withColumn("__stats", TextAnalysis.gateStats(col("__toks")))
-      .select(
-        col("doc_id"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws_tokens"),
-        TextAnalysis.bpeTokenCountFromTokens(col("text"), col("__toks")).as("bpe_tokens"),
-        // integer ppm score (not the rounded DOUBLE) so the driver's hash
-        // compare is immune to last-ULP double representation differences
-        TextAnalysis.qualityPpmFromGateStats(col("text"), col("__stats")).as("quality_ppm"))
-      .orderBy("doc_id")
-
-  /** North-star Gopher-family repetition statistics per document: most
-    * frequent bigram's token-mass, duplicated-trigram fraction, longest
-    * same-token run — the repetition gates a curation run thresholds on. */
-  private def qRepetition(spark: SparkSession, dir: String): DataFrame =
-    CorpusAnalysis.repetitionStats(Tables.documents(spark, dir), "doc_id", "text")
-      .orderBy("id")
-
-  /** North-star corpus vocabulary/Zipf statistics (one row): vocab size,
-    * hapax count, token-mass share of the 100-term head. */
-  private def qVocabStats(spark: SparkSession, dir: String): DataFrame =
-    CorpusAnalysis.vocabStats(Tables.documents(spark, dir), "text")
-
-  /** North-star LM-perplexity quality scoring (CCNet-shape): corpus
-    * self-perplexity under an add-one bigram LM — outlier docs (unusual
-    * token sequences) surface with high ppl. Train-on-A/score-B is the same
-    * operator with a different train corpus (LanguageModelSpec). */
-  private def qLmScore(spark: SparkSession, dir: String): DataFrame =
-    LanguageModel.selfScore(Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** The quality-filter LM as a PERSISTED family ([[IndexStore.saveLm]]):
-    * bigram + unigram count deltas accreted per ingest wave (both
-    * invertible sums — the word-count family's discipline one level up:
-    * prefix counts are DERIVED from the bigram fold so they can never
-    * drift, vocab size is the unigram fold's surviving support), with
-    * the erased-id ledger, logical-clock waves, staleness fingerprint,
-    * compaction, and as-of horizons every persisted family carries. */
-  private def lmPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "lm") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "text")
-      IndexStore.saveLm(
-        d.where(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p)
-      IndexStore.appendBatchLm(
-        d.where(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "text", p, 0L)
-      IndexStore.appendBatchLm(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", p, 1L)
-    }
-  private def corpusLmDisk(spark: SparkSession, dir: String)
-      : LanguageModel.BigramLm = {
-    val path = lmPath(spark, dir)
-    val d = Tables.documents(spark, dir).select("doc_id", "text")
-    checkedOncePerWave(spark, dir, "lm")(
-      IndexStore.loadLmChecked(spark, path, d, "doc_id", "text"))(
-      IndexStore.loadLm(spark, path))
-  }
-
-  /** Perplexity scoring from the PERSISTED LM fold ([[corpusLmDisk]] —
-    * three committed waves): the folded model must equal a fresh
-    * [[LanguageModel.train]] over the committed corpus, so this shares
-    * `q_lm_score`'s self-score oracle verbatim — a drifted bigram fold,
-    * a prefix count disagreeing with its bigrams, or a wrong vocab size
-    * all fail the hash. Scoring cost is unchanged (two count-table
-    * joins); what the family buys is the TRAIN side: the model tracks
-    * the corpus at wave cost instead of a per-refresh rescan. */
-  private def qLmScoreInc(spark: SparkSession, dir: String): DataFrame =
-    LanguageModel.score(corpusLmDisk(spark, dir),
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** LM TIME TRAVEL ([[IndexStore.loadLmAsOf]]): score TODAY'S corpus
-    * under the LM the BASE build saw (horizon −1 — the earliest legal
-    * horizon, exercising the boundary) — the frozen-trusted-LM
-    * production pattern (quality gates deliberately pin the scoring
-    * model while the corpus moves) as a marker filter instead of a
-    * snapshot copy. The oracle trains on exactly the horizon corpus
-    * (doc_id %% 3 = 0) and LEFT-join-scores the full table, so the
-    * unseen-bigram smoothing path is hash-checked too. */
-  private def qLmScoreAsof(spark: SparkSession, dir: String): DataFrame = {
-    corpusLmDisk(spark, dir) // build fixture + tip freshness
-    LanguageModel.score(
-        IndexStore.loadLmAsOf(spark, lmPath(spark, dir), throughWave = -1L),
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** ORDER-3 quality LM with stupid backoff
-    * ([[LanguageModel.train3]]/[[LanguageModel.score3]], Brants et al.
-    * 2007): the CCNet-style gate at the order the add-one bigram can't
-    * reach. All arithmetic is exact integer counts + a fixed α = 0.4 —
-    * the oracle rebuilds the identical three count tables and CASE
-    * backoff in SQL, so every branch (observed trigram, bigram backoff,
-    * unigram floor) is hash-checked. */
-  private def qLm3Score(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    LanguageModel.score3(LanguageModel.train3(d, "doc_id", "text"),
-        d, "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** The order-3 LM as the SIXTEENTH persisted family
-    * ([[IndexStore.saveLm3]]): trigram/bigram/unigram count deltas per
-    * ingest wave (all invertible sums), N and V derived from the
-    * unigram fold, ledger/clock/fingerprint/as-of like every family.
-    * The fold must equal a fresh [[LanguageModel.train3]] over the
-    * committed corpus — shares `q_lm3_score`'s oracle verbatim. */
-  private def lm3Path(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "lm3") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "text")
-      IndexStore.saveLm3(
-        d.where(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p)
-      IndexStore.appendBatchLm3(
-        d.where(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "text", p, 0L)
-      IndexStore.appendBatchLm3(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", p, 1L)
-    }
-  private def corpusLm3Disk(spark: SparkSession, dir: String)
-      : LanguageModel.TrigramLm = {
-    val path = lm3Path(spark, dir)
-    val d = Tables.documents(spark, dir).select("doc_id", "text")
-    checkedOncePerWave(spark, dir, "lm3")(
-      IndexStore.loadLm3Checked(spark, path, d, "doc_id", "text"))(
-      IndexStore.loadLm3(spark, path))
-  }
-
-  private def qLm3ScoreInc(spark: SparkSession, dir: String): DataFrame =
-    LanguageModel.score3(corpusLm3Disk(spark, dir),
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** Order-3 TIME TRAVEL ([[IndexStore.loadLm3AsOf]], the
-    * [[qLmScoreAsof]] contract one order up): score today's corpus
-    * under the trigram LM the BASE build saw — the oracle trains on
-    * exactly the horizon subset and scores everything, so the bigram-
-    * backoff and unigram-floor branches are exercised on every word the
-    * horizon never saw. */
-  private def qLm3ScoreAsof(spark: SparkSession, dir: String): DataFrame = {
-    corpusLm3Disk(spark, dir) // build fixture + tip freshness
-    LanguageModel.score3(
-        IndexStore.loadLm3AsOf(spark, lm3Path(spark, dir),
-          throughWave = -1L),
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** SCRIPT-PROFILE language routing ([[TextAnalysis.scriptCount]]) —
-    * the coarse langid a 100 TB multilingual intake runs before any
-    * model-based classifier: per document, token counts attributed by
-    * FIRST-code-point Unicode script (narrow size-of-filter passes over
-    * one staged token array — no explode, no shuffle) plus the majority
-    * non-Latin script (ties break han > cyrillic > greek, declared).
-    * The plant varies script MASS per doc (1+id%3 Cyrillic words,
-    * 1+id%2 Han runs, a Greek token on even ids) so the majority flips
-    * across the corpus, and Java's \p{IsXxx} must agree with RE2's
-    * \p{Xxx} script property on every planted token. */
-  private def qScriptProfile(spark: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    val cyr = element_at(array(cyrWords.map(lit): _*),
-      (pmod(id, lit(4L)) + 1L).cast("int"))
-    val cjk = element_at(array(cjkWords.map(lit): _*),
-      (pmod(id, lit(3L)) + 1L).cast("int"))
-    val aug = Tables.documents(spark, dir).select(id,
-      concat(col("text"), lit(" "),
-        array_join(array_repeat(cyr,
-          (pmod(id, lit(3L)) + 1L).cast("int")), " "),
-        lit(" "),
-        array_join(array_repeat(cjk,
-          (pmod(id, lit(2L)) + 1L).cast("int")), " "),
-        when(pmod(id, lit(2L)) === 0, lit(" δξα")).otherwise(lit("")))
-        .as("text"))
-    // the four scripts the fixture plants (Scripts carries more — the
-    // oracle below selects the same four by name)
-    val re = TextAnalysis.Scripts.map { case (n, j, _) => n -> j }.toMap
-    val toks = Text.tokensUnicode(col("text"))
-    aug.select(col("doc_id"),
-        TextAnalysis.scriptCount(toks, re("latin")).as("n_latin"),
-        TextAnalysis.scriptCount(toks, re("cyrillic")).as("n_cyrillic"),
-        TextAnalysis.scriptCount(toks, re("han")).as("n_han"),
-        TextAnalysis.scriptCount(toks, re("greek")).as("n_greek"))
-      .withColumn("main_nonlatin",
-        when(col("n_han") >= col("n_cyrillic") &&
-            col("n_han") >= col("n_greek"), lit("han"))
-          .when(col("n_cyrillic") >= col("n_greek"), lit("cyrillic"))
-          .otherwise(lit("greek")))
-      .orderBy("doc_id")
-  }
-
-  /** The order-3 quality gate over a MULTILINGUAL corpus — the alphabet
-    * threaded through [[LanguageModel.train3]]/[[LanguageModel.score3]]:
-    * under the frozen alphabet every planted non-Latin token vanishes
-    * from the model AND the scored positions; under
-    * [[Text.UnicodeSplitRe]] they participate in all three backoff
-    * branches (the per-doc-varying Cyrillic tail makes real unseen-word
-    * floors, not constants). */
-  private def qLm3ScoreUnicode(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val d = multilingualDocs(spark, dir)
-    LanguageModel.score3(
-        LanguageModel.train3(d, "doc_id", "text", Text.UnicodeSplitRe),
-        d, "doc_id", "text", Text.UnicodeSplitRe)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** North-star cross-document duplicate-n-gram profile: per document, the
-    * share of its distinct shingles repeated elsewhere in the corpus — the
-    * linear-cost boilerplate read-out pairwise near-dup detection can't
-    * give (see [[CorpusAnalysis.dupNgramProfile]]). */
-  private def qDupNgramProfile(spark: SparkSession, dir: String): DataFrame =
-    CorpusAnalysis.dupNgramProfile(Tables.documents(spark, dir), "doc_id", "text")
-      .orderBy("id")
-
-  /** North-star SOURCE-OVERLAP MATRIX: exact per-source-pair shingle-set
-    * intersection / Jaccard / both directed containments — "which
-    * datasets copy which" at corpus level, the pre-mixing read-out
-    * ([[CorpusAnalysis.sourceOverlap]]; the directed containment is what
-    * catches a crawl that swallowed a smaller dataset whole). Linear in
-    * distinct (source, shingle) pairs — the per-shingle source-SET
-    * formulation, never a postings self-join; output ≤ nSources² rows.
-    * The KMV-sketched twin ([[CorpusAnalysis.sourceOverlapSketched]],
-    * spec-pinned) answers the same matrix from ≤ nSources × k persisted
-    * minima when even one corpus scan is too much. */
-  private def qSourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    CorpusAnalysis.sourceOverlap(Tables.documents(spark, dir), "text",
-        "source")
-      .orderBy("src_a", "src_b")
-
-  /** The source-overlap matrix at PRODUCTION cadence
-    * ([[CorpusAnalysis.sourceOverlapFromSummaries]] — VERDICT r12 item
-    * 6): one persisted summary family PER SOURCE, each accreted in two
-    * waves (base + append), and the whole matrix answered at report time
-    * from ≤ nSources × k driver-held KMV minima — NO corpus scan. The
-    * KMV fold theorem (k smallest of a union = k smallest of the
-    * per-wave keeps) makes the two-wave min-sets equal a single-pass
-    * build, so the oracle replicates the ENTIRE Beyer et al. estimator
-    * in DuckDB from scratch — same frozen md5-prefix hash, same per-pair
-    * union-k-min, same membership counts, same IEEE arithmetic order
-    * (the `q_join_card_kmv` pattern, lifted to the full pair matrix
-    * with the directed containments). */
-  private def qSourceOverlapInc(spark: SparkSession, dir: String): DataFrame = {
-    val srcPaths = fixture(spark, "ovsum", dir) {
-      val d = Tables.documents(spark, dir).select("doc_id", "source", "text")
-        .where(col("source").isNotNull)
-      val sources = d.select(col("source").cast("string")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      sources.map { src =>
-        val p = persistedPath("ovsum", dir, src)
-        val mine = d.where(col("source") === src)
-        IndexStore.saveSummary(
-          CorpusAnalysis.shingleItems(
-            mine.where(pmod(col("doc_id"), lit(2)) === 0), "text"),
-          "sh", kMg = 32, kKmv = Sketches.DefaultK, p)
-        IndexStore.appendBatchSummary(
-          CorpusAnalysis.shingleItems(
-            mine.where(pmod(col("doc_id"), lit(2)) === 1), "text"),
-          "sh", p, batchId = 0L)
-        src -> p
-      }
-    }
-    CorpusAnalysis.sourceOverlapFromSummaries(spark,
-        IndexStore.loadSummaries(spark, srcPaths))
-      .orderBy("src_a", "src_b")
-  }
-
-  /** North-star PII scrub: typed redaction (email/IP/phone/digit-run) with
-    * per-doc counts, one codegen'd narrow projection
-    * ([[PiiScrub.scrub]]). The corpus text is synthetic prose with no PII,
-    * so the query plants a deterministic PII tail derived from each
-    * doc_id — the same in-query augmentation both engines compute (the
-    * [[qDedupVectors]] shifted-copy precedent) — and the scrub must find
-    * and redact exactly that. */
-  private def qPiiScrub(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val augmented = d.select(col("doc_id"),
-      concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com call +14155550"),
-        pmod(col("doc_id"), lit(100L)).cast("string"),
-        lit(" ip 10.0.0."), pmod(col("doc_id"), lit(256L)).cast("string"),
-        lit(" ref "), (col("doc_id") + lit(100000L)).cast("string")).as("text"))
-    PiiScrub.scrub(augmented, "doc_id", "text").orderBy("id")
-  }
-
-  /** Deterministic MULTILINGUAL augmentation of the documents table —
-    * the [[qPiiScrub]] planted-fixture precedent: the driver corpus is
-    * lowercase ASCII, so non-Latin tokenization is exercised on text both
-    * engines construct identically in-query. Appends per doc: a
-    * Greek-prefixed digit token, a CJK ideograph run (ONE token under
-    * [[Text.UnicodeSplitRe]] — ideographs have no separators), an ascii
-    * ref token, and a CAPITALIZED Cyrillic word (doc_id-indexed, so
-    * Unicode lowercasing is load-bearing, not constant). */
-  private val cyrWords = Seq("Привет", "Мир", "Данные", "Модель")
-  private val cjkWords = Seq("你好世界", "数据模型", "训练语料")
-  private def multilingualDocs(spark: SparkSession, dir: String): DataFrame = {
-    val cyr = array(cyrWords.map(lit): _*)
-    val cjk = array(cjkWords.map(lit): _*)
-    Tables.documents(spark, dir).select(col("doc_id"),
-      concat(col("text"), lit(" ΔΞ7 "),
-        element_at(cjk, (pmod(col("doc_id"), lit(3L)) + 1L).cast("int")),
-        lit(" ref"), col("doc_id").cast("string"), lit(" "),
-        element_at(cyr, (pmod(col("doc_id"), lit(4L)) + 1L).cast("int")))
-        .as("text"))
-  }
-  private val multilingualDocsSql: String = {
-    val cyr = cyrWords.map(w => s"'$w'").mkString(", ")
-    val cjk = cjkWords.map(w => s"'$w'").mkString(", ")
-    // single line ON PURPOSE: this subquery embeds into outer
-    // .stripMargin oracle strings, where a continuation line starting
-    // with `||` would lose its first pipe to the outer margin strip
-    s"(SELECT doc_id, text || ' ΔΞ7 ' || ([$cjk])[1 + CAST(doc_id % 3 AS INT)] || " +
-      s"' ref' || CAST(doc_id AS VARCHAR) || ' ' || " +
-      s"([$cyr])[1 + CAST(doc_id % 4 AS INT)] AS text FROM documents)"
-  }
-
-  /** UNICODE tokenization gate ([[Text.tokensUnicode]], north-star: the
-    * frozen `[a-z0-9]` alphabet silently tokenizes ALL non-Latin text to
-    * [] — the majority of a real crawl — across BM25/dedup/LM/BPE). Per
-    * doc: token counts under BOTH alphabets (the planted non-Latin tokens
-    * vanish from n_ascii, count in n_uni) and the LAST Unicode token —
-    * the lowercased form of a CAPITALIZED Cyrillic word, so Spark and
-    * DuckDB must agree on \p{L}/\p{N} class splitting AND Unicode
-    * lowercasing, not just ASCII. */
-  private def qTextUnicode(spark: SparkSession, dir: String): DataFrame =
-    multilingualDocs(spark, dir).select(col("doc_id"),
-      size(Text.tokens(col("text"))).cast("long").as("n_ascii"),
-      size(Text.tokensUnicode(col("text"))).cast("long").as("n_uni"),
-      element_at(Text.tokensUnicode(col("text")), -1).as("last_tok"))
-      .orderBy("doc_id")
-
-  /** The vocab family under the Unicode alphabet ([[Vocab.wordCounts]]
-    * threading): exact counts of every planted non-Latin word — corpus
-    * arithmetic both engines recompute from the augmentation rule. The
-    * non-ascii filter keeps the gate row focused on the tokens the frozen
-    * alphabet loses. */
-  private def qWordCountsUnicode(spark: SparkSession, dir: String)
-      : DataFrame =
-    Vocab.wordCounts(multilingualDocs(spark, dir), "text",
-        Text.UnicodeSplitRe)
-      .where(col("word").rlike("[^a-z0-9]"))
-      .orderBy("word")
-
-  /** BM25 over a MULTILINGUAL corpus: index built and queried under
-    * [[Text.UnicodeSplitRe]] (threaded through [[TextSearch.buildIndex]]/
-    * [[TextSearch.search]]). The query mixes Cyrillic (capitalized — the
-    * query-side lowercase must agree too) and a CJK run; the oracle
-    * rebuilds the same index in SQL with the same alphabet. Under the
-    * frozen alphabet this query would find NOTHING. */
-  private val uniQueryText = "Привет данные 你好世界"
-  private def qBm25Unicode(spark: SparkSession, dir: String): DataFrame =
-    TextSearch.search(
-        TextSearch.buildIndex(multilingualDocs(spark, dir), "doc_id",
-          "text", Text.UnicodeSplitRe),
-        uniQueryText, 10, Text.UnicodeSplitRe)
-      .withColumnRenamed("id", "doc_id")
-
-  /** The n-gram decontamination screen over a MULTILINGUAL corpus under
-    * [[Text.UnicodeSplitRe]] — the r15 round's top verdict item: under
-    * the frozen alphabet the planted non-Latin tokens silently vanish
-    * from BOTH sides' shingles, so a contaminated multilingual benchmark
-    * passes clean with no error; threading the alphabet through
-    * [[Contamination.ngramOverlap]] makes them collide. Eval = the 10%
-    * slice doc_id ≡ 0 (mod 10) of the SAME augmented corpus (the
-    * [[qContamination]] shape on the multilingual fixture). */
-  private def qContaminationUnicode(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val d = multilingualDocs(spark, dir)
-    Contamination.ngramOverlap(
-        d.where(pmod(col("doc_id"), lit(10L)) =!= 0),
-        d.where(pmod(col("doc_id"), lit(10L)) === 0),
-        "doc_id", "text", Text.UnicodeSplitRe)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** Exact substring-span dedup under the Unicode alphabet
-    * ([[SubstringDedup.duplicatedSpans]] threading): the planted
-    * non-Latin tail tokens enter the positional gram stream, so span
-    * extents and gram hashes exercise Unicode tokenization end to end. */
-  private def qSubstringSpansUnicode(spark: SparkSession, dir: String)
-      : DataFrame =
-    SubstringDedup.duplicatedSpans(multilingualDocs(spark, dir), "doc_id",
-        "text", splitRe = Text.UnicodeSplitRe)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "span_start")
-
-  /** Document fingerprint (min/max shingle hash) under the Unicode
-    * alphabet ([[TextAnalysis.fingerprint]] threading) — the planted
-    * non-Latin tokens move every shingle boundary, so both engines must
-    * hash identical Unicode shingles. */
-  private def qFingerprintUnicode(spark: SparkSession, dir: String)
-      : DataFrame =
-    multilingualDocs(spark, dir)
-      .withColumn("__toks", Text.tokensUnicode(col("text")))
-      .withColumn("fp", TextAnalysis.fingerprintFromTokens(col("__toks")))
-      .select(col("doc_id"), col("fp.fp_min").as("fp_min"),
-        col("fp.fp_max").as("fp_max"))
-      .orderBy("doc_id")
-
-  /** Gopher repetition statistics under the Unicode alphabet
-    * ([[CorpusAnalysis.repetitionStats]] threading). */
-  private def qRepetitionUnicode(spark: SparkSession, dir: String)
-      : DataFrame =
-    CorpusAnalysis.repetitionStats(multilingualDocs(spark, dir), "doc_id",
-        "text", Text.UnicodeSplitRe)
-      .orderBy("id")
-
-  /** The source-overlap matrix under the Unicode alphabet
-    * ([[CorpusAnalysis.sourceOverlap]] threading) — the multilingual
-    * augmentation is doc_id-keyed, not source-keyed, so the planted
-    * non-Latin shingles genuinely cross sources. */
-  private def qSourceOverlapUnicode(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val aug = multilingualDocs(spark, dir)
-      .join(Tables.documents(spark, dir).select("doc_id", "source"),
-        "doc_id")
-    CorpusAnalysis.sourceOverlap(aug, "text", "source",
-        splitRe = Text.UnicodeSplitRe)
-      .orderBy("src_a", "src_b")
-  }
-
-  /** PII scrub adjacent to NON-LATIN text — the PORTABLE cases: the
-    * email pattern and the bare digit-run pattern carry no `\b`, so an
-    * address or identifier glued directly to a Cyrillic label redacts
-    * identically in both engines; the IP stands after a space because
-    * [[PiiScrub.Ipv4Re]]'s `\b` is the one declared Java/RE2 divergence
-    * (Unicode- vs ASCII-word boundary — PiiScrub scaladoc, pinned in
-    * PiiScrubSpec), so a Cyrillic-GLUED IP is exactly what this gate
-    * must not claim portable. Tail per doc: a Cyrillic-labelled glued
-    * email, a space-separated IP under a Cyrillic label, and a digit
-    * run glued to Cyrillic. */
-  private def qPiiScrubUnicode(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val augmented = multilingualDocs(spark, dir).select(col("doc_id"),
-      concat(col("text"),
-        lit(" контакт user"), col("doc_id").cast("string"),
-        lit("@example.com ип 10.0.0."),
-        pmod(col("doc_id"), lit(256L)).cast("string"),
-        lit(" реф"), (col("doc_id") + lit(100000L)).cast("string"))
-        .as("text"))
-    PiiScrub.scrub(augmented, "doc_id", "text").orderBy("id")
-  }
-
-  /** Exact phrase locate under the Unicode alphabet
-    * ([[TextSearch.phraseOccurrences]] threading, gram width 2): the
-    * phrase ("ΔΞ7 你好世界", engine-tokenized — Greek lowercasing is
-    * load-bearing) occurs exactly in the docs whose planted CJK word is
-    * 你好世界 (doc_id ≡ 0 mod 3), at the position right after the base
-    * ASCII tokens. */
-  private def qPhraseFindUnicode(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val d = multilingualDocs(spark, dir)
-    val phrase = spark.range(1)
-      .select(Text.tokensUnicode(lit("ΔΞ7 你好世界")).as("p"))
-    TextSearch.phraseOccurrences(d, "doc_id", "text", phrase, 2,
-        Text.UnicodeSplitRe)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "pos")
-  }
-
-  /** BM25 with CJK BIGRAM tokenization ([[Text.Tokenizer]] with
-    * `cjkBigrams` — the Lucene CJKAnalyzer rule as an engine-level
-    * option): the two-character Han query 模型 matches INSIDE the longer
-    * planted run 数据模型 — impossible under the r14 one-token-per-run
-    * rule, where an ideograph run only ever matches itself whole. The
-    * oracle rebuilds the whole BM25 arithmetic over the bigram-expanded
-    * token stream. */
-  private val cjkQueryText = "模型"
-  private val CjkTok = Text.Tokenizer(Text.UnicodeSplitRe,
-    cjkBigrams = true)
-  private def qBm25Cjk(spark: SparkSession, dir: String): DataFrame =
-    TextSearch.search(
-        TextSearch.buildIndex(multilingualDocs(spark, dir), "doc_id",
-          "text", CjkTok),
-        cjkQueryText, 10, CjkTok)
-      .withColumnRenamed("id", "doc_id")
-
-  /** Shingle near-dup over PURE-CJK text under the bigram tokenizer
-    * ([[Dedup.shinglePostingsTok]]): the planted fixture builds each doc
-    * from two 4-ideograph words, so docs sharing a word overlap through
-    * the word's bigram shingles (J = 1/7 for one shared word, 1 for both)
-    * — overlap structure that EXISTS only because runs expand to bigrams
-    * (whole-run tokens would make every non-identical doc J ≈ 0 on its
-    * shingles). Quadratic verify on a 30-doc fixture — the oracle-shaped
-    * exercise, not the production path ([[Dedup.minhashPairs]]). */
-  private def qDedupCjk(spark: SparkSession, dir: String): DataFrame = {
-    val cjkArr = array(cjkWords.map(lit): _*)
-    val fx = Tables.documents(spark, dir).where(col("doc_id") < 30)
-      .select(col("doc_id"),
-        concat(
-          element_at(cjkArr, (pmod(col("doc_id"), lit(3L)) + 1L).cast("int")),
-          lit(" "),
-          element_at(cjkArr,
-            (pmod(col("doc_id") + 1L, lit(3L)) + 1L).cast("int")))
-          .as("text"))
-    Dedup.jaccardFromPostings(
-        Dedup.shinglePostingsTok(fx, "doc_id", "text",
-          TextAnalysis.ShingleSize, CjkTok), 0.1)
-      .orderBy("id1", "id2")
-  }
-
-  /** NFC normalization gate ([[Text.Tokenizer]] `nfcNormalize`):
-    * composed café (U+00E9) planted on even ids, decomposed cafe +
-    * U+0301 on odd — visually identical spellings that are DISTINCT
-    * tokens and distinct shingles without normalization (they evade
-    * exact and near dedup and miss BM25 matches). Under the
-    * NFC-normalizing tokenizer both engines must fold them into ONE
-    * vocabulary entry counted across every doc; java.text.Normalizer and
-    * DuckDB nfc_normalize are the agreeing public twins. The literals
-    * are code-point escapes on both sides — no source-encoding
-    * normalization can silently fix the fixture. */
-  private def qNfcUnify(spark: SparkSession, dir: String): DataFrame = {
-    val tok = Text.Tokenizer(Text.UnicodeSplitRe, nfcNormalize = true)
-    val aug = Tables.documents(spark, dir).select(col("doc_id"),
-      concat(col("text"),
-        when(pmod(col("doc_id"), lit(2L)) === 0, lit(" caf\u00e9"))
-          .otherwise(lit(" cafe\u0301"))).as("text"))
-    aug.select(explode(tok(col("text"))).as("word"))
-      .where(col("word").rlike("[^a-z0-9]"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
-  }
-
-  /** Per-source corpus statistics through the SKEW-SAFE salted aggregation
-    * ([[graft.util.Skew.saltedSumCount]]): phase 1 spreads each source over
-    * 16 salted sub-groups, phase 2 merges 16 partials per source — the
-    * plan a 100 TB corpus with one dominant source (the usual web-crawl
-    * shape) needs, declared at the gate because the salted result is
-    * provably identical to the direct groupBy (the oracle IS the direct
-    * SQL). */
-  private def qSourceStats(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Skew.saltedSumCount(
-        Tables.documents(spark, dir), "source", "n_chars", col("doc_id"))
-      .orderBy("source")
-
-  /** Hierarchical corpus report — the (source, lang) ROLLUP with
-    * per-source subtotals and a grand total, the one-pass reporting shape
-    * a 100 TB curation run uses instead of three separate groupBys.
-    * [[qRollup]] already declares the bare two-level rollup on lineitem;
-    * what THIS query adds to the gate is the `grouping()` surface (the
-    * subtotal-vs-real-NULL disambiguation flags) and the PlanSpec pin of
-    * the one-pass Expand → partial-aggregate shape.
-    * Native Spark `rollup` expands to grouping sets inside ONE
-    * map-side-combinable aggregate (Expand → partial HashAggregate —
-    * each input row feeds all three granularities before the shuffle),
-    * so the corpus is scanned once. `grouping()` flags disambiguate
-    * subtotal NULLs from any real NULL key — declared (cast to int on
-    * both engines) because relying on NULL collision is exactly the
-    * rollup bug a report at scale cannot afford. */
-  private def qCorpusRollup(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .rollup(col("source"), col("lang"))
-      .agg(grouping(col("source")).cast("int").as("g_source"),
-        grouping(col("lang")).cast("int").as("g_lang"),
-        count(lit(1)).as("n_docs"),
-        round(avg(col("n_chars")), 6).as("avg_chars"))
-      .select("source", "lang", "g_source", "g_lang", "n_docs", "avg_chars")
-      .orderBy(col("g_source"), col("g_lang"),
-        col("source").asc_nulls_first, col("lang").asc_nulls_first)
-
-  /** EXACT phrase locate ([[TextSearch.phraseOccurrences]]) — distributed
-    * grep with positions. The probe phrase is the min-id document's first
-    * 8 tokens, derived RELATIONALLY (both engines tokenize it with the
-    * same frozen rule, so no driver-side tokenizer can drift); it always
-    * matches at least its own source position, and at SFs whose fixture
-    * contains exact-duplicate texts (sf0.1 has 8 clone groups) any clone
-    * of that document surfaces too. Multiplicity/overlap semantics are
-    * SearchSpec-pinned on a hand-built corpus. */
-  private def qPhraseFind(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val minId = d.agg(min(col("doc_id")).as("__mid"))
-    val phrase = d.join(broadcast(minId), col("doc_id") === col("__mid"))
-      .select(slice(graft.functions.Text.tokens(col("text")), 1, 8).as("p"))
-    TextSearch.phraseOccurrences(d, "doc_id", "text", phrase)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "pos")
-  }
-
-  /** [[qPhraseFind]] behind the PERSISTED gram-hash index
-    * ([[TextSearch.phraseOccurrencesScreened]]): one bucket-pruned
-    * membership probe decides whether the corpus scan runs at all — the
-    * shape an absent-phrase lookup costs at 100 TB (a narrow bucket
-    * read, never a corpus pass). The scanned corpus is EXACTLY the
-    * relation [[corpusGramsDisk]] indexes (docs outside the %5 batch) —
-    * a membership screen over a corpus its index doesn't cover could
-    * wrongly veto, so the contract is index ≙ corpus, and the probe
-    * phrase comes from that corpus's min-id doc (guaranteed present).
-    * The veto path (absent gram → empty, no scan) is SearchSpec-pinned. */
-  private def qPhraseFindIdx(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir).where(col("doc_id") % 5 =!= 0)
-    val minId = d.agg(min(col("doc_id")).as("__mid"))
-    val phrase = d.join(broadcast(minId), col("doc_id") === col("__mid"))
-      .select(slice(graft.functions.Text.tokens(col("text")), 1, 8).as("p"))
-    TextSearch.phraseOccurrencesScreened(corpusGramsDisk(spark, dir), d,
-        "doc_id", "text", phrase)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "pos")
-  }
-
-  /** The DISK-persisted POSITIONAL phrase index over the whole corpus
-    * ([[IndexStore.savePhrase]]) — the seventh persisted family: (id,
-    * pos, h) postings bucket-partitioned by gram hash, so a phrase
-    * lookup reads its grams' buckets instead of scanning text. */
-  private def corpusPhraseDisk(spark: SparkSession,
-      dir: String): graft.index.IndexStore.PhraseIndex = {
-    val path = persisted(spark, dir, "phrase") { p =>
-      IndexStore.savePhrase(Tables.documents(spark, dir), "doc_id", "text",
-        SubstringDedup.DefaultGramTokens, p)
-    }
-    // STALENESS GUARD ([[IndexStore.loadPhraseChecked]]): a lookup against
-    // an index missing newly-ingested documents silently reports their
-    // occurrences as absent — refuse instead; checked ONCE per wave
-    // ([[checkedOncePerWave]]), unchecked per query thereafter
-    checkedOncePerWave(spark, dir, "phrase")(
-      IndexStore.loadPhraseChecked(spark, path,
-        Tables.documents(spark, dir), "doc_id", "text"))(
-      IndexStore.loadPhrase(spark, path))
-  }
-
-  /** [[qPhraseFind]] resolved ENTIRELY from the positional index
-    * ([[TextSearch.phraseOccurrencesIndexed]]): the phrase's consecutive
-    * gram hashes probe their bucket partitions, the offset-aligned
-    * intersection yields candidates, and corpus text is opened only for
-    * the candidates' exact verify — the no-corpus-scan phrase lookup.
-    * Same phrase (the min-id doc's first 8 tokens, collected through the
-    * ENGINE tokenizer so driver hashing can't drift), same corpus, same
-    * oracle SQL as [[qPhraseFind]]. */
-  private def qPhraseFindPos(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val minId = d.agg(min(col("doc_id")).as("__mid"))
-    val toks = d.join(broadcast(minId), col("doc_id") === col("__mid"))
-      .select(slice(graft.functions.Text.tokens(col("text")), 1, 8).as("p"))
-      .head.getSeq[String](0)
-    TextSearch.phraseOccurrencesIndexed(corpusPhraseDisk(spark, dir), d,
-        "doc_id", "text", toks)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "pos")
-  }
-
-  /** BATCH phrase locate ([[TextSearch.phrasesOccurrences]]) — the
-    * [[qBm25Join]] posture applied to exact phrase search: every ~97th
-    * document's first 8 tokens is a suspect phrase (the contamination-
-    * forensics shape: thousands of quoted strings located in ONE corpus
-    * scan, work ∝ matched candidates instead of |batch| scans). Phrases
-    * are derived RELATIONALLY and keyed by source doc_id; each phrase
-    * matches at least its own source position, plus any clone of it. */
-  private def qPhraseFindJoin(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val phrases = d.where(col("doc_id") % 97 === 0)
-      .select(col("doc_id").as("phrase_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 8).as("p"))
-      .where(size(col("p")) >= 8)
-    TextSearch.phrasesOccurrences(d, "doc_id", "text", phrases, k = 8)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("phrase_id", "doc_id", "pos")
-  }
-
-  /** [[qPhraseFindJoin]] resolved from the PERSISTED positional phrase
-    * index ([[TextSearch.phrasesOccurrencesIndexed]]) — batch forensics
-    * with NO corpus gram scan: the bounded phrase batch's gram keys
-    * probe their bucket partitions, one broadcast join + distinct-offset
-    * intersection yields candidates, and corpus text is opened only for
-    * the exact verify. Same phrases, same corpus, same oracle SQL as
-    * [[qPhraseFindJoin]] — only the PLAN differs. */
-  private def qPhraseFindJoinPos(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val phrases = d.where(col("doc_id") % 97 === 0)
-      .select(col("doc_id").as("phrase_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 8).as("p"))
-      .where(size(col("p")) >= 8)
-    TextSearch.phrasesOccurrencesIndexed(corpusPhraseDisk(spark, dir), d,
-        "doc_id", "text", phrases)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("phrase_id", "doc_id", "pos")
-  }
-
-  /** PLANNER-CHOSEN phrase lookup ([[TextPlanner.planPhrase]]) — the
-    * text twin of [[qAnnPlan]]: three physical paths (corpus gram scan /
-    * gram-membership screen / positional-index probes) resolve the same
-    * exact (id, pos) contract, and the cost table picks one from catalog
-    * numbers alone — n from the persisted stats catalog (one bounded
-    * lookup, never a COUNT scan at plan time), m = tokens−k+1 from the
-    * phrase itself, bucket mass from uniform hashing (the one analytic
-    * assumption — closed-form-ish, unlike the geometry-dependent ANN
-    * recall that forces measured depths). At every SF the 10-token
-    * phrase prices m=3 bucket probes ≈ 3n/64 doc-gram-stream units vs
-    * the scan's n, so the planner dispatches the positional-index path
-    * (the gram MEMBERSHIP index covers only the %5 subcorpus — index ≙
-    * corpus is the screen's contract — so that asset is honestly absent
-    * from this plan). selfChecked against the scan path under the gate;
-    * the phrase-occurrence SQL is a full oracle. Phrase: the min
-    * doc_id ≡ 1 (mod 3) document's first 10 tokens — present by
-    * construction, distinct from every other phrase fixture's receipt. */
-  private def qPhrasePlan(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val n = IndexStore.statsRows(docStatsDisk(spark, dir), "lang")
-    val minId = d.where(col("doc_id") % 3 === 1)
-      .agg(min(col("doc_id")).as("__mid"))
-    val toks = d.join(broadcast(minId), col("doc_id") === col("__mid"))
-      .select(slice(graft.functions.Text.tokens(col("text")), 1, 10).as("p"))
-      .head.getSeq[String](0)
-    val assets = TextPlanner.PhraseAssets(
-      phraseIndex = Some(corpusPhraseDisk(spark, dir)))
-    val plan = TextPlanner.planPhrase(n, toks.size,
-      SubstringDedup.DefaultGramTokens, presentFraction = 1.0, assets)
-    require(plan.chosen == "indexed",
-      s"q_phrase_plan expected the positional-index path at these " +
-        s"inputs (m=${plan.m} probes vs ${plan.buckets} buckets), " +
-        s"got ${plan.chosen} — cost table: ${plan.costs}")
-    selfChecked(
-      TextPlanner.executePhrase(plan, d, "doc_id", "text", toks, assets)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id", "pos"),
-      {
-        import spark.implicits._
-        TextSearch.phraseOccurrences(d, "doc_id", "text",
-            Seq(toks).toDF("p"), SubstringDedup.DefaultGramTokens)
-          .withColumnRenamed("id", "doc_id")
-          .orderBy("doc_id", "pos")
-      },
-      s"q_phrase_plan planned path ${plan.chosen}")
-  }
-
-  /** PLANNER-CHOSEN BATCH phrase locate ([[TextPlanner.planPhraseBatch]])
-    * — the batch twin of [[qPhrasePlan]], closing for text the gap the
-    * round-9 verdict called on the ANN planner (single-query pricing for
-    * a batch workload): the suspect batch (every 89th document's first 8
-    * tokens — disjoint from [[qPhraseFindJoin]]'s %97 receipt) is
-    * collected (bounded, the indexed path's own posture), its touched
-    * bucket set computed driver-side with the frozen hash twin, and the
-    * cost table prices ONE bucket-pruned postings read vs ONE corpus
-    * gram scan vs the never-dispatched per-phrase loop (the
-    * amortization receipt). n comes from the stats catalog. Whichever
-    * path wins, the output is the same exact relation — selfChecked
-    * against the batch scan under the gate, brute per-position SQL as
-    * the full oracle. */
-  private def qPhraseJoinPlan(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val n = IndexStore.statsRows(docStatsDisk(spark, dir), "lang")
-    val phrases = d.where(col("doc_id") % 89 === 0)
-      .select(col("doc_id").as("phrase_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 8).as("p"))
-      .where(size(col("p")) >= 8)
-    val toks = phrases.select("p").collect()
-      .map(_.getSeq[String](0).toSeq).toSeq
-    val assets = TextPlanner.PhraseAssets(
-      phraseIndex = Some(corpusPhraseDisk(spark, dir)))
-    val plan = TextPlanner.planPhraseBatch(n, toks,
-      SubstringDedup.DefaultGramTokens, assets)
-    selfChecked(
-      TextPlanner.executePhraseBatch(plan, d, "doc_id", "text", phrases,
-          assets)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("phrase_id", "doc_id", "pos"),
-      TextSearch.phrasesOccurrences(d, "doc_id", "text", phrases,
-          SubstringDedup.DefaultGramTokens)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("phrase_id", "doc_id", "pos"),
-      s"q_phrase_join_plan planned path ${plan.chosen} " +
-        s"(touched ${plan.touched}/${plan.buckets} buckets, " +
-        s"${plan.nPhrases} phrases)")
-  }
-
-  /** North-star language-ID: marker-ratio argmax per document. */
-  private def qLangId(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("__stats", TextAnalysis.gateStats(Text.tokens(col("text"))))
-      .select(
-        col("doc_id"),
-        TextAnalysis.langIdFromGateStats(col("__stats")).as("lang_pred"),
-        TextAnalysis.langScoreFromGateStats(col("__stats"), "en").as("en_score"))
-      .orderBy("doc_id")
-
-  /** North-star document fingerprint: min/max shingle-hash sketch.
-    * Tokenization staged — inlined, the shingle transform re-evaluates
-    * the split per position (O(tokens²), measured 9.6 s vs ~1 s). */
-  private def qFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("__toks", Text.tokens(col("text")))
-      .withColumn("fp", TextAnalysis.fingerprintFromTokens(col("__toks")))
-      .select(col("doc_id"), col("fp.fp_min").as("fp_min"), col("fp.fp_max").as("fp_max"))
-      .orderBy("doc_id")
-
-  // Dedup family thresholds (frozen; tuned on sf0.01 so outputs are
-  // non-empty but selective — 25 true near-dup pairs exist there).
-  private val JaccardThr = 0.5
-  private val SimhashMaxDist = 1
-  private val CosineThr = 0.45
-  /** High-threshold (clone-detection) regime constants for the selective
-    * sign-LSH queries — 0.95 single-probe, 0.90 multi-probe (the weakest
-    * point of 8-bit single-probe recall, where Hamming-1 probing over the
-    * longer 32×12-bit layout earns its ×13 probe fanout). */
-  private val SelectiveThr = 0.95
-  private val SelectiveMpThr = 0.90
-  /** Raw-cosine cut for the SEMANTIC contamination screens: low enough to
-    * flag the synthetic corpora's nearest cross-split neighbors at every
-    * SF (best cross-split cosine ≈ 0.41/0.45/0.50 at sf0.001/0.01/0.1),
-    * high enough to stay selective (2 / 2 / 42 flagged). */
-  private val SemanticContamThr = 0.40
-  /** Embedding dimensionality of the testdata embeddings table. */
-  private val EmbDim = 64
-
-  /** North-star exact dedup: keep-decision per doc (hash-groupBy). */
-  private def qDedupExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exact(Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** North-star exact n-gram-Jaccard near-dup pairs.
-    *
-    * ORACLE-BASELINE, not the scale path: the all-pairs shingle-postings
-    * self-join is quadratic in per-shingle posting-list length (hot shingles
-    * dominate at corpus scale). It is declared so the gate pins the exact
-    * semantics; production dedup routes through [[qDedupMinhash]] /
-    * [[qDedupComponents]] / [[qDedupPipeline]], whose LSH candidates are
-    * verified against THIS definition in DedupSpec. Don't benchmark this
-    * operator as the dedup path. */
-  private def qDedupJaccard(spark: SparkSession, dir: String): DataFrame =
-    Dedup.jaccardPairs(Tables.documents(spark, dir), "doc_id", "text", JaccardThr)
-      .orderBy("id1", "id2")
-
-  /** The PLANNER-DRIVEN Jaccard path at the SAME below-the-floor
-    * threshold as [[qDedupJaccard]] (J ≥ 0.5 sits far under the shipped
-    * MinHash layout's ~0.95 recall floor, where banding misses most
-    * borderline pairs): [[Planner.planJaccard]] routes to
-    * [[Dedup.jaccardPairsViaContainment]] — containment prefix screen
-    * (recall exactly 1 by pigeonhole) → exact Jaccard verify on
-    * candidates — via [[Planner.executeJaccard]]. Until round 9 this
-    * recommendation was prose; now it is the first gate-checked Jaccard
-    * path below the MinHash floor. Output is definitionally identical to
-    * the quadratic baseline, so [[qDedupJaccard]]'s SQL is a full oracle;
-    * what differs is the plan — candidate mass instead of the postings
-    * self-join.
-    *
-    * WHY THIS IS THE MOST EXPENSIVE BENCH LINE: see SCALE.md round-9 §4 —
-    * J=0.5 over ~50-token docs is a deliberately HOSTILE regime (prefixes
-    * are half of each doc), chosen because recall 1 below the MinHash
-    * floor is the point; the Σ prefixDf² candidate mass, budgetable
-    * before launch, is the scale story, not this SF's wall-clock. */
-  private def qDedupJaccardPlan(spark: SparkSession, dir: String): DataFrame =
-    Planner.executeJaccard(Planner.planJaccard(JaccardThr),
-        Tables.documents(spark, dir), "doc_id", "text", JaccardThr)
-      .orderBy("id1", "id2")
-
-  /** Source trust ranking for cross-source dedup (lower = preferred;
-    * unlisted sources rank 10): the curated sources win ties against the
-    * crawl-like tail. */
-  private val SourcePriority = Map("src3" -> 0, "src7" -> 1)
-
-  /** North-star cross-source exact dedup: identical texts keep the copy
-    * from the most trusted source ((priority, id) argmin per group), not
-    * the smallest id — the keep rule real multi-source curation uses. */
-  private def qDedupPriority(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exactWithPriority(Tables.documents(spark, dir), "doc_id", "text",
-        "source", SourcePriority, defaultPriority = 10)
-      .orderBy("id")
-
-  /** North-star per-label diversity sample: the 20 vectors farthest from
-    * their label centroid — geometric spread selection for training-mix
-    * construction. */
-  private def qDiversitySample(spark: SparkSession, dir: String): DataFrame =
-    Curation.diversitySample(Tables.embeddings(spark, dir), "vec_id",
-        "embedding", "label", k = 20)
-      .orderBy("label", "rank")
-
-  /** North-star batch kNN join: top-3 neighbors for each of the first 50
-    * vectors — the batch-retrieval shape (broadcast query batch, corpus
-    * scored partition-locally, per-query window top-k). */
-  private def qKnnJoin(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    VectorSearch.knnJoin(e.where(col("vec_id") < 50), e,
-        "vec_id", "embedding", "vec_id", "embedding", k = 3)
-      .orderBy("query_id", "rank")
-  }
-
-  /** North-star LATE-INTERACTION retrieval ([[LateInteraction]]): top-5
-    * corpus documents for each query document under the ColBERT maxsim
-    * score — windowed sparse multi-vectors, each query window maxing over
-    * the document's windows, per-window evidence summed. The retrieval
-    * shape a single whole-document vector cannot express (a two-topic
-    * query wants BOTH topics matched, by different windows); the oracle
-    * is the same window/maxsim algebra spelled relationally in DuckDB —
-    * exact, because both engines round window dots to 6 decimals and sum
-    * integer micro-units.
-    *
-    * This is the EXHAUSTIVE oracle baseline (every corpus document
-    * scored), so the batch is deliberately small (every 499th doc) — the
-    * dim join fans out by |batch windows|/64 per corpus window (see the
-    * [[LateInteraction.maxSimJoin]] scaladoc). The production rendition
-    * with the full batch is [[qLateInteractionPruned]]. The corpus side
-    * reads the PERSISTED window index ([[corpusWindowsDisk]]) rather than
-    * re-windowing the corpus text per run; [[selfChecked]] re-proves
-    * index==fresh-build equality at Verify time. */
-  private def qLateInteraction(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val queries = docs.where(col("doc_id") % 499 === 0)
-    selfChecked(
-      LateInteraction.maxSimJoin(queries, "doc_id", "text",
-          corpusWindowsDisk(spark, dir), k = 5)
-        .orderBy("query_id", "rank"),
-      LateInteraction.maxSimJoin(queries, "doc_id", "text",
-          docs, "doc_id", "text", k = 5)
-        .orderBy("query_id", "rank"),
-      "persisted-window late-interaction join")
-  }
-
-  /** Late-interaction RETRIEVE-THEN-RERANK — the production two-stage
-    * shape ([[LateInteraction.maxSimRerank]]) at the full batch size the
-    * exhaustive baseline cannot afford: first-stage retrieval = pooled
-    * sparse-cosine top-20 per query over the precomputed corpus
-    * embedding (the [[qHybridJoin]] vector branch, self included — it is
-    * excluded again inside the rerank, keeping both engines' candidate
-    * sets identical), then exact maxsim over candidates only. Candidate
-    * count bounds the window join, and the corpus window relation comes
-    * from the PERSISTED index ([[corpusWindowsDisk]]) — per-run cost is
-    * flat in corpus size AND free of the corpus re-windowing shuffles;
-    * [[selfChecked]] re-proves index==fresh-build at Verify time. */
-  private def qLateInteractionPruned(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val emb = corpusSparseEmb(spark, dir)
-    val cand = VectorSearch.sparseKnnJoin(
-        emb.where(col("id") % 97 === 0), emb, k = 20)
-      .select(col("query_id"), col("id").as("nbr_id"))
-    val queries = docs.where(col("doc_id") % 97 === 0)
-    selfChecked(
-      LateInteraction.maxSimRerank(queries, "doc_id", "text",
-          corpusWindowsDisk(spark, dir), cand, k = 5)
-        .orderBy("query_id", "rank"),
-      LateInteraction.maxSimRerank(queries, "doc_id", "text",
-          docs, "doc_id", "text", cand, k = 5)
-        .orderBy("query_id", "rank"),
-      "persisted-window late-interaction rerank")
-  }
-
-  /** The batch kNN join ANN-ROUTED through the DISK-persisted IVF index
-    * ([[Ivf.knnJoin]] over [[corpusIvfDisk]]) — the batch rendition of the
-    * reference's `numCandidates` probe (`backend/api.py:168-180`): each
-    * query row gets its own driver-side cluster probe, the (query, cluster)
-    * probe pairs are broadcast, and the corpus fans out only to the queries
-    * probing its cluster — read from the cluster-partitioned assignments
-    * parquet, partition-pruned to the probed clusters.
-    *
-    * Probe depth is SUB-exhaustive: each query's pass-1 probe covers 90%
-    * of the indexed mass, then [[Ivf.knnJoinExact]]'s ball-cover bound
-    * extends individual queries ONLY to skipped clusters that could still
-    * beat their kth-best — so the partition-pruned member join genuinely
-    * executes at a depth where pruning is real, yet the output equals the
-    * exact [[VectorSearch.knnJoin]] by construction (recall is a theorem
-    * of the triangle inequality, not a tuning outcome — measured here:
-    * NO flat probe depth below exhaustive has batch recall 1 on this
-    * corpus, which is exactly why the bounded extension exists). The
-    * exact-kNN SQL is therefore a valid oracle unconditionally;
-    * [[selfChecked]] still re-proves it at Verify time for free. */
-  private def qKnnJoinIvf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val idx = corpusIvfDisk(spark, dir)
-    val batch = e.where(col("vec_id") < 50)
-    selfChecked(
-      Ivf.knnJoinExact(idx, batch, e,
-          "vec_id", "embedding", "vec_id", "embedding", k = 3,
-          probeMass = 0.9)
-        .orderBy("query_id", "rank"),
-      VectorSearch.knnJoin(batch, e,
-          "vec_id", "embedding", "vec_id", "embedding", k = 3)
-        .orderBy("query_id", "rank"),
-      "ball-cover-pruned IVF batch join")
-  }
-
-  /** The PLANNER-DRIVEN batch kNN join — [[AnnPlanner.planKnnJoin]]
-    * prices the three batch-retrieval paths (brute crossJoin, ball-cover
-    * exact, IVF-routed) from (nQueries, n, dim, nlist) and the measured
-    * ball-cover extension fraction, then [[AnnPlanner.executeKnnJoin]]
-    * runs the winner — the batch twin of [[qAnnPlan]], covering the
-    * workload a 100 TB hard-negative-mining or hybrid-join run actually
-    * is (round-9 verdict gap 1). Under the exact contract BOTH candidate
-    * paths return identical rows (ball-cover recall is a theorem of the
-    * triangle inequality at any probeMass), so the exact-join SQL is a
-    * valid oracle whichever the cost table picks; [[selfChecked]] still
-    * re-proves executed == exact at Verify time. On this near-random
-    * fixture geometry the measured 0.9 covering depth leaves the exact
-    * paths within ~5% of each other — the point is the DECISION is
-    * arithmetic with measured inputs and an auditable cost table, which
-    * at production depths (1–5% probed mass) is a 10–50× call. */
-  private def qKnnJoinPlan(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val idx = corpusIvfDisk(spark, dir)
-    val batch = e.where(col("vec_id") < 50)
-    // the ball-cover pass-2 extension fraction is MEASURED at build time
-    // on this very batch ([[AnnPlanner.measureExtendFraction]]) and
-    // persisted under the IVF index's "extend" sidecar — the planner
-    // prices the exact-join paths from the recorded measurement
-    val extend = measuredRecord(spark, ivfDiskPath(spark, dir),
-      name = "extend").fraction
-    val plan = AnnPlanner.planKnnJoin(
-      nQueries = batch.count(), n = idx.sizes.values.sum, dim = idx.dim,
-      k = 3, assets = AnnPlanner.AnnAssets(ivfClusters = idx.centroids.size),
-      exact = true, extendFraction = extend)
-    selfChecked(
-      AnnPlanner.executeKnnJoin(plan, batch, e,
-          "vec_id", "embedding", "vec_id", "embedding", k = 3,
-          ivf = Some(idx))
-        .orderBy("query_id", "rank"),
-      VectorSearch.knnJoin(batch, e,
-          "vec_id", "embedding", "vec_id", "embedding", k = 3)
-        .orderBy("query_id", "rank"),
-      s"q_knn_join_plan planned path ${plan.path}")
-  }
-
-  /** North-star MinHash+LSH near-dup pairs (banded candidates, exact
-    * Jaccard verify). */
-  private def qDedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashPairs(Tables.documents(spark, dir), "doc_id", "text", JaccardThr)
-      .orderBy("id1", "id2")
-
-  /** North-star SimHash near-dup pairs (pigeonhole-chunk candidates). */
-  private def qDedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairs(
-      Dedup.simhash(Tables.documents(spark, dir), "doc_id", "text"), SimhashMaxDist)
-      .orderBy("id1", "id2")
-
-  /** North-star dedup clustering: connected components over the
-    * near-dup pair graph (pairs → clusters; keep = min id). The pair source
-    * is the scale path — MinHash+LSH banded candidates with exact verify —
-    * NOT the all-pairs jaccardPairs baseline (whose shingle-postings
-    * self-join is quadratic per hot shingle); both produce identical pairs
-    * at the declared threshold (recall asserted in DedupSpec), and the
-    * oracle verifies components over the same LSH pair CTE. */
-  private def qDedupComponents(spark: SparkSession, dir: String): DataFrame =
-    Dedup.components(
-        Dedup.minhashPairs(Tables.documents(spark, dir), "doc_id", "text", JaccardThr))
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** INCREMENTAL connected components ([[Dedup.componentsIncremental]])
-    * — the dedup graph's daily-ingest shape: the docs whose id ≡ 2
-    * (mod 3) arrive as a second wave, so their SimHash pairs (new↔new
-    * and new↔old) update the first wave's persisted (id, comp) map with
-    * graph work ∝ the wave's touched components (representative
-    * contraction), never a full recompute; the map update is one
-    * broadcast relabel join. The oracle recomputes components over ALL
-    * pairs from scratch — the incremental path's output is
-    * row-identical by the contraction argument, so any merge the
-    * incremental pass misses (or invents) fails the hash. SimHash edges
-    * (not MinHash) so this receipt is disjoint from
-    * [[qDedupComponents]]'s. */
-  private def qDedupComponentsInc(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.simhashPairs(
-      Dedup.simhash(Tables.documents(spark, dir), "doc_id", "text"),
-      SimhashMaxDist).localCheckpoint(true)
-    val oldEnd = (c: org.apache.spark.sql.Column) => pmod(c, lit(3)) =!= 2
-    val wave1 = pairs.where(oldEnd(col("id1")) && oldEnd(col("id2")))
-    val wave2 = pairs.where(!(oldEnd(col("id1")) && oldEnd(col("id2"))))
-    Dedup.componentsIncremental(Dedup.components(wave1), wave2)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** The composed training-data dedup pipeline (SCALE.md finding 1): exact
-    * dedup first (cheap hash-groupBy removes identical texts), THEN
-    * MinHash+LSH near-dup over the survivors, THEN connected components —
-    * one row per surviving doc with its cluster representative and the
-    * final keep decision. Composing this way shrinks the expensive
-    * candidate/verify stage's input by the exact-dup mass — at 100 TB the
-    * exact pass is the first thing a curation run does. */
-  private def qDedupPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // survivors of the exact pass; NOT cached — at scale you re-read the
-    // (column-pruned, pushed-down) parquet scan rather than pin the corpus
-    // LAZY-checkpointed ledger (the qIntakePipeline gate pattern): the
-    // minhash chain over the survivors plans ~14 broadcast subqueries
-    // (sizes, candidates, bands, …) and each one re-executed the whole
-    // exact-pass subtree (hash agg + join) before r16 — the checkpoint
-    // makes every broadcast read the once-computed id ledger instead
-    // (measured: construct jobs 0.5–3 s each, all carrying the exact
-    // subtree; ids-only ledger, a few bytes per doc)
-    val keepers = Dedup.exact(docs, "doc_id", "text").where(col("keep"))
-      .select(col("id").as("doc_id"))
-      .localCheckpoint(false)
-    val survivors = docs.join(keepers, "doc_id")
-    // spread = false: survivors' parallelism already comes from the
-    // exact-pass shuffle — the r15 spread floor on this staged input made
-    // the pipeline 4× slower at 32 cores than at 8 (r15 verdict item 1)
-    val pairs = Dedup.minhashPairs(survivors, "doc_id", "text", JaccardThr,
-      spread = false)
-    val comps = Dedup.components(pairs).withColumnRenamed("id", "doc_id")
-    // the final row set is exactly the keepers — no need to re-run the
-    // docs⋈keepers join just to project doc_id back out of it
-    keepers
-      .join(comps, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
-      .withColumn("keep", col("doc_id") === col("comp"))
-      .orderBy("doc_id")
-  }
-
-  /** North-star int8-quantized similarity scan: corpus vectors quantized to
-    * int8 (4–8× smaller store at 100 TB), scored against the quantized
-    * flagship query by EXACT integer dot products (≤ 127²·64 ≈ 10⁶, exactly
-    * representable everywhere) rescaled by the two float scales — so the
-    * result is bit-reproducible and oracle-checkable, unlike typical float
-    * ANN shortcuts. Exact-rerank recall is spec-tested (FunctionsSpec). */
-  private def qQuantKnn(spark: SparkSession, dir: String): DataFrame = {
-    val qScale = flagshipQueryVec.map(math.abs).max / 127.0
-    val qInts = flagshipQueryVec.map(x =>
-      if (qScale == 0) 0 else math.floor(x / qScale + 0.5).toInt)
-    val qLit = array(qInts.map(i => lit(i)).toIndexedSeq: _*)
-    Tables.embeddings(spark, dir)
-      .withColumn("scale", Vectors.quantizeScale(col("embedding")))
-      .withColumn("q", Vectors.quantizeInt8(col("embedding"), col("scale")))
-      .withColumn("qdot", Vectors.dotInt(col("q"), qLit))
-      .select(col("vec_id"),
-        round(col("qdot").cast("double") * col("scale") * lit(qScale), 6).as("qscore"))
-      .orderBy(col("qscore").desc, col("vec_id").asc)
-      .limit(10)
-  }
-
-  /** TPC-H Q5-shape multi-table star join: revenue per nation for one
-    * region, with the classic local-supplier condition (customer and
-    * supplier in the same nation). Scale shape: region/nation/supplier are
-    * dimension tables — explicitly broadcast, so the only shuffles are the
-    * two fact-fact equi-joins (orders ⋈ customer survives as a shuffle on
-    * custkey, lineitem ⋈ orders on orderkey) and the final tiny
-    * per-nation aggregation (map-side combined). */
-  private def qRegionRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val ord = Tables.orders(spark, dir)
-    val cust = Tables.customer(spark, dir)
-    val supp = Tables.supplier(spark, dir)
-    val nat = Tables.nation(spark, dir)
-    val reg = Tables.region(spark, dir)
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(supp),
-        col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(reg.where(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("revenue"))
-      .orderBy("n_name")
-  }
-
-  /** Quality-filter gate thresholds for q_quality_filter. */
-  private val QfMinTokens = 5
-  private val QfMaxTokens = 500
-  private val QfMinQualityPpm = 650000L
-  private val QfLangs = Seq("en", "es")
-
-  /** North-star composed curation gate: token window + quality floor +
-    * language whitelist, first failing rule = drop reason. */
-  private def qQualityFilter(spark: SparkSession, dir: String): DataFrame =
-    Curation.qualityFilter(Tables.documents(spark, dir), "doc_id", "text",
-        QfMinTokens, QfMaxTokens, QfMinQualityPpm, QfLangs)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** North-star deterministic corpus split: 80/10/10 train/val/test as a
-    * pure hash of the doc id (stable under growth — eval membership never
-    * changes as data arrives). Zero shuffle. */
-  private def qSplit(spark: SparkSession, dir: String): DataFrame =
-    Curation.splitCorpus(Tables.documents(spark, dir), "doc_id", 800, 100)
-      .select("doc_id", "bucket", "split")
-      .orderBy("doc_id")
-
-  /** Corpus snapshot delta ([[Curation.corpusDiff]]): the declared "v2"
-    * snapshot is derived deterministically from the fixture so all four
-    * statuses appear — every 17th doc removed, every 10th changed
-    * (' v2' appended), every 23rd re-added under a +1M id — and the SQL
-    * twin derives the identical v2, so the delta itself is what the
-    * oracle checks. The production point: downstream re-embed/re-index/
-    * re-dedup runs on `status <> 'unchanged'`, work ∝ delta. */
-  private def qCorpusDiff(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val v2 = d.where(col("doc_id") % 17 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 10 === 0, concat(col("text"), lit(" v2")))
-          .otherwise(col("text")).as("text"))
-      .unionByName(d.where(col("doc_id") % 23 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    Curation.corpusDiff(d.select("doc_id", "text"), v2, "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** The composed corpus-INTAKE pipeline — the four gates every LLM
-    * training corpus passes, in production order, as ONE declared query
-    * emitting a per-document decision ledger:
-    *
-    *   1. quality gate ([[Curation.qualityFilter]]);
-    *   2. exact dedup among the quality survivors ([[Dedup.exact]]);
-    *   3. benchmark decontamination of the dedup survivors
-    *      ([[Contamination.ngramOverlap]] vs the held-out eval slice);
-    *   4. train/val/test split ([[Curation.splitCorpus]] — hash-stable,
-    *      assigned to every doc so the ledger is re-runnable).
-    *
-    * Ordering carries the 100 TB economics: each stage only pays for the
-    * previous stage's survivors (dedup never hashes dropped docs;
-    * decontamination never shingles duplicates), exactly like
-    * [[qDedupPipeline]]'s exact-first finding. `keep_dedup`/`contaminated`
-    * are false for docs that never reached their stage; `final_keep` is
-    * the conjunction the corpus build acts on. */
-  private def qIntakePipeline(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val train = docs.where(pmod(col("doc_id"), lit(20L)) =!= 0)
-    val eval = docs.where(pmod(col("doc_id"), lit(20L)) === 0)
-    // each stage's ledger (doc_id + flag — a few bytes per doc) is
-    // localCheckpoint-truncated: later stages and the final ledger join
-    // all reference it, and without truncation Catalyst would re-run the
-    // whole upstream cascade once per referencing branch (measured 4×
-    // on the quality gate alone). This is the in-session rendition of what
-    // a production intake run does anyway — persist each gate's verdict.
-    // LAZY checkpoints (r16, the r15 components precedent): each ledger
-    // still materializes exactly once — inside the first job that reads
-    // it — instead of costing its own blocking driver round-trip at
-    // build time (3 serialized jobs saved per call).
-    val gate = Curation.qualityFilter(train, "doc_id", "text",
-        QfMinTokens, QfMaxTokens, QfMinQualityPpm, QfLangs)
-      .select(col("id").as("doc_id"), col("keep").as("keep_quality"))
-      .localCheckpoint(false)
-    val kept = train.join(gate.where(col("keep_quality")).select("doc_id"), "doc_id")
-    val dedup = Dedup.exact(kept, "doc_id", "text")
-      .select(col("id").as("doc_id"), col("keep").as("keep_dedup"))
-      .localCheckpoint(false)
-    val survivors = kept.join(dedup.where(col("keep_dedup")).select("doc_id"), "doc_id")
-    val contam = Contamination.ngramOverlap(survivors, eval, "doc_id", "text")
-      .select(col("id").as("doc_id"), col("contaminated"))
-      .localCheckpoint(false)
-    val splits = Curation.splitCorpus(train.select("doc_id"), "doc_id", 800, 100)
-      .select("doc_id", "split")
-    train.select("doc_id")
-      .join(gate, Seq("doc_id"), "left")
-      .join(dedup, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"), "left")
-      .join(splits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("keep_quality"),
-        coalesce(col("keep_dedup"), lit(false)).as("keep_dedup"),
-        coalesce(col("contaminated"), lit(false)).as("contaminated"),
-        col("split"),
-        (col("keep_quality") && coalesce(col("keep_dedup"), lit(false)) &&
-          !coalesce(col("contaminated"), lit(false))).as("final_keep"))
-      .orderBy("doc_id")
-  }
-
-  /** North-star benchmark decontamination: per-training-doc n-gram overlap
-    * against a (broadcast) eval set — here the deterministic 5% slice
-    * doc_id ≡ 0 (mod 20) stands in for the benchmark corpus. */
-  private def qContamination(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    Contamination.ngramOverlap(
-        d.where(pmod(col("doc_id"), lit(20L)) =!= 0),
-        d.where(pmod(col("doc_id"), lit(20L)) === 0),
-        "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** [[qContamination]] through the BLOOM-prefiltered scale path
-    * ([[Contamination.ngramOverlapBloom]]): a driver-built bloom over the
-    * eval shingle hashes prefilters the training postings before the exact
-    * verify join, so the eval side never needs to fit a broadcast hash
-    * relation. The result is hash-identical to the exact path — the oracle
-    * is literally the same SQL — which is the point: the bloom is a plan
-    * change, not a semantics change. */
-  private def qContaminationBloom(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    Contamination.ngramOverlapBloom(
-        d.where(pmod(col("doc_id"), lit(20L)) =!= 0),
-        d.where(pmod(col("doc_id"), lit(20L)) === 0),
-        "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** North-star SEMANTIC eval-set decontamination
-    * ([[Contamination.semanticOverlap]]): per training embedding, the
-    * best raw cosine against the (tiny, disjoint) eval split and whether
-    * it crosses [[SemanticContamThr]] — the paraphrase-robust complement
-    * of [[qContamination]]'s n-gram screen. Plan: the eval split rides as
-    * a LITERAL struct array, so the training side is ONE narrow scan with
-    * a codegen'd per-row max — zero joins, zero shuffles (PlanSpec-worthy
-    * shape; the orderBy is the dump determinism, not the operator). */
-  private def qContaminationSemantic(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Contamination.semanticOverlap(
-        e.where(pmod(col("vec_id"), lit(41L)) =!= 0),
-        e.where(pmod(col("vec_id"), lit(41L)) === 0),
-        "vec_id", "embedding", SemanticContamThr)
-      .withColumnRenamed("id", "vec_id")
-      .orderBy("vec_id")
-  }
-
-  /** The INDEX-routed twin: the flagged (eval, train) pairs through
-    * [[Ivf.rangeJoinExact]] over the PERSISTED IVF — an exact cosine
-    * range join whose corpus scan is pruned to clusters whose ball-cover
-    * bound ([[Ivf.cosUpperBound]]) clears the threshold. Recall is a
-    * theorem (any qualifying member contradicts a skipped cluster's
-    * bound), so the brute-force pair SQL is a full oracle with no
-    * selfCheck needed — the [[qKnnJoinIvf]] exactness contract, minus
-    * even its probe-mass knob. On the synthetic corpus the spread-out
-    * geometry prunes little (bounds sit near 1); IvfSpec pins real
-    * pruning on clustered fixtures, and the receipts
-    * ([[Ivf.RangeJoinStats]]) make the volume a number either way. */
-  private def qContaminationSemanticIdx(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Ivf.rangeJoinExact(corpusIvfDisk(spark, dir),
-        e.where(pmod(col("vec_id"), lit(41L)) === 0),
-        e.where(pmod(col("vec_id"), lit(41L)) =!= 0),
-        "vec_id", "embedding", "vec_id", "embedding", SemanticContamThr)
-      .select(col("query_id").as("eval_id"), col("nbr_id").as("vec_id"),
-        col("sim"))
-      .orderBy("eval_id", "vec_id")
-  }
-
-  /** The RANGE-JOIN PLANNER executed ([[AnnPlanner.planRange]] →
-    * [[AnnPlanner.executeRange]] — VERDICT r12 item 4, closing the last
-    * hand-dispatched regime): the same semantic-decontamination radius
-    * workload as [[qContaminationSemanticIdx]], but no human picks the
-    * path — the cost table does, from (nQ, n, dim), the declared IVF
-    * asset, and the MEASURED surviving-mass fraction
-    * ([[AnnPlanner.measureRangeMassFraction]] — centroid arithmetic
-    * only, no corpus touch). On this spread-out fixture the bounds
-    * barely prune (fraction ≈ 1), so the literal scan wins — the
-    * genuinely right call at benchmark-sized eval sets — and the
-    * [[selfChecked]] gate runs the OTHER exact path
-    * ([[Ivf.rangeJoinExact]]) and requires row identity, so the
-    * dispatcher, both engines, and the measurement are all checked
-    * against one cross-join oracle. AnnPlannerSpec pins the flip to
-    * ballCoverRange on clustered geometry / oversized eval sets. */
-  private def qContaminationSemanticPlan(spark: SparkSession,
-      dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val evalQ = e.where(pmod(col("vec_id"), lit(41L)) === 0)
-    val train = e.where(pmod(col("vec_id"), lit(41L)) =!= 0)
-    val ivf = corpusIvfDisk(spark, dir)
-    // n from the stats catalog (train is n·40/41 — same argmin either
-    // way, both paths scale with n); nQ counted from the bounded eval
-    // side the literal path collects anyway
-    val n = IndexStore.statsRows(embStatsDisk(spark, dir), "label")
-    val nq = evalQ.count()
-    val frac = AnnPlanner.measureRangeMassFraction(ivf, evalQ,
-      "vec_id", "embedding", SemanticContamThr)
-    val plan = AnnPlanner.planRange(nq, n, ivf.dim, SemanticContamThr,
-      assets = AnnPlanner.AnnAssets(ivfClusters = ivf.centroids.size),
-      candidateMassFraction = frac)
-    def shaped(df: DataFrame) = df
-      .select(col("query_id").as("eval_id"), col("nbr_id").as("vec_id"),
-        col("sim"))
-      .orderBy("eval_id", "vec_id")
-    selfChecked(
-      shaped(AnnPlanner.executeRange(plan, evalQ, train,
-        "vec_id", "embedding", "vec_id", "embedding", SemanticContamThr,
-        ivf = Some(ivf))),
-      shaped(Ivf.rangeJoinExact(ivf, evalQ, train,
-        "vec_id", "embedding", "vec_id", "embedding", SemanticContamThr)),
-      s"q_contamination_semantic_plan planned path ${plan.path}")
-  }
-
-  /** North-star BPE vocabulary learning, stage-1 statistic gate-checked
-    * ([[Vocab.pairCounts]]): the adjacent-character pair-count relation
-    * the FIRST merge is argmax'd from, top-20 under the learner's own
-    * deterministic (cnt DESC, l, r) order. One corpus scan builds the
-    * vocabulary-bounded word-count table; the pair explosion runs on
-    * THAT, never on the corpus. */
-  private def qBpePairs(spark: SparkSession, dir: String): DataFrame =
-    Vocab.pairCounts(
-        Vocab.wordCounts(Tables.documents(spark, dir), "text")
-          .select(Vocab.encodeChars(col("word")).as("enc"), col("cnt")))
-      .orderBy(desc("cnt"), asc("l"), asc("r"))
-      .limit(20)
-
-  /** The BPE learn LOOP itself under the gate ([[Vocab.learnBpe]]): three
-    * merges learned from the documents corpus, hash-checked against a
-    * DuckDB rendition that unrolls the same three iterations in CTEs
-    * (same ¬-separated encoding, same non-overlapping replace, same
-    * tie-break — see the [[Vocab]] scaladoc for why that replace IS
-    * greedy BPE application). */
-  private def qBpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Vocab.learnBpe(Tables.documents(spark, dir), "text", 3).toDF()
-  }
-
-  /** Learn-then-APPLY end to end: per-document subword token counts under
-    * the three learned merges ([[Vocab.tokenizeBpe]] — at gate size the
-    * dispatch lands on the chained-literal-replace rendition, the
-    * DuckDB-twinnable form; the ≥ 1k-merge production path is the
-    * compiled single-node expression, output-equality property-pinned in
-    * VocabSpec). The oracle re-learns the same merges and re-applies
-    * them per document in one statement. */
-  private def qBpeTokenize(spark: SparkSession, dir: String): DataFrame = {
-    val merges = Vocab.learnBpe(Tables.documents(spark, dir), "text", 3)
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        size(Vocab.tokenizeBpe(col("text"), merges)).cast("long").as("n_bpe"))
-      .orderBy("doc_id")
-  }
-
-  /** North-star exact-vector dedup: identical embeddings collapse to the
-    * min id. The corpus is unioned with a shifted-id copy of itself so the
-    * query demonstrates the collapse (every vector has exactly one replica
-    * — the SCALE.md clone-clique shape the exact-first pass removes). */
-  private def qDedupVectors(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val doubled = e.union(
-      e.select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding")))
-    Dedup.exactVectors(doubled, "vec_id", "embedding")
-      .withColumnRenamed("id", "vec_id")
-      .orderBy("vec_id")
-  }
-
-  /** North-star embedding-cosine near-dup pairs over the embeddings table.
-    * Declared via the sign-LSH candidate path (bucketed band join + exact
-    * per-pair verify — no CartesianProduct in the plan); the brute
-    * [[Dedup.cosinePairs]] stays as the oracle baseline ([[Dedup.sqlCosinePairs]]
-    * SQL, equality asserted in DedupSpec). */
-  private def qNeardupCosine(spark: SparkSession, dir: String): DataFrame =
-    Dedup.cosinePairsLsh(Tables.embeddings(spark, dir), "vec_id", "embedding", CosineThr, EmbDim)
-      .orderBy("id1", "id2")
-
-  /** The persisted sign-LSH near-dup index, written once per (session,
-    * sfDir) — the same offline DDL lifecycle as [[corpusBm25]]/[[corpusIvf]],
-    * but DISK-backed via [[IndexStore.saveSignLsh]]: the declared query's
-    * plan scans the band-partitioned sketch parquet, proving the dedup run
-    * needs the vector table only for the final per-candidate verify. */
-  private def corpusSignLsh(spark: SparkSession, dir: String): DataFrame = {
-    val path = persisted(spark, dir, "signlsh") { p =>
-      IndexStore.saveSignLsh(
-        Dedup.signLshSketches(Tables.embeddings(spark, dir), "vec_id", "embedding", EmbDim), p,
-        source = Some((Tables.embeddings(spark, dir), "vec_id", "embedding")))
-    }
-    // STALENESS GUARD ([[IndexStore.loadSignLshChecked]]): a screen against
-    // a sketch index missing newly-ingested vectors would silently never
-    // pair against them — refuse instead; checked once per wave
-    checkedOncePerWave(spark, dir, "signlsh")(
-      IndexStore.loadSignLshChecked(spark, path,
-        Tables.embeddings(spark, dir), "vec_id", "embedding"))(
-      IndexStore.loadSignLsh(spark, path))
-  }
-
-  /** The DISK-persisted BM25 index, written once per (session, sfDir) via
-    * [[IndexStore.saveBm25]] — same offline DDL lifecycle as [[corpusBm25]],
-    * but the declared query's plan scans the bucket-partitioned postings
-    * parquet: `TextSearch.search` prunes `bucket IN (touched term buckets)`
-    * driver-side, so at 100 TB a 4-term query reads ≤ 4/64ths of the
-    * postings files instead of the whole table (PartitionFilters pinned in
-    * PlanSpec). */
-  private def corpusBm25Disk(spark: SparkSession, dir: String): TextSearch.Bm25Index = {
-    val path = persisted(spark, dir, "bm25") { p =>
-      IndexStore.saveBm25(
-        TextSearch.buildIndex(Tables.documents(spark, dir), "doc_id", "text"), p,
-        source = Some((Tables.documents(spark, dir), "doc_id", "text")))
-    }
-    // STALENESS GUARD ([[IndexStore.loadBm25Checked]]): searches against an
-    // index missing newly-ingested documents silently never surface them —
-    // refuse instead; checked once per wave
-    checkedOncePerWave(spark, dir, "bm25")(
-      IndexStore.loadBm25Checked(spark, path,
-        Tables.documents(spark, dir), "doc_id", "text"))(
-      IndexStore.loadBm25(spark, path))
-  }
-
-  /** Index-backed BM25: same ranking as [[qBm25]], but served from the
-    * PERSISTED on-disk index — the end-to-end text analogue of
-    * [[qNeardupCosineIdx]]: build once offline, then every query reads only
-    * its terms' postings buckets (bucket partition pruning), never the
-    * corpus and never the full postings table. */
-  private def qBm25Idx(spark: SparkSession, dir: String): DataFrame =
-    TextSearch.search(corpusBm25Disk(spark, dir), flagshipQueryText, k = 10)
-      .withColumnRenamed("id", "doc_id")
-
-  /** Batch BM25 retrieval (the full-text twin of [[qKnnJoin]]): every ~97th
-    * document's first 8 tokens become a query; one job resolves the whole
-    * batch to per-query top-10 against the PERSISTED index, with the scan
-    * statically pruned to the batch's touched term-hash buckets. */
-  private def qBm25Join(spark: SparkSession, dir: String): DataFrame = {
-    val queries = batchQueries(spark, dir)
-    TextSearch.bm25Join(corpusBm25Disk(spark, dir), queries, "query_id", "qtext", k = 10)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Batch HYBRID retrieval — the full composition a retrieval-dataset
-    * builder runs at 100 TB: one query batch resolved through BOTH
-    * pipelines (sparse-vector cosine via [[VectorSearch.sparseKnnJoin]]
-    * over the relational embedder's output, and BM25 via
-    * [[TextSearch.bm25Join]]), fused per query with reciprocal-rank
-    * fusion ([[ScoreFusion.rrfJoin]]). Each query string feeds both
-    * pipelines, like the reference's single-query hybrid ([[qHybrid]])
-    * lifted to a query TABLE. */
-  /** The corpus's sparse self-embedding, computed once per (session, sfDir)
-    * — in production this is the embed job's PRECOMPUTED output
-    * ([[qEmbedCorpus]] is that job); a batch-retrieval run reads it, it
-    * does not re-embed 100 TB per query batch. */
-  private def corpusSparseEmb(spark: SparkSession, dir: String): DataFrame =
-    pinnedFixture[DataFrame](spark, "sparseemb", dir, _.unpersist())(
-      EmbedJob.embedRelational(
-        Tables.documents(spark, dir), "doc_id", "text").cache())
-
-  private def qHybridJoin(spark: SparkSession, dir: String): DataFrame = {
-    val queries = batchQueries(spark, dir)
-    val txt = TextSearch.bm25Join(corpusBm25Disk(spark, dir), queries,
-      "query_id", "qtext", k = 10)
-    val vec = VectorSearch.sparseKnnJoin(
-      EmbedJob.embedRelational(queries, "query_id", "qtext"),
-      corpusSparseEmb(spark, dir), k = 10)
-    ScoreFusion.rrfJoin(vec, txt, k = 5)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("query_id", "rank")
-  }
-
-  /** Batch hybrid with a DENSE vector branch — the reference's actual
-    * hybrid shape (`backend/api.py:203-254` fuses `$vectorSearch` over
-    * dense embeddings with `$search`) lifted to a query TABLE, where
-    * [[qHybridJoin]] renders the sparse-embedder variant: each batch
-    * query's dense vector (its document's own embedding — the precomputed
-    * embed-job output, exactly how a production batch arrives) routes
-    * through the PERSISTED IVF index ([[Ivf.knnJoinExact]], ball-cover
-    * pruned, exact by construction), BM25 runs via the persisted text
-    * index, and reciprocal-rank fusion joins them per query. Both branches
-    * are partition-pruned index probes — at no point does the corpus
-    * shuffle or cross-join against the batch. Oracle: exact dense kNN SQL
-    * + the BM25/RRF CTEs, valid unconditionally for the exact join and
-    * re-proved at Verify time by [[selfChecked]]. */
-  private def qHybridJoinDense(spark: SparkSession, dir: String): DataFrame = {
-    val queries = batchQueries(spark, dir)
-    val txt = TextSearch.bm25Join(corpusBm25Disk(spark, dir), queries,
-      "query_id", "qtext", k = 10)
-    val e = Tables.embeddings(spark, dir)
-    val idx = corpusIvfDisk(spark, dir)
-    val qvecs = e.join(broadcast(queries.select("query_id")),
-        col("vec_id") === col("query_id"))
-      .select("vec_id", "embedding")
-    val dense = selfChecked(
-      Ivf.knnJoinExact(idx, qvecs, e, "vec_id", "embedding", "vec_id",
-          "embedding", k = 10, probeMass = 0.9)
-        .orderBy("query_id", "rank"),
-      VectorSearch.knnJoin(qvecs, e, "vec_id", "embedding", "vec_id",
-          "embedding", k = 10)
-        .orderBy("query_id", "rank"),
-      "ball-cover-pruned IVF dense-hybrid branch")
-    ScoreFusion.rrfJoin(dense.withColumnRenamed("nbr_id", "id"), txt, k = 5)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("query_id", "rank")
-  }
-
-  /** Retrieve-then-rerank — the two-stage pipeline every retrieval-dataset
-    * builder runs: first-stage BM25 top-10 per query (recall-oriented, the
-    * only stage that touches the corpus), then a cross-encoder re-scores
-    * the |queries|×10 surviving pairs jointly and keeps the rerank top-3
-    * ([[Rerank.rerankJoin]]; deterministic [[OverlapReranker]] behind the
-    * [[RetryingReranker]] external-service contract). Candidate texts are
-    * attached by broadcasting the small candidate table against the corpus
-    * — the corpus is never shuffled for the rerank stage. */
-  private def qRerank(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val queries = batchQueries(spark, dir)
-    val cands = TextSearch.bm25Join(corpusBm25Disk(spark, dir), queries,
-      "query_id", "qtext", k = 10)
-    val pairs = docs.select(col("doc_id").as("id"), col("text"))
-      .join(broadcast(cands.select("query_id", "id")), "id")
-      .join(broadcast(queries), "query_id")
-    Rerank.rerankJoin(pairs, "query_id", "id", "qtext", "text", k = 3)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("query_id", "rank")
-  }
-
-  /** MMR-diversified retrieval — [[Mmr.mmrSelect]] over the same
-    * first-stage BM25 candidates as [[qRerank]]: pick 3 of 10 per query
-    * greedily by λ·relevance − (1−λ)·max-sim-to-picked, with candidate-pair
-    * cosines from the corpus sparse embedding. The anti-redundancy
-    * counterpart of qRerank's precision stage; every round is keyed by
-    * query_id over first-stage survivors only — flat in corpus size. */
-  private def qMmr(spark: SparkSession, dir: String): DataFrame = {
-    val queries = batchQueries(spark, dir)
-    // first-stage output feeds ids-pruning, pair sims AND every MMR round
-    // — checkpoint once so retrieval isn't recomputed per consumer
-    // (bounded: |queries| × 10 rows). LAZY (r16): it materializes inside
-    // the first consuming job instead of a blocking build-time round-trip.
-    val cands = TextSearch.bm25Join(corpusBm25Disk(spark, dir), queries,
-        "query_id", "qtext", k = 10)
-      .select("query_id", "id", "score")
-      .localCheckpoint(false)
-    val sims = Mmr.candidatePairSims(cands, corpusSparseEmb(spark, dir))
-    Mmr.mmrSelectAgg(cands, sims, k = 3, lambda = 0.7)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("query_id", "rank")
-  }
-
-  /** Hard-negative mining ([[Negatives.mine]]) — contrastive-training pair
-    * construction over the same first-stage candidates as [[qRerank]]:
-    * the positive is the query's source document (queries are derived from
-    * corpus docs), high-ranked non-near-dup candidates become the
-    * negatives. The near-dup screen (sim-to-positive < 0.8) is the false-
-    * negative guard; all work is per-query bounded. */
-  private def qHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val queries = batchQueries(spark, dir)
-    // NOT checkpointed (unlike qMmr): mine references cands/sims once
-    // each, and Spark's ReusedExchange already shares the first stage
-    // between them — an eager checkpoint here serializes the stages and
-    // measured SLOWER (1.3 s → 2.4 s)
-    val cands = TextSearch.bm25Join(corpusBm25Disk(spark, dir), queries,
-        "query_id", "qtext", k = 10)
-      .select("query_id", "id", "score")
-    val positives = queries.select(col("query_id"),
-      col("query_id").as("pos_id"))
-    val sims = Negatives.simToPositive(cands, positives,
-      corpusSparseEmb(spark, dir))
-    Negatives.mine(cands, positives, sims, nearDupThr = 0.8, n = 3)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Click→purchase attribution via [[EventStreams.intervalJoin]] in batch
-    * mode — the same declaration runs as a watermarked stream-stream join
-    * with bounded state on a live stream (StreamingSpec parity). */
-  private def qAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    EventStreams.intervalJoin(
-        ev.where(col("event_type") === "click")
-          .select("event_id", "user_id", "ts"),
-        ev.where(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts", "value"),
-        gapMinutes = 60)
-      .select(col("l_event_id").as("click_id"),
-        col("r_event_id").as("purchase_id"),
-        col("l_user_id").as("user_id"), col("r_value").as("value"))
-      .orderBy("click_id", "purchase_id")
-  }
-
-  /** Ordered view→click→purchase funnel
-    * ([[graft.operators.EventAnalytics.funnel]]): per-step user counts
-    * under strictly-after attribution — k−1 user-keyed joins of
-    * shrinking relations, one aggregation for all step counts. */
-  private def qFunnel(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.EventAnalytics.funnel(Tables.events(spark, dir),
-        "user_id", "event_type", "ts", Seq("view", "click", "purchase"))
-      .orderBy("step_idx")
-
-  /** [[qFunnel]] under a 60-minute CONVERSION WINDOW — each step must land
-    * within an hour of the previous one (half-open (prev, prev+60m], the
-    * [[qAttribution]] bound convention). The windowed counts differ from
-    * the unwindowed funnel's on this fixture, so the two queries pin two
-    * genuinely different semantics. */
-  private def qFunnelGap(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.EventAnalytics.funnel(Tables.events(spark, dir),
-        "user_id", "event_type", "ts", Seq("view", "click", "purchase"),
-        maxGapMinutes = Some(60))
-      .orderBy("step_idx")
-
-  /** Funnel TRANSITION latencies
-    * ([[graft.operators.EventAnalytics.funnelDurations]]): converted
-    * users + average conversion seconds per consecutive step pair — the
-    * where-do-users-stall companion to [[qFunnel]]'s counts. */
-  private def qFunnelLatency(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.EventAnalytics.funnelDurations(Tables.events(spark, dir),
-        "user_id", "event_type", "ts", Seq("view", "click", "purchase"))
-      .orderBy("step_idx")
-
-  /** REPEATED-step funnel (view→view→purchase) — real funnels repeat
-    * event types (two page views before a purchase); each repeated stage
-    * resolves to the user's NEXT such event strictly after the previous
-    * stage's time, so counts stay non-increasing. Until round 9 a
-    * `require` blocked repeats even though the strictly-after fold
-    * already supported them. */
-  private def qFunnelRepeat(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.EventAnalytics.funnel(Tables.events(spark, dir),
-        "user_id", "event_type", "ts", Seq("view", "view", "purchase"))
-      .orderBy("step_idx")
-
-  /** STREAMING-FUNNEL LATE-DATA RECONCILIATION, end-to-end (round-9
-    * verdict gap 4): [[EventStreams.funnelTrackerSim]] replays the
-    * fixture's events through the live tracker's OWN transition function
-    * under an adversarial micro-batch assignment (`event_id % 3` — a
-    * user's later-step events routinely land in earlier batches than a
-    * late prior step, the exact cross-batch under-advance
-    * [[EventStreams.funnelStateful]] documents), then
-    * [[EventStreams.funnelReconcile]] diffs the tracker output against
-    * the ledger replayed through the batch operator and
-    * [[EventStreams.funnelRepaired]] applies the corrections. The
-    * declared output is the REPAIRED per-step counts — equal to the
-    * batch funnel by construction, so [[qFunnel]]'s SQL twin is a full
-    * oracle; under the Verify gate a `require` proves the corrections
-    * were NON-EMPTY (the tracker genuinely under-advanced and the repair
-    * genuinely repaired — not a vacuous diff of identical relations). */
-  private def qFunnelReconcile(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val steps = Seq("view", "click", "purchase")
-    val ev = Tables.events(spark, dir)
-    val tracked = EventStreams.funnelTrackerSim(
-      ev.select("event_id", "ts", "user_id", "event_type", "value")
-        .as[EventStreams.Event],
-      steps, batchOf = e => e.event_id % 3).toDF()
-    val corrections = EventStreams.funnelReconcile(
-      ev, "user_id", "event_type", "ts", steps, None, tracked)
-    if (selfCheckEnabled)
-      require(corrections.where(col("action") === "add").limit(1).count() > 0,
-        "q_funnel_reconcile expected genuine cross-batch under-advance " +
-          "on this fixture — with no corrections the repair path is " +
-          "untested and the query is a no-op twin of q_funnel")
-    val repaired = EventStreams.funnelRepaired(tracked, corrections)
-    // per-step user counts over the repaired advancement rows (one row
-    // per user per reached step), zero-filled so unreached steps still
-    // produce their row like the oracle's count(*) over an empty CTE
-    val stepDf = steps.zipWithIndex.map { case (s, i) => (i, s) }
-      .toDF("step_idx", "step")
-    stepDf
-      .join(repaired.groupBy("step_idx").agg(count(lit(1)).as("__n")),
-        Seq("step_idx"), "left")
-      .select(col("step_idx"), col("step"),
-        coalesce(col("__n"), lit(0L)).as("users"))
-      .orderBy("step_idx")
-  }
-
-  /** Weekly cohort-retention matrix
-    * ([[graft.operators.EventAnalytics.retention]]): users cohorted by
-    * first-activity week since the fixture's anchor, counted once per
-    * active week — integer calendar arithmetic, engine-identical. */
-  private def qRetention(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.EventAnalytics.retention(Tables.events(spark, dir),
-        "user_id", "ts", anchorDate = "2024-01-01", periodDays = 7)
-      .orderBy("cohort_period", "period_offset")
-
-  /** Quality-tier binning ([[Curation.qualityTiers]]): per-language
-    * quantile tiers of the quality score, windows sharded by id-hash so
-    * partitions stay bounded at corpus scale. */
-  private def qQualityTiers(spark: SparkSession, dir: String): DataFrame =
-    Curation.qualityTiers(Tables.documents(spark, dir), "doc_id", "text",
-        "lang", tiers = 4, shards = 8)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** Temperature-weighted source mixing ([[Curation.mixSources]]) — the
-    * pretraining "data mixing" step: flatten the natural source
-    * distribution toward √-temperature shares under a 30% global token
-    * budget, with pure-id-hash acceptance (no RNG). Output is the
-    * per-source mixing report. */
-  private def qMixSources(spark: SparkSession, dir: String): DataFrame =
-    Curation.mixSources(Tables.documents(spark, dir), "doc_id", "source",
-        "text", budgetPermille = 300)
-      .orderBy("source")
-
-  /** Index-backed near-dup: same pairs as [[qNeardupCosine]], but the
-    * candidates come from the PERSISTED sketch table — the 100 TB dedup
-    * story end-to-end (sketch once offline; every dedup run reads the
-    * ~32·bands-bytes-per-vector index, touches vectors only to verify). */
-  private def qNeardupCosineIdx(spark: SparkSession, dir: String): DataFrame =
-    Dedup.cosineVerify(
-        Dedup.signLshCandidates(corpusSignLsh(spark, dir)),
-        Tables.embeddings(spark, dir), "vec_id", "embedding", CosineThr)
-      .orderBy("id1", "id2")
-
-  /** Near-clone-planted corpus for the HIGH-threshold dedup queries: the
-    * raw embeddings table has zero pairs above cos 0.85 at every SF
-    * (measured — a declared 0.95 query over it would be a trivial 0-row
-    * check), so the [[qDedupVectors]] union trick plants two replica
-    * families with ids offset by 1M/2M: EXACT copies (cos exactly 1.0)
-    * and first-dimension SIGN-FLIPS (cos = 1 − 2·v₀²/‖v‖², a genuine
-    * near-clone spread over ~0.69–1.0 on this data). Both transforms are
-    * EXACT in float — no arithmetic is introduced that could round
-    * differently across engines — so the DuckDB twin (`list_prepend(-e[1],
-    * e[2:])`) reproduces bit-identical vectors and the 6-decimal sim
-    * hashes stay deterministic. */
-  private def plantedNearClones(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    e.unionByName(e.select((col("vec_id") + 1000000L).as("vec_id"),
-        col("embedding")))
-      .unionByName(e.select((col("vec_id") + 2000000L).as("vec_id"),
-        concat(array(negate(element_at(col("embedding"), 1))),
-          slice(col("embedding"), 2, EmbDim - 1)).as("embedding")))
-  }
-  /** SQL twin of [[plantedNearClones]] as a DuckDB CTE body. */
-  private val plantedNearClonesSql =
-    """planted AS (
-      |  SELECT vec_id, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 1000000, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 2000000, list_prepend(-embedding[1], embedding[2:])
-      |  FROM embeddings
-      |)""".stripMargin
-
-  /** The PRODUCTION clone-detection regime under the correctness gate:
-    * [[Dedup.cosinePairsLshSelective]] (16×8-bit selective bands — a
-    * random pair agrees on a band w.p. 2⁻⁸, so the banding genuinely
-    * prunes) at threshold 0.95 over [[plantedNearClones]]. The banding
-    * isn't SQL-expressible, so like the ball-cover join this runs under
-    * the [[selfChecked]] routed==exact gate at Verify time: the seeded
-    * hyperplanes make recall on this fixture a deterministic fact
-    * (analytic per-pair miss 1.4e-4 at cos exactly 0.95, and the at-risk
-    * flip pairs sit mostly well above it), and any drift fails the run
-    * loudly before a wrong hash could pass. Oracle = brute-force cosine
-    * pairs SQL over the same planted CTE. */
-  private def qNeardupCosineSel(spark: SparkSession, dir: String): DataFrame = {
-    val planted = plantedNearClones(spark, dir)
-    selfChecked(
-      Dedup.cosinePairsLshSelective(planted, "vec_id", "embedding",
-          SelectiveThr, EmbDim)
-        .orderBy("id1", "id2"),
-      Dedup.cosinePairs(planted, "vec_id", "embedding", SelectiveThr)
-        .orderBy("id1", "id2"),
-      "q_neardup_cosine_sel selective banding")
-  }
-
-  /** [[qNeardupCosineSel]]'s Hamming-1 MULTI-PROBE sibling at 0.90 — the
-    * band of the regime where 8-bit single-probe recall is weakest
-    * (per-pair miss 4.2e-3 at cos exactly 0.90; the 32×12-bit multi-probe
-    * layout pulls it to 1.6e-9 for ×13 candidate work on the probe side
-    * only, while staying a ~10× candidate prune). Declaring it at 0.90
-    * rather than 0.95 is the point: it exercises exactly the thresholds
-    * the single-probe path shouldn't be trusted at, under the same
-    * selfChecked gate and brute-force oracle. */
-  private def qNeardupCosineSelMp(spark: SparkSession, dir: String): DataFrame = {
-    val planted = plantedNearClones(spark, dir)
-    selfChecked(
-      Dedup.cosinePairsLshSelectiveMultiProbe(planted, "vec_id", "embedding",
-          SelectiveMpThr, EmbDim)
-        .orderBy("id1", "id2"),
-      Dedup.cosinePairs(planted, "vec_id", "embedding", SelectiveMpThr)
-        .orderBy("id1", "id2"),
-      "q_neardup_cosine_selmp multi-probe selective banding")
-  }
-
-  /** The PLANNER-DRIVEN clone regime at cos 0.85 — the FLOOR of the
-    * selective band, where recall is hardest and the grid search picks
-    * its most aggressive layout: [[Planner.planCosine]] sizes (bands,
-    * rows, multiProbe) from the PLANTED corpus's own (n, dim) —
-    * 16×11-bit multi-probe at sf0.01's 1,500 vectors, 24×14 at sf0.1's
-    * 6,000; no human chose either — and [[Planner.execute]] runs the
-    * winning path. This is the round-8 verdict's top gap closed: the
-    * grid-chosen layouts now produce a CORRECTNESS row, not just a
-    * recommendation. Same [[selfChecked]] routed==brute-force gate and
-    * brute-force cosine oracle as [[qNeardupCosineSel]]; the analytic
-    * per-pair miss the plan promises (≤ 1e-3 at exactly 0.85, falling
-    * fast above) is what makes deterministic recall on this fixture a
-    * designed fact rather than luck. */
-  private val PlannedThr = 0.85
-  private def qNeardupCosinePlan(spark: SparkSession, dir: String): DataFrame = {
-    val planted = plantedNearClones(spark, dir)
-    // n = 3 × corpus by construction; the corpus n is a stats-catalog
-    // lookup ([[qFieldStats]]), so planning costs arithmetic, not a scan
-    val plan = Planner.planCosine(PlannedThr,
-      3L * IndexStore.statsRows(embStatsDisk(spark, dir), "label"), EmbDim)
-    selfChecked(
-      Planner.execute(plan, planted, "vec_id", "embedding", PlannedThr,
-          EmbDim)
-        .orderBy("id1", "id2"),
-      Dedup.cosinePairs(planted, "vec_id", "embedding", PlannedThr)
-        .orderBy("id1", "id2"),
-      s"q_neardup_cosine_plan planned ${plan.bands}x${plan.rows} " +
-        s"multiProbe=${plan.multiProbe}")
-  }
-
-  /** EXACT clone pairs at the same 0.85 floor via BALL-COVER cluster-pair
-    * pruning ([[Dedup.cosinePairsBallCover]]) — the cosine twin of
-    * [[qDedupJaccardPlan]]'s recall-1 contract and the THRESHOLD
-    * SELF-JOIN rendition of [[Ivf.knnJoinExact]]'s exactness discipline:
-    * where the banded paths above promise an analytic MISS BOUND, this
-    * path's recall 1 is a theorem of the triangle inequality (any
-    * qualifying pair's clusters satisfy ‖μ̂ᵢ−μ̂ⱼ‖ ≤ rᵢ + d(t) + rⱼ, so
-    * the screen keeps them), which makes the brute-force SQL a full
-    * oracle with NO self-check needed — the hash compare is the proof.
-    * The IVF over the planted corpus is built once per (session, sfDir)
-    * — wave cadence, like the persisted indexes — and the candidate
-    * mass is driver arithmetic BEFORE launch
-    * ([[Dedup.ballCoverClusterPairs]]); pruning power is
-    * geometry-dependent (strong on clustered production embeddings,
-    * graceful decay to the bucketed all-pairs join on near-random
-    * fixtures — the operator scaladoc's honesty boundary). */
-  private def qNeardupCosineBall(spark: SparkSession, dir: String): DataFrame = {
-    val planted = plantedNearClones(spark, dir)
-    val idx = fixture(spark, "plantedivf", dir) {
-      val built = Ivf.build(planted, "vec_id", "embedding")
-      // pin the assignments (they are a lazy plan over the kmeans
-      // transform — without this every probe re-runs the assignment job)
-      built.copy(assignments = built.assignments.localCheckpoint(true))
-    }
-    // the planner's EXACT contract picks the path ([[Planner.planCosine]]
-    // with exact = true routes to the ball cover when an index exists)
-    val plan = Planner.planCosine(PlannedThr,
-      3L * IndexStore.statsRows(embStatsDisk(spark, dir), "label"), EmbDim,
-      ivfAvailable = true, exact = true)
-    require(plan.path == "cosinePairsBallCover",
-      s"q_neardup_cosine_ball expected the exact ball-cover regime, " +
-        s"planner chose ${plan.path}")
-    Planner.executeWithIndex(plan, idx, planted, "vec_id", "embedding",
-        PlannedThr, EmbDim)
-      .orderBy("id1", "id2")
-  }
-
-  /** Directed containment pairs ([[Dedup.containmentPairs]]) — the
-    * asymmetric-duplication screen (quotes, boilerplate-wrapped copies,
-    * subset docs) symmetric Jaccard misses. Like [[qDedupJaccard]] this
-    * declares the GUARDED quadratic oracle baseline; corpus-scale runs
-    * route candidates through MinHash first (see the operator scaladoc). */
-  private def qDedupContainment(spark: SparkSession, dir: String): DataFrame =
-    Dedup.containmentPairs(Tables.documents(spark, dir), "doc_id", "text",
-        threshold = 0.9)
-      .orderBy("id1", "id2")
-
-  /** The PRODUCTION containment screen ([[Dedup.containmentPairsPrefix]]):
-    * prefix-filter candidates (deterministic recall 1 — the containment
-    * sibling of LSH banding, which J-tuned MinHash bands can't provide) →
-    * exact verify on candidates only. Same rows as [[qDedupContainment]]
-    * by the pigeonhole bound, so the quadratic baseline's SQL is a full
-    * oracle; what differs is the plan — candidate mass instead of the
-    * postings self-join, the shape that survives a C4-style boilerplate
-    * screen at corpus scale. */
-  private def qDedupContainmentLsh(spark: SparkSession, dir: String): DataFrame =
-    Dedup.containmentPairsPrefix(Tables.documents(spark, dir), "doc_id",
-        "text", threshold = 0.9)
-      .orderBy("id1", "id2")
-
-  /** The DISK-persisted containment prefix index, written once per
-    * (session, sfDir) via [[IndexStore.saveContainment]] — the containment
-    * twin of [[corpusBm25Disk]]: incremental screens read the
-    * bucket-partitioned postings/prefix parquet, never the corpus text. */
-  private def corpusContainmentDisk(spark: SparkSession,
-      dir: String): graft.index.IndexStore.ContainmentIndex = {
-    val path = persisted(spark, dir, "containment") { p =>
-      IndexStore.saveContainment(Tables.documents(spark, dir),
-        "doc_id", "text", threshold = 0.9, p)
-    }
-    // STALENESS GUARD ([[IndexStore.loadContainmentChecked]]): screens
-    // against an index missing newly-ingested documents silently never
-    // pair against them — refuse instead; checked once per wave
-    checkedOncePerWave(spark, dir, "containment")(
-      IndexStore.loadContainmentChecked(spark, path,
-        Tables.documents(spark, dir), "doc_id", "text"))(
-      IndexStore.loadContainment(spark, path))
-  }
-
-  /** INCREMENTAL containment screen — the daily-ingest rendition of
-    * [[qDedupContainmentLsh]], completing the C4-style boilerplate story
-    * the way [[qDedupIncremental]] completes near-dup: which of a NEW
-    * batch's documents (every 5th id here) contain / are contained by
-    * anything ALREADY in the persisted prefix index? The batch is
-    * shingled fresh (work ∝ batch) and joined against the
-    * bucket-partitioned postings/prefix parquet
-    * ([[Dedup.containmentPairsAgainst]]); the corpus text is never
-    * re-shingled. Recall is the same pigeonhole theorem in both
-    * directions (batch prefixes for batch→corpus, indexed prefixes for
-    * corpus→batch), so the quadratic enumeration restricted to
-    * batch-touching pairs is a FULL oracle. */
-  private def qDedupContainmentInc(spark: SparkSession, dir: String): DataFrame = {
-    val batch = Tables.documents(spark, dir).where(col("doc_id") % 5 === 0)
-    Dedup.containmentPairsAgainst(batch, "doc_id", "text",
-        corpusContainmentDisk(spark, dir), threshold = 0.9)
-      .orderBy("id1", "id2")
-  }
-
-  /** Passage-level exact dedup — [[Curation.chunkDocuments]] composed with
-    * [[Dedup.exact]]: near-identical documents that differ only in a
-    * trailing section collapse at CHUNK granularity even when whole-doc
-    * hashes differ. Chunk ids pack (doc_id, chunk_idx) into one long via
-    * [[Curation.packChunkId]] — 2^20 idx width, range-guarded so a
-    * monster document fails loudly instead of aliasing into a neighbor's
-    * id space (the old `id*1000` packing collided past 1000 chunks). */
-  private def qChunkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val chunks = Curation.chunkDocuments(
-        Tables.documents(spark, dir), "doc_id", "text",
-        chunkChars = 200, overlap = 40)
-      .select(Curation.packChunkId(col("id"), col("chunk_idx")).as("cid"),
-        col("chunk_text"))
-    Dedup.exact(chunks, "cid", "chunk_text")
-      .select(col("id").as("chunk_id"), col("group_n"), col("keep"))
-      .orderBy("chunk_id")
-  }
-
-  /** North-star EXACT SUBSTRING-SPAN dedup ([[SubstringDedup]], the Lee
-    * et al. suffix-array semantics re-expressed relationally): every
-    * maximal token span occurring ≥ 2× corpus-wide, per document — the
-    * passage-granular signal document/chunk dedup cannot produce (a
-    * boilerplate footer shared by otherwise-distinct docs surfaces HERE,
-    * with its exact token extent). All stages linear; integer-only. */
-  private def qSubstringSpans(spark: SparkSession, dir: String): DataFrame =
-    SubstringDedup.duplicatedSpans(
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "span_start")
-
-  /** Per-document duplicated-token coverage over [[qSubstringSpans]]'s
-    * spans — the curation filter signal ("drop docs > X% duplicated
-    * content"); every doc gets a row, clean docs score 0. */
-  private def qSubstringCoverage(spark: SparkSession, dir: String): DataFrame =
-    SubstringDedup.duplicationCoverage(
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** The DISK-persisted gram-hash index over "yesterday's corpus" (all
-    * docs OUTSIDE the %5 batch — the R17 contract says appended docs are
-    * NEW, so the declared screen's batch is deliberately absent from its
-    * index, unlike [[corpusContainmentDisk]] whose screen handles
-    * self-pairs explicitly), written once per (session, sfDir) via
-    * [[IndexStore.saveGrams]]. */
-  private def corpusGramsDisk(spark: SparkSession,
-      dir: String): graft.index.IndexStore.GramIndex = {
-    val path = persisted(spark, dir, "grams") { p =>
-      IndexStore.saveGrams(
-        Tables.documents(spark, dir).where(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", SubstringDedup.DefaultGramTokens, p)
-    }
-    // STALENESS GUARD against the SAME subset the index covers (the
-    // fingerprint is over indexed-source rows, whatever relation that
-    // is); checked once per wave
-    checkedOncePerWave(spark, dir, "grams")(
-      IndexStore.loadGramsChecked(spark, path,
-        Tables.documents(spark, dir).where(col("doc_id") % 5 =!= 0),
-        "doc_id", "text"))(
-      IndexStore.loadGrams(spark, path))
-  }
-
-  /** The DISK-persisted late-interaction window index over the whole
-    * corpus ([[IndexStore.saveWindows]]) — the sixth index family's
-    * declared-query surface: daily retrieval loads the per-document
-    * window vectors from their id-bucket-partitioned parquet instead of
-    * re-deriving them from raw text every run (the ColBERT encode-once
-    * posture). Written once per (session, sfDir). */
-  private def corpusWindowsDisk(spark: SparkSession,
-      dir: String): graft.index.IndexStore.WindowIndex = {
-    val path = persisted(spark, dir, "windows") { p =>
-      IndexStore.saveWindows(Tables.documents(spark, dir), "doc_id", "text",
-        LateInteraction.DefaultWindowTokens, p)
-    }
-    // STALENESS GUARD ([[IndexStore.loadWindowsChecked]]): reranks against
-    // an index missing newly-ingested documents silently score them
-    // absent — refuse instead; checked once per wave
-    checkedOncePerWave(spark, dir, "windows")(
-      IndexStore.loadWindowsChecked(spark, path,
-        Tables.documents(spark, dir), "doc_id", "text"))(
-      IndexStore.loadWindows(spark, path))
-  }
-
-  /** INCREMENTAL substring-span screen — the daily-ingest rendition of
-    * [[qSubstringSpans]], completing the span-dedup story the way
-    * [[qDedupIncremental]] completes near-dup and
-    * [[qDedupContainmentInc]] completes containment: which token spans of
-    * a NEW batch (every 5th id) duplicate content the corpus has already
-    * seen (or that repeats within the batch)? The batch is grammed fresh
-    * (work ∝ batch), its distinct hashes broadcast against ONE narrow
-    * scan of the persisted hash column
-    * ([[SubstringDedup.spansAgainst]]); the corpus text is never
-    * re-grammed. The whole-relation computation restricted to batch ids
-    * is an exact oracle (the gram-duplication predicate decomposes as
-    * in-corpus OR twice-in-batch). */
-  private def qSubstringInc(spark: SparkSession, dir: String): DataFrame =
-    SubstringDedup.spansAgainst(
-        Tables.documents(spark, dir).where(col("doc_id") % 5 === 0),
-        "doc_id", "text", corpusGramsDisk(spark, dir))
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "span_start")
-
-  /** The boilerplate report over [[qSubstringSpans]]'s spans: the most
-    * repeated passages, rendered back to (normalized) text — what a
-    * curation engineer reads before choosing cut thresholds. */
-  private def qSubstringPassages(spark: SparkSession, dir: String): DataFrame =
-    SubstringDedup.topDuplicatedPassages(
-      Tables.documents(spark, dir), "doc_id", "text", topN = 20)
-
-  /** The Lee et al. REMEDIATION over [[qSubstringSpans]]'s spans: every
-    * duplicated span cut from every document's normalized token stream —
-    * detect → report → cut is the complete substring-dedup story. */
-  private def qSubstringCut(spark: SparkSession, dir: String): DataFrame =
-    SubstringDedup.cutSpans(
-        Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-
-  /** INCREMENTAL near-dup dedup — the production daily-ingest operation:
-    * which of a NEW batch's vectors near-duplicate anything ALREADY in the
-    * persisted index? The batch (every 5th id here) is sketched fresh
-    * (work ∝ batch) and its bands broadcast against the band-partitioned
-    * persisted sketch table ([[Dedup.signLshCandidatesAgainst]]); the
-    * existing corpus contributes only sketch rows — never re-embedded,
-    * never self-joined. Exact cosine verify runs on candidates only.
-    * Oracle-exact for the same reason as [[qNeardupCosine]]: banding
-    * recall is 1 at this threshold on the testdata (DedupSpec asserts the
-    * subset relation structurally). */
-  private def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val batch = e.where(col("vec_id") % 5 === 0)
-    Dedup.signLshScreen(
-        Dedup.signLshSketches(batch, "vec_id", "embedding", EmbDim),
-        corpusSignLsh(spark, dir), e, "vec_id", "embedding", CosineThr)
-      .orderBy("id1", "id2")
-  }
-
-  /** [[qDedupIncremental]] through the MULTI-PROBE candidate path
-    * ([[Dedup.signLshCandidatesAgainstMultiProbe]]): Hamming-1 band
-    * probing widens candidates (DedupSpec pins the strict superset), and
-    * since the exact-probe set already reaches recall 1 here, the
-    * verified output — and so the oracle — is identical; the probe depth
-    * is what differs, which is exactly what this query exercises. */
-  private def qDedupIncrementalMp(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val batch = e.where(col("vec_id") % 5 === 0)
-    Dedup.signLshScreen(
-        Dedup.signLshSketches(batch, "vec_id", "embedding", EmbDim),
-        corpusSignLsh(spark, dir), e, "vec_id", "embedding", CosineThr,
-        multiProbe = true)
-      .orderBy("id1", "id2")
-  }
-
-  /** The IVF index, built once per (session, sfDir) — offline DDL
-    * lifecycle, same as [[corpusBm25]]. */
-  private def corpusIvf(spark: SparkSession, dir: String): Ivf.IvfIndex =
-    pinnedFixture[Ivf.IvfIndex](spark, "ivfmem", dir,
-        _.assignments.unpersist()) {
-      val idx = Ivf.build(Tables.embeddings(spark, dir), "vec_id", "embedding")
-      idx.copy(assignments = idx.assignments.cache())
-    }
-
-  /** Persisted field-statistics catalogs ([[IndexStore.saveStats]]) for
-    * the two fixture corpora — the ANALYZE side of the planners: plan-time
-    * (n, selectivity) inputs become lookups over a catalog maintained at
-    * ingest-wave cadence instead of corpus COUNT scans at plan time (the
-    * round-9 wave-cadence lesson applied to cardinality estimation).
-    * Built once per (session, sfDir), staleness-checked once per wave
-    * ([[checkedOncePerWave]]) like every persisted family. */
-  private def embStatsDisk(spark: SparkSession, dir: String): DataFrame = {
-    val path = persisted(spark, dir, "stats_emb") { p =>
-      IndexStore.saveStats(Tables.embeddings(spark, dir), "vec_id",
-        "embedding", Seq("label"), p)
-    }
-    checkedOncePerWave(spark, dir, "stats-emb")(
-      IndexStore.loadStatsChecked(spark, path, Tables.embeddings(spark, dir),
-        "vec_id", "embedding"))(
-      IndexStore.loadStats(spark, path))
-  }
-  private def eventStatsDisk(spark: SparkSession, dir: String): DataFrame = {
-    val path = persisted(spark, dir, "stats_evt") { p =>
-      // event_type counts are the funnel/sessionization side's
-      // cardinality source (step selectivities, streaming-state sizing)
-      IndexStore.saveStats(Tables.events(spark, dir), "event_id", "props",
-        Seq("event_type"), p)
-    }
-    checkedOncePerWave(spark, dir, "stats-evt")(
-      IndexStore.loadStatsChecked(spark, path, Tables.events(spark, dir),
-        "event_id", "props"))(
-      IndexStore.loadStats(spark, path))
-  }
-  private def docStatsPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "stats_doc") { p =>
-      // n_chars gets a fixed-boundary histogram (16 × 40-char buckets) —
-      // the range-selectivity input for length-based quality predicates
-      IndexStore.saveStats(Tables.documents(spark, dir), "doc_id", "text",
-        Seq("lang", "source"), p,
-        hists = Map("n_chars" -> IndexStore.HistSpec(0L, 640L, 16)))
-    }
-  private def docStatsDisk(spark: SparkSession, dir: String): DataFrame = {
-    val path = docStatsPath(spark, dir)
-    checkedOncePerWave(spark, dir, "stats-doc")(
-      IndexStore.loadStatsChecked(spark, path, Tables.documents(spark, dir),
-        "doc_id", "text"))(
-      IndexStore.loadStats(spark, path))
-  }
-
-  /** The statistics catalogs' CONTENT, gate-checked: per-field value
-    * counts for the embeddings catalog (label), the documents catalog
-    * (lang, source, plus the n_chars fixed-boundary histogram's bucket
-    * counts), and the events catalog (event_type — the funnel side's
-    * step-selectivity source), summed over committed batches
-    * ([[IndexStore.loadStats]]).
-    * The DuckDB oracle re-derives the same counts with plain GROUP BYs
-    * (the histogram arm as the identical integer-division CASE), so the
-    * relation every plan-time selectivity lookup reads
-    * ([[qAnnPlanFiltered]], [[IndexStore.histSelectivity]]) is itself
-    * hash-verified against an independent engine — the catalog is a
-    * checked computation, not trusted bookkeeping. */
-  private def qFieldStats(spark: SparkSession, dir: String): DataFrame =
-    embStatsDisk(spark, dir).unionByName(docStatsDisk(spark, dir))
-      .unionByName(eventStatsDisk(spark, dir))
-      .orderBy("field", "value")
-
-  /** Quantile BRACKETS from the persisted n_chars histogram
-    * ([[IndexStore.histQuantile]]): the [lo, hi) bucket provably
-    * containing each rank-⌈p·n⌉ document length, computed entirely from
-    * catalog rows — a report-time quantile with NO corpus scan (at
-    * 100 TB, length percentiles for quality-gate calibration from a
-    * 16-row relation). The oracle is the strongest possible check: it
-    * finds the TRUE quantile value by sorting the raw table, buckets it
-    * with the identical integer division, and hash-matches the bracket —
-    * so a wrong cumulative walk, a drifted bucket count, or an
-    * off-by-one rank all fail. */
-  private def qHistQuantile(spark: SparkSession, dir: String): DataFrame = {
-    val docStats = docStatsDisk(spark, dir)
-    val h = IndexStore.loadHistSpecs(spark,
-      docStatsPath(spark, dir))("n_chars")
-    import spark.implicits._
-    Seq(0.25, 0.5, 0.9)
-      .map { p =>
-        val (lo, hi) = IndexStore.histQuantile(docStats, "n_chars", h, p)
-        (p, lo, hi)
-      }
-      .toDF("p", "lo", "hi").orderBy("p")
-  }
-
-  /** The histogram range ESTIMATOR itself on its exact regime,
-    * gate-checked: [[IndexStore.histSelectivity]] over the persisted
-    * n_chars histogram for the bucket-ALIGNED range [240, 320) — where
-    * the estimate is exact by construction (full buckets only, no
-    * interpolation) — against the DuckDB oracle computing the true
-    * fraction with a direct filtered count. One row; the number
-    * [[qAnnPlanRange]] plans from is the number an independent engine
-    * derives from the raw table. */
-  private def qHistSelectivity(spark: SparkSession, dir: String): DataFrame = {
-    val docStats = docStatsDisk(spark, dir)
-    val h = IndexStore.loadHistSpecs(spark,
-      docStatsPath(spark, dir))("n_chars")
-    val sel = IndexStore.histSelectivity(docStats, "n_chars", h, 240L, 320L)
-    import spark.implicits._
-    Seq(("n_chars", 240, 320,
-        BigDecimal(sel).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble))
-      .toDF("field", "lo", "hi", "sel")
-  }
-
-  /** The DISK-persisted IVF index, written once per (session, sfDir) via
-    * [[IndexStore.saveIvf]] — the vector twin of [[corpusBm25Disk]]: probes
-    * against it scan the cluster-partitioned assignments parquet, so a
-    * sub-exhaustive probe reads ONLY the probed clusters' directories
-    * (PartitionFilters pinned in PlanSpec) — the on-disk inverted-file
-    * story end-to-end. Saved WITH its source fingerprint and loaded
-    * through the STALENESS GUARD ([[IndexStore.loadIvfChecked]], the
-    * [[corpusMrlPrefixDisk]] discipline): an index outliving a corpus
-    * append refuses loudly instead of silently dropping the new vectors
-    * from every sub-exhaustive probe. */
-  private def ivfDiskPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "ivf") { p =>
-      val idx = corpusIvf(spark, dir)
-      IndexStore.saveIvf(idx, p,
-        source = Some((Tables.embeddings(spark, dir), "vec_id", "embedding")))
-      // MEASURE the covering depth with the in-code instrument and persist
-      // it beside the index it describes ([[AnnPlanner.measureIvfDepth]] →
-      // [[IndexStore.saveDepth]]) — run once per wave at build time, read
-      // back by [[qAnnPlan]]'s re-plan; the flagship probe is in the
-      // sample, so the selfChecked routed==exact gate is a deterministic
-      // consequence of the measurement, not of a constant staying lucky
-      IndexStore.saveDepth(spark, p, AnnPlanner.measureIvfDepth(
-        idx, Tables.embeddings(spark, dir), "vec_id", "embedding",
-        depthSampleQueries(spark, dir), k = 10))
-      // measured ball-cover pass-2 extension fraction on the batch
-      // planner's own query batch, persisted under the "extend" sidecar
-      // ([[AnnPlanner.measureExtendFraction]]) — [[qKnnJoinPlan]] prices
-      // ballCoverJoin from it
-      IndexStore.saveDepth(spark, p, AnnPlanner.measureExtendFraction(
-        idx, Tables.embeddings(spark, dir).where(col("vec_id") < 50),
-        Tables.embeddings(spark, dir), "vec_id", "embedding",
-        "vec_id", "embedding", k = 3), name = "extend")
-    }
-  private def corpusIvfDisk(spark: SparkSession, dir: String): Ivf.IvfIndex = {
-    val path = ivfDiskPath(spark, dir)
-    // checked once per wave ([[checkedOncePerWave]]), unchecked per query
-    checkedOncePerWave(spark, dir, "ivf")(
-      IndexStore.loadIvfChecked(spark, path, Tables.embeddings(spark, dir),
-        "vec_id", "embedding"))(
-      IndexStore.loadIvf(spark, path))
-  }
-
-  /** Deterministic depth-measurement query sample: the flagship probe
-    * (so the declared queries' selfChecked routed==exact gates follow
-    * from the measurement by construction) plus the first four corpus
-    * vectors by vec_id. Bounded driver collect (4 rows), cached per
-    * (session, sfDir) — the instrument runs at wave cadence with it. */
-  private def depthSampleQueries(spark: SparkSession,
-      dir: String): Seq[(Long, Array[Double])] =
-    fixture(spark, "depthsample", dir) {
-      val corpus = Tables.embeddings(spark, dir)
-        .orderBy("vec_id").limit(4)
-        .select(col("vec_id").cast("long"),
-          col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-      (-1L, flagshipQueryVec) +: corpus
-    }
-
-  /** The measured covering-depth KNOB recorded beside the index at
-    * `path` ([[IndexStore.loadDepth]], written by the build paths'
-    * measurement instruments): ceil(fraction·n), clamped to ≥ k. The
-    * `*_idx` queries probe at the measurement instead of a conservative
-    * constant — shallower on this geometry by 5–40× (SCALE.md round-10
-    * §3) — and the [[selfChecked]] routed==exact gates keep the
-    * measurement honest at Verify time: a depth gone stale fails the
-    * correctness gate loudly, never wrongly. Fails loudly when no record
-    * exists (the build paths always measure). */
-  private def measuredRecord(spark: SparkSession, path: String,
-      name: String = "depth"): IndexStore.DepthRecord =
-    // sidecar read cached per (session, sidecar) — one tiny parquet read
-    // per wave, not per query (the checkedOncePerWave discipline); a
-    // missing record throws before caching, so it refuses on every attempt
-    fixture(spark, "depth", s"$path/$name")(
-      IndexStore.loadDepth(spark, path, name).getOrElse(sys.error(
-        s"no measured covering depth recorded at $path/$name — rebuild " +
-          "the index (the build path measures and persists it)")))
-  private def measuredDepthKnob(spark: SparkSession, path: String,
-      n: Long, k: Int): Int =
-    math.max(k, math.ceil(measuredRecord(spark, path).fraction * n).toInt)
 
   /** True under `graft.Verify`, which sets the `graft.selfcheck` system
     * property (local opt-in: `-Dgraft.selfcheck=1`). The routed==exact
@@ -2621,7 +162,7 @@ object SparkEntry {
     * correctness gate before a wrong hash could pass); otherwise the
     * routed plan is returned untouched. `exact` is by-name — it is never
     * built outside self-check mode. */
-  private def selfChecked(routed: DataFrame, exact: => DataFrame,
+  private[graft] def selfChecked(routed: DataFrame, exact: => DataFrame,
       what: String): DataFrame = {
     if (selfCheckEnabled)
       require(routed.collect().toSeq == exact.collect().toSeq,
@@ -2630,3400 +171,204 @@ object SparkEntry {
     routed
   }
 
-  /** S5/R7/R9 IVF ANN in its oracle-checkable exhaustive mode: probe depth
-    * ≥ N degenerates to exact top-k (recall 1), so the DuckDB exact-kNN SQL
-    * is a valid oracle; sub-exhaustive recall is unit-tested (IvfSpec). */
-  private def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Ivf.ann(corpusIvf(spark, dir), e, "vec_id", "embedding", flagshipQueryVec,
-        k = 10, numCandidates = Int.MaxValue)
-      .select("vec_id", "score")
-  }
-
-  /** FILTERED ANN — Atlas's `$vectorSearch.filter` (`backend/api.py:181-186`
-    * passes the Mongo-dialect filter INSIDE the vectorSearch stage, so it
-    * prunes candidates BEFORE top-k, never truncating the result below k
-    * the way a post-filter would). Runs the ROUTED IVF plan (`forceRoute`,
-    * the [[qKnnJoinIvf]] verification pattern) at exhaustive probe depth:
-    * member semi-join → pre-filter → top-k is the executed plan, and its
-    * output is provably the exact filtered top-k, so the filtered exact SQL
-    * is a valid oracle. */
-  private def qAnnIvfFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Ivf.ann(corpusIvf(spark, dir), e, "vec_id", "embedding", flagshipQueryVec,
-        k = 10, numCandidates = Int.MaxValue,
-        preFilter = Some(col("label") === 3), forceRoute = true)
-      .select("vec_id", "score")
-  }
-
-  /** The PQ index, built once per (session, sfDir) — offline DDL lifecycle,
-    * same as [[corpusIvf]]. */
-  private def corpusPq(spark: SparkSession, dir: String): Pq.PqIndex =
-    pinnedFixture[Pq.PqIndex](spark, "pqmem", dir, _.codes.unpersist()) {
-      val idx = Pq.build(Tables.embeddings(spark, dir), "vec_id", "embedding")
-      idx.copy(codes = idx.codes.cache())
-    }
-
-  /** Product-quantized ANN in its oracle-checkable mode: the full
-    * ADC→candidates→exact-re-rank plan (`forceRerank = true`, the
-    * [[qKnnJoinIvf]] verification pattern) at exhaustive overfetch, where
-    * the candidate set is the whole corpus and the re-rank IS the exact
-    * search — so the exact-kNN SQL stays a valid oracle while the ADC scan,
-    * the top-overfetch, and the candidate semi-join all execute.
-    * Sub-exhaustive recall and the 32× compression story are PqSpec-tested
-    * (codebook geometry is not SQL-reproducible). */
-  private def qAnnPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Pq.ann(corpusPq(spark, dir), e, "vec_id", "embedding", flagshipQueryVec,
-        k = 10, overfetch = Int.MaxValue, forceRerank = true)
-      .select("vec_id", "score")
-  }
-
-  /** IVF-PQ composed ANN (the Faiss `IndexIVFPQ` architecture: cluster
-    * probe picks WHICH rows, ADC codes score them WITHOUT touching float
-    * vectors, exact re-rank reads full vectors for survivors only) in its
-    * oracle-checkable forced-exhaustive mode — probe covers every cluster
-    * and overfetch covers every member, so the composed plan's output is
-    * provably the exact top-k while the member join, ADC scan, and
-    * candidate semi-join all execute. */
-  private def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Pq.annIvf(corpusIvf(spark, dir), corpusPq(spark, dir), e,
-        "vec_id", "embedding", flagshipQueryVec, k = 10,
-        numCandidates = Int.MaxValue, overfetch = Int.MaxValue, forceRerank = true)
-      .select("vec_id", "score")
-  }
-
-  /** The DISK-persisted PQ index, written once per (session, sfDir) via
-    * [[IndexStore.savePq]] — the compressed-vector twin of [[corpusIvfDisk]]:
-    * probes against it scan the m-byte codes parquet (the 32×-compressed
-    * stand-in for the vector column), touching float vectors only for the
-    * overfetch re-rank. */
-  private def pqDiskPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "pq") { p =>
-      val idx = corpusPq(spark, dir)
-      IndexStore.savePq(idx, p,
-        source = Some((Tables.embeddings(spark, dir), "vec_id", "embedding")))
-      // ADC overfetch covering depth, MEASURED by the in-code instrument
-      // ([[AnnPlanner.measurePqDepth]] — max exact-top-k ADC rank over the
-      // flagship + corpus sample) and persisted for [[qAnnPlan]]'s re-plan
-      IndexStore.saveDepth(spark, p, AnnPlanner.measurePqDepth(
-        idx, Tables.embeddings(spark, dir), "vec_id", "embedding",
-        depthSampleQueries(spark, dir), k = 10))
-    }
-  private def corpusPqDisk(spark: SparkSession, dir: String): Pq.PqIndex = {
-    val path = pqDiskPath(spark, dir)
-    // STALENESS GUARD ([[IndexStore.loadPqChecked]]): an ADC scan against a
-    // codes table missing newly-ingested vectors silently never ranks them —
-    // refuse instead; checked once per wave
-    checkedOncePerWave(spark, dir, "pq")(
-      IndexStore.loadPqChecked(spark, path,
-        Tables.embeddings(spark, dir), "vec_id", "embedding"))(
-      IndexStore.loadPq(spark, path))
-  }
-
-  /** Index-backed PQ ANN: same top-k as [[qAnnPq]], but ADC-scanned against
-    * the PERSISTED on-disk codes at SUB-exhaustive overfetch — the
-    * compressed twin of [[qAnnIvfIdx]]: the candidate scan reads only the
-    * m-int codes column from disk (never the float vectors), and the exact
-    * re-rank reads full vectors for the overfetch survivors only. Same
-    * self-verified oracle contract: routed == exact is required at VERIFY
-    * time ([[selfChecked]]) — the same gate that hashes the output — so
-    * the exact-kNN SQL stays a valid oracle by checked invariant while
-    * Bench times the pure index path. */
-  private def qAnnPqIdx(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val idx = corpusPqDisk(spark, dir)
-    // overfetch = the MEASURED ADC covering depth persisted beside the
-    // index ([[measuredDepthKnob]] — the flagship probe is in the
-    // measurement sample, so the re-rank provably recovers the true
-    // top-10); selfChecked makes drift loud at Verify time
-    selfChecked(
-      Pq.ann(idx, e, "vec_id", "embedding", flagshipQueryVec,
-          k = 10, overfetch = measuredDepthKnob(spark,
-            pqDiskPath(spark, dir), idx.n, 10))
-        .select("vec_id", "score"),
-      VectorSearch.knn(e, "vec_id", "embedding", flagshipQueryVec, k = 10)
-        .select("vec_id", "score"),
-      "sub-exhaustive PQ overfetch")
-  }
-
-  /** Prefix dims for the Matryoshka query/index pair (half the fixture's
-    * 64 dims — the coarse scan reads half the vector bytes). */
-  private val MrlPrefixDims = 32
-
-  /** The PERSISTED narrow prefix projection ([[IndexStore.savePrefix]]),
-    * written once per (session, sfDir) — the PQ codes discipline applied
-    * to a dimension slice: the coarse pass scans this (vec_id, 32-dim
-    * prefix) parquet instead of the full-vector table, so its scan bytes
-    * shrink dim/prefixDims-fold. Loaded through the STALENESS GUARD
-    * ([[IndexStore.loadPrefixChecked]]): the fingerprint recorded at
-    * save time must match the current corpus, so a prefix outliving a
-    * corpus append fails LOUDLY instead of silently degrading the coarse
-    * pass's recall (round-8 verdict item 7; the stale→refuse→rebuild
-    * lifecycle is IndexStoreSpec-pinned). */
-  private def mrlPrefixPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "mrlprefix") { p =>
-      val embs = Tables.embeddings(spark, dir)
-      IndexStore.savePrefix(embs, "vec_id", "embedding", MrlPrefixDims, p)
-      // coarse-pass overfetch covering depth, MEASURED by the in-code
-      // instrument ([[AnnPlanner.measureMrlDepth]] — max exact-top-k
-      // prefix-score rank over the flagship + corpus sample)
-      IndexStore.saveDepth(spark, p, AnnPlanner.measureMrlDepth(
-        embs, "vec_id", "embedding", depthSampleQueries(spark, dir),
-        k = 10, prefixDims = MrlPrefixDims))
-    }
-  private def corpusMrlPrefixDisk(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = mrlPrefixPath(spark, dir)
-    // checked once per wave; the unchecked load mirrors loadPrefixChecked's
-    // column contract (renamed to the caller's id/emb columns)
-    checkedOncePerWave(spark, dir, "mrlprefix")(
-      IndexStore.loadPrefixChecked(spark, path,
-        Tables.embeddings(spark, dir), "vec_id", "embedding"))(
-      IndexStore.loadPrefix(spark, path)
-        .withColumnRenamed("id", "vec_id"))
-  }
-
-  /** Matryoshka (dimension-prefix) two-stage ANN
-    * ([[graft.search.VectorSearch.knnPrefix]]): coarse top-overfetch
-    * scores the first 32 of 64 dimensions against the PERSISTED narrow
-    * prefix parquet ([[corpusMrlPrefixDisk]] — the coarse scan never
-    * reads full vectors), exact re-rank reads full vectors for survivors
-    * only — the PQ shape with a dimension slice in place of codebooks
-    * (no training, no codebook state). Same self-verified oracle
-    * contract as [[qAnnPqIdx]]: routed == exact is required at Verify
-    * time ([[selfChecked]]), so the exact-kNN SQL stays a valid oracle
-    * while Bench times the two-stage plan. The hashed fixture embeddings
-    * are NOT information-ordered (nothing was MRL-trained), so the
-    * overfetch is sized generously (n/2; the measured minimum covering
-    * depth is 224/2000 at sf0.1, 172/500 at sf0.01) — an MRL-trained
-    * deployment runs far shallower. The contract, not the constant, is
-    * the point. */
-  private def qAnnMrl(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    // the depth-knob n is a stats-catalog lookup, not a COUNT scan
-    val n = IndexStore.statsRows(embStatsDisk(spark, dir), "label")
-    val prefixRel = corpusMrlPrefixDisk(spark, dir)
-    selfChecked(
-      VectorSearch.knnPrefix(e, "vec_id", "embedding", flagshipQueryVec,
-          k = 10, prefixDims = MrlPrefixDims,
-          // the MEASURED coarse-pass covering depth (flagship in sample)
-          overfetch = measuredDepthKnob(spark,
-            mrlPrefixPath(spark, dir), n, 10),
-          prefixRel = Some(prefixRel))
-        .select("vec_id", "score"),
-      VectorSearch.knn(e, "vec_id", "embedding", flagshipQueryVec, k = 10)
-        .select("vec_id", "score"),
-      "sub-exhaustive MRL prefix overfetch")
-  }
-
-  /** The PLANNER-DRIVEN probe — [[AnnPlanner.planKnn]] prices all four
-    * physical top-k paths (exact scan, IVF probe, PQ ADC scan, MRL
-    * prefix pass) from the corpus's own (n, dim), the fixture's measured
-    * covering depths, and the full persisted asset set (IVF + PQ + MRL
-    * prefix), then [[AnnPlanner.execute]] runs the winner — the ANN twin
-    * of [[qNeardupCosinePlan]]: no human picked the path, the cost table
-    * did (PQ's ADC scan at both driver SFs: codes are 8 ints vs 64
-    * doubles, so n·m + overfetch·dim undercuts every float-scan path).
-    * Same [[selfChecked]] routed==exact gate and exact-kNN SQL oracle as
-    * the fixed-path index queries; the planned depths are read from the
-    * indexes' PERSISTED covering-depth sidecars (recorded at build time
-    * from the fixture measurements — [[IndexStore.saveDepth]]), so the
-    * gate checks the full measure→persist→re-plan loop end-to-end, not a
-    * human-chosen fallback. */
-  private def qAnnPlan(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    // n from the stats catalog (one bounded lookup), not a corpus COUNT
-    // scan at plan time — the catalog is wave-fresh by the same fprint
-    // discipline as the indexes the plan dispatches over.
-    // The four catalog/index loads are independent chains of small
-    // sidecar reads — overlapped (guide §2.6, r16): serialized they were
-    // ~40 driver round-trips of ~25 ms each per plan call.
-    val (n, ivf, pq, prefix) = graft.util.Par.all(
-      IndexStore.statsRows(embStatsDisk(spark, dir), "label"),
-      corpusIvfDisk(spark, dir),
-      corpusPqDisk(spark, dir),
-      corpusMrlPrefixDisk(spark, dir))
-    // depths come from the indexes' own persisted covering-depth sidecars
-    // ([[IndexStore.saveDepth]], written at build time from the fixture
-    // measurements) — the planner reads the measurement where it LIVES
-    // instead of trusting caller-supplied constants to still be current
-    val (depths, staleDepths) = AnnPlanner.depthsFromSidecars(spark, n,
-      ivfPath = Some(ivfDiskPath(spark, dir)),
-      pqPath = Some(pqDiskPath(spark, dir)),
-      prefixPath = Some(mrlPrefixPath(spark, dir)))
-    require(staleDepths.isEmpty,
-      s"q_ann_plan depth sidecars stale vs corpus: ${staleDepths.mkString("; ")}")
-    val plan = AnnPlanner.planKnn(n, ivf.dim, k = 10,
-      assets = AnnPlanner.AnnAssets(ivfClusters = ivf.centroids.size,
-        pqM = pq.m, prefixDims = MrlPrefixDims),
-      depths = depths,
-      pqKsub = pq.ksub)
-    selfChecked(
-      AnnPlanner.execute(plan, e, "vec_id", "embedding", flagshipQueryVec,
-          k = 10, ivf = Some(ivf), pq = Some(pq), prefixRel = Some(prefix))
-        .select("vec_id", "score"),
-      VectorSearch.knn(e, "vec_id", "embedding", flagshipQueryVec, k = 10)
-        .select("vec_id", "score"),
-      s"q_ann_plan planned path ${plan.path} " +
-        s"(nc=${plan.numCandidates}, of=${plan.overfetch})")
-  }
-
-  /** The planner's FILTERED-ANN break-even, executed: with the measured
-    * `label = 3` selectivity (~0.10 on the driver corpora) the filtered
-    * exact scan prices sel·n·dim while every routed path still pays full
-    * coarse depth ([[Ivf.ann]] filters after the member join;
-    * [[VectorSearch.knnPrefix]] refuses a post-filter against a persisted
-    * prefix), so [[AnnPlanner.planKnn]] flips to `exactScan` — the
-    * decision Atlas documents as prose, here arithmetic, and gate-checked:
-    * the executed plan IS exact over the filtered corpus, so the filtered
-    * exact-kNN SQL is a full oracle (the [[qAnnIvfFiltered]] contract).
-    * The path require makes planner drift loud rather than silently
-    * shipping a routed plan whose recall under filtering nobody measured. */
-  private def qAnnPlanFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    // (n, selectivity) from the persisted stats catalog — before round 10
-    // these were TWO corpus COUNT scans per plan call, the cardinality
-    // twin of the per-query staleness checks round 9 was graded down for:
-    // at 100 TB the cost of PLANNING must not be the cost of RUNNING.
-    // The catalog relation itself is gate-checked ([[qFieldStats]]).
-    // independent catalog/index load chains, overlapped (§2.6, r16 —
-    // see qAnnPlan)
-    val ((n, sel), ivf, pq) = graft.util.Par.all(
-      {
-        val stats = embStatsDisk(spark, dir)
-        (IndexStore.statsRows(stats, "label"),
-          IndexStore.statsSelectivity(stats, "label", "3"))
-      },
-      corpusIvfDisk(spark, dir),
-      corpusPqDisk(spark, dir))
-    val plan = AnnPlanner.planKnn(n, ivf.dim, k = 10,
-      assets = AnnPlanner.AnnAssets(ivfClusters = ivf.centroids.size,
-        pqM = pq.m, prefixDims = MrlPrefixDims),
-      filterSelectivity = Some(sel), pqKsub = pq.ksub)
-    require(plan.path == "exactScan",
-      s"q_ann_plan_filtered expected the filtered exact scan at " +
-        f"selectivity $sel%.3f, planner chose ${plan.path} — the filtered " +
-        "oracle would not be valid for a sub-exhaustive routed plan")
-    AnnPlanner.execute(plan, e, "vec_id", "embedding", flagshipQueryVec,
-        k = 10, preFilter = Some(col("label") === 3),
-        ivf = Some(ivf), pq = Some(pq))
-      .select("vec_id", "score")
-  }
-
-  /** The RANGE-predicate rendition of [[qAnnPlanFiltered]], planned from
-    * the n_chars HISTOGRAM ([[IndexStore.histSelectivity]]): top-k over
-    * embeddings whose document has 240 ≤ n_chars < 320 — a length-gated
-    * retrieval, the quality-filter shape a curation pipeline runs. The
-    * selectivity is estimated from the documents catalog's
-    * fixed-boundary histogram — EXACT here because the range is
-    * bucket-aligned — and applied to the joined corpus under the
-    * independence assumption (which embeddings exist is unrelated to
-    * doc length); the cross-table predicate makes the routed paths
-    * doubly unavailable (no persisted index knows n_chars), and at
-    * ~0.16 estimated selectivity the filtered exact scan wins the cost
-    * table by ~15× — so the require has margin against estimate error,
-    * and the executed plan being exact over the filtered corpus makes
-    * the filtered exact-kNN SQL a full oracle (the [[qAnnPlanFiltered]]
-    * contract). Every plan input — n, the histogram spec, the bucket
-    * counts — is a catalog lookup at wave freshness; nothing scans a
-    * corpus to plan. */
-  private def qAnnPlanRange(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val d = Tables.documents(spark, dir)
-    // independent catalog/index load chains, overlapped (§2.6, r16 —
-    // see qAnnPlan)
-    val (sel, n, ivf, pq) = graft.util.Par.all(
-      {
-        val docStats = docStatsDisk(spark, dir)
-        val h = IndexStore.loadHistSpecs(spark,
-          docStatsPath(spark, dir))("n_chars")
-        IndexStore.histSelectivity(docStats, "n_chars", h, 240L, 320L)
-      },
-      IndexStore.statsRows(embStatsDisk(spark, dir), "label"),
-      corpusIvfDisk(spark, dir),
-      corpusPqDisk(spark, dir))
-    val plan = AnnPlanner.planKnn(n, ivf.dim, k = 10,
-      assets = AnnPlanner.AnnAssets(ivfClusters = ivf.centroids.size,
-        pqM = pq.m, prefixDims = MrlPrefixDims),
-      filterSelectivity = Some(sel), pqKsub = pq.ksub)
-    require(plan.path == "exactScan",
-      s"q_ann_plan_range expected the filtered exact scan at estimated " +
-        f"selectivity $sel%.3f, planner chose ${plan.path} — the filtered " +
-        "oracle would not be valid for a sub-exhaustive routed plan")
-    val joined = e.join(d.select(col("doc_id"), col("n_chars")),
-      e("vec_id") === col("doc_id"))
-    AnnPlanner.execute(plan, joined, "vec_id", "embedding",
-        flagshipQueryVec, k = 10,
-        preFilter = Some(col("n_chars") >= 240 && col("n_chars") < 320),
-        ivf = Some(ivf), pq = Some(pq))
-      .select("vec_id", "score")
-  }
-
-  /** The covering-depth MEASUREMENT INSTRUMENT itself, gate-checked
-    * ([[AnnPlanner.coarseRankDepths]] — the relational core the MRL and
-    * PQ instruments summarize): for the first three corpus vectors as
-    * probes, the deepest MRL coarse rank (32-dim prefix score, rounded,
-    * id tie-break — [[VectorSearch.knnPrefix]]'s exact ordering) an exact
-    * top-5 member occupies. The oracle re-derives the same ranks in SQL
-    * (window top-k membership + a rank join counting rows at-or-ahead by
-    * the identical (coarse DESC, id ASC) key), so the instrument whose
-    * output the sidecars persist and the planner re-plans from is itself
-    * hash-verified against an independent engine — the measurement is a
-    * checked computation, not a trusted constant. Per query the rank join
-    * broadcasts k member rows against the corpus: n·k comparisons, no
-    * shuffle of n. */
-  private def qAnnDepth(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val qs = e.orderBy("vec_id").limit(3)
-      .select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    AnnPlanner.coarseRankDepths(e, e, "vec_id", "vec_id", qs, k = 5,
-        qv => round(Vectors.score("cosine", col("embedding"),
-          Vectors.vecLit(qv)), VectorSearch.ScoreDecimals),
-        qv => AnnPlanner.mrlCoarseKey("embedding", qv, MrlPrefixDims))
-      .orderBy("q_id")
-  }
-
-  /** Index-backed IVF ANN: same top-k as [[qAnnIvf]], but probed against
-    * the PERSISTED on-disk index at SUB-exhaustive depth — the vector twin
-    * of [[qBm25Idx]]: the plan scans only the probed clusters' partitions of
-    * the assignments parquet (PartitionFilters pinned in PlanSpec), never
-    * the whole inverted file. Same self-verified oracle contract as
-    * [[qKnnJoinIvf]]: routed == exact is required at Verify time
-    * ([[selfChecked]]), so the exact-kNN SQL stays a valid oracle by
-    * checked invariant while Bench times the pure index path. */
-  private def qAnnIvfIdx(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val idx = corpusIvfDisk(spark, dir)
-    selfChecked(
-      Ivf.ann(idx, e, "vec_id", "embedding", flagshipQueryVec,
-          // probe at the MEASURED covering mass (flagship in sample)
-          k = 10, numCandidates = measuredDepthKnob(spark,
-            ivfDiskPath(spark, dir), idx.sizes.values.sum, 10))
-        .select("vec_id", "score"),
-      VectorSearch.knn(e, "vec_id", "embedding", flagshipQueryVec, k = 10)
-        .select("vec_id", "score"),
-      "sub-exhaustive IVF probe")
-  }
-
-  /** The flagship Spark-native piece oracle-checked end-to-end: register
-    * the IVF index for the embeddings parquet path, write the PLAIN exact
-    * top-k query, and let the Catalyst rule
-    * ([[org.apache.spark.sql.graftshim.IvfRewriteRule]]) narrow the scan
-    * through the index's member semi-join. Exhaustive probe depth keeps the
-    * exact-kNN SQL a valid oracle (recall 1). The rewritten plan is forced
-    * and self-checked while registered, materialized (localCheckpoint), and
-    * the registration is removed so no other query's plan is touched. */
-  private def qAnnIvfRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/embeddings.parquet"
-    Ivf.registerForRewrite(spark, path, corpusIvf(spark, dir), "vec_id",
-      numCandidates = Int.MaxValue)
-    try {
-      val res = VectorSearch
-        .knn(Tables.embeddings(spark, dir), "vec_id", "embedding",
-          flagshipQueryVec, k = 10)
-        .select("vec_id", "score")
-      val optimized = res.queryExecution.optimizedPlan.toString
-      require(optimized.contains(org.apache.spark.sql.graftshim.IvfRewrite.MemberCol),
-        s"IVF rewrite did not fire for $path:\n$optimized")
-      // materialize under the rewritten plan: a later write/count builds a
-      // fresh QueryExecution, which would re-optimize after unregistration
-      res.localCheckpoint()
-    } finally org.apache.spark.sql.graftshim.IvfRewrite.unregister(path)
-  }
-
-  /** North-star multimodal plumbing: binary payload column → batched
-    * partition-local decode (stubbed codec) → byte-level features. The
-    * oracle recomputes the same features character-wise (the corpus is
-    * pure ASCII, so chars ≡ bytes). */
-  private def qMultimodal(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.imageFeatures(
-        Multimodal.assetsFromDocuments(Tables.documents(spark, dir), "doc_id", "text"))
-      .toDF()
-      .orderBy("asset_id")
-
-  /** REAL image decode under the gate ([[Multimodal.decodeImageStats]]
-    * via JDK ImageIO): one planted PNG per document — dims and every
-    * pixel a pure function of doc_id ([[Multimodal.plantedImageAssets]])
-    * — is encoded and decoded THROUGH A REAL CODEC on executors, and the
-    * oracle recomputes the decoded per-channel sums from the
-    * construction arithmetic alone (generate_series over the pixel
-    * grid). A codec that lied about dimensions, channel order, or any
-    * pixel value hash-mismatches. Narrow typed maps end to end — zero
-    * shuffle; at 100 TB each executor decodes its own splits. */
-  private def qMultimodalDecode(spark: SparkSession, dir: String)
-      : DataFrame =
-    Multimodal.imageStats(
-        Multimodal.plantedImageAssets(Tables.documents(spark, dir),
-          "doc_id"))
-      .toDF()
-      .withColumnRenamed("asset_id", "doc_id")
-      .orderBy("doc_id")
-
-  /** REAL audio decode under the gate ([[Multimodal.decodeWavStats]] via
-    * JDK javax.sound): one planted mono 16-bit WAV per document — frame
-    * count and every PCM sample a pure function of doc_id
-    * ([[Multimodal.plantedAudioAssets]]) — encoded and decoded through a
-    * real container parser on executors; the oracle recomputes the exact
-    * integer sample sum from the construction arithmetic. */
-  private def qMultimodalAudio(spark: SparkSession, dir: String)
-      : DataFrame =
-    Multimodal.audioStats(
-        Multimodal.plantedAudioAssets(Tables.documents(spark, dir),
-          "doc_id"))
-      .toDF()
-      .withColumnRenamed("asset_id", "doc_id")
-      .orderBy("doc_id")
-
-  /** FRAME-SAMPLED video decode under the gate
-    * ([[Multimodal.videoFrameStats]]): per document a planted GVID frame
-    * container (length-prefixed PNG frames — the post-demux shape a real
-    * pipeline hands the engine), every 2nd frame decoded through the
-    * REAL image codec, channel sums aggregated. The oracle recomputes
-    * total/sampled frame counts and the sampled frames' channel sums
-    * from the construction arithmetic alone. */
-  private def qMultimodalFrames(spark: SparkSession, dir: String)
-      : DataFrame =
-    Multimodal.videoFrameStats(
-        Multimodal.plantedVideoAssets(Tables.documents(spark, dir),
-          "doc_id"), everyNth = 2)
-      .toDF()
-      .withColumnRenamed("asset_id", "doc_id")
-      .orderBy("doc_id")
-
-  /** REAL AVI-MJPEG demux → sampled-frame JPEG decode
-    * ([[Multimodal.aviFrameStats]], r14 verdict item 6): the container is
-    * the PUBLIC RIFF/AVI format (fourcc MJPG, 00dc chunks, idx1) built
-    * byte-for-byte in-query, each sampled frame decoded through the
-    * JDK's real JPEG codec. The deterministic observables are the
-    * DIMENSIONS (JPEG geometry is exact through the lossy codec; pixel
-    * values are decoder-defined and pinned instead on the lossless PNG
-    * row [[qMultimodalFrames]]), so the oracle recomputes every output
-    * from the plant arithmetic while the engine runs demux → sample →
-    * decode for real. Truncation/corruption still refuses loudly
-    * (MultimodalSpec). */
-  private def qMultimodalAvi(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.aviFrameStats(
-        Multimodal.plantedAviAssets(Tables.documents(spark, dir),
-          "doc_id"), everyNth = 2)
-      .toDF()
-      .withColumnRenamed("asset_id", "doc_id")
-      .orderBy("doc_id")
-
-  /** Query histogram for [[qMultimodalKnn]]: the 4-bin byte histogram of a
-    * fixed probe payload, computed through the SAME featurizer the corpus
-    * runs ([[Multimodal.extractFeatures]]) so query and corpus features
-    * can never drift apart. */
-  private val multimodalQueryVec: Array[Double] = {
-    val payload = flagshipQueryText.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val f = Multimodal.extractFeatures(Multimodal.Asset(0L, "image", payload,
-      Multimodal.AssetMeta("fake/raw", payload.length, 1, 1, 0, 0L)))
-    Array(f.h0.toDouble, f.h1.toDouble, f.h2.toDouble, f.h3.toDouble)
-  }
-
-  /** MULTIMODAL RETRIEVAL end-to-end — the composition [[qMultimodal]]
-    * only plumbs: binary assets → batched stub decode → histogram
-    * features ([[Multimodal.imageFeatures]], the mapInPandas-shaped
-    * boundary a real vision model call crosses) → exact cosine top-k over
-    * the feature vectors ([[VectorSearch.knn]]). With a real encoder the
-    * feature column becomes a 1024-dim embedding and the SAME second
-    * stage applies unchanged (swap exact knn for the IVF probe at corpus
-    * scale); the deterministic stub keeps the whole path under the
-    * DuckDB oracle. Zero-byte assets are filtered BEFORE scoring — a
-    * zero histogram has no direction, the [[graft.search.VectorSearch
-    * .knnPrefix]] sparse-prefix concern at the asset level. */
-  private def qMultimodalKnn(spark: SparkSession, dir: String): DataFrame = {
-    val feats = Multimodal.imageFeatures(
-        Multimodal.assetsFromDocuments(Tables.documents(spark, dir),
-          "doc_id", "text"))
-      .toDF()
-      .where(col("n_bytes") > 0)
-      .withColumn("emb", array(col("h0").cast("double"),
-        col("h1").cast("double"), col("h2").cast("double"),
-        col("h3").cast("double")))
-    VectorSearch.knn(feats, "asset_id", "emb", multimodalQueryVec, k = 10)
-      .select("asset_id", "score")
-  }
-
-  /** North-star RAG chunking: 200-char windows with 40-char overlap. */
-  private def qChunk(spark: SparkSession, dir: String): DataFrame =
-    Curation.chunkDocuments(Tables.documents(spark, dir), "doc_id", "text",
-        chunkChars = 200, overlap = 40)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "chunk_idx")
-
-  /** North-star text cleaning: scrub + normalize with frozen regexes. */
-  private def qCleanText(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), Curation.cleanText(col("text")).as("clean_text"))
-      .orderBy("doc_id")
-
-  /** As-of join: each purchase event attributed to the user's latest
-    * preceding (or simultaneous) click — union+window formulation, one
-    * shuffle, no range-join pair explosion. */
-  private def qAsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"), col("value"))
-    AsOfJoin.asOf(purchases, clicks, "user_id", "ts", "click_ts", "click_id", Seq("value"))
-      .orderBy("event_id")
-  }
-
-  /** Banded interval range join: same-user event pairs within 60 s. */
-  private def qRangeJoin(spark: SparkSession, dir: String): DataFrame =
-    RangeJoin.pairsWithin(Tables.events(spark, dir), "user_id", "event_id", "ts",
-        widthUs = 60L * 1000000L)
-      .withColumnRenamed("key", "user_id")
-      .orderBy("id1", "id2")
-
-  /** Streaming-capable tumbling-window aggregation, exercised in batch mode
-    * for the oracle (the same plan runs under readStream — StreamingSpec). */
-  private def qWindowAgg(spark: SparkSession, dir: String): DataFrame =
-    EventStreams.windowedCounts(Tables.events(spark, dir))
-      .orderBy("window_start", "event_type")
-
-  /** Gap-based sessionization via built-in session_window (streaming-capable);
-    * oracle is the lag/cumsum SQL rendition. */
-  private def qSessionize(spark: SparkSession, dir: String): DataFrame =
-    EventStreams.sessionAgg(Tables.events(spark, dir))
-      .orderBy("user_id", "session_start")
-
-  /** R16 corpus embedding as relational ops (sparse output) — the
-    * oracle-checkable shape of the embed ETL; the batched mapPartitions
-    * shape is parity-tested in EmbedSpec. */
-  private def qEmbedCorpus(spark: SparkSession, dir: String): DataFrame =
-    EmbedJob.embedRelational(Tables.documents(spark, dir), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "dim")
-
-  /** JSON scalar extraction over events.props ('{"k": 87}') — the
-    * semi-structured column path at scale (codegen'd get_json_object; no
-    * UDF, pushdown-friendly). */
-  private def qJsonExtract(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .where(col("k").isNotNull)
-      .groupBy(col("k")).agg(count(lit(1)).as("n"))
-      .orderBy("k")
-
-  /** TPC-H Q3-shaped join + agg + top-k: broadcastable dims, single
-    * shuffle on the agg key, TakeOrderedAndProject finish. */
-  private def qJoinTopk(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir).where(col("c_mktsegment") === "BUILDING")
-      .join(Tables.orders(spark, dir), col("c_custkey") === col("o_custkey"))
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_orderkey")
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("revenue").desc, col("o_orderkey").asc)
-      .limit(10)
-
-  /** North-star keyword extraction: per-doc top-3 terms by tf-idf with
-    * partition-local window ranking. */
-  private def qTopTerms(spark: SparkSession, dir: String): DataFrame =
-    Curation.topTerms(Tables.documents(spark, dir), "doc_id", "text", k = 3)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id", "rank")
-
-  /** North-star sequence packing: greedy per-source packing into 512-token
-    * training sequences. */
-  private def qPackSequences(spark: SparkSession, dir: String): DataFrame =
-    Curation.packSequences(Tables.documents(spark, dir), "source", "doc_id", "text", 512)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("group", "doc_id")
-
-  /** North-star deterministic stratified sampling (corpus rebalancing):
-    * downsample en to 20%, upweight-keep zh at 80%, others 50%. */
-  private val SampleRates = Map("en" -> 200, "zh" -> 800)
-  private val SampleDefault = 500
-  private def qSampleStratified(spark: SparkSession, dir: String): DataFrame =
-    Curation.stratifiedSample(Tables.documents(spark, dir), "lang", "doc_id",
-        SampleRates, SampleDefault)
-      .orderBy("doc_id")
-
-  /** Rollup aggregation (subtotals + grand total) — multi-level agg class.
-    * Spark `rollup` ≡ SQL GROUPING SETS with the same null markers. */
-  private def qRollup(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(round(sum(col("l_quantity")), 4).as("sum_qty"), count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  /** Set operations: customers in BUILDING except those with an open order,
-    * intersected/unioned shapes folded into one output via a tag column. */
-  private def qSetOps(spark: SparkSession, dir: String): DataFrame = {
-    val building = Tables.customer(spark, dir)
-      .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
-    val hasOpen = Tables.orders(spark, dir)
-      .where(col("o_orderstatus") === "O").select(col("o_custkey").as("c_custkey"))
-    val exceptSet = building.exceptAll(hasOpen.distinct()).distinct()
-      .withColumn("tag", lit("building_no_open"))
-    val intersectSet = building.intersect(hasOpen)
-      .withColumn("tag", lit("building_open"))
-    exceptSet.unionByName(intersectSet).orderBy("tag", "c_custkey")
-  }
-
-  /** Per-label vector centroid as pure relational ops (posexplode → avg by
-    * (label, dim)) — the IVF-centroid computation shape, fully
-    * oracle-checkable, map-side combinable at any scale. */
-  private def qLabelCentroid(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .groupBy("label", "dim")
-      .agg(round(avg(col("x")), 6).as("centroid"))
-      .orderBy("label", "dim")
-
-  /** Pivot: event counts per user-id decile × event_type (wide table
-    * construction; oracle spells the same cells as CASE sums). */
-  private def qPivot(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("decile", pmod(col("user_id"), lit(10L)))
-      .groupBy("decile")
-      .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-      .count()
-      .na.fill(0L)
-      .orderBy("decile")
-
-  /** Deterministic sketches with a real oracle: KMV distinct-user estimate
-    * (bounded-state custom Aggregator — every map task ships ≤ k longs to
-    * the shuffle) and exact discrete p50/p95 value quantiles per event type.
-    * HLL++/t-digest stay available as the engine surface
-    * (`approx_count_distinct`/`percentile_approx`, accuracy-tested in
-    * SketchSpec) but can never hash-match an external engine; KMV's estimate
-    * is a closed-form function of the k smallest md5-derived hashes, so
-    * DuckDB computes the identical number. */
-  private def qSketches(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val kmv = Sketches.kmvDistinct(
-      ev, "event_type", Text.hash60(col("user_id").cast("string")), Sketches.DefaultK, "kmv_users")
-    val qq = Sketches.quantilesDisc(ev, "event_type", "value", Seq(50, 95))
-    kmv.join(qq, "event_type")
-      .select("event_type", "kmv_users", "p50", "p95")
-      .orderBy("event_type")
-  }
-
-  /** Corpus-wide heavy hitters — every token whose frequency strictly
-    * exceeds n/30 of the corpus token stream, with its EXACT count —
-    * via the bounded-state Misra–Gries screen + exact recount
-    * ([[Sketches.heavyHitters]]): map-side summary state ≤ k per task
-    * regardless of vocabulary, vs the brute token-groupBy whose shuffle
-    * carries every distinct term (the oracle plan — billions of terms
-    * for web-scale text). k=30 sits BELOW this fixture's 31-term
-    * near-uniform vocabulary, so the screen genuinely decrements and
-    * merges at the theorem's edge: the retention floor n/(k+1) = n/31
-    * is just under every term's ~n/31 frequency, and the declared
-    * threshold n/30 is strictly above it — recall of the > n/30 answer
-    * is the mergeable-summaries guarantee, not fixture luck. */
-  private def qHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(spark, dir)
-      .select(explode(Text.tokens(col("text"))).as("term"))
-    Sketches.heavyHitters(toks, "term", k = 30, out = "cnt").orderBy("term")
-  }
-
-  /** Persisted mergeable-summary fixtures ([[IndexStore.saveSummary]]
-    * family), built once per (session, sfDir) in THREE deterministic
-    * ingest waves each — the accreted-sketch shape: every wave writes
-    * ≤ kMg + kKmv sketch rows however large the wave is, and the loaded
-    * summary is the fold of the committed deltas. (a) corpus token
-    * summary over documents (waves by doc_id mod 3; kMg=40 HOLDS the
-    * fixture's 31-term vocabulary, so these merges run in the lossless
-    * regime — the sub-capacity decrement/merge regime is SummarySpec-
-    * pinned on a 33-distinct stream at kMg=12; kKmv=64); (b) user
-    * summary over events (waves by event_id mod 3).
-    * The wave-time staleness check runs at build ([[checkedOncePerWave]]
-    * contract); the cached [[IndexStore.SummaryIndex]] values are
-    * driver-bounded (≤ kMg map entries + kKmv longs each). */
-  private def corpusSummariesDisk(spark: SparkSession, dir: String)
-      : (IndexStore.SummaryIndex, IndexStore.SummaryIndex) =
-    fixture(spark, "summary", dir) {
-      val tokPath = persistedPath("summary_toks", dir)
-      val usrPath = persistedPath("summary_users", dir)
-      val toks = Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
-      IndexStore.saveSummary(toks.where(pmod(col("doc_id"), lit(3)) === 0)
-        .select("term"), "term", kMg = 40, kKmv = 64, tokPath)
-      IndexStore.appendBatchSummary(toks
-        .where(pmod(col("doc_id"), lit(3)) === 1).select("term"), "term",
-        tokPath, 0L)
-      IndexStore.appendBatchSummary(toks
-        .where(pmod(col("doc_id"), lit(3)) === 2).select("term"), "term",
-        tokPath, 1L)
-      val ev = Tables.events(spark, dir).select("event_id", "user_id")
-      IndexStore.saveSummary(ev.where(pmod(col("event_id"), lit(3)) === 0)
-        .select("user_id"), "user_id", kMg = 40, kKmv = 64, usrPath)
-      IndexStore.appendBatchSummary(ev
-        .where(pmod(col("event_id"), lit(3)) === 1).select("user_id"),
-        "user_id", usrPath, 0L)
-      IndexStore.appendBatchSummary(ev
-        .where(pmod(col("event_id"), lit(3)) === 2).select("user_id"),
-        "user_id", usrPath, 1L)
-      // the wave-time guards: refuse if the committed waves don't cover
-      // exactly these item streams
-      (IndexStore.loadSummaryChecked(spark, tokPath,
-          toks.select("term"), "term"),
-        IndexStore.loadSummaryChecked(spark, usrPath,
-          ev.select("user_id"), "user_id"))
-    }
-
-  /** EXACT heavy hitters from the PERSISTED batch-accreted summary
-    * ([[IndexStore.heavyHittersFromSummary]]): the merged per-wave MG
-    * deltas retain every token with frequency > n/32 (kReport=32 ≤
-    * kMg=40, so the mergeable-summaries floor n/41 sits strictly below
-    * the report threshold — recall 1 across ANY wave split), and one
-    * candidate-restricted recount restores exact counts; n comes from
-    * the summed marks, not a corpus count scan. Different threshold
-    * than [[qHeavyHitters]]'s n/30 (the single-pass screen), so the two
-    * receipts don't collapse. The brute groupBy-HAVING SQL is a full
-    * oracle because the output is definitionally that relation. */
-  private def qHeavyHittersInc(spark: SparkSession, dir: String): DataFrame = {
-    val (tokSummary, _) = corpusSummariesDisk(spark, dir)
-    val toks = Tables.documents(spark, dir)
-      .select(explode(Text.tokens(col("text"))).as("term"))
-    IndexStore.heavyHittersFromSummary(tokSummary, toks, "term",
-        kReport = 32, out = "cnt")
-      .orderBy("term")
-  }
-
-  /** Distinct users from the PERSISTED KMV deltas — pure driver
-    * arithmetic over the ≤ 64 batch-merged minimum hashes (no scan at
-    * report time at all): the k smallest distinct hashes of a union are
-    * the union of per-wave k-mins' k smallest, so the batch-merged
-    * estimate is DEFINITIONALLY the single-pass one, and the oracle
-    * recomputes the same (k−1)·2^60/h_k floor over the same frozen
-    * md5-prefix hash in DuckDB. Exercises both estimator branches
-    * across SFs (sf0.001 has < 64 distinct users → exact-count branch;
-    * larger SFs engage the estimator). */
-  private def qDistinctUsersInc(spark: SparkSession, dir: String): DataFrame = {
-    val (_, usrSummary) = corpusSummariesDisk(spark, dir)
-    import spark.implicits._
-    Seq(usrSummary.distinctEstimate).toDF("kmv_users")
-  }
-
-  /** IVF index with a DELETION WAVE ([[IndexStore.deleteBatchIvf]]) —
-    * the right-to-be-forgotten fixture: the full-corpus index loses the
-    * vec_id ≡ 0 (mod 7) rows as one tombstone wave (work ∝ wave — no
-    * rebuild), after which the additive fingerprint's NEGATIVE delta
-    * makes the checked loader accept exactly the post-delete corpus
-    * (and refuse the pre-delete one). Built once per (session, sfDir);
-    * the one wave-time staleness check runs at build. */
-  private def ivfDeletedPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "ivfdel") { p =>
-      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      IndexStore.saveIvf(corpusIvf(spark, dir), p,
-        source = Some((e, "vec_id", "embedding")))
-      IndexStore.deleteBatchIvf(
-        e.where(pmod(col("vec_id"), lit(7)) === 0), "vec_id", "embedding",
-        p, 0L)
-    }
-  private def corpusIvfDeletedDisk(spark: SparkSession, dir: String)
-      : Ivf.IvfIndex = {
-    val path = ivfDeletedPath(spark, dir)
-    val remaining = Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-      .where(pmod(col("vec_id"), lit(7)) =!= 0)
-    checkedOncePerWave(spark, dir, "ivf-del")(
-      IndexStore.loadIvfChecked(spark, path, remaining, "vec_id",
-        "embedding"))(
-      IndexStore.loadIvf(spark, path))
-  }
-
-  /** ANN over the post-deletion index: the routed exhaustive probe over
-    * the tombstone-filtered assignments must equal the exact top-k over
-    * the SURVIVING corpus — a deleted row surfacing anywhere (member
-    * join, score, rank) fails both the selfCheck and the oracle hash.
-    * The filtered exact-kNN SQL is a full oracle ([[qAnnIvf]]'s
-    * exhaustive-probe contract, post-delete). */
-  private def qAnnIvfDeleted(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .where(pmod(col("vec_id"), lit(7)) =!= 0)
-    val idx = corpusIvfDeletedDisk(spark, dir)
-    selfChecked(
-      Ivf.ann(idx, e, "vec_id", "embedding", flagshipQueryVec, k = 10,
-          numCandidates = Int.MaxValue, forceRoute = true)
-        .select("vec_id", "score"),
-      VectorSearch.knn(e, "vec_id", "embedding", flagshipQueryVec, k = 10)
-        .select("vec_id", "score"),
-      "q_ann_ivf_deleted routed-over-tombstones")
-  }
-
-  /** BM25 index with a DELETION WAVE ([[IndexStore.deleteBatchBm25]]) —
-    * document erasure from search at wave cost: the doc_id ≡ 0 (mod 9)
-    * documents leave as one tombstone wave (postings anti-joined at
-    * load, term_df and stats subtracted from the wave's own re-tokenize,
-    * fingerprint subtracted), after which the merged index IS the
-    * surviving corpus's index — same df, same avgdl — so scores match a
-    * fresh build bit-for-bit and the filtered-corpus BM25 SQL is a full
-    * oracle. Built once per (session, sfDir); the wave-time staleness
-    * check runs on first touch. */
-  private def bm25DeletedPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "bm25del") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "text")
-      IndexStore.createBm25(d, "doc_id", "text", p)
-      IndexStore.deleteBatchBm25(
-        d.where(pmod(col("doc_id"), lit(9)) === 0), "doc_id", "text", p, 0L)
-    }
-  private def corpusBm25DeletedDisk(spark: SparkSession, dir: String)
-      : TextSearch.Bm25Index = {
-    val path = bm25DeletedPath(spark, dir)
-    val remaining = Tables.documents(spark, dir).select("doc_id", "text")
-      .where(pmod(col("doc_id"), lit(9)) =!= 0)
-    checkedOncePerWave(spark, dir, "bm25-del")(
-      IndexStore.loadBm25Checked(spark, path, remaining, "doc_id", "text"))(
-      IndexStore.loadBm25(spark, path))
-  }
-
-  /** Full-text search over the post-deletion index: an erased document
-    * surfacing anywhere in the ranking — or the survivors' scores
-    * drifting from a fresh build's (df/avgdl subtraction exactness) —
-    * fails the oracle hash. */
-  private def qBm25Deleted(spark: SparkSession, dir: String): DataFrame =
-    TextSearch.search(corpusBm25DeletedDisk(spark, dir), flagshipQueryText,
-        k = 10)
-      .withColumnRenamed("id", "doc_id")
-
-  /** TIME-TRAVEL fixture: base build over thirds split A (doc_id%3=0),
-    * then append waves 0 (B) and 1 (C). The tip holds A∪B∪C; the as-of
-    * horizon at wave 0 must reconstruct exactly A∪B. Tip freshness runs
-    * once per session against the FULL corpus ([[checkedOncePerWave]]) —
-    * time travel is a view over a healthy index, not a substitute for
-    * the staleness guard. */
-  private def corpusBm25AsofDisk(spark: SparkSession, dir: String)
-      : TextSearch.Bm25Index = {
-    val path = persisted(spark, dir, "bm25asof") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "text")
-      IndexStore.createBm25(
-        d.where(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p)
-      IndexStore.appendBatchBm25(
-        d.where(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "text", p, 0L)
-      IndexStore.appendBatchBm25(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", p, 1L)
-    }
-    val d = Tables.documents(spark, dir).select("doc_id", "text")
-    checkedOncePerWave(spark, dir, "bm25-asof")(
-      { IndexStore.loadBm25Checked(spark, path, d, "doc_id", "text"); () })(())
-    IndexStore.loadBm25AsOf(spark, path, throughWave = 0L)
-  }
-
-  /** IVF TIME-TRAVEL fixture, the [[corpusBm25AsofDisk]] shape on the
-    * vector side: base IVF trained on thirds split A (vec_id%3=0), then
-    * append waves 0 (B) and 1 (C) assigned to the frozen centroids. The
-    * horizon at wave 0 must surface exactly A∪B's members. */
-  private def corpusIvfAsofDisk(spark: SparkSession, dir: String)
-      : Ivf.IvfIndex = {
-    val path = persisted(spark, dir, "ivfasof") { p =>
-      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      val a = e.where(pmod(col("vec_id"), lit(3)) === 0)
-      IndexStore.saveIvf(Ivf.build(a, "vec_id", "embedding"), p,
-        source = Some((a, "vec_id", "embedding")))
-      IndexStore.appendBatchIvf(
-        e.where(pmod(col("vec_id"), lit(3)) === 1), "vec_id", "embedding",
-        p, 0L)
-      IndexStore.appendBatchIvf(
-        e.where(pmod(col("vec_id"), lit(3)) === 2), "vec_id", "embedding",
-        p, 1L)
-    }
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    checkedOncePerWave(spark, dir, "ivf-asof")(
-      { IndexStore.loadIvfChecked(spark, path, e, "vec_id", "embedding"); () })(())
-    IndexStore.loadIvfAsOf(spark, path, throughWave = 0L)
-  }
-
-  /** Persisted WORD-COUNT (vocab) family fixture — the same thirds-wave
-    * shape as [[corpusBm25AsofDisk]]: base wave A, appends B (wave 0)
-    * and C (wave 1). The fold must equal a from-scratch
-    * [[Vocab.wordCounts]] over the full corpus. */
-  private def wordCountsPath(spark: SparkSession, dir: String): String =
-    persisted(spark, dir, "wc") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "text")
-      IndexStore.saveWordCounts(
-        d.where(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p)
-      IndexStore.appendBatchWordCounts(
-        d.where(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "text", p, 0L)
-      IndexStore.appendBatchWordCounts(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", p, 1L)
-    }
-  private def corpusWordCountsDisk(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val path = wordCountsPath(spark, dir)
-    val d = Tables.documents(spark, dir).select("doc_id", "text")
-    checkedOncePerWave(spark, dir, "word-counts")(
-      IndexStore.loadWordCountsChecked(spark, path, d, "doc_id", "text"))(
-      IndexStore.loadWordCounts(spark, path))
-  }
-
-  /** BPE learning at WAVE CADENCE ([[Vocab.learnBpeFromCounts]] over the
-    * persisted word-count family's fold): the learn loop runs with ZERO
-    * corpus scans — the waves paid the tokenize at append time — and
-    * must produce EXACTLY the merges the from-scratch [[qBpeMerges]]
-    * learns, so it shares that query's oracle verbatim (the fold ≡
-    * fresh-wordCounts contract, hash-checked). */
-  private def qBpeMergesInc(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // the FAST loop (incremental pair-count maintenance,
-    // [[Vocab.learnBpeFastFromCounts]]) runs here so the production
-    // learner is itself gate-checked — output-identical to the naive
-    // loop by construction, so the SAME unrolled DuckDB oracle applies
-    Vocab.learnBpeFastFromCounts(corpusWordCountsDisk(spark, dir), 3).toDF()
-  }
-
-  /** The PLAN-DISPATCHED learn loop under the gate
-    * ([[Vocab.learnBpeAutoFromCounts]]): [[Vocab.planLearn]] prices the
-    * word table and — at gate scale as at most production scales, the
-    * table being vocabulary-bounded — picks the DRIVER-LOCAL regime
-    * (collect once, learn in-process, 2 Spark jobs total instead of
-    * 3·nMerges sequential driver-blocking jobs — the ~1000× wall-clock
-    * fix for 10k-merge production vocabularies). Output-identical to
-    * both distributed loops by construction, so the SAME unrolled
-    * DuckDB oracle applies verbatim. */
-  private def qBpeMergesLocal(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Vocab.learnBpeAutoFromCounts(corpusWordCountsDisk(spark, dir), 3).toDF()
-  }
-
-  /** BPE over a MULTILINGUAL vocabulary: the learn loop on Unicode word
-    * counts ([[Vocab.wordCounts]] under [[Text.UnicodeSplitRe]] over the
-    * planted fixture). The `¬sym·` encoding carries Unicode symbols
-    * unchanged (both wrappers are outside `\p{L}\p{N}` — the object-doc
-    * invariant), the local learner splits by CODE POINT exactly like the
-    * oracle's `regexp_replace(word, '(.)', ...)`, and argmax ties break
-    * in UTF-8 byte order on both engines. Under the frozen alphabet the
-    * planted Cyrillic/CJK words would not exist to learn from. */
-  private def qBpeMergesUnicode(spark: SparkSession, dir: String)
-      : DataFrame = {
-    import spark.implicits._
-    Vocab.learnBpeAutoFromCounts(
-      Vocab.wordCounts(multilingualDocs(spark, dir), "text",
-        Text.UnicodeSplitRe), 3).toDF()
-  }
-
-  /** The composition receipt: BPE merges learned from the vocab AS OF
-    * wave 0 ([[IndexStore.loadWordCountsAsOf]] over the persisted
-    * word-count family) — "re-learn exactly the tokenizer a wave-0
-    * training run saw", with the oracle re-deriving the same merges
-    * from scratch over exactly the horizon corpus (A∪B = doc_id%3 ≠ 2).
-    * Zero corpus scans on the Spark side; the horizon filter is a
-    * marker filter. */
-  private def qBpeVocabAsof(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // tip freshness once per session (the fixture accessor's usual
-    // guard), then the horizon fold
-    corpusWordCountsDisk(spark, dir)
-    Vocab.learnBpeFromCounts(
-      IndexStore.loadWordCountsAsOf(spark,
-        wordCountsPath(spark, dir), throughWave = 0L), 3).toDF()
-  }
-
-  /** VOCABULARY DRIFT between the wave-0 horizon and the tip of the
-    * persisted word-count family ([[Vocab.countsDiff]]) — the
-    * measurement [[Vocab.planRefresh]] prices tokenizer relearning
-    * from: top-20 words by absolute count delta. Both sides are
-    * marker-filtered folds of the SAME persisted deltas (no corpus
-    * scan); the oracle recomputes both vocabularies from scratch.
-    *
-    * Plan note: the FULL OUTER word join surfaces as a SortMergeJoin in
-    * the plan audit — correct by design: both sides are
-    * vocabulary-sized (≫ broadcast at 100 TB) and Spark cannot
-    * broadcast a full-outer side regardless; equality-keyed SMJ is the
-    * right physical join here. */
-  private def qVocabDrift(spark: SparkSession, dir: String): DataFrame = {
-    corpusWordCountsDisk(spark, dir) // build fixture + tip freshness
-    val path = wordCountsPath(spark, dir)
-    Vocab.countsDiff(
-        IndexStore.loadWordCountsAsOf(spark, path, throughWave = 0L),
-        IndexStore.loadWordCounts(spark, path))
-      .orderBy(abs(col("delta")).desc, col("word"))
-      .limit(20)
-  }
-
-  /** Tolerance for the gate-checked tokenizer-refresh decision: waves B
-    * and C each add ≈ a third of the tip's token mass, so the wave-0 →
-    * tip changed-mass ratio sits near 2/3 at every SF — 0.25 leaves the
-    * RECOMMEND branch a wide margin (the stay branch is boundary-pinned
-    * in VocabSpec). Policy input, measured everything else. */
-  private val VocabRefreshTol = 0.25
-
-  /** The REFRESH ADVISOR'S ARITHMETIC under the gate
-    * ([[Vocab.planRefresh]] — VERDICT r12 item 5, the
-    * `q_hist_selectivity` pattern of gating the estimator itself): one
-    * row of (mass_then, mass_now, changed_mass, ratio, recommend)
-    * between the wave-0 horizon and the tip of the persisted word-count
-    * family, with the oracle recomputing all five measurements from the
-    * two horizon corpora from scratch. The Spark side prices from the
-    * marker-filtered FOLDS (zero corpus scans — the whole point of the
-    * family); a drifted fold, a wrong |delta| sum, or a flipped
-    * recommendation fails the hash. */
-  private def qVocabRefreshPlan(spark: SparkSession, dir: String): DataFrame = {
-    corpusWordCountsDisk(spark, dir) // build fixture + tip freshness
-    val path = wordCountsPath(spark, dir)
-    val plan = Vocab.planRefresh(
-      Vocab.countsDiff(
-        IndexStore.loadWordCountsAsOf(spark, path, throughWave = 0L),
-        IndexStore.loadWordCounts(spark, path)),
-      tolerance = VocabRefreshTol)
-    import spark.implicits._
-    Seq((plan.massThen, plan.massNow, plan.changedMass,
-        BigDecimal(plan.ratio).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble,
-        plan.recommend))
-      .toDF("mass_then", "mass_now", "changed_mass", "ratio", "recommend")
-  }
-
-  /** ANN AS OF wave 0 ([[IndexStore.loadIvfAsOf]]): exhaustive routed
-    * top-k over the horizon snapshot must equal the exact kNN over
-    * exactly A∪B (vec_id%3 ≠ 2) — a wave-1 member surfacing (horizon
-    * leak) or a wave-0 member missing (over-filtering) fails the hash.
-    * Exhaustive depth + forceRoute keep the filtered exact-kNN SQL a
-    * full oracle (every as-of member sits in a probed cluster, so
-    * routed == exact with recall 1 — the [[qAnnIvfFiltered]] contract). */
-  private def qAnnAsof(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    Ivf.ann(corpusIvfAsofDisk(spark, dir), e, "vec_id", "embedding",
-        flagshipQueryVec, k = 10, numCandidates = Int.MaxValue,
-        forceRoute = true)
-      .select("vec_id", "score")
-  }
-
-  /** Full-text search AS OF wave 0 ([[IndexStore.loadBm25AsOf]]): the
-    * horizon snapshot must score EXACTLY like an index that had simply
-    * stopped after wave 0 — the oracle rebuilds BM25 from scratch over
-    * A∪B (doc_id%3 ≠ 2), so a leaked wave-1 posting, a df/avgdl
-    * contribution from C, or any horizon-filter drift fails the hash.
-    * Same plan shape as [[qBm25Idx]]: the as-of filter only changes
-    * WHICH marker partitions the scan reads. */
-  private def qBm25Asof(spark: SparkSession, dir: String): DataFrame =
-    TextSearch.search(corpusBm25AsofDisk(spark, dir), flagshipQueryText,
-        k = 10)
-      .withColumnRenamed("id", "doc_id")
-
-  /** IVF index with a HOT-CELL SPLIT ([[IndexStore.splitClusterIvf]]) —
-    * the maintenance middle path between tolerating a hot cell's probe
-    * cost and a corpus-sized retrain: the advised largest cell
-    * ([[IndexStore.adviseSplitIvf]], sizes arithmetic alone) is
-    * re-clustered into two children at cell cost, with the centroid
-    * table rewrite as the probe switch. Built once per (session, sfDir);
-    * the wave-time staleness check runs on first touch. */
-  private def corpusIvfSplitDisk(spark: SparkSession, dir: String)
-      : Ivf.IvfIndex = {
-    val path = persisted(spark, dir, "ivfsplit") { p =>
-      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      IndexStore.saveIvf(corpusIvf(spark, dir), p,
-        source = Some((e, "vec_id", "embedding")))
-      val preSplit = IndexStore.loadIvf(spark, p)
-      val advice = IndexStore.adviseSplitIvf(preSplit, factor = 1.0001)
-      IndexStore.splitClusterIvf(e, "vec_id", "embedding", p,
-        advice.cluster, batchId = 0L)
-      // and the twin maintenance op on cells OTHER than the fresh
-      // children: proximity-aware advice would otherwise pick the two
-      // 2-means children (the closest pair in the index by
-      // construction) and the merge wave would just undo the split
-      // wave — the fixture must carry BOTH layouts, and the exactness
-      // contract must hold through the pair
-      val postSplit = IndexStore.loadIvf(spark, p)
-      val children = postSplit.sizes.keySet -- preSplit.sizes.keySet
-      val m = IndexStore.adviseMergeIvf(
-        postSplit.copy(sizes = postSplit.sizes -- children,
-          centroids = postSplit.centroids -- children),
-        factor = 100.0)
-      IndexStore.mergeClustersIvf(e, "vec_id", "embedding", p,
-        m.clusterA, m.clusterB, batchId = 0L)
-    }
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    checkedOncePerWave(spark, dir, "ivf-split")(
-      IndexStore.loadIvfChecked(spark, path, e, "vec_id", "embedding"))(
-      IndexStore.loadIvf(spark, path))
-  }
-
-  /** ANN over the post-split, post-merge index: the routed exhaustive
-    * probe over the re-laid-out cells must equal the exact top-k — a
-    * member lost (old cell unreachable too early) or doubled (old rows
-    * still routed) by EITHER maintenance wave fails both the selfCheck
-    * and the oracle hash. The corpus did not change, so the exact-kNN
-    * SQL is the same full oracle as `q_ann_ivf`; only the physical
-    * layout moved — twice. */
-  private def qAnnIvfSplit(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val idx = corpusIvfSplitDisk(spark, dir)
-    selfChecked(
-      Ivf.ann(idx, e, "vec_id", "embedding", flagshipQueryVec, k = 10,
-          numCandidates = Int.MaxValue, forceRoute = true)
-        .select("vec_id", "score"),
-      VectorSearch.knn(e, "vec_id", "embedding", flagshipQueryVec, k = 10)
-        .select("vec_id", "score"),
-      "q_ann_ivf_split routed-over-split-cells")
-  }
-
-  /** Quantile sample sketch over the documents corpus
-    * ([[IndexStore.saveQuantile]]) with the FULL lifecycle exercised:
-    * base build on two-thirds of the corpus, one append wave (merge
-    * theorem: fold == single pass, definitionally), one deletion wave
-    * (the sample shrinks by exactly the erased rows — sound, unlike the
-    * refused MG/KMV erasure). Built once per (session, sfDir); the
-    * wave-time staleness check runs on first touch. */
-  private def corpusQuantileDisk(spark: SparkSession, dir: String)
-      : IndexStore.QuantileSketch = {
-    val path = persisted(spark, dir, "qsketch") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "n_chars")
-      IndexStore.saveQuantile(d.where(pmod(col("doc_id"), lit(3)) =!= 2),
-        "doc_id", "n_chars", k = 1024, p)
-      IndexStore.appendBatchQuantile(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "n_chars",
-        p, 0L)
-      IndexStore.deleteBatchQuantile(
-        d.where(pmod(col("doc_id"), lit(9)) === 0), "doc_id", "n_chars",
-        p, 0L)
-    }
-    val survivors = Tables.documents(spark, dir)
-      .select("doc_id", "n_chars")
-      .where(pmod(col("doc_id"), lit(9)) =!= 0)
-    checkedOncePerWave(spark, dir, "quantile")(
-      IndexStore.loadQuantileChecked(spark, path, survivors, "doc_id",
-        "n_chars"))(
-      IndexStore.loadQuantile(spark, path))
-  }
-
-  /** Distribution questions from the persisted sample — rank-⌈p·m⌉
-    * quantiles of doc length as DRIVER ARITHMETIC over ≤ k (hash, value)
-    * pairs: no corpus scan at report time, no [lo, hi) histogram DDL
-    * ([[IndexStore.histQuantile]]'s one constraint this family drops).
-    * The gate pins the COMPLETE regime (k = 1024 ≥ the sf0.01 corpus —
-    * selfCheck-enforced): the sample is the surviving corpus's multiset,
-    * so the oracle recomputes the identical rank rule over the survivors
-    * in SQL and the values must match exactly, through the append's
-    * merge AND the erasure wave. At 100 TB the sampled regime applies
-    * instead — a uniform bottom-k-by-id-hash sample with O(1/√k) rank
-    * error, maintained at ≤ k rows per ingest wave (the
-    * [[IndexStore]] quantile family comment). */
-  private def qQuantileSketch(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val s = corpusQuantileDisk(spark, dir)
-    if (sys.props.get("graft.selfcheck").contains("1"))
-      require(s.complete,
-        "q_quantile_sketch declares the complete (exact) regime at the " +
-          s"gate SF but the sketch holds ${s.m} of ${s.n} rows — raise k " +
-          "or the oracle comparison is sample-vs-exact")
-    Seq(0.1, 0.5, 0.9, 0.99).map(p => (p, s.quantile(p))).toDF("p", "val")
-  }
-
-  /** Grouped quantile sample sketch — the per-group twin of
-    * [[corpusQuantileDisk]] over (source → n_chars), same lifecycle
-    * (save two-thirds, append one-third, erase the mod-9 wave). */
-  private def corpusGroupedQuantileDisk(spark: SparkSession, dir: String)
-      : IndexStore.GroupedQuantileSketch = {
-    val path = persisted(spark, dir, "gqsketch") { p =>
-      val d = Tables.documents(spark, dir)
-        .select("doc_id", "source", "n_chars")
-      IndexStore.saveGroupedQuantile(
-        d.where(pmod(col("doc_id"), lit(3)) =!= 2), "doc_id", "source",
-        "n_chars", k = 1024, p)
-      IndexStore.appendBatchGroupedQuantile(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "source",
-        "n_chars", p, 0L)
-      IndexStore.deleteBatchGroupedQuantile(
-        d.where(pmod(col("doc_id"), lit(9)) === 0), "doc_id", "source",
-        "n_chars", p, 0L)
-    }
-    val survivors = Tables.documents(spark, dir)
-      .select("doc_id", "source", "n_chars")
-      .where(pmod(col("doc_id"), lit(9)) =!= 0)
-    checkedOncePerWave(spark, dir, "grouped-quantile")(
-      IndexStore.loadGroupedQuantileChecked(spark, path, survivors,
-        "doc_id", "source", "n_chars"))(
-      IndexStore.loadGroupedQuantile(spark, path))
-  }
-
-  /** PER-GROUP distribution questions from the persisted grouped sample
-    * ([[IndexStore.saveGroupedQuantile]]): "median and p90 doc length per
-    * source" — the curation question every mixing/quality decision needs
-    * — as driver arithmetic over ≤ groups × k (hash, value) pairs, no
-    * corpus scan and no histogram DDL at report time. The gate pins the
-    * complete regime per group (selfCheck), so the oracle recomputes the
-    * identical per-group rank rule over the survivors; at 100 TB the
-    * uniform per-group sample applies, maintained at ≤ groups × k rows
-    * per ingest wave. */
-  private def qQuantileBySource(spark: SparkSession, dir: String)
-      : DataFrame = {
-    import spark.implicits._
-    val s = corpusGroupedQuantileDisk(spark, dir)
-    if (sys.props.get("graft.selfcheck").contains("1"))
-      s.groups.foreach(g => require(s.complete(g),
-        s"q_quantile_by_source declares the complete regime but group " +
-          s"'$g' holds ${s.m(g)} of ${s.nByGroup(g)} rows"))
-    s.groups.toSeq.sorted.flatMap(g =>
-        Seq(0.5, 0.9).map(p => (g, p, s.quantile(g, p))))
-      .toDF("source", "p", "val")
-  }
-
-  /** ERASURE AUDIT over the deletion-wave fixtures
-    * ([[IndexStore.erasureAudit]]) — the verification step that closes
-    * the right-to-be-forgotten loop: after the `q_ann_ivf_deleted` /
-    * `q_bm25_deleted` waves, PROVE through each family's own live loader
-    * (the same tombstone-filtered, commit-marker-scoped relation every
-    * query reads) that zero erased ids remain visible. `erased_n` is the
-    * wave size the oracle recomputes from the corpus; `residual` = 0 is
-    * the certificate — earned by probing the actual index state, so a
-    * half-applied wave or a missed family surfaces as a positive
-    * residual and fails the hash. One narrow id-projection scan per
-    * family per wave: the compliance cadence, never per query. */
-  /** FLEET ERASURE WAVE ([[IndexStore.executeErasureWave]]): one call
-    * drains a GDPR wave (doc_id ≡ 0 mod 6, EVERY doomed doc — the wave
-    * is a LEFT join onto embeddings, so doc-keyed families erase users
-    * with no embedding too, the r14-advice production shape) into SEVEN
-    * families built over
-    * the same corpus — BM25, the scalar quantile sample, the per-source
-    * grouped sample, and (round 13) the word-count vocab family AND the
-    * bigram LM, both admitted by the erased-id ledger
-    * ([[IndexStore.deleteBatchWordCounts]]/[[IndexStore.deleteBatchLm]]:
-    * overlapping requests dedupe instead of double-subtracting, and the
-    * ledger IS the family's certificate — erased ids with no committed
-    * ledger entry count as residual). The returned relation IS the
-    * compliance certificate: per family, the wave size and the residual
-    * (live-loader probe for the id-keyed families, ledger probe for
-    * wordcount). The oracle pins residual = 0 and erased_n = the wave's
-    * distinct ids; a half-applied wave (one family missed, a broken
-    * anti-join, a double subtraction on the replay this query performs
-    * every run — the wave commits once, re-invocations are fleet-wide
-    * no-ops) fails the hash. Wave + audit run at erasure-wave cadence:
-    * each family's delete is work ∝ wave, the audit one narrow
-    * projection per family. */
-  private def qErasureWave(spark: SparkSession, dir: String): DataFrame = {
-    val targets = fixture(spark, "erasurewave", dir) {
-      val d = Tables.documents(spark, dir)
-        .select("doc_id", "text", "source", "n_chars")
-      val bm = persistedPath("wavebm", dir)
-      val q = persistedPath("waveq", dir)
-      val gq = persistedPath("wavegq", dir)
-      val wc = persistedPath("wavewc", dir)
-      val lmp = persistedPath("wavelm", dir)
-      val iv = persistedPath("waveivf", dir)
-      val lm3 = persistedPath("wavelm3", dir)
-      IndexStore.createBm25(d, "doc_id", "text", bm)
-      IndexStore.saveQuantile(d, "doc_id", "n_chars", k = 1024, q)
-      IndexStore.saveGroupedQuantile(d, "doc_id", "source", "n_chars",
-        1024, gq)
-      IndexStore.saveWordCounts(d, "doc_id", "text", wc)
-      IndexStore.saveLm(d, "doc_id", "text", lmp)
-      IndexStore.saveLm3(d, "doc_id", "text", lm3)
-      // the VECTOR-keyed family: a user's docs AND their embeddings
-      // erase in ONE wave — the real GDPR shape spans both id spaces
-      // (doc_id ≡ vec_id in the fixture corpus, as in any 1:1 enrich)
-      IndexStore.createIvf(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        "vec_id", "embedding", iv, numClusters = 8)
-      Seq(IndexStore.ErasureTarget("bm25", bm, Seq("text")),
-        IndexStore.ErasureTarget("ivf", iv, Seq("embedding")),
-        IndexStore.ErasureTarget("lm", lmp, Seq("text")),
-        IndexStore.ErasureTarget("lm3", lm3, Seq("text")),
-        IndexStore.ErasureTarget("quantile", q, Seq("n_chars")),
-        IndexStore.ErasureTarget("gquantile", gq, Seq("source", "n_chars")),
-        IndexStore.ErasureTarget("wordcount", wc, Seq("text")))
-    }
-    val d = Tables.documents(spark, dir)
-      .select("doc_id", "text", "source", "n_chars")
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    // ONE wave carrying every column any family re-derives from: text/
-    // value columns for the doc-keyed families, the exact stored vector
-    // for the embedding-keyed one (doc_id ≡ vec_id — the 1:1 enrich id
-    // space). LEFT join — the PRODUCTION shape (r14-advice): every
-    // doomed doc erases from the doc-keyed families even when it has no
-    // embedding (at sf0.1 docs and embeddings cardinalities DIVERGE:
-    // 5,000 vs 2,000 — an inner join would silently skip 60% of the
-    // users for bm25/lm/quantiles); executeErasureWave's per-family
-    // narrowing routes only embedding-carrying rows into the
-    // vector-keyed delete, and the audit probes the FULL wave against
-    // every family.
-    val doomed = d.join(e, d("doc_id") === e("vec_id"), "left")
-      .drop("vec_id")
-      .where(pmod(col("doc_id"), lit(6)) === 0)
-    IndexStore.executeErasureWave(doomed, "doc_id", targets, batchId = 0L)
-      .orderBy("family")
-  }
-
-  /** FLEET MAINTENANCE PRICING ([[IndexStore.maintenanceWave]], dry-run):
-    * the compaction advisor's arithmetic under the gate. The fixture is a
-    * quantile sketch accreted in THREE waves (base + two appends) with
-    * k = 50, so the persisted sample holds exactly min(wave, 50) rows per
-    * wave — the oracle recomputes that sum from the raw table (the
-    * fold-cost honesty pin: the advisor must price the PERSISTED sample,
-    * never the ingested corpus the marks fingerprint counts) and states
-    * the recommendation the amortization inequality forces at 50
-    * queries/wave. Dry-run (`execute = false`) so the receipts are
-    * deterministic across invocations — pricing is repeatable; acting
-    * would fold once and change the second read's batch count. */
-  private def qMaintenanceWave(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val path = persisted(spark, dir, "maintq") { p =>
-      val d = Tables.documents(spark, dir).select("doc_id", "n_chars")
-      IndexStore.saveQuantile(d.where(pmod(col("doc_id"), lit(3)) === 0),
-        "doc_id", "n_chars", k = 50, p)
-      IndexStore.appendBatchQuantile(
-        d.where(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "n_chars",
-        p, 0L)
-      IndexStore.appendBatchQuantile(
-        d.where(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "n_chars",
-        p, 1L)
-    }
-    IndexStore.maintenanceWave(spark, Seq("quantile" -> path),
-        queriesPerWave = 50L, execute = false)
-      .select(col("family"), col("batches"), col("total_rows"),
-        col("recommend"), col("folded"))
-  }
-
-  private def qErasureAudit(spark: SparkSession, dir: String): DataFrame = {
-    // the fixture accessors return LOADED index handles (tombstone-
-    // filtered live relations) — hand those to the audit so it probes
-    // them directly instead of paying each family's sidecar/marker load
-    // a second time (r16; the load was ~half the audit's wall time), and
-    // run the two per-id-space audits CONCURRENTLY (guide §2.6 — each is
-    // a chain of small driver-synced jobs over disjoint indexes)
-    val doomedDocs = Tables.documents(spark, dir)
-      .where(pmod(col("doc_id"), lit(9)) === 0).select("doc_id")
-    val doomedVecs = Tables.embeddings(spark, dir)
-      .where(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")
-    val Seq(docRows, vecRows) = graft.util.Par.all(Seq(
-      () => {
-        val bm = corpusBm25DeletedDisk(spark, dir)
-        IndexStore.erasureAudit(spark, doomedDocs, "doc_id",
-          Seq("bm25" -> bm25DeletedPath(spark, dir)),
-          live = Map("bm25" -> bm.postings.select(col("id"))))
-      },
-      () => {
-        val ivf = corpusIvfDeletedDisk(spark, dir)
-        IndexStore.erasureAudit(spark, doomedVecs, "vec_id",
-          Seq("ivf" -> ivfDeletedPath(spark, dir)),
-          live = Map("ivf" -> ivf.assignments.select(col("id"))))
-      }))
-    docRows.unionByName(vecRows).orderBy("family")
-  }
-
-  /** JOIN-CARDINALITY pricing from KMV sketches
-    * ([[Sketches.kmvIntersection]], Beyer et al. 2007): how many distinct
-    * users two event segments share, estimated from 2×64 driver-held
-    * hashes BEFORE any join runs — at 100 TB the question "how big is
-    * this join / decontamination overlap" becomes sketch arithmetic
-    * instead of a dry-run join. Each segment's min-set is one bounded
-    * top-k scan (TakeOrderedAndProject over distinct hashes — the
-    * wave-time measurement; production reads them from persisted
-    * summaries, [[IndexStore.SummaryIndex.intersectionEstimate]]). The
-    * oracle replicates the ENTIRE estimator in DuckDB — same frozen
-    * md5-prefix hash, same k-min union, same membership counts, same
-    * IEEE arithmetic order — so both the exact branch (sf0.001: 15
-    * users/segment < k, sketches are complete sets) and the estimator
-    * branch (sf0.01+: 150+ users ≥ k) are hash-checked. */
-  private def qJoinCardKmv(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    def mins(t: String): Array[Long] = ev
-      .where(col("event_type") === t)
-      .select(Text.hash60(col("user_id").cast("string")).as("h"))
-      .where(col("h").isNotNull)
-      .distinct().orderBy("h").limit(Sketches.DefaultK)
-      .collect().map(_.getLong(0))
-    val a = mins("click")
-    val b = mins("purchase")
-    import spark.implicits._
-    Seq((Sketches.estimate(a, Sketches.DefaultK),
-        Sketches.estimate(b, Sketches.DefaultK),
-        Sketches.kmvIntersection(a, b, Sketches.DefaultK)))
-      .toDF("a_distinct", "b_distinct", "overlap_est")
-  }
-
-  /** Z-order layout of lineitem on (l_partkey, l_suppkey), built once
-    * per (session, sfDir) — the LAYOUT lifecycle (the once-paid
-    * clustering shuffle that every later box query amortizes); domains
-    * measured from the data at build time (one min/max agg), bits=3 →
-    * 64 z-buckets as parquet partition dirs. */
-  private val ZOrderBits = 3
-  private def lineitemZorderDisk(spark: SparkSession, dir: String)
-      : (DataFrame, ZOrder.Dim, ZOrder.Dim) = {
-    val (path, dx, dy) = fixture(spark, "zorder", dir) {
-      val li = Tables.lineitem(spark, dir)
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-      val r = li.agg(min("l_partkey"), max("l_partkey"),
-        min("l_suppkey"), max("l_suppkey")).head()
-      val dx = ZOrder.Dim("l_partkey", r.getLong(0), r.getLong(1))
-      val dy = ZOrder.Dim("l_suppkey", r.getLong(2), r.getLong(3))
-      val p = persistedPath("zorder", dir)
-      ZOrder.writeLayout(li, dx, dy, ZOrderBits, p)
-      (p, dx, dy)
-    }
-    (ZOrder.readLayout(spark, path), dx, dy)
-  }
-
-  /** Multi-dimensional scan pruning via the z-ordered layout
-    * ([[ZOrder.boxQuery]]): a 2-D box on (l_partkey, l_suppkey) —
-    * [xlo, xlo+(xhi−xlo)/10] × [ylo, ylo+(yhi−ylo)/4], derived from the
-    * measured domains on BOTH sides so the constants agree at every
-    * SF — served from the buckets whose cell rectangle intersects the
-    * box (an IN-list partition filter over ≤ 64 directory ids; 2 of 64
-    * at these domains) plus the exact residual predicate. Grouped per
-    * z-bucket: the oracle recomputes each row's bucket id with the
-    * identical integer-division cells and shift-or-mask interleave —
-    * hash-matching the Morton arithmetic itself, not just the filtered
-    * aggregate. */
-  private def qZorderBox(spark: SparkSession, dir: String): DataFrame = {
-    val (layout, dx, dy) = lineitemZorderDisk(spark, dir)
-    val x1 = dx.lo + (dx.hi - dx.lo) / 10
-    val y1 = dy.lo + (dy.hi - dy.lo) / 4
-    ZOrder.boxQuery(layout, dx, dy, ZOrderBits, dx.lo, x1, dy.lo, y1)
-      .groupBy(col("__zb").cast("long").as("zb"))
-      .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("sum_qty"))
-      .orderBy("zb")
-  }
-
-  /** INCREMENTAL z-order layout fixture ([[IndexStore.saveZOrder]]
-    * family): the clustered base holds three deterministic quarters of
-    * lineitem (l_orderkey mod 4 ≠ 3), the last quarter lands as TWO
-    * append waves split on l_partkey parity — each wave written with NO
-    * clustering shuffle (work ∝ batch), exactly the 100 TB daily-ingest
-    * shape the tail exists for. Built once per (session, sfDir); the one
-    * wave-time staleness check (summed committed marks vs the corpus
-    * fingerprint) runs at build, per the [[checkedOncePerWave]]
-    * contract — box queries afterwards read unchecked. */
-  private def lineitemZorderIncDisk(spark: SparkSession, dir: String)
-      : (String, ZOrder.Dim, ZOrder.Dim) =
-    fixture(spark, "zorderinc", dir) {
-      val li = Tables.lineitem(spark, dir)
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-      val r = li.agg(min("l_partkey"), max("l_partkey"),
-        min("l_suppkey"), max("l_suppkey")).head()
-      val dx = ZOrder.Dim("l_partkey", r.getLong(0), r.getLong(1))
-      val dy = ZOrder.Dim("l_suppkey", r.getLong(2), r.getLong(3))
-      val p = persistedPath("zorderinc", dir)
-      val lastQuarter = pmod(col("l_orderkey"), lit(4)) === 3
-      IndexStore.saveZOrder(li.where(!lastQuarter), dx, dy, ZOrderBits, p)
-      IndexStore.appendBatchZOrder(
-        li.where(lastQuarter && pmod(col("l_partkey"), lit(2)) === 0), p, 0L)
-      IndexStore.appendBatchZOrder(
-        li.where(lastQuarter && pmod(col("l_partkey"), lit(2)) === 1), p, 1L)
-      // the wave-time guard: refuses if the committed waves don't cover
-      // exactly this corpus (e.g. a batch written but never committed)
-      IndexStore.loadZOrderChecked(spark, p, li)
-      (p, dx, dy)
-    }
-
-  /** Exact 2-D box query across the layout LIFECYCLE: IN-list-pruned
-    * clustered base ∪ fully-scanned committed tail, residual predicate
-    * on both ([[IndexStore.boxZOrder]]) — exactness under appends is the
-    * family's contract (the tail costs scan width, never correctness),
-    * and the oracle recomputes every surviving row's bucket id with the
-    * identical Morton arithmetic over the RAW table, so a row lost (or
-    * double-read) anywhere in the base/tail/marks lifecycle fails the
-    * hash. Different box than [[qZorderBox]] (a mid-domain rectangle)
-    * so the two rows don't collapse into the same receipt. */
-  private def qZorderBoxInc(spark: SparkSession, dir: String): DataFrame = {
-    val (path, dx, dy) = lineitemZorderIncDisk(spark, dir)
-    val x0 = dx.lo + (dx.hi - dx.lo) / 3
-    val x1 = dx.lo + (dx.hi - dx.lo) / 2
-    val y0 = dy.lo + (dy.hi - dy.lo) / 2
-    IndexStore.boxZOrder(spark, path, x0, x1, y0, dy.hi)
-      .groupBy(col("__zb").cast("long").as("zb"))
-      .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("sum_qty"))
-      .orderBy("zb")
-  }
-
-  /** North-star: near-dup by TEXT-derived embeddings — MinHash-LSH
-    * candidates verified by cosine over the embed ETL's sparse output
-    * (the composed scale pipeline: sketch → candidates → verify). */
-  private val TextCosineThr = 0.95
-  private def qNeardupTextCosine(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val cands = Dedup.minhashCandidates(
-      Dedup.minhashSignatures(d, "doc_id", "text"))
-    Dedup.cosinePairsSparse(
-        EmbedJob.embedRelational(d, "doc_id", "text"), cands, TextCosineThr)
-      .orderBy("id1", "id2")
-  }
-
-  // ListMap, not Map: Verify/Bench iterate this in DECLARATION order, so
-  // adding a query never reshuffles the execution order of the others —
-  // hash-order iteration moved cache/JIT warmth between adjacent queries
-  // round-over-round, manufacturing phantom per-query bench wiggles
-  // (round-8 verdict finding 1).
-  def queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
-    "q_vector_knn" -> ((s, dir) => qVectorKnn(s, dir)),
-    "q_vector_knn_euclidean" -> ((s, dir) => qVectorKnnEuclidean(s, dir)),
-    "q_vector_knn_dot" -> ((s, dir) => qVectorKnnDot(s, dir)),
-    "q_distinct_sort" -> ((s, dir) => qDistinctSort(s, dir)),
-    "q1_agg" -> ((s, dir) => q1Agg(s, dir)),
-    "q_bm25" -> ((s, dir) => qBm25(s, dir)),
-    "q_phrase_find" -> ((s, dir) => qPhraseFind(s, dir)),
-    "q_phrase_find_idx" -> ((s, dir) => qPhraseFindIdx(s, dir)),
-    "q_phrase_find_pos" -> ((s, dir) => qPhraseFindPos(s, dir)),
-    "q_phrase_find_join" -> ((s, dir) => qPhraseFindJoin(s, dir)),
-    "q_phrase_find_join_pos" -> ((s, dir) => qPhraseFindJoinPos(s, dir)),
-    "q_phrase_plan" -> ((s, dir) => qPhrasePlan(s, dir)),
-    "q_phrase_join_plan" -> ((s, dir) => qPhraseJoinPlan(s, dir)),
-    "q_fulltext_postfilter" -> ((s, dir) => qFulltextPostfilter(s, dir)),
-    "q_hybrid" -> ((s, dir) => qHybrid(s, dir)),
-    "q_hybrid_rrf" -> ((s, dir) => qHybridRrf(s, dir)),
-    "q_flatten" -> ((s, dir) => qFlatten(s, dir)),
-    "q_text_stats" -> ((s, dir) => qTextStats(s, dir)),
-    "q_text_unicode" -> ((s, dir) => qTextUnicode(s, dir)),
-    "q_wordcounts_unicode" -> ((s, dir) => qWordCountsUnicode(s, dir)),
-    "q_bm25_unicode" -> ((s, dir) => qBm25Unicode(s, dir)),
-    "q_contamination_unicode" -> ((s, dir) => qContaminationUnicode(s, dir)),
-    "q_substring_spans_unicode" -> ((s, dir) => qSubstringSpansUnicode(s, dir)),
-    "q_fingerprint_unicode" -> ((s, dir) => qFingerprintUnicode(s, dir)),
-    "q_repetition_unicode" -> ((s, dir) => qRepetitionUnicode(s, dir)),
-    "q_source_overlap_unicode" -> ((s, dir) => qSourceOverlapUnicode(s, dir)),
-    "q_pii_scrub_unicode" -> ((s, dir) => qPiiScrubUnicode(s, dir)),
-    "q_phrase_find_unicode" -> ((s, dir) => qPhraseFindUnicode(s, dir)),
-    "q_bm25_cjk" -> ((s, dir) => qBm25Cjk(s, dir)),
-    "q_dedup_cjk" -> ((s, dir) => qDedupCjk(s, dir)),
-    "q_nfc_unify" -> ((s, dir) => qNfcUnify(s, dir)),
-    "q_repetition" -> ((s, dir) => qRepetition(s, dir)),
-    "q_vocab_stats" -> ((s, dir) => qVocabStats(s, dir)),
-    "q_lm_score" -> ((s, dir) => qLmScore(s, dir)),
-    "q_lm_score_inc" -> ((s, dir) => qLmScoreInc(s, dir)),
-    "q_lm_score_asof" -> ((s, dir) => qLmScoreAsof(s, dir)),
-    "q_lm3_score" -> ((s, dir) => qLm3Score(s, dir)),
-    "q_lm3_score_inc" -> ((s, dir) => qLm3ScoreInc(s, dir)),
-    "q_lm3_score_asof" -> ((s, dir) => qLm3ScoreAsof(s, dir)),
-    "q_lm3_score_unicode" -> ((s, dir) => qLm3ScoreUnicode(s, dir)),
-    "q_script_profile" -> ((s, dir) => qScriptProfile(s, dir)),
-    "q_dup_ngram_profile" -> ((s, dir) => qDupNgramProfile(s, dir)),
-    "q_source_overlap" -> ((s, dir) => qSourceOverlap(s, dir)),
-    "q_source_overlap_inc" -> ((s, dir) => qSourceOverlapInc(s, dir)),
-    "q_pii_scrub" -> ((s, dir) => qPiiScrub(s, dir)),
-    "q_source_stats" -> ((s, dir) => qSourceStats(s, dir)),
-    "q_corpus_rollup" -> ((s, dir) => qCorpusRollup(s, dir)),
-    "q_langid" -> ((s, dir) => qLangId(s, dir)),
-    "q_fingerprint" -> ((s, dir) => qFingerprint(s, dir)),
-    "q_dedup_exact" -> ((s, dir) => qDedupExact(s, dir)),
-    "q_dedup_priority" -> ((s, dir) => qDedupPriority(s, dir)),
-    "q_diversity_sample" -> ((s, dir) => qDiversitySample(s, dir)),
-    "q_knn_join" -> ((s, dir) => qKnnJoin(s, dir)),
-    "q_knn_join_ivf" -> ((s, dir) => qKnnJoinIvf(s, dir)),
-    "q_knn_join_plan" -> ((s, dir) => qKnnJoinPlan(s, dir)),
-    "q_late_interaction" -> ((s, dir) => qLateInteraction(s, dir)),
-    "q_late_interaction_pruned" -> ((s, dir) => qLateInteractionPruned(s, dir)),
-    "q_bm25_idx" -> ((s, dir) => qBm25Idx(s, dir)),
-    "q_bm25_asof" -> ((s, dir) => qBm25Asof(s, dir)),
-    "q_ann_asof" -> ((s, dir) => qAnnAsof(s, dir)),
-    "q_bpe_merges_inc" -> ((s, dir) => qBpeMergesInc(s, dir)),
-    "q_bpe_merges_local" -> ((s, dir) => qBpeMergesLocal(s, dir)),
-    "q_bpe_merges_unicode" -> ((s, dir) => qBpeMergesUnicode(s, dir)),
-    "q_bpe_vocab_asof" -> ((s, dir) => qBpeVocabAsof(s, dir)),
-    "q_vocab_drift" -> ((s, dir) => qVocabDrift(s, dir)),
-    "q_vocab_refresh_plan" -> ((s, dir) => qVocabRefreshPlan(s, dir)),
-    "q_bm25_join" -> ((s, dir) => qBm25Join(s, dir)),
-    "q_hybrid_join" -> ((s, dir) => qHybridJoin(s, dir)),
-    "q_hybrid_join_dense" -> ((s, dir) => qHybridJoinDense(s, dir)),
-    "q_dedup_jaccard" -> ((s, dir) => qDedupJaccard(s, dir)),
-    "q_dedup_jaccard_plan" -> ((s, dir) => qDedupJaccardPlan(s, dir)),
-    "q_dedup_containment" -> ((s, dir) => qDedupContainment(s, dir)),
-    "q_dedup_containment_lsh" -> ((s, dir) => qDedupContainmentLsh(s, dir)),
-    "q_dedup_containment_inc" -> ((s, dir) => qDedupContainmentInc(s, dir)),
-    "q_chunk_dedup" -> ((s, dir) => qChunkDedup(s, dir)),
-    "q_substring_spans" -> ((s, dir) => qSubstringSpans(s, dir)),
-    "q_substring_coverage" -> ((s, dir) => qSubstringCoverage(s, dir)),
-    "q_substring_passages" -> ((s, dir) => qSubstringPassages(s, dir)),
-    "q_substring_cut" -> ((s, dir) => qSubstringCut(s, dir)),
-    "q_substring_inc" -> ((s, dir) => qSubstringInc(s, dir)),
-    "q_dedup_minhash" -> ((s, dir) => qDedupMinhash(s, dir)),
-    "q_dedup_simhash" -> ((s, dir) => qDedupSimhash(s, dir)),
-    "q_neardup_cosine" -> ((s, dir) => qNeardupCosine(s, dir)),
-    "q_neardup_cosine_idx" -> ((s, dir) => qNeardupCosineIdx(s, dir)),
-    "q_neardup_cosine_sel" -> ((s, dir) => qNeardupCosineSel(s, dir)),
-    "q_neardup_cosine_selmp" -> ((s, dir) => qNeardupCosineSelMp(s, dir)),
-    "q_neardup_cosine_plan" -> ((s, dir) => qNeardupCosinePlan(s, dir)),
-    "q_neardup_cosine_ball" -> ((s, dir) => qNeardupCosineBall(s, dir)),
-    "q_dedup_incremental" -> ((s, dir) => qDedupIncremental(s, dir)),
-    "q_dedup_incremental_mp" -> ((s, dir) => qDedupIncrementalMp(s, dir)),
-    "q_ann_ivf" -> ((s, dir) => qAnnIvf(s, dir)),
-    "q_ann_pq" -> ((s, dir) => qAnnPq(s, dir)),
-    "q_ann_pq_idx" -> ((s, dir) => qAnnPqIdx(s, dir)),
-    "q_ann_mrl" -> ((s, dir) => qAnnMrl(s, dir)),
-    "q_ann_ivfpq" -> ((s, dir) => qAnnIvfPq(s, dir)),
-    "q_ann_ivf_idx" -> ((s, dir) => qAnnIvfIdx(s, dir)),
-    "q_ann_ivf_filtered" -> ((s, dir) => qAnnIvfFiltered(s, dir)),
-    "q_ann_ivf_rewrite" -> ((s, dir) => qAnnIvfRewrite(s, dir)),
-    "q_ann_plan" -> ((s, dir) => qAnnPlan(s, dir)),
-    "q_ann_plan_filtered" -> ((s, dir) => qAnnPlanFiltered(s, dir)),
-    "q_ann_plan_range" -> ((s, dir) => qAnnPlanRange(s, dir)),
-    "q_field_stats" -> ((s, dir) => qFieldStats(s, dir)),
-    "q_hist_selectivity" -> ((s, dir) => qHistSelectivity(s, dir)),
-    "q_hist_quantile" -> ((s, dir) => qHistQuantile(s, dir)),
-    "q_ann_depth" -> ((s, dir) => qAnnDepth(s, dir)),
-    "q_rerank" -> ((s, dir) => qRerank(s, dir)),
-    "q_mmr" -> ((s, dir) => qMmr(s, dir)),
-    "q_hard_negatives" -> ((s, dir) => qHardNegatives(s, dir)),
-    "q_quality_tiers" -> ((s, dir) => qQualityTiers(s, dir)),
-    "q_mix_sources" -> ((s, dir) => qMixSources(s, dir)),
-    "q_multimodal" -> ((s, dir) => qMultimodal(s, dir)),
-    "q_multimodal_decode" -> ((s, dir) => qMultimodalDecode(s, dir)),
-    "q_multimodal_audio" -> ((s, dir) => qMultimodalAudio(s, dir)),
-    "q_multimodal_frames" -> ((s, dir) => qMultimodalFrames(s, dir)),
-    "q_multimodal_avi" -> ((s, dir) => qMultimodalAvi(s, dir)),
-    "q_multimodal_knn" -> ((s, dir) => qMultimodalKnn(s, dir)),
-    "q_window_agg" -> ((s, dir) => qWindowAgg(s, dir)),
-    "q_attribution" -> ((s, dir) => qAttribution(s, dir)),
-    "q_funnel" -> ((s, dir) => qFunnel(s, dir)),
-    "q_funnel_gap" -> ((s, dir) => qFunnelGap(s, dir)),
-    "q_funnel_latency" -> ((s, dir) => qFunnelLatency(s, dir)),
-    "q_funnel_repeat" -> ((s, dir) => qFunnelRepeat(s, dir)),
-    "q_funnel_reconcile" -> ((s, dir) => qFunnelReconcile(s, dir)),
-    "q_retention" -> ((s, dir) => qRetention(s, dir)),
-    "q_sessionize" -> ((s, dir) => qSessionize(s, dir)),
-    "q_embed_corpus" -> ((s, dir) => qEmbedCorpus(s, dir)),
-    "q_json_extract" -> ((s, dir) => qJsonExtract(s, dir)),
-    "q_join_topk" -> ((s, dir) => qJoinTopk(s, dir)),
-    "q_top_terms" -> ((s, dir) => qTopTerms(s, dir)),
-    "q_pack_sequences" -> ((s, dir) => qPackSequences(s, dir)),
-    "q_sample_stratified" -> ((s, dir) => qSampleStratified(s, dir)),
-    "q_rollup" -> ((s, dir) => qRollup(s, dir)),
-    "q_setops" -> ((s, dir) => qSetOps(s, dir)),
-    "q_label_centroid" -> ((s, dir) => qLabelCentroid(s, dir)),
-    "q_pivot" -> ((s, dir) => qPivot(s, dir)),
-    "q_sketches" -> ((s, dir) => qSketches(s, dir)),
-    "q_heavy_hitters" -> ((s, dir) => qHeavyHitters(s, dir)),
-    "q_zorder_box" -> ((s, dir) => qZorderBox(s, dir)),
-    "q_zorder_box_inc" -> ((s, dir) => qZorderBoxInc(s, dir)),
-    "q_heavy_hitters_inc" -> ((s, dir) => qHeavyHittersInc(s, dir)),
-    "q_distinct_users_inc" -> ((s, dir) => qDistinctUsersInc(s, dir)),
-    "q_join_card_kmv" -> ((s, dir) => qJoinCardKmv(s, dir)),
-    "q_ann_ivf_deleted" -> ((s, dir) => qAnnIvfDeleted(s, dir)),
-    "q_bm25_deleted" -> ((s, dir) => qBm25Deleted(s, dir)),
-    "q_erasure_audit" -> ((s, dir) => qErasureAudit(s, dir)),
-    "q_erasure_wave" -> ((s, dir) => qErasureWave(s, dir)),
-    "q_maintenance_wave" -> ((s, dir) => qMaintenanceWave(s, dir)),
-    "q_quantile_sketch" -> ((s, dir) => qQuantileSketch(s, dir)),
-    "q_quantile_by_source" -> ((s, dir) => qQuantileBySource(s, dir)),
-    "q_ann_ivf_split" -> ((s, dir) => qAnnIvfSplit(s, dir)),
-    "q_neardup_text_cosine" -> ((s, dir) => qNeardupTextCosine(s, dir)),
-    "q_chunk" -> ((s, dir) => qChunk(s, dir)),
-    "q_clean_text" -> ((s, dir) => qCleanText(s, dir)),
-    "q_asof_join" -> ((s, dir) => qAsofJoin(s, dir)),
-    "q_range_join" -> ((s, dir) => qRangeJoin(s, dir)),
-    "q_dedup_components" -> ((s, dir) => qDedupComponents(s, dir)),
-    "q_dedup_components_inc" -> ((s, dir) => qDedupComponentsInc(s, dir)),
-    "q_dedup_pipeline" -> ((s, dir) => qDedupPipeline(s, dir)),
-    "q_quant_knn" -> ((s, dir) => qQuantKnn(s, dir)),
-    "q_region_revenue" -> ((s, dir) => qRegionRevenue(s, dir)),
-    "q_quality_filter" -> ((s, dir) => qQualityFilter(s, dir)),
-    "q_split" -> ((s, dir) => qSplit(s, dir)),
-    "q_corpus_diff" -> ((s, dir) => qCorpusDiff(s, dir)),
-    "q_contamination" -> ((s, dir) => qContamination(s, dir)),
-    "q_contamination_bloom" -> ((s, dir) => qContaminationBloom(s, dir)),
-    "q_contamination_semantic" -> ((s, dir) => qContaminationSemantic(s, dir)),
-    "q_contamination_semantic_idx" -> ((s, dir) => qContaminationSemanticIdx(s, dir)),
-    "q_contamination_semantic_plan" -> ((s, dir) => qContaminationSemanticPlan(s, dir)),
-    "q_bpe_pairs" -> ((s, dir) => qBpePairs(s, dir)),
-    "q_bpe_merges" -> ((s, dir) => qBpeMerges(s, dir)),
-    "q_bpe_tokenize" -> ((s, dir) => qBpeTokenize(s, dir)),
-    "q_intake_pipeline" -> ((s, dir) => qIntakePipeline(s, dir)),
-    "q_dedup_vectors" -> ((s, dir) => qDedupVectors(s, dir)),
+  // ---------------------------------------------------------------- queries
+
+  /** Every declared query, in the order Verify, Bench and the other mains
+    * run them — this list alone decides it. A new query goes at the end:
+    * inserting one reshuffled which queries ran next to each other, which
+    * moved cache/JIT warmth between them and manufactured phantom
+    * per-query bench wiggles (round-8 verdict finding 1). */
+  private[graft] val registry: Seq[Query] = Seq(
+    VectorQueries.qVectorKnn,
+    VectorQueries.qVectorKnnEuclidean,
+    VectorQueries.qVectorKnnDot,
+    RelationalQueries.qDistinctSort,
+    RelationalQueries.q1Agg,
+    TextQueries.qBm25,
+    TextQueries.qPhraseFind,
+    TextQueries.qPhraseFindIdx,
+    TextQueries.qPhraseFindPos,
+    TextQueries.qPhraseFindJoin,
+    TextQueries.qPhraseFindJoinPos,
+    TextQueries.qPhrasePlan,
+    TextQueries.qPhraseJoinPlan,
+    TextQueries.qFulltextPostfilter,
+    TextQueries.qHybrid,
+    TextQueries.qHybridRrf,
+    RelationalQueries.qFlatten,
+    PipelineQueries.qTextStats,
+    PipelineQueries.qTextUnicode,
+    LmQueries.qWordCountsUnicode,
+    TextQueries.qBm25Unicode,
+    PipelineQueries.qContaminationUnicode,
+    DedupQueries.qSubstringSpansUnicode,
+    DedupQueries.qFingerprintUnicode,
+    PipelineQueries.qRepetitionUnicode,
+    PipelineQueries.qSourceOverlapUnicode,
+    PipelineQueries.qPiiScrubUnicode,
+    TextQueries.qPhraseFindUnicode,
+    TextQueries.qBm25Cjk,
+    DedupQueries.qDedupCjk,
+    PipelineQueries.qNfcUnify,
+    PipelineQueries.qRepetition,
+    LmQueries.qVocabStats,
+    LmQueries.qLmScore,
+    LmQueries.qLmScoreInc,
+    LmQueries.qLmScoreAsof,
+    LmQueries.qLm3Score,
+    LmQueries.qLm3ScoreInc,
+    LmQueries.qLm3ScoreAsof,
+    LmQueries.qLm3ScoreUnicode,
+    PipelineQueries.qScriptProfile,
+    PipelineQueries.qDupNgramProfile,
+    PipelineQueries.qSourceOverlap,
+    PipelineQueries.qSourceOverlapInc,
+    PipelineQueries.qPiiScrub,
+    PipelineQueries.qSourceStats,
+    PipelineQueries.qCorpusRollup,
+    PipelineQueries.qLangId,
+    DedupQueries.qFingerprint,
+    DedupQueries.qDedupExact,
+    DedupQueries.qDedupPriority,
+    PipelineQueries.qDiversitySample,
+    VectorQueries.qKnnJoin,
+    VectorQueries.qKnnJoinIvf,
+    VectorQueries.qKnnJoinPlan,
+    VectorQueries.qLateInteraction,
+    VectorQueries.qLateInteractionPruned,
+    TextQueries.qBm25Idx,
+    IndexOpsQueries.qBm25Asof,
+    IndexOpsQueries.qAnnAsof,
+    LmQueries.qBpeMergesInc,
+    LmQueries.qBpeMergesLocal,
+    LmQueries.qBpeMergesUnicode,
+    LmQueries.qBpeVocabAsof,
+    LmQueries.qVocabDrift,
+    LmQueries.qVocabRefreshPlan,
+    TextQueries.qBm25Join,
+    TextQueries.qHybridJoin,
+    TextQueries.qHybridJoinDense,
+    DedupQueries.qDedupJaccard,
+    DedupQueries.qDedupJaccardPlan,
+    DedupQueries.qDedupContainment,
+    DedupQueries.qDedupContainmentLsh,
+    DedupQueries.qDedupContainmentInc,
+    DedupQueries.qChunkDedup,
+    DedupQueries.qSubstringSpans,
+    DedupQueries.qSubstringCoverage,
+    DedupQueries.qSubstringPassages,
+    DedupQueries.qSubstringCut,
+    DedupQueries.qSubstringInc,
+    DedupQueries.qDedupMinhash,
+    DedupQueries.qDedupSimhash,
+    DedupQueries.qNeardupCosine,
+    DedupQueries.qNeardupCosineIdx,
+    DedupQueries.qNeardupCosineSel,
+    DedupQueries.qNeardupCosineSelMp,
+    DedupQueries.qNeardupCosinePlan,
+    DedupQueries.qNeardupCosineBall,
+    DedupQueries.qDedupIncremental,
+    DedupQueries.qDedupIncrementalMp,
+    VectorQueries.qAnnIvf,
+    VectorQueries.qAnnPq,
+    VectorQueries.qAnnPqIdx,
+    VectorQueries.qAnnMrl,
+    VectorQueries.qAnnIvfPq,
+    VectorQueries.qAnnIvfIdx,
+    VectorQueries.qAnnIvfFiltered,
+    VectorQueries.qAnnIvfRewrite,
+    VectorQueries.qAnnPlan,
+    VectorQueries.qAnnPlanFiltered,
+    VectorQueries.qAnnPlanRange,
+    IndexOpsQueries.qFieldStats,
+    IndexOpsQueries.qHistSelectivity,
+    IndexOpsQueries.qHistQuantile,
+    VectorQueries.qAnnDepth,
+    TextQueries.qRerank,
+    TextQueries.qMmr,
+    TextQueries.qHardNegatives,
+    PipelineQueries.qQualityTiers,
+    PipelineQueries.qMixSources,
+    MultimodalQueries.qMultimodal,
+    MultimodalQueries.qMultimodalDecode,
+    MultimodalQueries.qMultimodalAudio,
+    MultimodalQueries.qMultimodalFrames,
+    MultimodalQueries.qMultimodalAvi,
+    MultimodalQueries.qMultimodalKnn,
+    RelationalQueries.qWindowAgg,
+    RelationalQueries.qAttribution,
+    RelationalQueries.qFunnel,
+    RelationalQueries.qFunnelGap,
+    RelationalQueries.qFunnelLatency,
+    RelationalQueries.qFunnelRepeat,
+    RelationalQueries.qFunnelReconcile,
+    RelationalQueries.qRetention,
+    RelationalQueries.qSessionize,
+    PipelineQueries.qEmbedCorpus,
+    RelationalQueries.qJsonExtract,
+    RelationalQueries.qJoinTopk,
+    LmQueries.qTopTerms,
+    PipelineQueries.qPackSequences,
+    PipelineQueries.qSampleStratified,
+    RelationalQueries.qRollup,
+    RelationalQueries.qSetOps,
+    PipelineQueries.qLabelCentroid,
+    RelationalQueries.qPivot,
+    RelationalQueries.qSketches,
+    RelationalQueries.qHeavyHitters,
+    IndexOpsQueries.qZorderBox,
+    IndexOpsQueries.qZorderBoxInc,
+    IndexOpsQueries.qHeavyHittersInc,
+    IndexOpsQueries.qDistinctUsersInc,
+    RelationalQueries.qJoinCardKmv,
+    IndexOpsQueries.qAnnIvfDeleted,
+    IndexOpsQueries.qBm25Deleted,
+    IndexOpsQueries.qErasureAudit,
+    IndexOpsQueries.qErasureWave,
+    IndexOpsQueries.qMaintenanceWave,
+    IndexOpsQueries.qQuantileSketch,
+    IndexOpsQueries.qQuantileBySource,
+    IndexOpsQueries.qAnnIvfSplit,
+    DedupQueries.qNeardupTextCosine,
+    PipelineQueries.qChunk,
+    PipelineQueries.qCleanText,
+    RelationalQueries.qAsofJoin,
+    RelationalQueries.qRangeJoin,
+    DedupQueries.qDedupComponents,
+    DedupQueries.qDedupComponentsInc,
+    DedupQueries.qDedupPipeline,
+    VectorQueries.qQuantKnn,
+    RelationalQueries.qRegionRevenue,
+    PipelineQueries.qQualityFilter,
+    PipelineQueries.qSplit,
+    PipelineQueries.qCorpusDiff,
+    PipelineQueries.qContamination,
+    PipelineQueries.qContaminationBloom,
+    PipelineQueries.qContaminationSemantic,
+    PipelineQueries.qContaminationSemanticIdx,
+    PipelineQueries.qContaminationSemanticPlan,
+    LmQueries.qBpePairs,
+    LmQueries.qBpeMerges,
+    LmQueries.qBpeTokenize,
+    PipelineQueries.qIntakePipeline,
+    DedupQueries.qDedupVectors,
   )
 
-  // ----------------------------------------------------------------- oracle
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ListMap(registry.map(q => q.name -> q.build): _*)
 
-  /** documents ⋈ embeddings as a DuckDB table expression (the searchable
-    * corpus — at sf0.1 embeddings ⊂ documents, so the join shrinks it). */
-  private val corpusSql =
-    "(SELECT d.*, e.embedding FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id)"
+  val oracleSql: Map[String, String] =
+    ListMap(registry.map(q => q.name -> q.oracleSql): _*)
 
-  /** The batch-retrieval query set shared by every batch retrieval query
-    * (q_bm25_join / q_hybrid_join / q_rerank / q_mmr / q_hard_negatives):
-    * every ~97th document's first 8 tokens as the query string. ONE
-    * definition, mirrored 1:1 by [[batchQueriesRel]] on the oracle side —
-    * edit both together or the hash gate fails. */
-  private def batchQueries(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .where(col("doc_id") % 97 === 0)
-      .select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(Text.tokens(col("text")), 1, 8)).as("qtext"))
-
-  /** DuckDB twin of [[batchQueries]]. */
-  private val batchQueriesRel =
-    s"""SELECT doc_id AS query_id,
-       |       array_to_string(list_slice(${Text.sqlTokens("text")}, 1, 8), ' ') AS qtext
-       |FROM documents WHERE doc_id % 97 = 0""".stripMargin
-
-  private val bm25DocsCtes =
-    TextSearch.oracleCtes("documents", "doc_id", "text", flagshipQueryText)
-  private val bm25CorpusCtes =
-    TextSearch.oracleCtes(corpusSql, "doc_id", "text", flagshipQueryText)
-
-  /** Pre-filtered vector branch of the hybrid oracle (top-5 by rounded
-    * Atlas-normalized cosine, tie-break id). */
-  private val vecBranchCte =
-    s"""vecb AS (
-       |  SELECT c.doc_id AS id,
-       |         round((1.0 + list_cosine_similarity(c.embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS vec_raw
-       |  FROM $corpusSql c WHERE c.lang = 'en'
-       |  ORDER BY vec_raw DESC, id ASC LIMIT 5
-       |)""".stripMargin
-
-  // ListMap for the same declaration-order stability as `queries`.
-  def oracleSql: Map[String, String] = ListMap(
-    "q_bm25" ->
-      s"""WITH $bm25DocsCtes
-         |SELECT id AS doc_id, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    // time travel: the oracle builds BM25 from scratch over exactly the
-    // waves at-or-below the horizon (A∪B = doc_id%3 ≠ 2) — a leaked
-    // wave-1 contribution to postings, df, or avgdl fails the hash
-    "q_bm25_asof" ->
-      s"""WITH ${TextSearch.oracleCtes(
-             "(SELECT * FROM documents WHERE doc_id % 3 <> 2)",
-             "doc_id", "text", flagshipQueryText)}
-         |SELECT id AS doc_id, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    // post-deletion: the oracle builds BM25 over the SURVIVING corpus
-    // from scratch — df/avgdl/postings subtraction must match it exactly
-    "q_bm25_deleted" ->
-      s"""WITH ${TextSearch.oracleCtes(
-             "(SELECT * FROM documents WHERE doc_id % 9 <> 0)",
-             "doc_id", "text", flagshipQueryText)}
-         |SELECT id AS doc_id, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    // the complete-regime contract: the sketch holds every surviving row,
-    // so the oracle recomputes the same rank-⌈p·n⌉ rule over the
-    // survivors (post-append, post-erasure) and values match exactly
-    "q_quantile_sketch" ->
-      """WITH ranked AS (
-        |  SELECT CAST(n_chars AS DOUBLE) AS val,
-        |         row_number() OVER (ORDER BY n_chars) AS rk
-        |  FROM documents WHERE doc_id % 9 <> 0
-        |), nn AS (SELECT count(*) AS c FROM documents WHERE doc_id % 9 <> 0),
-        |ps(p) AS (VALUES (CAST(0.1 AS DOUBLE)), (CAST(0.5 AS DOUBLE)),
-        |                 (CAST(0.9 AS DOUBLE)), (CAST(0.99 AS DOUBLE)))
-        |SELECT p, val FROM ps, nn, ranked
-        |WHERE rk = CAST(ceil(p * c) AS BIGINT)
-        |ORDER BY p""".stripMargin,
-    // per-group complete regime: the oracle recomputes the identical
-    // per-group rank rule over the survivors
-    "q_quantile_by_source" ->
-      """WITH ranked AS (
-        |  SELECT source, CAST(n_chars AS DOUBLE) AS val,
-        |         row_number() OVER (PARTITION BY source ORDER BY n_chars)
-        |           AS rk,
-        |         count(*) OVER (PARTITION BY source) AS c
-        |  FROM documents WHERE doc_id % 9 <> 0 AND source IS NOT NULL
-        |), ps(p) AS (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)))
-        |SELECT source, p, val FROM ps, ranked
-        |WHERE rk = CAST(ceil(p * c) AS BIGINT)
-        |ORDER BY source, p""".stripMargin,
-    // erasure certificate: erased_n is real corpus arithmetic; the zero
-    // residual is EARNED on the Spark side by probing each family's live
-    // tombstone-filtered loader — a half-applied wave or missed family
-    // yields a positive residual and fails the hash
-    "q_erasure_audit" ->
-      """SELECT * FROM (
-        |  SELECT 'bm25' AS family,
-        |         (SELECT count(*) FROM documents WHERE doc_id % 9 = 0)
-        |           AS erased_n,
-        |         CAST(0 AS BIGINT) AS residual
-        |  UNION ALL
-        |  SELECT 'ivf',
-        |         (SELECT count(*) FROM embeddings WHERE vec_id % 7 = 0),
-        |         CAST(0 AS BIGINT)
-        |) ORDER BY family""".stripMargin,
-    // the advisor must price the PERSISTED sample (Σ min(wave, k)) — the
-    // oracle recomputes that sum from the raw table and states the
-    // recommendation the amortization inequality forces
-    "q_maintenance_wave" ->
-      """WITH w AS (
-        |  SELECT doc_id % 3 AS wv, count(*) AS n FROM documents GROUP BY 1
-        |)
-        |SELECT 'quantile' AS family,
-        |       3 AS batches,
-        |       (SELECT sum(least(n, 50)) FROM w)::BIGINT AS total_rows,
-        |       true AS recommend,
-        |       false AS folded""".stripMargin,
-    // the engine's zeros must come out of the LIVE loaders after a real
-    // fleet-wide delete — the SQL states the certificate the wave must
-    // earn. The catalog spans BOTH id spaces: doc-keyed families plus
-    // the embedding-keyed ivf (vec_id ≡ doc_id, 1:1), erased in ONE wave
-    // the wave is the docs ⋈ embeddings join (both id spaces must carry
-    // their exact stored bytes), so the oracle counts the SAME join —
-    // at SFs where the two tables differ in row count (sf0.1: 5,000
-    // docs vs 2,000 embeddings) a documents-only count would overstate
-    // the wave
-    // the wave is the FULL doomed doc set (left join — the production
-    // shape; the audit's erased_n counts every requested id for every
-    // family, embedded or not, and residual 0 certifies each family
-    // holds none of them)
-    "q_erasure_wave" ->
-      """SELECT family, n AS erased_n, CAST(0 AS BIGINT) AS residual
-        |FROM (SELECT count(DISTINCT doc_id) AS n
-        |      FROM documents WHERE doc_id % 6 = 0),
-        |     (SELECT unnest(['bm25', 'gquantile', 'ivf', 'lm', 'lm3', 'quantile', 'wordcount']) AS family)
-        |ORDER BY family""".stripMargin,
-    // positional-index twin: same phrase, same corpus, same relation as
-    // q_phrase_find — only the PLAN differs (bucket probes, no scan)
-    "q_phrase_find_pos" ->
-      s"""WITH phrase AS (
-         |  SELECT list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 8) AS p
-         |  FROM documents WHERE doc_id = (SELECT min(doc_id) FROM documents)
-         |)
-         |SELECT id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhraseOccurrences("documents", "doc_id", "text",
-                  "phrase", 8)})
-         |ORDER BY doc_id, pos""".stripMargin,
-    // the screened twin: corpus = the indexed subset (index ≙ corpus),
-    // phrase from ITS min-id doc; the membership probe is plan-only
-    "q_phrase_find_idx" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0
-         |), phrase AS (
-         |  SELECT list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 8) AS p
-         |  FROM corpus WHERE doc_id = (SELECT min(doc_id) FROM corpus)
-         |)
-         |SELECT id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhraseOccurrences("corpus", "doc_id", "text",
-                  "phrase", 8)})
-         |ORDER BY doc_id, pos""".stripMargin,
-    // batch locate: per-phrase positional verify over the same phrase
-    // derivation as the Spark side (every 97th doc's first 8 tokens)
-    "q_phrase_find_join" ->
-      s"""SELECT phrase_id, id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhrasesOccurrences("documents", "doc_id",
-                  "text",
-                  s"""SELECT doc_id AS phrase_id,
-                     |       list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 8) AS p
-                     |FROM documents
-                     |WHERE doc_id % 97 = 0
-                     |  AND len(${graft.functions.Text.sqlTokens("text")}) >= 8""".stripMargin,
-                  8)})
-         |ORDER BY phrase_id, doc_id, pos""".stripMargin,
-    // the positional-index batch twin: same phrases, same corpus, same
-    // relation as q_phrase_find_join — only the PLAN differs (bucket
-    // probes + offset intersection, no corpus gram scan)
-    "q_phrase_find_join_pos" ->
-      s"""SELECT phrase_id, id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhrasesOccurrences("documents", "doc_id",
-                  "text",
-                  s"""SELECT doc_id AS phrase_id,
-                     |       list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 8) AS p
-                     |FROM documents
-                     |WHERE doc_id % 97 = 0
-                     |  AND len(${graft.functions.Text.sqlTokens("text")}) >= 8""".stripMargin,
-                  8)})
-         |ORDER BY phrase_id, doc_id, pos""".stripMargin,
-    // direct position-verify SQL (the hash prefilter is a plan
-    // optimization, not a semantic — see sqlPhraseOccurrences)
-    "q_phrase_find" ->
-      s"""WITH phrase AS (
-         |  SELECT list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 8) AS p
-         |  FROM documents WHERE doc_id = (SELECT min(doc_id) FROM documents)
-         |)
-         |SELECT id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhraseOccurrences("documents", "doc_id", "text",
-                  "phrase", 8)})
-         |ORDER BY doc_id, pos""".stripMargin,
-    // the planner-dispatched lookup resolves the same exact-occurrence
-    // semantics whichever path the cost table picks, so the scan-shaped
-    // SQL is a full oracle for the PLANNED execution
-    "q_phrase_plan" ->
-      s"""WITH phrase AS (
-         |  SELECT list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 10) AS p
-         |  FROM documents
-         |  WHERE doc_id = (SELECT min(doc_id) FROM documents WHERE doc_id % 3 = 1)
-         |)
-         |SELECT id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhraseOccurrences("documents", "doc_id", "text",
-                  "phrase", 8)})
-         |ORDER BY doc_id, pos""".stripMargin,
-    // the batch planner's receipt: whichever path the cost table picks,
-    // the relation is the brute per-position answer for the %89 batch
-    "q_phrase_join_plan" ->
-      s"""SELECT phrase_id, id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhrasesOccurrences("documents", "doc_id",
-                  "text",
-                  s"""SELECT doc_id AS phrase_id,
-                     |       list_slice(${graft.functions.Text.sqlTokens("text")}, 1, 8) AS p
-                     |FROM documents
-                     |WHERE doc_id % 89 = 0
-                     |  AND len(${graft.functions.Text.sqlTokens("text")}) >= 8""".stripMargin,
-                  8)})
-         |ORDER BY phrase_id, doc_id, pos""".stripMargin,
-    "q_fulltext_postfilter" ->
-      s"""WITH $bm25CorpusCtes
-         |SELECT b.id AS doc_id, b.score FROM bm25 b
-         |JOIN documents d ON b.id = d.doc_id
-         |WHERE d.lang = 'en'
-         |ORDER BY b.score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    "q_hybrid" ->
-      s"""WITH $bm25CorpusCtes, $vecBranchCte,
-         |fused AS (
-         |  SELECT coalesce(v.id, b.id) AS doc_id,
-         |         round(10.0 * coalesce(1.0 / (1.0 + exp(-v.vec_raw)), 0.0)
-         |               + coalesce(1.0 / (1.0 + exp(-b.score)), 0.0), 6) AS score,
-         |         round(1.0 / (1.0 + exp(-v.vec_raw)), 6) AS vec_norm,
-         |         v.vec_raw AS vec_raw,
-         |         round(1.0 / (1.0 + exp(-b.score)), 6) AS txt_norm,
-         |         b.score AS txt_raw
-         |  FROM vecb v FULL OUTER JOIN bm25 b ON v.id = b.id
-         |)
-         |SELECT f.doc_id, f.score, f.vec_norm, f.vec_raw, f.txt_norm, f.txt_raw
-         |FROM fused f JOIN documents d ON f.doc_id = d.doc_id
-         |WHERE d.lang = 'en'
-         |ORDER BY f.score DESC, f.doc_id ASC LIMIT 5""".stripMargin,
-    "q_hybrid_rrf" ->
-      s"""WITH $bm25CorpusCtes, $vecBranchCte,
-         |vrank AS (
-         |  SELECT id, row_number() OVER (ORDER BY vec_raw DESC, id ASC)::INTEGER AS vec_rank
-         |  FROM vecb
-         |), trank AS (
-         |  SELECT id, row_number() OVER (ORDER BY score DESC, id ASC)::INTEGER AS txt_rank
-         |  FROM bm25
-         |), fusedr AS (
-         |  SELECT coalesce(v.id, t.id) AS doc_id,
-         |         round(coalesce(1.0 / (60 + v.vec_rank), 0.0)
-         |               + coalesce(1.0 / (60 + t.txt_rank), 0.0), 6) AS score,
-         |         v.vec_rank, t.txt_rank
-         |  FROM vrank v FULL OUTER JOIN trank t ON v.id = t.id
-         |)
-         |SELECT f.doc_id, f.score, f.vec_rank, f.txt_rank
-         |FROM fusedr f JOIN documents d ON f.doc_id = d.doc_id
-         |WHERE d.lang = 'en'
-         |ORDER BY f.score DESC, f.doc_id ASC LIMIT 5""".stripMargin,
-    "q_flatten" ->
-      """SELECT o.o_orderkey, o.o_custkey, l.l_linenumber, l.l_partkey, l.l_quantity
-        |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |ORDER BY o.o_orderkey, l.l_linenumber, l.l_partkey, l.l_quantity, o.o_custkey""".stripMargin,
-    "q_vector_knn" ->
-      s"""WITH scored AS (
-         |  SELECT e.vec_id, d.text,
-         |         round((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
-         |  WHERE d.lang = 'en'
-         |)
-         |SELECT vec_id, text, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 5""".stripMargin,
-    "q_vector_knn_dot" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_dot_product(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 5""".stripMargin,
-    "q_vector_knn_euclidean" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round(1.0 / (1.0 + list_distance(embedding::DOUBLE[], $flagshipQueryVecSql)), 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 5""".stripMargin,
-    "q_distinct_sort" ->
-      "SELECT DISTINCT source FROM documents WHERE source IS NOT NULL ORDER BY source",
-    "q_text_stats" ->
-      s"""SELECT doc_id,
-         |       ${TextAnalysis.sqlWsTokenCount("text")} AS ws_tokens,
-         |       ${TextAnalysis.sqlBpeTokenCount("text")} AS bpe_tokens,
-         |       ${TextAnalysis.sqlQualityPpm("text")} AS quality_ppm
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // both alphabets over the SAME planted multilingual text: the frozen
-    // count drops every non-Latin token, the Unicode count keeps them,
-    // and last_tok pins Unicode lowercasing (Привет → привет) across
-    // engines
-    "q_text_unicode" ->
-      s"""SELECT doc_id,
-         |       len(${Text.sqlTokens("text")}) AS n_ascii,
-         |       len(${Text.sqlTokensUnicode("text")}) AS n_uni,
-         |       (${Text.sqlTokensUnicode("text")})[-1] AS last_tok
-         |FROM $multilingualDocsSql ORDER BY doc_id""".stripMargin,
-    "q_wordcounts_unicode" ->
-      s"""SELECT word, count(*) AS cnt
-         |FROM (SELECT unnest(${Text.sqlTokensUnicode("text")}) AS word
-         |      FROM $multilingualDocsSql)
-         |WHERE regexp_matches(word, '[^a-z0-9]')
-         |GROUP BY word ORDER BY word""".stripMargin,
-    // the full BM25 arithmetic rebuilt in SQL under the Unicode alphabet
-    // (same CTE builder as q_bm25, different tokenizer + corpus)
-    "q_bm25_unicode" ->
-      s"""WITH ${TextSearch.oracleCtes(multilingualDocsSql, "doc_id",
-             "text", uniQueryText, Text.UnicodeSplitRe)}
-         |SELECT id AS doc_id, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    // the multilingual decontamination gate: same shingle/hash algebra,
-    // Unicode alphabet — the planted non-Latin shingles must collide
-    "q_contamination_unicode" ->
-      s"""SELECT id AS doc_id, n_shingles, n_contaminated, contamination_ratio, contaminated
-         |FROM (${Contamination.sqlNgramOverlap(
-                  s"(SELECT * FROM $multilingualDocsSql m WHERE doc_id % 10 <> 0)",
-                  s"(SELECT * FROM $multilingualDocsSql m WHERE doc_id % 10 = 0)",
-                  "doc_id", "text", Text.UnicodeSplitRe)})
-         |ORDER BY doc_id""".stripMargin,
-    "q_substring_spans_unicode" ->
-      s"""SELECT id AS doc_id, span_start, span_end, n_grams FROM (
-         |${SubstringDedup.sqlDuplicatedSpans(multilingualDocsSql, "doc_id",
-             "text", splitRe = Text.UnicodeSplitRe)}
-         |) ORDER BY doc_id, span_start""".stripMargin,
-    "q_fingerprint_unicode" ->
-      s"""SELECT doc_id,
-         |       ${TextAnalysis.sqlFingerprintMin("text", Text.UnicodeSplitRe)} AS fp_min,
-         |       ${TextAnalysis.sqlFingerprintMax("text", Text.UnicodeSplitRe)} AS fp_max
-         |FROM $multilingualDocsSql ORDER BY doc_id""".stripMargin,
-    "q_repetition_unicode" ->
-      (CorpusAnalysis.sqlRepetitionStats(multilingualDocsSql, "doc_id",
-        "text", Text.UnicodeSplitRe) + "\nORDER BY id"),
-    "q_source_overlap_unicode" ->
-      (CorpusAnalysis.sqlSourceOverlap(
-        s"(SELECT m.doc_id, m.text, d.source FROM $multilingualDocsSql m JOIN documents d USING (doc_id))",
-        "text", "source", Text.UnicodeSplitRe) +
-        "\nORDER BY src_a, src_b"),
-    // NB: single-line subquery — sqlScrub stripMargins its template
-    // (the q_pii_scrub precedent)
-    "q_pii_scrub_unicode" ->
-      (PiiScrub.sqlScrub(
-        s"(SELECT doc_id, text || ' контакт user' || doc_id || " +
-          "'@example.com ип 10.0.0.' || (doc_id % 256) || " +
-          s"' реф' || (doc_id + 100000) AS text FROM $multilingualDocsSql m)",
-        "doc_id", "text") + "\nORDER BY id"),
-    // direct position-verify SQL under the Unicode alphabet (the
-    // q_phrase_find shape; DuckDB lower() must agree on Δ→δ)
-    "q_phrase_find_unicode" ->
-      s"""WITH phrase AS (
-         |  SELECT ${Text.sqlTokensUnicode("'ΔΞ7 你好世界'")} AS p
-         |)
-         |SELECT id AS doc_id, pos
-         |FROM (${TextSearch.sqlPhraseOccurrences(multilingualDocsSql,
-                  "doc_id", "text", "phrase", 2, Text.UnicodeSplitRe)})
-         |ORDER BY doc_id, pos""".stripMargin,
-    // full BM25 arithmetic over the BIGRAM-EXPANDED token stream: the
-    // oracle's tokenizer twin is Tokenizer.sql, so engine and oracle can
-    // only agree if both expand CJK runs identically
-    "q_bm25_cjk" ->
-      s"""WITH ${TextSearch.oracleCtes(multilingualDocsSql, "doc_id",
-             "text", cjkQueryText, CjkTok)}
-         |SELECT id AS doc_id, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    // quadratic Jaccard verify over bigram-expanded CJK shingles (the
-    // sqlJaccardPairs algebra under Tokenizer.sql; fixture is in-query)
-    "q_dedup_cjk" -> {
-      val cjkL = cjkWords.map(w => s"'$w'").mkString(", ")
-      val fx = s"(SELECT doc_id, ([$cjkL])[1 + CAST(doc_id % 3 AS INT)] " +
-        s"|| ' ' || ([$cjkL])[1 + CAST((doc_id + 1) % 3 AS INT)] AS text " +
-        "FROM documents WHERE doc_id < 30)"
-      val sh = TextAnalysis.sqlShinglesFromToks(CjkTok.sql("text"))
-      s"""WITH p AS (
-         |  SELECT id, ${Text.sqlHash60("sh")} AS h FROM (
-         |    SELECT doc_id AS id, unnest($sh) AS sh FROM $fx)
-         |), sizes AS (SELECT id, count(*) AS sz FROM p GROUP BY 1),
-         |inter AS (
-         |  SELECT a.id AS id1, b.id AS id2, count(*) AS inter
-         |  FROM p a JOIN p b ON a.h = b.h AND a.id < b.id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT id1, id2,
-         |       round(inter::DOUBLE / (s1.sz + s2.sz - inter), 6) AS jaccard
-         |FROM inter JOIN sizes s1 ON id1 = s1.id JOIN sizes s2 ON id2 = s2.id
-         |WHERE round(inter::DOUBLE / (s1.sz + s2.sz - inter), 6) >= 0.1
-         |ORDER BY id1, id2""".stripMargin
-    },
-    // composed chr(233) vs decomposed chr(769) planted explicitly; the
-    // NFC-normalizing tokenizer twin must fold them to one word
-    "q_nfc_unify" -> {
-      val tokSql = Text.Tokenizer(Text.UnicodeSplitRe,
-        nfcNormalize = true).sql("text")
-      s"""SELECT word, count(*) AS cnt
-         |FROM (SELECT unnest($tokSql) AS word
-         |      FROM (SELECT doc_id, text || CASE WHEN doc_id % 2 = 0 THEN ' caf' || chr(233) ELSE ' cafe' || chr(769) END AS text FROM documents))
-         |WHERE regexp_matches(word, '[^a-z0-9]')
-         |GROUP BY word ORDER BY word""".stripMargin
-    },
-    "q_repetition" ->
-      (CorpusAnalysis.sqlRepetitionStats("documents", "doc_id", "text") +
-        "\nORDER BY id"),
-    "q_vocab_stats" ->
-      CorpusAnalysis.sqlVocabStats("documents", "text"),
-    "q_lm_score" ->
-      s"""WITH ${LanguageModel.sqlSelfScoreCtes("documents", "doc_id", "text")}
-         |SELECT id AS doc_id, lm_nlp, ppl, n_bigrams
-         |FROM lmscore ORDER BY doc_id""".stripMargin,
-    // the persisted fold must equal a fresh train over the committed
-    // corpus — SAME self-score arithmetic as q_lm_score
-    "q_lm_score_inc" ->
-      s"""WITH ${LanguageModel.sqlSelfScoreCtes("documents", "doc_id", "text")}
-         |SELECT id AS doc_id, lm_nlp, ppl, n_bigrams
-         |FROM lmscore ORDER BY doc_id""".stripMargin,
-    // LM as of the base wave scoring the FULL corpus: the oracle trains
-    // on exactly the horizon subset and LEFT-join-scores everything, so
-    // the unseen-bigram smoothing path is hash-checked too
-    "q_lm_score_asof" ->
-      s"""WITH ${LanguageModel.sqlScoreCtes(
-             "(SELECT * FROM documents WHERE doc_id % 3 = 0)",
-             "documents", "doc_id", "text")}
-         |SELECT id AS doc_id, lm_nlp, ppl, n_bigrams
-         |FROM lmscore ORDER BY doc_id""".stripMargin,
-    // the order-3 stupid-backoff gate: identical CASE backoff over the
-    // identical exact counts — every branch hash-checked
-    "q_lm3_score" ->
-      s"""WITH ${LanguageModel.sqlScore3Ctes("documents", "documents",
-             "doc_id", "text")}
-         |SELECT id AS doc_id, lm3_nlp, ppl3, n_trigrams
-         |FROM lm3score ORDER BY doc_id""".stripMargin,
-    // the persisted fold must equal a fresh order-3 train — same oracle
-    "q_lm3_score_inc" ->
-      s"""WITH ${LanguageModel.sqlScore3Ctes("documents", "documents",
-             "doc_id", "text")}
-         |SELECT id AS doc_id, lm3_nlp, ppl3, n_trigrams
-         |FROM lm3score ORDER BY doc_id""".stripMargin,
-    // script counts via RE2's \p{Xxx} script property (the Java-regex
-    // \p{IsXxx} twin); the majority CASE is the identical declared
-    // tie-break on both engines
-    "q_script_profile" -> {
-      val cyrL = cyrWords.map(w => s"'$w'").mkString(", ")
-      val cjkL = cjkWords.map(w => s"'$w'").mkString(", ")
-      val planted = Set("latin", "cyrillic", "han", "greek")
-      val counts = TextAnalysis.Scripts
-        .filter { case (name, _, _) => planted(name) }
-        .map { case (name, _, re2) =>
-          s"${TextAnalysis.sqlScriptCount("tk", re2)} AS n_$name"
-        }.mkString(",\n       ")
-      s"""WITH aug AS (
-         |  SELECT doc_id,
-         |         text || ' ' ||
-         |         repeat(([$cyrL])[1 + CAST(doc_id % 4 AS INT)] || ' ',
-         |                1 + CAST(doc_id % 3 AS INT)) ||
-         |         repeat(([$cjkL])[1 + CAST(doc_id % 3 AS INT)] || ' ',
-         |                1 + CAST(doc_id % 2 AS INT)) ||
-         |         CASE WHEN doc_id % 2 = 0 THEN ' δξα' ELSE '' END AS text
-         |  FROM documents
-         |), toks AS (
-         |  SELECT doc_id, ${Text.sqlTokensUnicode("text")} AS tk FROM aug
-         |), prof AS (
-         |  SELECT doc_id,
-         |       $counts
-         |  FROM toks
-         |)
-         |SELECT *,
-         |       CASE WHEN n_han >= n_cyrillic AND n_han >= n_greek THEN 'han'
-         |            WHEN n_cyrillic >= n_greek THEN 'cyrillic'
-         |            ELSE 'greek' END AS main_nonlatin
-         |FROM prof ORDER BY doc_id""".stripMargin
-    },
-    // the multilingual order-3 gate: same CASE backoff, Unicode alphabet
-    "q_lm3_score_unicode" ->
-      s"""WITH ${LanguageModel.sqlScore3Ctes(multilingualDocsSql,
-             multilingualDocsSql, "doc_id", "text", Text.UnicodeSplitRe)}
-         |SELECT id AS doc_id, lm3_nlp, ppl3, n_trigrams
-         |FROM lm3score ORDER BY doc_id""".stripMargin,
-    // frozen order-3 LM at the base horizon scoring the moved-on corpus
-    "q_lm3_score_asof" ->
-      s"""WITH ${LanguageModel.sqlScore3Ctes(
-             "(SELECT * FROM documents WHERE doc_id % 3 = 0)",
-             "documents", "doc_id", "text")}
-         |SELECT id AS doc_id, lm3_nlp, ppl3, n_trigrams
-         |FROM lm3score ORDER BY doc_id""".stripMargin,
-    "q_dup_ngram_profile" ->
-      (CorpusAnalysis.sqlDupNgramProfile("documents", "doc_id", "text") +
-        "\nORDER BY id"),
-    "q_source_overlap" ->
-      (CorpusAnalysis.sqlSourceOverlap("documents", "text", "source") +
-        "\nORDER BY src_a, src_b"),
-    // the whole KMV pair-matrix estimator replicated from scratch: same
-    // frozen hash, per-source k-min sets, per-pair union-k-min +
-    // membership counts, same estimate/intersection arithmetic order as
-    // Sketches.estimate / Sketches.kmvIntersection — both the complete
-    // exact branch and the estimator branch hash-checked
-    "q_source_overlap_inc" ->
-      s"""WITH p AS (
-         |  SELECT DISTINCT src, ${graft.functions.Text.sqlHash60("sh")} AS h FROM (
-         |    SELECT source AS src, unnest(${graft.text.TextAnalysis.sqlShingles("text")}) AS sh
-         |    FROM documents WHERE source IS NOT NULL)
-         |), mins AS (
-         |  SELECT src, h FROM (
-         |    SELECT src, h, row_number() OVER (PARTITION BY src ORDER BY h) AS rk
-         |    FROM p) WHERE rk <= 64
-         |), st AS (
-         |  SELECT src, count(*) AS n, max(h) AS mx FROM mins GROUP BY 1
-         |), pr AS (
-         |  SELECT a.src AS src_a, b.src AS src_b, a.n AS ca, a.mx AS mxa,
-         |         b.n AS cb, b.mx AS mxb
-         |  FROM st a JOIN st b ON a.src < b.src
-         |), ph AS (
-         |  SELECT DISTINCT pr.src_a, pr.src_b, m.h
-         |  FROM pr JOIN mins m ON m.src = pr.src_a OR m.src = pr.src_b
-         |), unkk AS (
-         |  SELECT src_a, src_b, h FROM (
-         |    SELECT src_a, src_b, h,
-         |           row_number() OVER (PARTITION BY src_a, src_b ORDER BY h) AS rk
-         |    FROM ph) WHERE rk <= 64
-         |), um AS (
-         |  SELECT src_a, src_b, max(h) AS umx FROM unkk GROUP BY 1, 2
-         |), mt AS (
-         |  SELECT u.src_a, u.src_b, count(*) AS m
-         |  FROM unkk u
-         |  JOIN mins a ON a.src = u.src_a AND a.h = u.h
-         |  JOIN mins b ON b.src = u.src_b AND b.h = u.h
-         |  GROUP BY 1, 2
-         |), xab AS (
-         |  SELECT a.src AS src_a, b.src AS src_b, count(*) AS m
-         |  FROM mins a JOIN mins b ON a.h = b.h AND a.src < b.src
-         |  GROUP BY 1, 2
-         |), calc AS (
-         |  SELECT pr.src_a, pr.src_b,
-         |    CASE WHEN pr.ca < 64 THEN pr.ca
-         |         ELSE floor(63::DOUBLE * 1152921504606846976.0 / pr.mxa::DOUBLE)::BIGINT END AS n_a,
-         |    CASE WHEN pr.cb < 64 THEN pr.cb
-         |         ELSE floor(63::DOUBLE * 1152921504606846976.0 / pr.mxb::DOUBLE)::BIGINT END AS n_b,
-         |    CASE WHEN pr.ca < 64 AND pr.cb < 64 THEN coalesce(xab.m, 0)
-         |         ELSE floor(coalesce(mt.m, 0)::DOUBLE * (63::DOUBLE * 1152921504606846976.0 / um.umx::DOUBLE) / 64::DOUBLE)::BIGINT
-         |    END AS inter
-         |  FROM pr
-         |  JOIN um USING (src_a, src_b)
-         |  LEFT JOIN mt USING (src_a, src_b)
-         |  LEFT JOIN xab USING (src_a, src_b)
-         |)
-         |SELECT src_a, src_b, inter, n_a, n_b,
-         |  CASE WHEN n_a + n_b - inter <= 0 THEN 0.0
-         |       ELSE round(inter::DOUBLE / (n_a + n_b - inter), 6) END AS jaccard,
-         |  CASE WHEN n_a <= 0 THEN 0.0
-         |       ELSE round(inter::DOUBLE / n_a, 6) END AS cont_a,
-         |  CASE WHEN n_b <= 0 THEN 0.0
-         |       ELSE round(inter::DOUBLE / n_b, 6) END AS cont_b
-         |FROM calc
-         |ORDER BY src_a, src_b""".stripMargin,
-    // direct groupBy SQL: the salted two-phase plan must produce the
-    // identical relation (that equivalence is the operator's contract)
-    "q_source_stats" ->
-      """SELECT source, sum(n_chars)::BIGINT AS sum_n_chars, count(*)::BIGINT AS n
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q_corpus_rollup" ->
-      """SELECT source, lang,
-        |       GROUPING(source)::INT AS g_source, GROUPING(lang)::INT AS g_lang,
-        |       count(*) AS n_docs, round(avg(n_chars), 6) AS avg_chars
-        |FROM documents GROUP BY ROLLUP (source, lang)
-        |ORDER BY g_source, g_lang, source NULLS FIRST, lang NULLS FIRST""".stripMargin,
-    // NB: single-line subquery — sqlScrub stripMargins its interpolated
-    // template, which would eat a leading `||`'s first pipe
-    "q_pii_scrub" ->
-      (PiiScrub.sqlScrub(
-        "(SELECT doc_id, text || ' contact user' || doc_id || " +
-          "'@example.com call +14155550' || (doc_id % 100) || " +
-          "' ip 10.0.0.' || (doc_id % 256) || ' ref ' || (doc_id + 100000) " +
-          "AS text FROM documents)",
-        "doc_id", "text") + "\nORDER BY id"),
-    "q_sketches" ->
-      s"""WITH kmv AS (
-         |${Sketches.sqlKmvDistinctSelect("events", "event_type", Text.sqlHash60("user_id::VARCHAR"), Sketches.DefaultK, "kmv_users")}
-         |), qq AS (
-         |${Sketches.sqlQuantilesDiscSelect("events", "event_type", "value", Seq(50, 95))}
-         |)
-         |SELECT kmv.event_type, kmv_users, p50, p95
-         |FROM kmv JOIN qq USING (event_type)
-         |ORDER BY event_type""".stripMargin,
-    // brute token groupBy-HAVING — a FULL oracle for the MG screen+verify
-    // (the screen's recall is the mergeable-summaries theorem, so the two
-    // relations are definitionally identical)
-    "q_heavy_hitters" ->
-      (Sketches.sqlHeavyHittersSelect(
-        s"SELECT unnest(${Text.sqlTokens("text")}) AS term FROM documents",
-        "term", 30) + "\nORDER BY term"),
-    // the batch-accreted summary's report is definitionally the same
-    // HAVING relation (MG merge retains every > n/32 item, the recount
-    // restores exact counts) — only the threshold differs from the
-    // single-pass q_heavy_hitters receipt
-    "q_heavy_hitters_inc" ->
-      (Sketches.sqlHeavyHittersSelect(
-        s"SELECT unnest(${Text.sqlTokens("text")}) AS term FROM documents",
-        "term", 32) + "\nORDER BY term"),
-    // the KMV fold theorem: the k smallest distinct hashes of the union
-    // equal the global k smallest, so the single-pass estimator over the
-    // same frozen md5-prefix hash reproduces the batch-merged estimate
-    // bit-for-bit (identical IEEE division, identical floor)
-    "q_distinct_users_inc" ->
-      s"""WITH mins AS (
-         |  SELECT h FROM (
-         |    SELECT DISTINCT ${Text.sqlHash60("user_id::VARCHAR")} AS h
-         |    FROM events WHERE user_id IS NOT NULL)
-         |  ORDER BY h LIMIT 64
-         |)
-         |SELECT CASE WHEN (SELECT count(*) FROM mins) < 64
-         |            THEN (SELECT count(*) FROM mins)
-         |            ELSE floor(63::DOUBLE * 1152921504606846976.0 / (SELECT max(h) FROM mins)::DOUBLE)::BIGINT
-         |       END AS kmv_users""".stripMargin,
-    // the whole Beyer et al. intersection estimator replicated: same
-    // frozen hash, same k-min union, same membership counts, same IEEE
-    // arithmetic order — both the complete-sets exact branch and the
-    // K-based estimator branch are hash-checked
-    "q_join_card_kmv" ->
-      s"""WITH ma AS (
-         |  SELECT h FROM (SELECT DISTINCT ${Text.sqlHash60("user_id::VARCHAR")} AS h
-         |                 FROM events WHERE event_type = 'click' AND user_id IS NOT NULL)
-         |  ORDER BY h LIMIT 64
-         |), mb AS (
-         |  SELECT h FROM (SELECT DISTINCT ${Text.sqlHash60("user_id::VARCHAR")} AS h
-         |                 FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL)
-         |  ORDER BY h LIMIT 64
-         |), un AS (
-         |  SELECT h FROM (SELECT DISTINCT h FROM (SELECT h FROM ma UNION ALL SELECT h FROM mb))
-         |  ORDER BY h LIMIT 64
-         |), ca AS (SELECT count(*) AS n, max(h) AS mx FROM ma),
-         |   cb AS (SELECT count(*) AS n, max(h) AS mx FROM mb),
-         |   cu AS (SELECT max(h) AS mx FROM un),
-         |   mt AS (SELECT count(*) AS m FROM un
-         |          WHERE h IN (SELECT h FROM ma) AND h IN (SELECT h FROM mb)),
-         |   xab AS (SELECT count(*) AS m FROM ma WHERE h IN (SELECT h FROM mb))
-         |SELECT
-         |  CASE WHEN ca.n < 64 THEN ca.n
-         |       ELSE floor(63::DOUBLE * 1152921504606846976.0 / ca.mx::DOUBLE)::BIGINT END AS a_distinct,
-         |  CASE WHEN cb.n < 64 THEN cb.n
-         |       ELSE floor(63::DOUBLE * 1152921504606846976.0 / cb.mx::DOUBLE)::BIGINT END AS b_distinct,
-         |  CASE WHEN ca.n < 64 AND cb.n < 64 THEN xab.m
-         |       ELSE floor(mt.m::DOUBLE * (63::DOUBLE * 1152921504606846976.0 / cu.mx::DOUBLE) / 64::DOUBLE)::BIGINT
-         |  END AS overlap_est
-         |FROM ca, cb, cu, mt, xab""".stripMargin,
-    // recomputes each in-box row's z-bucket with the identical
-    // integer-division cells + shift-or-mask Morton interleave (the
-    // ZOrder sql* twins) — hash-matching the layout arithmetic itself
-    "q_zorder_box" ->
-      s"""WITH dom AS (
-         |  SELECT min(l_partkey)::BIGINT AS xlo, max(l_partkey)::BIGINT AS xhi,
-         |         min(l_suppkey)::BIGINT AS ylo, max(l_suppkey)::BIGINT AS yhi
-         |  FROM lineitem
-         |), sel AS (
-         |  SELECT ${ZOrder.sqlCellExpr("l.l_partkey", "d.xlo", "d.xhi", 3)} AS cx,
-         |         ${ZOrder.sqlCellExpr("l.l_suppkey", "d.ylo", "d.yhi", 3)} AS cy,
-         |         l.l_quantity
-         |  FROM lineitem l, dom d
-         |  WHERE l.l_partkey BETWEEN d.xlo AND d.xlo + (d.xhi - d.xlo) // 10
-         |    AND l.l_suppkey BETWEEN d.ylo AND d.ylo + (d.yhi - d.ylo) // 4
-         |)
-         |SELECT ${ZOrder.sqlZValue("cx", "cy")} AS zb,
-         |       count(*) AS n, round(sum(l_quantity), 4) AS sum_qty
-         |FROM sel GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the INCREMENTAL layout's lifecycle receipt: the oracle never sees
-    // base/tail/marks — it filters and re-buckets the RAW table, so any
-    // row the base∪committed-tail union lost or double-read fails the hash
-    "q_zorder_box_inc" ->
-      s"""WITH dom AS (
-         |  SELECT min(l_partkey)::BIGINT AS xlo, max(l_partkey)::BIGINT AS xhi,
-         |         min(l_suppkey)::BIGINT AS ylo, max(l_suppkey)::BIGINT AS yhi
-         |  FROM lineitem
-         |), sel AS (
-         |  SELECT ${ZOrder.sqlCellExpr("l.l_partkey", "d.xlo", "d.xhi", 3)} AS cx,
-         |         ${ZOrder.sqlCellExpr("l.l_suppkey", "d.ylo", "d.yhi", 3)} AS cy,
-         |         l.l_quantity
-         |  FROM lineitem l, dom d
-         |  WHERE l.l_partkey BETWEEN d.xlo + (d.xhi - d.xlo) // 3
-         |                        AND d.xlo + (d.xhi - d.xlo) // 2
-         |    AND l.l_suppkey BETWEEN d.ylo + (d.yhi - d.ylo) // 2 AND d.yhi
-         |)
-         |SELECT ${ZOrder.sqlZValue("cx", "cy")} AS zb,
-         |       count(*) AS n, round(sum(l_quantity), 4) AS sum_qty
-         |FROM sel GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_langid" ->
-      s"""SELECT doc_id,
-         |       ${TextAnalysis.sqlLangId("text")} AS lang_pred,
-         |       ${TextAnalysis.sqlLangScore("text", "en")} AS en_score
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_fingerprint" ->
-      s"""SELECT doc_id,
-         |       ${TextAnalysis.sqlFingerprintMin("text")} AS fp_min,
-         |       ${TextAnalysis.sqlFingerprintMax("text")} AS fp_max
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_ann_ivf" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // time travel: exact kNN over exactly the waves at-or-below the
-    // horizon (A∪B = vec_id%3 ≠ 2)
-    "q_ann_asof" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings WHERE vec_id % 3 <> 2
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // post-split: the corpus did not change, only the physical layout —
-    // the exact-kNN oracle is identical to q_ann_ivf's
-    "q_ann_ivf_split" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // post-deletion: the oracle ranks only the SURVIVING corpus — a
-    // tombstoned row surfacing anywhere in the routed plan fails the hash
-    "q_ann_ivf_deleted" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings WHERE vec_id % 7 <> 0
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // the pre-filter prunes BEFORE top-k (Atlas $vectorSearch.filter
-    // placement), so the oracle filters before ranking too
-    "q_ann_ivf_filtered" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings WHERE label = 3
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    "q_rerank" ->
-      s"""WITH cand AS (
-         |${TextSearch.sqlBm25Join("documents", "doc_id", "text", batchQueriesRel, 10)}
-         |), q AS (
-         |$batchQueriesRel
-         |), pair AS (
-         |  SELECT c.query_id, c.id, q.qtext, d.text
-         |  FROM cand c JOIN q USING (query_id) JOIN documents d ON d.doc_id = c.id
-         |), scored AS (
-         |  SELECT query_id, id, ${Rerank.sqlOverlapF1("qtext", "text")} AS rr_score
-         |  FROM pair
-         |), ranked AS (
-         |  SELECT query_id, id AS doc_id, rr_score,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY rr_score DESC, id ASC)::INTEGER AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, doc_id, rr_score, rank FROM ranked WHERE rank <= 3
-         |ORDER BY query_id, rank""".stripMargin,
-    "q_mix_sources" ->
-      (Curation.sqlMixSources("documents", "doc_id", "source", "text", 300) +
-        "\nORDER BY source"),
-    "q_quality_tiers" ->
-      (Curation.sqlQualityTiers("documents", "doc_id", "text", "lang",
-        tiers = 4, shards = 8)
-        .replace("SELECT id,", "SELECT id AS doc_id,") +
-        "\nORDER BY doc_id"),
-    "q_hard_negatives" ->
-      (Negatives.sqlMine(
-        candRel = s"""
-          |SELECT query_id, id, score FROM (
-          |${TextSearch.sqlBm25Join("documents", "doc_id", "text", batchQueriesRel, 10)}
-          |)""".stripMargin,
-        posRel =
-          "SELECT doc_id AS query_id, doc_id AS pos_id FROM documents WHERE doc_id % 97 = 0",
-        embRel = EmbedJob.sqlEmbedRelational("documents", "doc_id", "text"),
-        nearDupThr = 0.8, n = 3) +
-        "\nORDER BY query_id, rank"),
-    // same unrolled greedy rounds as Mmr.mmrSelect; __sims may reference
-    // __cand because it is declared after it in sqlMmrSelect's WITH list
-    "q_mmr" ->
-      s"""SELECT query_id, id AS doc_id, score, rank FROM (
-         |${Mmr.sqlMmrSelect(
-            candRel = s"""
-              |SELECT query_id, id, score FROM (
-              |${TextSearch.sqlBm25Join("documents", "doc_id", "text", batchQueriesRel, 10)}
-              |)""".stripMargin,
-            simsRel = s"""
-              |WITH cemb AS (
-              |${EmbedJob.sqlEmbedRelational("documents", "doc_id", "text")}
-              |)
-              |SELECT a.query_id, a.id AS id1, b.id AS id2,
-              |       round(sum(e1.val * e2.val), 6) AS sim
-              |FROM __cand a JOIN __cand b
-              |  ON a.query_id = b.query_id AND a.id <> b.id
-              |JOIN cemb e1 ON e1.id = a.id
-              |JOIN cemb e2 ON e2.id = b.id AND e2.dim = e1.dim
-              |GROUP BY 1, 2, 3""".stripMargin,
-            k = 3, lambda = 0.7)}
-         |)
-         |ORDER BY query_id, rank""".stripMargin,
-    "q_ann_pq" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // valid because the planner-dispatched routed plan self-verifies
-    // routed == exact on every run (see qAnnPlan scaladoc)
-    "q_ann_plan" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // the measurement instrument re-derived independently: exact top-5
-    // membership by windowed (score DESC, id ASC), coarse rank = count of
-    // rows at-or-ahead by the identical MRL (prefix score, zero-guarded,
-    // rounded) key — the deepest member rank per query IS the covering
-    // depth the sidecars persist
-    "q_ann_depth" ->
-      s"""WITH q AS (
-         |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings
-         |  WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 3)
-         |), scored AS (
-         |  SELECT q.q_id, e.vec_id AS id,
-         |         round((1.0 + list_cosine_similarity(q.qv, e.embedding::DOUBLE[])) / 2.0, 6) AS exact,
-         |         CASE WHEN list_inner_product((e.embedding::DOUBLE[])[1:$MrlPrefixDims], (e.embedding::DOUBLE[])[1:$MrlPrefixDims]) > 0
-         |              THEN round((1.0 + list_cosine_similarity(q.qv[1:$MrlPrefixDims], (e.embedding::DOUBLE[])[1:$MrlPrefixDims])) / 2.0, 6)
-         |              ELSE 0.5 END AS coarse
-         |  FROM q, embeddings e
-         |), members AS (
-         |  SELECT q_id, id, coarse FROM (
-         |    SELECT q_id, id, coarse,
-         |           row_number() OVER (PARTITION BY q_id ORDER BY exact DESC, id ASC) AS r
-         |    FROM scored)
-         |  WHERE r <= 5
-         |), ranks AS (
-         |  SELECT m.q_id, m.id, count(*) AS rnk
-         |  FROM members m JOIN scored s ON s.q_id = m.q_id
-         |   AND (s.coarse > m.coarse OR (s.coarse = m.coarse AND s.id <= m.id))
-         |  GROUP BY m.q_id, m.id
-         |)
-         |SELECT q_id, max(rnk) AS depth FROM ranks GROUP BY q_id
-         |ORDER BY q_id""".stripMargin,
-    // valid because the planner provably picks the filtered exact scan
-    // (path require in qAnnPlanFiltered) — filter BEFORE top-k, the
-    // q_ann_ivf_filtered placement
-    "q_ann_plan_filtered" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings WHERE label = 3
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // executed plan is exact over the range-filtered join (the planner
-    // require pins it), so the filtered exact-kNN SQL is a full oracle
-    "q_ann_plan_range" ->
-      s"""WITH scored AS (
-         |  SELECT e.vec_id,
-         |         round((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
-         |  WHERE d.n_chars >= 240 AND d.n_chars < 320
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // the estimator's exact regime (bucket-aligned range = full buckets,
-    // no interpolation): the catalog-derived selectivity equals the true
-    // fraction an independent engine counts from the raw table
-    "q_hist_selectivity" ->
-      """SELECT 'n_chars' AS field, 240 AS lo, 320 AS hi,
-        |       round(CAST(count(*) FILTER (WHERE n_chars >= 240 AND n_chars < 320) AS DOUBLE)
-        |             / count(*), 6) AS sel
-        |FROM documents""".stripMargin,
-    // the strongest quantile check: find the TRUE rank-⌈p·n⌉ value by
-    // sorting the raw table, bucket it with the identical integer
-    // division, and hash-match the catalog-derived bracket
-    "q_hist_quantile" ->
-      Seq(0.25, 0.5, 0.9).map { p =>
-        s"""SELECT $p::DOUBLE AS p,
-           |       (v::BIGINT // 40) * 40 AS lo,
-           |       ((v::BIGINT // 40) + 1) * 40 AS hi
-           |FROM (
-           |  SELECT n_chars AS v FROM documents ORDER BY n_chars
-           |  LIMIT 1 OFFSET (CAST(ceil($p * (SELECT count(*) FROM documents)) AS BIGINT) - 1)
-           |)""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY p"),
-    // the catalog's committed-batch sums re-derived as plain GROUP BYs —
-    // the relation plan-time selectivity lookups read, independently
-    // hash-verified
-    "q_field_stats" ->
-      """SELECT field, value, cnt FROM (
-        |  SELECT 'label' AS field, CAST(label AS VARCHAR) AS value,
-        |         count(*) AS cnt
-        |  FROM embeddings GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 'lang' AS field, lang AS value, count(*) AS cnt
-        |  FROM documents GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 'source' AS field, source AS value, count(*) AS cnt
-        |  FROM documents GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 'event_type' AS field, event_type AS value,
-        |         count(*) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 'n_chars' AS field,
-        |         CAST(CASE WHEN n_chars < 0 THEN -1
-        |                   WHEN n_chars >= 640 THEN 16
-        |                   ELSE n_chars // 40 END AS VARCHAR) AS value,
-        |         count(*) AS cnt
-        |  FROM documents GROUP BY 1, 2
-        |)
-        |ORDER BY field, value""".stripMargin,
-    // valid at the sub-exhaustive overfetch because the query self-verifies
-    // routed == exact on every run (see qAnnPqIdx scaladoc)
-    "q_ann_pq_idx" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // valid at the sub-exhaustive prefix overfetch because the query
-    // self-verifies routed == exact on every run (see qAnnMrl scaladoc)
-    "q_ann_mrl" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    "q_ann_ivfpq" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    // valid for the sub-exhaustive probe because the query self-verifies
-    // routed == exact on every run (see qAnnIvfIdx scaladoc)
-    "q_ann_ivf_idx" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    "q_ann_ivf_rewrite" ->
-      s"""WITH scored AS (
-         |  SELECT vec_id,
-         |         round((1.0 + list_cosine_similarity(embedding::DOUBLE[], $flagshipQueryVecSql)) / 2.0, 6) AS score
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-    "q_label_centroid" ->
-      """SELECT label, (i - 1)::INTEGER AS dim, round(avg(embedding[i]::DOUBLE), 6) AS centroid
-        |FROM embeddings CROSS JOIN generate_series(1, 64) AS t(i)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_pivot" ->
-      """SELECT user_id % 10 AS decile,
-        |       count(*) FILTER (event_type = 'click') AS "click",
-        |       count(*) FILTER (event_type = 'error') AS "error",
-        |       count(*) FILTER (event_type = 'purchase') AS "purchase",
-        |       count(*) FILTER (event_type = 'signup') AS "signup",
-        |       count(*) FILTER (event_type = 'view') AS "view"
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 4) AS sum_qty, count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q_setops" ->
-      """WITH building AS (
-        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        |), has_open AS (
-        |  SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'O'
-        |), ex AS (
-        |  SELECT DISTINCT c_custkey, 'building_no_open' AS tag FROM (
-        |    SELECT c_custkey FROM building EXCEPT ALL SELECT DISTINCT c_custkey FROM has_open)
-        |), inter AS (
-        |  SELECT c_custkey, 'building_open' AS tag FROM (
-        |    SELECT c_custkey FROM building INTERSECT SELECT c_custkey FROM has_open)
-        |)
-        |SELECT * FROM ex UNION ALL SELECT * FROM inter
-        |ORDER BY tag, c_custkey""".stripMargin,
-    "q_range_join" ->
-      """SELECT a.user_id, a.event_id AS id1, b.event_id AS id2,
-        |       epoch_us(b.ts::TIMESTAMP) - epoch_us(a.ts::TIMESTAMP) AS gap_us
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        | AND abs(epoch_us(a.ts::TIMESTAMP) - epoch_us(b.ts::TIMESTAMP)) <= 60000000
-        |ORDER BY id1, id2""".stripMargin,
-    "q_asof_join" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, ts::TIMESTAMP AS ts FROM events
-        |  WHERE event_type = 'purchase'
-        |), c AS (
-        |  SELECT user_id, ts::TIMESTAMP AS click_ts, event_id AS click_id, value
-        |  FROM events WHERE event_type = 'click'
-        |)
-        |SELECT p.event_id, p.user_id, p.ts,
-        |       latest.click_ts AS asof_click_ts,
-        |       latest.click_id AS asof_click_id,
-        |       latest.value AS asof_value
-        |FROM p LEFT JOIN LATERAL (
-        |  SELECT * FROM c
-        |  WHERE c.user_id = p.user_id AND c.click_ts <= p.ts
-        |  ORDER BY c.click_ts DESC, c.click_id DESC LIMIT 1
-        |) latest ON true
-        |ORDER BY p.event_id""".stripMargin,
-    "q_chunk" ->
-      (Curation.sqlChunkDocuments("documents", "doc_id", "text", 200, 40)
-        .replace("SELECT id, i::INTEGER AS chunk_idx",
-          "SELECT id AS doc_id, i::INTEGER AS chunk_idx") +
-        "\nORDER BY doc_id, chunk_idx"),
-    "q_clean_text" ->
-      s"""SELECT doc_id, ${Curation.sqlCleanText("text")} AS clean_text
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_sample_stratified" ->
-      (Curation.sqlStratifiedSample("documents", "lang", "doc_id",
-        SampleRates, SampleDefault) + "\nORDER BY doc_id"),
-    "q_top_terms" ->
-      (Curation.sqlTopTerms("documents", "doc_id", "text", 3)
-        .replace("SELECT id, term, tfidf, rank FROM ranked",
-          "SELECT id AS doc_id, term, tfidf, rank FROM ranked") +
-        "\nORDER BY doc_id, rank"),
-    "q_pack_sequences" ->
-      (Curation.sqlPackSequences("documents", "source", "doc_id", "text", 512)
-        .replace("SELECT \"group\", id, n_tokens,\n       (cum_excl",
-          "SELECT \"group\", id AS doc_id, n_tokens,\n       (cum_excl") +
-        "\nORDER BY \"group\", doc_id"),
-    "q_json_extract" ->
-      """SELECT (props->>'$.k')::BIGINT AS k, count(*) AS n
-        |FROM events WHERE (props->>'$.k') IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_join_topk" ->
-      """SELECT o.o_orderkey,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 4) AS revenue,
-        |       count(*) AS n_items
-        |FROM customer c
-        |JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |GROUP BY 1
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q_embed_corpus" ->
-      (EmbedJob.sqlEmbedRelational("documents", "doc_id", "text")
-        .replace("SELECT r.id, r.dim", "SELECT r.id AS doc_id, r.dim") +
-        "\nORDER BY doc_id, dim"),
-    "q_window_agg" ->
-      """SELECT date_trunc('hour', ts::TIMESTAMP) AS window_start, event_type,
-        |       count(*) AS n_events, round(sum(value), 4) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_sessionize" ->
-      (EventStreams.sqlSessionAgg(
-        "(SELECT event_id, user_id, value, ts::TIMESTAMP AS ts FROM events)") +
-        "\nORDER BY user_id, session_start"),
-    // half-open interval (r.ts − 60min, r.ts]: same bounds as intervalJoin
-    "q_attribution" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |       c.user_id, p.value
-        |FROM (SELECT event_id, user_id, ts::TIMESTAMP AS ts FROM events
-        |      WHERE event_type = 'click') c
-        |JOIN (SELECT event_id, user_id, ts::TIMESTAMP AS ts, value FROM events
-        |      WHERE event_type = 'purchase') p
-        |  ON c.user_id = p.user_id
-        | AND c.ts <= p.ts
-        | AND c.ts > p.ts - INTERVAL 60 MINUTES
-        |ORDER BY click_id, purchase_id""".stripMargin,
-    "q_funnel" ->
-      (graft.operators.EventAnalytics.sqlFunnel(
-        "events", "user_id", "event_type", "ts::TIMESTAMP",
-        Seq("view", "click", "purchase")) + "\nORDER BY step_idx"),
-    "q_funnel_gap" ->
-      (graft.operators.EventAnalytics.sqlFunnel(
-        "events", "user_id", "event_type", "ts::TIMESTAMP",
-        Seq("view", "click", "purchase"), maxGapMinutes = Some(60)) +
-        "\nORDER BY step_idx"),
-    "q_funnel_latency" ->
-      (graft.operators.EventAnalytics.sqlFunnelDurations(
-        "events", "user_id", "event_type", "ts::TIMESTAMP",
-        Seq("view", "click", "purchase")) +
-        "\nORDER BY step_idx"),
-    "q_funnel_repeat" ->
-      (graft.operators.EventAnalytics.sqlFunnel(
-        "events", "user_id", "event_type", "ts::TIMESTAMP",
-        Seq("view", "view", "purchase")) + "\nORDER BY step_idx"),
-    // the REPAIRED streaming-tracker output equals the batch funnel by
-    // construction (funnelReconcile's corrections are exactly the diff to
-    // truth); the Verify-time require proves the diff was non-empty
-    "q_funnel_reconcile" ->
-      (graft.operators.EventAnalytics.sqlFunnel(
-        "events", "user_id", "event_type", "ts::TIMESTAMP",
-        Seq("view", "click", "purchase")) + "\nORDER BY step_idx"),
-    "q_retention" ->
-      (graft.operators.EventAnalytics.sqlRetention(
-        "events", "user_id", "ts::TIMESTAMP",
-        anchorDate = "2024-01-01", periodDays = 7) +
-        "\nORDER BY cohort_period, period_offset"),
-    "q_multimodal" ->
-      """WITH chars AS (
-        |  SELECT doc_id, list_transform(string_split(text, ''), c -> ord(c)) AS cs
-        |  FROM documents
-        |)
-        |SELECT doc_id AS asset_id,
-        |       len(cs)::BIGINT AS n_bytes,
-        |       coalesce(round(list_avg(cs), 6), 0.0) AS mean_byte,
-        |       len(list_filter(cs, c -> c // 64 = 0))::BIGINT AS h0,
-        |       len(list_filter(cs, c -> c // 64 = 1))::BIGINT AS h1,
-        |       len(list_filter(cs, c -> c // 64 = 2))::BIGINT AS h2,
-        |       len(list_filter(cs, c -> c // 64 = 3))::BIGINT AS h3
-        |FROM chars ORDER BY asset_id""".stripMargin,
-    // the REAL-codec gate: expected decode output recomputed from the
-    // planted construction arithmetic (w = 3+id%4, h = 2+id%3,
-    // r=(id+x)%256, g=(id+y)%256, b=(id+x*y)%256) — no image library on
-    // the oracle side at all, which is the point: the codec's output
-    // must equal pure arithmetic
-    "q_multimodal_decode" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 3 + doc_id % 4 AS w, 2 + doc_id % 3 AS h
-        |  FROM documents
-        |), xs AS (
-        |  SELECT doc_id, w, h, unnest(generate_series(0, w - 1)) AS x
-        |  FROM dims
-        |), px AS (
-        |  SELECT doc_id, w, h, x, unnest(generate_series(0, h - 1)) AS y
-        |  FROM xs
-        |)
-        |SELECT doc_id, any_value(w)::BIGINT AS width,
-        |       any_value(h)::BIGINT AS height,
-        |       sum((doc_id + x) % 256)::BIGINT AS sum_r,
-        |       sum((doc_id + y) % 256)::BIGINT AS sum_g,
-        |       sum((doc_id + x * y) % 256)::BIGINT AS sum_b
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // the real-audio-codec gate: expected decode output recomputed from
-    // the planted construction arithmetic (n = 20+id%16,
-    // sample(i) = (id*37 + i*11) % 4001 - 2000) — lossless PCM, so the
-    // container parser's output must equal pure arithmetic
-    "q_multimodal_audio" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 20 + doc_id % 16 AS n FROM documents
-        |), sm AS (
-        |  SELECT doc_id, n, unnest(generate_series(0, n - 1)) AS i
-        |  FROM dims
-        |)
-        |SELECT doc_id, CAST(8000 AS BIGINT) AS sample_rate,
-        |       CAST(1 AS BIGINT) AS channels,
-        |       any_value(n)::BIGINT AS n_frames,
-        |       sum((doc_id * 37 + i * 11) % 4001 - 2000)::BIGINT AS sum_samples
-        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // frame-sampled video: container arithmetic (f frames, every 2nd
-    // sampled) × the planted-PNG pixel arithmetic with the frame index
-    // folded in — the codec's aggregated output must equal pure math
-    "q_multimodal_frames" ->
-      """WITH fr AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS f FROM documents
-        |), ks AS (
-        |  SELECT doc_id, f, unnest(generate_series(0, f - 1)) AS k FROM fr
-        |), sk AS (
-        |  SELECT doc_id, f, k, 2 + (doc_id + k) % 3 AS w,
-        |         1 + (doc_id + k) % 2 AS h
-        |  FROM ks WHERE k % 2 = 0
-        |), xs AS (
-        |  SELECT doc_id, f, k, w, h, unnest(generate_series(0, w - 1)) AS x
-        |  FROM sk
-        |), px AS (
-        |  SELECT doc_id, f, k, x, unnest(generate_series(0, h - 1)) AS y
-        |  FROM xs
-        |)
-        |SELECT doc_id, any_value(f)::BIGINT AS n_frames,
-        |       count(DISTINCT k)::BIGINT AS n_sampled,
-        |       sum((doc_id + k + x) % 256)::BIGINT AS sum_r,
-        |       sum((doc_id + k + y) % 256)::BIGINT AS sum_g,
-        |       sum((doc_id + k + x * y) % 256)::BIGINT AS sum_b
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // demux/decode structure from plant arithmetic: n_frames = 2+id%3,
-    // sampled = every 2nd from 0, dims w=4+(id+k)%5 / h=3+(id+k)%4 —
-    // exact through the lossy JPEG codec (geometry, not pixels)
-    "q_multimodal_avi" ->
-      """WITH fr AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS f FROM documents
-        |), ks AS (
-        |  SELECT doc_id, f, unnest(generate_series(0, f - 1)) AS k FROM fr
-        |), sk AS (
-        |  SELECT doc_id, f, k, 4 + (doc_id + k) % 5 AS w,
-        |         3 + (doc_id + k) % 4 AS h
-        |  FROM ks WHERE k % 2 = 0
-        |)
-        |SELECT doc_id, any_value(f)::BIGINT AS n_frames,
-        |       count(*)::BIGINT AS n_sampled,
-        |       sum(w)::BIGINT AS sum_w,
-        |       sum(h)::BIGINT AS sum_h
-        |FROM sk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // same featurization CTE as q_multimodal; the second stage is the
-    // exact-kNN shape every vector oracle uses
-    "q_multimodal_knn" ->
-      s"""WITH chars AS (
-         |  SELECT doc_id, list_transform(string_split(text, ''), c -> ord(c)) AS cs
-         |  FROM documents
-         |), feats AS (
-         |  SELECT doc_id AS asset_id,
-         |         [len(list_filter(cs, c -> c // 64 = 0))::DOUBLE,
-         |          len(list_filter(cs, c -> c // 64 = 1))::DOUBLE,
-         |          len(list_filter(cs, c -> c // 64 = 2))::DOUBLE,
-         |          len(list_filter(cs, c -> c // 64 = 3))::DOUBLE] AS emb
-         |  FROM chars WHERE len(cs) > 0
-         |)
-         |SELECT asset_id,
-         |       round((1.0 + list_cosine_similarity(emb, ${graft.functions.Vectors.vecSql(multimodalQueryVec)})) / 2.0, 6) AS score
-         |FROM feats
-         |ORDER BY score DESC, asset_id ASC LIMIT 10""".stripMargin,
-    "q_dedup_exact" ->
-      s"""SELECT h.id AS doc_id, h.text_hash, g.group_n, h.id = g.keep_id AS keep
-         |FROM (SELECT doc_id AS id, coalesce(md5(text), '__null__') AS text_hash FROM documents) h
-         |JOIN (SELECT text_hash, count(*) AS group_n, min(id) AS keep_id
-         |      FROM (SELECT doc_id AS id, coalesce(md5(text), '__null__') AS text_hash FROM documents)
-         |      GROUP BY 1) g USING (text_hash)
-         |ORDER BY doc_id""".stripMargin,
-    "q_dedup_priority" ->
-      (Dedup.sqlExactWithPriority("documents", "doc_id", "text", "source",
-        SourcePriority, defaultPriority = 10) +
-        "\nORDER BY id"),
-    "q_diversity_sample" ->
-      (Curation.sqlDiversitySample("embeddings", "vec_id", "embedding",
-        "label", k = 20) +
-        "\nORDER BY label, rank"),
-    "q_knn_join" ->
-      (VectorSearch.sqlKnnJoin("embeddings", "vec_id", "embedding",
-        "vec_id < 50", k = 3) +
-        "\nORDER BY query_id, rank"),
-    // sub-exhaustive probe; exact-kNN SQL licensed as oracle by the
-    // Verify-time routed==exact selfCheck (see qKnnJoinIvf)
-    "q_knn_join_ivf" ->
-      (VectorSearch.sqlKnnJoin("embeddings", "vec_id", "embedding",
-        "vec_id < 50", k = 3) +
-        "\nORDER BY query_id, rank"),
-    // whichever exact path the cost table picks returns these rows
-    // (ball-cover recall is a theorem); selfChecked re-proves it
-    "q_knn_join_plan" ->
-      (VectorSearch.sqlKnnJoin("embeddings", "vec_id", "embedding",
-        "vec_id < 50", k = 3) +
-        "\nORDER BY query_id, rank"),
-    "q_late_interaction" ->
-      (LateInteraction.sqlMaxSimJoin("documents", "doc_id", "text",
-        id => s"$id % 499 = 0", k = 5) +
-        "\nORDER BY query_id, rank"),
-    // candidate CTE = the pooled sparse-cosine top-20 (the q_hybrid_join
-    // vector-branch SQL, self kept — the rerank's d.id <> q.id drops it),
-    // then the shared maxsim algebra restricted to candidates
-    "q_late_interaction_pruned" ->
-      (LateInteraction.sqlMaxSimRerank("documents", "doc_id", "text",
-        s"""WITH cemb AS (
-           |${EmbedJob.sqlEmbedRelational("documents", "doc_id", "text")}
-           |), qemb AS (
-           |  SELECT * FROM cemb WHERE id % 97 = 0
-           |), cscored AS (
-           |  SELECT q.id AS query_id, c.id AS nbr_id,
-           |         round(sum(q.val * c.val), 6) AS sim
-           |  FROM qemb q JOIN cemb c ON q.dim = c.dim GROUP BY 1, 2
-           |)
-           |SELECT query_id, nbr_id FROM (
-           |  SELECT query_id, nbr_id,
-           |         row_number() OVER (PARTITION BY query_id
-           |                            ORDER BY sim DESC, nbr_id ASC) AS rnk
-           |  FROM cscored)
-           |WHERE rnk <= 20""".stripMargin, k = 5) +
-        "\nORDER BY query_id, rank"),
-    // the persisted index serves the identical ranking as the in-memory
-    // build (IndexStoreSpec asserts layout round-trip equality)
-    "q_bm25_idx" ->
-      s"""WITH $bm25DocsCtes
-         |SELECT id AS doc_id, score FROM bm25
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    "q_bm25_join" ->
-      (TextSearch.sqlBm25Join("documents", "doc_id", "text",
-        batchQueriesRel, k = 10) +
-        "\nORDER BY query_id, rank"),
-    // both pipelines' ranks recomputed relationally, fused with the same
-    // rounded RRF arithmetic; absent pipeline → no contribution (coalesce)
-    "q_hybrid_join" ->
-      s"""WITH txtj AS (
-         |${TextSearch.sqlBm25Join("documents", "doc_id", "text", batchQueriesRel, 10)}
-         |), cemb AS (
-         |${EmbedJob.sqlEmbedRelational("documents", "doc_id", "text")}
-         |), qemb AS (
-         |${EmbedJob.sqlEmbedRelational(s"($batchQueriesRel) qq", "query_id", "qtext")}
-         |), vecscored AS (
-         |  SELECT q.id AS query_id, c.id AS id, round(sum(q.val * c.val), 6) AS sim
-         |  FROM qemb q JOIN cemb c ON q.dim = c.dim GROUP BY 1, 2
-         |), vecranked AS (
-         |  SELECT query_id, id, sim,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY sim DESC, id ASC)::INTEGER AS rank
-         |  FROM vecscored
-         |), vecj AS (
-         |  SELECT * FROM vecranked WHERE rank <= 10
-         |), fused AS (
-         |  SELECT coalesce(v.query_id, t.query_id) AS query_id,
-         |         coalesce(v.id, t.id) AS id,
-         |         round(coalesce(1.0 / (60 + v.rank), 0) + coalesce(1.0 / (60 + t.rank), 0), 6) AS score,
-         |         v.rank AS vec_rank, t.rank AS txt_rank
-         |  FROM vecj v FULL OUTER JOIN txtj t
-         |    ON v.query_id = t.query_id AND v.id = t.id
-         |), final AS (
-         |  SELECT query_id, id AS doc_id, score, vec_rank, txt_rank,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY score DESC, id ASC)::INTEGER AS rank
-         |  FROM fused
-         |)
-         |SELECT query_id, doc_id, score, vec_rank, txt_rank, rank
-         |FROM final WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-    // dense vector branch = exact kNN over the query docs' own embeddings
-    // (valid for the IVF-routed plan by the Verify-time selfCheck); text
-    // branch and RRF arithmetic identical to q_hybrid_join
-    "q_hybrid_join_dense" ->
-      s"""WITH txtj AS (
-         |${TextSearch.sqlBm25Join("documents", "doc_id", "text", batchQueriesRel, 10)}
-         |), vecj AS (
-         |  SELECT query_id, nbr_id AS id, rank FROM (
-         |${VectorSearch.sqlKnnJoin("embeddings", "vec_id", "embedding", "vec_id % 97 = 0", 10)}
-         |  ) vk
-         |), fused AS (
-         |  SELECT coalesce(v.query_id, t.query_id) AS query_id,
-         |         coalesce(v.id, t.id) AS id,
-         |         round(coalesce(1.0 / (60 + v.rank), 0) + coalesce(1.0 / (60 + t.rank), 0), 6) AS score,
-         |         v.rank AS vec_rank, t.rank AS txt_rank
-         |  FROM vecj v FULL OUTER JOIN txtj t
-         |    ON v.query_id = t.query_id AND v.id = t.id
-         |), final AS (
-         |  SELECT query_id, id AS doc_id, score, vec_rank, txt_rank,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY score DESC, id ASC)::INTEGER AS rank
-         |  FROM fused
-         |)
-         |SELECT query_id, doc_id, score, vec_rank, txt_rank, rank
-         |FROM final WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-    "q_dedup_jaccard" ->
-      (Dedup.sqlJaccardPairs("documents", "doc_id", "text", JaccardThr) +
-        "\nORDER BY id1, id2"),
-    // the containment-screened plan path returns the SAME pairs as the
-    // quadratic baseline at any threshold (prefix recall 1 by pigeonhole
-    // + exact verify), so the baseline's SQL is a full oracle for it
-    "q_dedup_jaccard_plan" ->
-      (Dedup.sqlJaccardPairs("documents", "doc_id", "text", JaccardThr) +
-        "\nORDER BY id1, id2"),
-    "q_dedup_containment" ->
-      (Dedup.sqlContainmentPairs("documents", "doc_id", "text", 0.9) +
-        "\nORDER BY id1, id2"),
-    // prefix filtering has recall exactly 1 (pigeonhole bound), so the
-    // exact quadratic baseline is a FULL oracle for the candidate path
-    "q_dedup_containment_lsh" ->
-      (Dedup.sqlContainmentPairs("documents", "doc_id", "text", 0.9) +
-        "\nORDER BY id1, id2"),
-    // incremental screen: same pigeonhole recall through the PERSISTED
-    // index, so the quadratic enumeration restricted to batch-touching
-    // pairs is a full oracle
-    "q_dedup_containment_inc" ->
-      (Dedup.sqlContainmentPairsAgainst("documents", "doc_id", "text", 0.9,
-        id => s"$id % 5 = 0") + "\nORDER BY id1, id2"),
-    // chunk ids pack (doc_id, chunk_idx) with the SAME 2^ChunkIdxBits
-    // multiplier as Curation.packChunkId; the exact-dedup group math runs
-    // on the chunk texts verbatim (md5 parity with Dedup.exact)
-    "q_chunk_dedup" ->
-      s"""WITH chunks AS (
-         |${Curation.sqlChunkDocuments("documents", "doc_id", "text", 200, 40)}
-         |), c AS (
-         |  SELECT id * ${1L << Curation.ChunkIdxBits} + chunk_idx AS chunk_id, chunk_text FROM chunks
-         |), groups AS (
-         |  SELECT coalesce(md5(chunk_text), '__null__') AS h,
-         |         count(*) AS group_n, min(chunk_id) AS keep_id
-         |  FROM c GROUP BY 1
-         |)
-         |SELECT c.chunk_id, g.group_n, c.chunk_id = g.keep_id AS keep
-         |FROM c JOIN groups g ON coalesce(md5(c.chunk_text), '__null__') = g.h
-         |ORDER BY chunk_id""".stripMargin,
-    "q_substring_spans" ->
-      s"""SELECT id AS doc_id, span_start, span_end, n_grams FROM (
-         |${SubstringDedup.sqlDuplicatedSpans("documents", "doc_id", "text")}
-         |) ORDER BY doc_id, span_start""".stripMargin,
-    "q_substring_coverage" ->
-      s"""SELECT id AS doc_id, n_tokens, dup_tokens, dup_ratio FROM (
-         |${SubstringDedup.sqlDuplicationCoverage("documents", "doc_id", "text")}
-         |) ORDER BY doc_id""".stripMargin,
-    // already deterministically ordered by (n_spans DESC, passage) inside
-    "q_substring_passages" ->
-      SubstringDedup.sqlTopDuplicatedPassages("documents", "doc_id", "text",
-        topN = 20),
-    "q_substring_cut" ->
-      s"""SELECT id AS doc_id, n_tokens, n_removed, clean_text FROM (
-         |${SubstringDedup.sqlCutSpans("documents", "doc_id", "text")}
-         |) ORDER BY doc_id""".stripMargin,
-    "q_substring_inc" ->
-      s"""SELECT id AS doc_id, span_start, span_end, n_grams FROM (
-         |${SubstringDedup.sqlSpansAgainst("documents", "doc_id", "text",
-              id => s"$id % 5 = 0")}
-         |) ORDER BY doc_id, span_start""".stripMargin,
-    "q_dedup_components" ->
-      (Dedup.sqlComponents(
-        Dedup.sqlMinhashPairs("documents", "doc_id", "text", JaccardThr))
-        .replace("SELECT id, min(comp) AS comp FROM walk GROUP BY id",
-          "SELECT id AS doc_id, min(comp) AS comp FROM walk GROUP BY id") +
-        "\nORDER BY doc_id"),
-    // the incremental map must be row-identical to the from-scratch
-    // recompute over every pair ever seen — the contraction argument,
-    // hash-checked
-    "q_dedup_components_inc" ->
-      (Dedup.sqlComponents(
-        Dedup.sqlSimhashPairs("documents", "doc_id", "text", SimhashMaxDist))
-        .replace("SELECT id, min(comp) AS comp FROM walk GROUP BY id",
-          "SELECT id AS doc_id, min(comp) AS comp FROM walk GROUP BY id") +
-        "\nORDER BY doc_id"),
-    "q_dedup_minhash" ->
-      (Dedup.sqlMinhashPairs("documents", "doc_id", "text", JaccardThr) +
-        "\nORDER BY id1, id2"),
-    "q_dedup_simhash" ->
-      (Dedup.sqlSimhashPairs("documents", "doc_id", "text", SimhashMaxDist) +
-        "\nORDER BY id1, id2"),
-    "q_quant_knn" -> {
-      val qScale = flagshipQueryVec.map(math.abs).max / 127.0
-      val qInts = flagshipQueryVec.map(x =>
-        if (qScale == 0) 0 else math.floor(x / qScale + 0.5).toInt)
-      val qIntsSql = qInts.mkString("[", ", ", "]::DOUBLE[]")
-      val qScaleSql = f"$qScale%.17g"
-      s"""WITH qz AS (
-         |  SELECT vec_id,
-         |         list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) / 127.0 AS scale,
-         |         embedding::DOUBLE[] AS v
-         |  FROM embeddings
-         |), qq AS (
-         |  SELECT vec_id, scale,
-         |         list_transform(v, x -> CASE WHEN scale = 0 THEN 0.0
-         |           ELSE floor(x / scale + 0.5) END) AS q
-         |  FROM qz
-         |)
-         |SELECT vec_id,
-         |       round(list_inner_product(q, $qIntsSql) * scale * $qScaleSql, 6) AS qscore
-         |FROM qq
-         |ORDER BY qscore DESC, vec_id ASC LIMIT 10""".stripMargin
-    },
-    "q_region_revenue" ->
-      """SELECT n_name, round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_quality_filter" ->
-      s"""SELECT id AS doc_id, n_tokens, quality_ppm, lang, drop_reason, keep
-         |FROM (${Curation.sqlQualityFilter("documents", "doc_id", "text",
-                  QfMinTokens, QfMaxTokens, QfMinQualityPpm, QfLangs)})
-         |ORDER BY doc_id""".stripMargin,
-    "q_split" ->
-      (Curation.sqlSplitCorpus("documents", "doc_id", 800, 100)
-        .replace("SELECT *,", "SELECT doc_id,") +
-        "\nORDER BY doc_id"),
-    "q_corpus_diff" ->
-      s"""WITH v2 AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 10 = 0 THEN text || ' v2' ELSE text END AS text
-         |  FROM documents WHERE doc_id % 17 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 23 = 0
-         |)
-         |SELECT id AS doc_id, status
-         |FROM (${Curation.sqlCorpusDiff("documents", "v2", "doc_id", "text")})
-         |ORDER BY doc_id""".stripMargin,
-    "q_contamination" ->
-      s"""SELECT id AS doc_id, n_shingles, n_contaminated, contamination_ratio, contaminated
-         |FROM (${Contamination.sqlNgramOverlap(
-                  "(SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0)",
-                  "(SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0)",
-                  "doc_id", "text")})
-         |ORDER BY doc_id""".stripMargin,
-    // the bloom path is exact by construction (verify join removes false
-    // positives), so its oracle is the SAME SQL as the exact path
-    "q_contamination_bloom" ->
-      s"""SELECT id AS doc_id, n_shingles, n_contaminated, contamination_ratio, contaminated
-         |FROM (${Contamination.sqlNgramOverlap(
-                  "(SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0)",
-                  "(SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0)",
-                  "doc_id", "text")})
-         |ORDER BY doc_id""".stripMargin,
-    "q_contamination_semantic" ->
-      s"""SELECT id AS vec_id, best_eval_id, best_cos, contaminated
-         |FROM (${Contamination.sqlSemanticOverlap(
-                  "(SELECT vec_id, embedding FROM embeddings WHERE vec_id % 41 <> 0)",
-                  "(SELECT vec_id, embedding FROM embeddings WHERE vec_id % 41 = 0)",
-                  "vec_id", "embedding", SemanticContamThr)})
-         |ORDER BY vec_id""".stripMargin,
-    // the routed range join is EXACT by the ball-cover bound theorem
-    // (Ivf.rangeJoinExact scaladoc), so the brute-force pair SQL is a
-    // full oracle — no probe-mass caveat, no selfCheck
-    "q_contamination_semantic_idx" ->
-      s"""SELECT v.vec_id AS eval_id, t.vec_id,
-         |       round(list_cosine_similarity(t.embedding::DOUBLE[], v.embedding::DOUBLE[]), 6) AS sim
-         |FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 41 <> 0) t
-         |CROSS JOIN (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 41 = 0) v
-         |WHERE round(list_cosine_similarity(t.embedding::DOUBLE[], v.embedding::DOUBLE[]), 6) >= $SemanticContamThr
-         |ORDER BY eval_id, t.vec_id""".stripMargin,
-    // the planner-dispatched radius workload: BOTH dispatchable paths
-    // are exact and selfChecked row-identical, so the brute cross-join
-    // is a full oracle whichever the cost table picks
-    "q_contamination_semantic_plan" ->
-      s"""SELECT v.vec_id AS eval_id, t.vec_id,
-         |       round(list_cosine_similarity(t.embedding::DOUBLE[], v.embedding::DOUBLE[]), 6) AS sim
-         |FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 41 <> 0) t
-         |CROSS JOIN (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 41 = 0) v
-         |WHERE round(list_cosine_similarity(t.embedding::DOUBLE[], v.embedding::DOUBLE[]), 6) >= $SemanticContamThr
-         |ORDER BY eval_id, t.vec_id""".stripMargin,
-    "q_bpe_pairs" ->
-      s"""SELECT l, r, cnt FROM (${Vocab.sqlPairCounts("documents", "text")})
-         |ORDER BY cnt DESC, l, r LIMIT 20""".stripMargin,
-    "q_bpe_merges" -> Vocab.sqlLearnBpe("documents", "text", 3),
-    // the wave-cadence twin learns from the persisted word-count fold,
-    // which must equal a fresh corpus scan's counts — SAME oracle
-    "q_bpe_merges_inc" -> Vocab.sqlLearnBpe("documents", "text", 3),
-    // the driver-local regime is output-identical by construction —
-    // same unrolled oracle as the distributed loops
-    "q_bpe_merges_local" -> Vocab.sqlLearnBpe("documents", "text", 3),
-    // same unrolled learn, Unicode alphabet, multilingual fixture
-    "q_bpe_merges_unicode" ->
-      Vocab.sqlLearnBpe(multilingualDocsSql, "text", 3,
-        Text.UnicodeSplitRe),
-    // time travel x vocab: merges as of wave 0 — the oracle learns from
-    // scratch over exactly the horizon corpus
-    "q_bpe_vocab_asof" -> Vocab.sqlLearnBpe(
-      "(SELECT * FROM documents WHERE doc_id % 3 <> 2)", "text", 3),
-    // vocabulary drift: both horizons recomputed from scratch
-    "q_vocab_drift" ->
-      s"""SELECT * FROM (${Vocab.sqlCountsDiff(
-             "(SELECT * FROM documents WHERE doc_id % 3 <> 2)",
-             "documents", "text")})
-         |ORDER BY abs(delta) DESC, word LIMIT 20""".stripMargin,
-    // the refresh advisor's five measurements recomputed from the two
-    // horizon corpora from scratch (the Spark side reads only the
-    // persisted folds); recommend applies the same declared tolerance
-    // to the UNROUNDED ratio on both sides
-    "q_vocab_refresh_plan" ->
-      s"""SELECT sum(cnt_then)::BIGINT AS mass_then,
-         |       sum(cnt_now)::BIGINT AS mass_now,
-         |       sum(abs(delta))::BIGINT AS changed_mass,
-         |       round(sum(abs(delta))::DOUBLE / sum(cnt_now), 6) AS ratio,
-         |       (sum(abs(delta))::DOUBLE / sum(cnt_now)) > 0.25 AS recommend
-         |FROM (${Vocab.sqlCountsDiff(
-             "(SELECT * FROM documents WHERE doc_id % 3 <> 2)",
-             "documents", "text")})""".stripMargin,
-    "q_bpe_tokenize" ->
-      s"""SELECT id AS doc_id, n_bpe
-         |FROM (${Vocab.sqlTokenizeCounts("documents", "doc_id", "text", 3)})
-         |ORDER BY doc_id""".stripMargin,
-    "q_intake_pipeline" ->
-      s"""WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
-         |gate AS (
-         |  SELECT id AS doc_id, keep AS keep_quality
-         |  FROM (${Curation.sqlQualityFilter("train", "doc_id", "text",
-                    QfMinTokens, QfMaxTokens, QfMinQualityPpm, QfLangs)})
-         |), kept AS (
-         |  SELECT t.doc_id, t.text FROM train t
-         |  JOIN gate g ON t.doc_id = g.doc_id AND g.keep_quality
-         |), dedup AS (
-         |  SELECT id AS doc_id, keep AS keep_dedup
-         |  FROM (${Dedup.sqlExact("kept", "doc_id", "text")})
-         |), surv AS (
-         |  SELECT k.doc_id, k.text FROM kept k
-         |  JOIN dedup d ON k.doc_id = d.doc_id AND d.keep_dedup
-         |), contam AS (
-         |  SELECT id AS doc_id, contaminated
-         |  FROM (${Contamination.sqlNgramOverlap("surv",
-                    "(SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0)",
-                    "doc_id", "text")})
-         |), splits AS (
-         |  SELECT doc_id, split
-         |  FROM (${Curation.sqlSplitCorpus("train", "doc_id", 800, 100)})
-         |)
-         |SELECT t.doc_id, g.keep_quality,
-         |       coalesce(d.keep_dedup, false) AS keep_dedup,
-         |       coalesce(c.contaminated, false) AS contaminated,
-         |       s.split,
-         |       (g.keep_quality AND coalesce(d.keep_dedup, false)
-         |        AND NOT coalesce(c.contaminated, false)) AS final_keep
-         |FROM train t
-         |JOIN gate g USING (doc_id)
-         |LEFT JOIN dedup d USING (doc_id)
-         |LEFT JOIN contam c USING (doc_id)
-         |JOIN splits s USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin,
-    "q_dedup_vectors" ->
-      s"""SELECT id AS vec_id, group_n, keep
-         |FROM (${Dedup.sqlExactVectors(
-                  "(SELECT vec_id, embedding FROM embeddings UNION ALL " +
-                    "SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings)",
-                  "vec_id", "embedding")})
-         |ORDER BY vec_id""".stripMargin,
-    "q_dedup_pipeline" -> {
-      // the exact-pass survivors as a reusable table expression
-      val survivorsSql =
-        """(SELECT d.doc_id, d.text FROM documents d JOIN (
-          |   SELECT coalesce(md5(text), '__null__') AS th, min(doc_id) AS keep_id
-          |   FROM documents GROUP BY 1) g ON d.doc_id = g.keep_id)""".stripMargin
-      s"""WITH comps AS (
-         |${Dedup.sqlComponents(
-             Dedup.sqlMinhashPairs(survivorsSql, "doc_id", "text", JaccardThr))}
-         |)
-         |SELECT s.doc_id,
-         |       coalesce(c.comp, s.doc_id) AS comp,
-         |       s.doc_id = coalesce(c.comp, s.doc_id) AS keep
-         |FROM $survivorsSql s LEFT JOIN comps c ON s.doc_id = c.id
-         |ORDER BY s.doc_id""".stripMargin
-    },
-    "q_neardup_cosine" ->
-      (Dedup.sqlCosinePairs("embeddings", "vec_id", "embedding", CosineThr) +
-        "\nORDER BY id1, id2"),
-    // the index-backed variant returns the same pairs (banding recall 1 at
-    // the declared threshold, asserted vs brute in DedupSpec) — the brute
-    // kNN SQL stays the oracle for both
-    "q_neardup_cosine_idx" ->
-      (Dedup.sqlCosinePairs("embeddings", "vec_id", "embedding", CosineThr) +
-        "\nORDER BY id1, id2"),
-    // high-threshold selective banding over the planted near-clone corpus:
-    // the banding is recall-1 on this fixture (selfChecked re-proves it at
-    // Verify time), so brute-force cosine over the same planted CTE is the
-    // oracle; the plant transforms are float-exact, so the DuckDB twin
-    // reproduces bit-identical vectors
-    "q_neardup_cosine_sel" ->
-      (s"WITH $plantedNearClonesSql\n" +
-        Dedup.sqlCosinePairs("planted", "vec_id", "embedding", SelectiveThr) +
-        "\nORDER BY id1, id2"),
-    "q_neardup_cosine_selmp" ->
-      (s"WITH $plantedNearClonesSql\n" +
-        Dedup.sqlCosinePairs("planted", "vec_id", "embedding", SelectiveMpThr) +
-        "\nORDER BY id1, id2"),
-    // planner-driven layout at the regime floor: the grid-chosen banding
-    // is recall-1 on this fixture (selfChecked re-proves routed==brute at
-    // Verify time), so the same brute-force planted-CTE SQL is the oracle
-    "q_neardup_cosine_plan" ->
-      (s"WITH $plantedNearClonesSql\n" +
-        Dedup.sqlCosinePairs("planted", "vec_id", "embedding", PlannedThr) +
-        "\nORDER BY id1, id2"),
-    // ball-cover screen is recall-1 by the triangle inequality (no
-    // self-check needed — exactness is a theorem, the hash compare the
-    // proof), so the same brute-force planted-CTE SQL is a full oracle
-    "q_neardup_cosine_ball" ->
-      (s"WITH $plantedNearClonesSql\n" +
-        Dedup.sqlCosinePairs("planted", "vec_id", "embedding", PlannedThr) +
-        "\nORDER BY id1, id2"),
-    // directed batch→corpus pairs: a = new batch (every 5th id, matching
-    // qDedupIncremental), b = any other vector in the corpus
-    "q_dedup_incremental" ->
-      s"""SELECT a.vec_id AS id1, b.vec_id AS id2,
-         |       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS sim
-         |FROM embeddings a JOIN embeddings b
-         |  ON a.vec_id % 5 = 0 AND a.vec_id <> b.vec_id
-         |WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= $CosineThr
-         |ORDER BY id1, id2""".stripMargin,
-    // multi-probe widens CANDIDATES only; the verified pairs are the same
-    // (superset of a recall-1 candidate set), so the oracle is identical
-    "q_dedup_incremental_mp" ->
-      s"""SELECT a.vec_id AS id1, b.vec_id AS id2,
-         |       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS sim
-         |FROM embeddings a JOIN embeddings b
-         |  ON a.vec_id % 5 = 0 AND a.vec_id <> b.vec_id
-         |WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= $CosineThr
-         |ORDER BY id1, id2""".stripMargin,
-    "q_neardup_text_cosine" ->
-      (Dedup.sqlCosinePairsSparse(
-        EmbedJob.sqlEmbedRelational("documents", "doc_id", "text"),
-        Dedup.sqlMinhashCandidateCtes("documents", "doc_id", "text"),
-        TextCosineThr) +
-        "\nORDER BY id1, id2"),
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 4) AS sum_qty,
-        |       round(sum(l_extendedprice), 4) AS sum_price,
-        |       round(avg(l_discount), 6) AS avg_disc,
-        |       count(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-  )
+  /** The queries named in `only` (comma-separated), or every query when
+    * there is no filter — always in registry order. Refuses unknown names,
+    * listing each, so a typo fails loudly instead of running nothing. */
+  private[graft] def selectQueries(only: Option[String]): Seq[Query] =
+    only.fold(registry) { spec =>
+      val names = spec.split(',').map(_.trim).toSet
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty, "unknown queries: " +
+        unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+      registry.filter(q => names(q.name))
+    }
 }

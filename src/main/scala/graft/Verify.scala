@@ -12,8 +12,9 @@ object Verify {
     // comma-separated query-name filter — dump and declare just those.
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case Array(s, o, f) => (s, o, Some(f))
     }
+    val selected = SparkEntry.selectQueries(only)
     // Verify IS the correctness gate, so the routed==exact self-checks on
     // sub-exhaustive index queries run here (and only here — Bench times
     // the pure routed plans). A recall loss aborts the query, which fails
@@ -28,18 +29,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val failures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some((name, e))
-        }
+    val failures = selected.flatMap { query =>
+      try {
+        query.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${query.name}")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
+        Some((query.name, e))
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -52,9 +51,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map(query => s"${q(query.name)}: ${q(query.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/failures.json"), failures.map {
       case (name, e) =>

@@ -176,7 +176,7 @@ object Dedup {
   /** Input bound for [[jaccardPairs]] — this operator is the labeled
     * QUADRATIC oracle baseline (the shingle-postings self-join blows up on a
     * hot shingle at corpus scale; see the q_dedup_jaccard scaladoc in
-    * SparkEntry), so pointing it at a large corpus is always a mistake:
+    * DedupQueries), so pointing it at a large corpus is always a mistake:
     * [[minhashPairs]] computes the same pairs at the declared thresholds
     * with banded candidates. 100k docs keeps every validation fixture in
     * bounds while fencing anything corpus-sized. */

@@ -246,7 +246,7 @@ object Curation {
     * WHICH examples carry the most geometric diversity.
     *
     * Scale shape: centroids via posexplode + avg by (label, dim) — the
-    * [[graft.SparkEntry]] q_label_centroid shape, map-side combinable;
+    * [[graft.queries.PipelineQueries]] q_label_centroid shape, map-side combinable;
     * distances via one equi-join on (label, dim) over the exploded
     * components (work ∝ vectors × dims); the rank window partitions by
     * label. Centroids are ROUNDED to 6 decimals before the distance so
@@ -426,7 +426,7 @@ object Curation {
   }
 
   /** Durable corpus-intake ledger — the production rendition of
-    * SparkEntry's `q_intake_pipeline` (quality gate → exact dedup among the
+    * PipelineQueries' `q_intake_pipeline` (quality gate → exact dedup among the
     * quality survivors → benchmark decontamination of the dedup survivors →
     * hash-stable split), with each gate's verdict PERSISTED as parquet under
     * `path/{quality,dedup,contam,splits}` instead of in-session
