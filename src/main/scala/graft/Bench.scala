@@ -1,26 +1,25 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Timed runs per query (`SPARK_GRAFT_BENCH_ITERS`, default 3). Sandbox
+    * contention can inflate a single timing several-fold (the r2 artifact
+    * overstated the real total 2.1×, r3 1.6×): Bench times each query
+    * `iters` times and reports the per-query MINIMUM — the standard
+    * noise-robust estimator for a deterministic workload on a shared
+    * machine. The full per-iteration arrays and the machine load average
+    * are ALSO emitted so a reader can see when even the minima are suspect
+    * (high load + wildly spread iterations = contended run). `Measure
+    * profile` takes its minima over the same count. */
+  private[graft] def iters: Int =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Sandbox contention can inflate a single timing several-fold (the r2
-    // artifact overstated the real total 2.1×, r3 1.6×): time each query
-    // `iters` times and report the per-query MINIMUM — the standard
-    // noise-robust estimator for a deterministic workload on a shared
-    // machine. The full per-iteration arrays and the machine load average
-    // are ALSO emitted so a reader can see when even the minima are suspect
-    // (high load + wildly spread iterations = contended run).
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
+    val cpus = SparkEntry.cpus
+    val iters = Bench.iters
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // JVM/codegen/scheduler warmup so the first-listed query isn't charged
     // Spark boot time (steady-state per-query seconds are the metric)
     spark.range(1000).selectExpr("sum(id)").collect()

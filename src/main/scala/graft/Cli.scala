@@ -24,15 +24,7 @@ object Cli {
     * (a host JVM, e.g. the test suite, may already own one). */
   private def session(): (SparkSession, Boolean) = {
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    (s, preexisting.isEmpty)
+    (SparkEntry.session(), preexisting.isEmpty)
   }
 
   private def flag(args: Array[String], name: String): Option[String] = {

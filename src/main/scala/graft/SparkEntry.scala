@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries._
+import graft.util.SelfCheck
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.immutable.ListMap
@@ -11,10 +12,29 @@ import scala.collection.immutable.ListMap
   * The declared queries live in `graft.queries`, one [[Query]] (Spark
   * build plus DuckDB oracle) per operator, grouped by operator family;
   * [[registry]] lists them in run order. This object holds what they
-  * share at run time: the session fixture registry, the index warm-up and
-  * the Verify-time self-check.
+  * share at run time: the session every main builds, the session fixture
+  * registry, the index warm-up and the Verify-time self-check.
   */
 object SparkEntry {
+
+  // ----------------------------------------------------------------- session
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, default 4. */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session every main runs on: master `SPARK_GRAFT_MASTER`, else
+    * `local[<cpus>]`; one shuffle partition per core; UTC; no UI; WARN
+    * logs. `getOrCreate`, so a host JVM's running session is reused. */
+  private[graft] def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   // ---------------------------------------------- session fixture registry
 
@@ -147,24 +167,14 @@ object SparkEntry {
     LmQueries.corpusWordCountsDisk(spark, dir).count()
   }
 
-  /** True under `graft.Verify`, which sets the `graft.selfcheck` system
-    * property (local opt-in: `-Dgraft.selfcheck=1`). The routed==exact
-    * requires on sub-exhaustive index queries are what LICENSE the exact
-    * SQL as their oracle — that license matters exactly where the oracle
-    * hash-compare runs (the Verify dump), so the check lives there, while
-    * Bench times the PURE routed plan (the number a user's query would
-    * cost, not routed + exact). */
-  private[graft] def selfCheckEnabled: Boolean =
-    sys.props.get("graft.selfcheck").contains("1")
-
-  /** Verify-time routed==exact gate: under [[selfCheckEnabled]] both plans
+  /** Verify-time routed==exact gate: under [[SelfCheck]] both plans
     * execute and any divergence fails the run (which fails the driver's
     * correctness gate before a wrong hash could pass); otherwise the
     * routed plan is returned untouched. `exact` is by-name — it is never
     * built outside self-check mode. */
   private[graft] def selfChecked(routed: DataFrame, exact: => DataFrame,
       what: String): DataFrame = {
-    if (selfCheckEnabled)
+    if (SelfCheck.enabled)
       require(routed.collect().toSeq == exact.collect().toSeq,
         s"$what lost recall on this corpus — raise the probe depth " +
           "(the exact-kNN oracle would not match)")

@@ -279,13 +279,7 @@ object SearchServer {
       "usage: SearchServer <detail.parquet> [port] [frontendDir]")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val frontend = args.lift(2).map(java.nio.file.Paths.get(_))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
     val df = spark.read.parquet(args(0))
       .withColumn("emb_description", col("emb_description").cast("array<double>"))
       .cache()

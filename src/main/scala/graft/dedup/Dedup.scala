@@ -1175,7 +1175,7 @@ object Dedup {
       threshold: Double): DataFrame = {
     val spark = embs.sparkSession
     import spark.implicits._
-    if (sys.props.get("graft.selfcheck").contains("1")) {
+    if (graft.util.SelfCheck.enabled) {
       val holes = graft.index.Ivf.coverageHoles(index, embs, idCol)
       require(holes.isEmpty,
         "cosinePairsBallCover: corpus rows missing from the index " +
@@ -1234,7 +1234,6 @@ object Dedup {
     */
   val SignLshBands = 16
   val SignLshRows = 2
-  val SignLshBits = SignLshBands * SignLshRows
 
   /** Deterministic hyperplane component h[bit][d] ∈ {−1, +1}. */
   private def hyperplaneSign(seed: Long, bit: Int, d: Int): Double = {

@@ -141,9 +141,6 @@ object Text {
     }
   }
 
-  /** The frozen-default tokenizer (≡ [[SplitRe]] everywhere). */
-  val DefaultTokenizer: Tokenizer = Tokenizer()
-
   /** The multilingual-corpus tokenizer: Unicode alphabet + NFC + CJK
     * bigrams — what a real 100 TB crawl run passes. */
   val MultilingualTokenizer: Tokenizer =

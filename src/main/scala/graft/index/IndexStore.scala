@@ -2,7 +2,7 @@ package graft.index
 
 import graft.search.TextSearch
 import graft.search.TextSearch.Bm25Index
-import graft.util.Par
+import graft.util.{Par, SelfCheck}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -3144,7 +3144,7 @@ object IndexStore {
     * the declared domains make bucket pruning unsound and are refused. */
   def saveZOrder(df: DataFrame, x: graft.util.ZOrder.Dim,
       y: graft.util.ZOrder.Dim, bits: Int, path: String,
-      validate: Boolean = sys.props.get("graft.selfcheck").contains("1"))
+      validate: Boolean = SelfCheck.enabled)
       : Unit = {
     val spark = df.sparkSession
     dropDirs(spark, path, "tail", "tombstones")

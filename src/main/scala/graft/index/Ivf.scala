@@ -462,11 +462,11 @@ object Ivf {
       .limit(maxReport).collect().map(_.getLong(0)).toSeq
 
   /** The Verify-time enforcement of the index-coverage contract (the
-    * same `graft.selfcheck` opt-in as `SparkEntry.selfChecked`): free on
-    * production calls, loud at the correctness gate. */
+    * same [[graft.util.SelfCheck]] opt-in as `SparkEntry.selfChecked`):
+    * free on production calls, loud at the correctness gate. */
   private def maybeVerifyCoverage(index: IvfIndex, corpus: DataFrame,
       cIdCol: String, caller: String): Unit =
-    if (sys.props.get("graft.selfcheck").contains("1")) {
+    if (graft.util.SelfCheck.enabled) {
       val holes = coverageHoles(index, corpus, cIdCol)
       require(holes.isEmpty,
         s"$caller: corpus rows missing from index.assignments would be " +

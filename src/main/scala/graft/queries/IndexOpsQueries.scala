@@ -7,7 +7,7 @@ import graft.index.{IndexStore, Ivf}
 import graft.operators.Sketches
 import graft.queries.Shared._
 import graft.search.{TextSearch, VectorSearch}
-import graft.util.{Tables, ZOrder}
+import graft.util.{SelfCheck, Tables, ZOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -508,7 +508,7 @@ private[graft] object IndexOpsQueries {
         |ORDER BY p""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val s = corpusQuantileDisk(spark, dir)
-    if (sys.props.get("graft.selfcheck").contains("1"))
+    if (SelfCheck.enabled)
       require(s.complete,
         "q_quantile_sketch declares the complete (exact) regime at the " +
           s"gate SF but the sketch holds ${s.m} of ${s.n} rows — raise k " +
@@ -567,7 +567,7 @@ private[graft] object IndexOpsQueries {
         |ORDER BY source, p""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val s = corpusGroupedQuantileDisk(spark, dir)
-    if (sys.props.get("graft.selfcheck").contains("1"))
+    if (SelfCheck.enabled)
       s.groups.foreach(g => require(s.complete(g),
         s"q_quantile_by_source declares the complete regime but group " +
           s"'$g' holds ${s.m(g)} of ${s.nByGroup(g)} rows"))

@@ -1,13 +1,13 @@
 package graft
 package queries
 
-import graft.SparkEntry.{fixture, selfCheckEnabled}
+import graft.SparkEntry.fixture
 import graft.etl.Flatten
 import graft.functions.Text
 import graft.operators.{AsOfJoin, RangeJoin, Sketches}
 import graft.queries.Shared._
 import graft.streaming.EventStreams
-import graft.util.Tables
+import graft.util.{SelfCheck, Tables}
 import org.apache.spark.sql.functions._
 
 /** Relational and event-analytics queries: aggregation, joins, funnels,
@@ -207,7 +207,7 @@ private[graft] object RelationalQueries {
       steps, batchOf = e => e.event_id % 3).toDF()
     val corrections = EventStreams.funnelReconcile(
       ev, "user_id", "event_type", "ts", steps, None, tracked)
-    if (selfCheckEnabled)
+    if (SelfCheck.enabled)
       require(corrections.where(col("action") === "add").limit(1).count() > 0,
         "q_funnel_reconcile expected genuine cross-batch under-advance " +
           "on this fixture — with no corrections the repair path is " +

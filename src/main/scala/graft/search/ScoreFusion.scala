@@ -30,9 +30,6 @@ object ScoreFusion {
 
   def sigmoid(c: Column): Column = lit(1.0) / (lit(1.0) + exp(-c))
 
-  /** SQL rendition for oracle queries. */
-  def sigmoidSql(expr: String): String = s"1.0 / (1.0 + exp(-($expr)))"
-
   /** @param vec searchOne results: (id, score) — raw vector scores
     * @param txt searchTwo results: (id, score) — raw BM25 scores
     * @return (id, score, vec_norm, vec_raw, txt_norm, txt_raw) ranked

@@ -308,8 +308,6 @@ object VectorSearch {
     * (`backend/api.py:116-119`). */
   def clampLimit(k: Int): Int = math.max(1, math.min(k, 25))
 
-  /** Over-fetch heuristics for ANN (`backend/api.py:120`,
-    * `local-test.py:151`). */
-  def numCandidatesWeb(k: Int): Int = k * 20
+  /** Over-fetch heuristic for ANN (`local-test.py:151`). */
   def numCandidatesCli(k: Int): Int = math.max(k * 5, 200)
 }

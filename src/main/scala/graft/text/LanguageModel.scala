@@ -231,7 +231,7 @@ object LanguageModel {
     * (at 100 TB, persisted count tables are bucketed on those keys so
     * their shuffle is pre-paid by layout and only the corpus-side
     * triples move). The crossover is measured, not guessed —
-    * ScaleProbe's `lm3_bcast`/`lm3_bucketed` ladder (SCALE.md round-15
+    * `Measure scale`'s `lm3_bcast`/`lm3_bucketed` ladder (SCALE.md round-15
     * table): at gate scale broadcast wins (~1.5× — the count tables are
     * tiny), and the bucketed plan's flat per-point cost is what survives
     * when the vocabulary outgrows a hash relation. */

@@ -88,19 +88,6 @@ object TextAnalysis {
       lit(0.2) * alphaRatio + lit(0.2) * diversity, 6)
   }
 
-  def sqlQualityScore(expr: String): String = {
-    val toks = Text.sqlTokens(expr)
-    val stops = Stopwords.map(s => s"'$s'").mkString(", ")
-    s"""round(
-       |  0.3 * least(1.0, len($toks) / 50.0)
-       |  + 0.3 * (1.0 - CASE WHEN len($toks) = 0 THEN 0.0
-       |      ELSE len(list_filter($toks, t -> t IN ($stops)))::DOUBLE / len($toks) END)
-       |  + 0.2 * CASE WHEN length($expr) = 0 THEN 0.0
-       |      ELSE length(regexp_replace(lower($expr), '[^a-z0-9 ]', '', 'g'))::DOUBLE / length($expr) END
-       |  + 0.2 * CASE WHEN len($toks) = 0 THEN 0.0
-       |      ELSE len(list_distinct($toks))::DOUBLE / len($toks) END, 6)""".stripMargin
-  }
-
   /** Integer parts-per-million rendition of [[qualityScore]] — the same
     * frozen heuristic scaled by 1e6 and computed entirely in BIGINT
     * arithmetic with a single IEEE-754 double division at the end:

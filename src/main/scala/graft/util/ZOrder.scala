@@ -120,7 +120,7 @@ object ZOrder {
     * the validating pass costs one extra scan, so ingest pipelines that
     * already enforce domains may skip it explicitly. */
   def writeLayout(df: DataFrame, x: Dim, y: Dim, bits: Int, path: String,
-      validate: Boolean = sys.props.get("graft.selfcheck").contains("1")): Unit = {
+      validate: Boolean = SelfCheck.enabled): Unit = {
     checkDims(x, bits); checkDims(y, bits)
     if (validate) {
       val bad = df.where(

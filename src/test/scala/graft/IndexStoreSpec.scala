@@ -701,10 +701,20 @@ class IndexStoreSpec extends AnyFunSuite with SparkTest {
     assert(b0.where($"vec_id" === top).count() === 1)
 
     // compaction folds the 3 batches into one base partition, same answers
+    // (captured first: inc's file listing goes stale once compaction
+    // rewrites the layout)
+    def members(idx: Ivf.IvfIndex) = idx.assignments.select("id", "cluster")
+      .orderBy("id").collect().map(r => (r.get(0).toString, r.getInt(1))).toSeq
+    def top10(idx: Ivf.IvfIndex) =
+      Ivf.ann(idx, embs, "vec_id", "embedding", query, 10, Int.MaxValue)
+        .select("vec_id").as[Long].collect().toSeq
+    val (incMembers, incTop) = (members(inc), top10(inc))
     IndexStore.compactIvf(spark, dir)
     val compacted = IndexStore.loadIvf(spark, dir)
     assert(compacted.sizes === inc.sizes)
     assert(compacted.assignments.count() === embs.count())
+    assert(members(compacted) === incMembers)
+    assert(top10(compacted) === incTop)
     val batchDirs = new java.io.File(s"$dir/assignments").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName)
     assert(batchDirs.toSeq === Seq("batch=-1"))

@@ -130,12 +130,14 @@ class SearchSpec extends AnyFunSuite with SparkTest {
         all, "id", "text", Seq(Tuple1(p)).toDF("p"), k = 2)
       .orderBy("id", "pos").as[(Long, Int)].collect().toSeq
     // k-length, longer-than-k (offset intersection), and absent phrases
-    for (p <- Seq(Seq("a", "b"), Seq("a", "b", "c"), Seq("a", "b", "c", "d", "a"),
-        Seq("z", "z")))
-      assert(locate(p) === scan(p), s"phrase $p")
+    val probes = Seq(Seq("a", "b"), Seq("a", "b", "c"),
+      Seq("a", "b", "c", "d", "a"), Seq("z", "z"))
+    for (p <- probes) assert(locate(p) === scan(p), s"phrase $p")
     assert(locate(Seq("a", "b")) === Seq((1L, 0), (1L, 4), (2L, 1), (5L, 1)))
     // compaction folds batches without changing any answer
+    val before = probes.map(locate)
     graft.index.IndexStore.compactPhrase(spark, dir)
+    assert(probes.map(locate) === before)
     assert(locate(Seq("a", "b", "c", "d", "a")) === Seq((1L, 0)))
     // a phrase narrower than the index's gram width is refused loudly
     assert(intercept[IllegalArgumentException] {
