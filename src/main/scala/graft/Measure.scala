@@ -25,6 +25,9 @@ import scala.jdk.CollectionConverters._
   *   profile <sfDir> [names]  construct / plan / exec split per query,
   *           with its jobs and its costliest stages
   *   scale   <sfDir>  heavy operators over the tables replicated ×1/×4/×16
+  *   warm    <sfDir>  each `SparkEntry.warmIndexes` step: wall ms and
+  *           Spark jobs (`WARM <step> <ms> ms jobs=<n>`) — the index
+  *           write path (save, append/delete waves, checked loads)
   *
   * `names` is a comma-separated filter resolved by
   * `SparkEntry.selectQueries` (unknown names are refused). The query modes
@@ -37,7 +40,8 @@ object Measure {
       |  plan    <sfDir> [names] [--run]
       |  explain <sfDir> <outDir> <suffix> [names]
       |  profile <sfDir> [names]
-      |  scale   <sfDir>""".stripMargin
+      |  scale   <sfDir>
+      |  warm    <sfDir>""".stripMargin
 
   /** The replication ladder of `scale`. */
   private val ScaleReps = Seq(1, 4, 16)
@@ -68,6 +72,8 @@ object Measure {
         profile(_, sfDir, selected)
       case Seq("scale", sfDir) if !run =>
         spark => { scale(spark, sfDir); 0 }
+      case Seq("warm", sfDir) if !run =>
+        spark => { warm(spark, sfDir); 0 }
       case _ => throw new IllegalArgumentException(Usage)
     }
   }
@@ -151,72 +157,99 @@ object Measure {
       selected: Seq[Query]): Int = {
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.warmIndexes(spark, sfDir)
-    // (stage, tasks, summed run ms, slowest task ms, shuffle read/write B)
-    val stages = new ConcurrentLinkedQueue[(Int, Int, Long, Long, Long, Long)]()
-    val taskMax = new ConcurrentHashMap[Int, Long]()
-    val jobs = new ConcurrentLinkedQueue[(Int, Long, String)]()
-    val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          taskMax.merge(t.stageId, t.taskMetrics.executorRunTime, math.max)
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        stages.add((i.stageId, i.numTasks, i.taskMetrics.executorRunTime,
-          Option(taskMax.get(i.stageId)).getOrElse(0L),
-          i.taskMetrics.shuffleReadMetrics.totalBytesRead,
-          i.taskMetrics.shuffleWriteMetrics.bytesWritten))
-      }
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobStart.put(j.jobId, (System.nanoTime(),
-          Option(j.properties.getProperty("spark.job.description"))
-            .orElse(Option(j.properties.getProperty("callSite.short")))
-            .getOrElse(j.stageInfos.map(_.name.takeWhile(_ != ' '))
-              .mkString(s"stages=${j.stageInfos.size} ", ",", ""))))
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val st = jobStart.remove(j.jobId)
-        if (st != null) jobs.add((j.jobId, System.nanoTime() - st._1, st._2))
-      }
-    }
+    val rec = new Recorder
     def timed[T](f: => T): (Double, T) = {
       val t0 = System.nanoTime(); val r = f
       ((System.nanoTime() - t0) / 1e9, r)
     }
-    def drainJobs(label: String): Unit = {
-      GraftShim.drainListeners(spark.sparkContext)
-      jobs.asScala.toSeq.sortBy(_._1).foreach { case (id, ns, desc) =>
+    def drainJobs(label: String): Unit =
+      rec.drainJobs(spark).foreach { case (id, ns, desc) =>
         println(f"  JOB[$label] $id%5d ${ns / 1e9}%7.3fs ${desc.take(110)}")
       }
-      jobs.clear()
-    }
     val iters = Bench.iters
     val rows = Seq.newBuilder[(String, Double, Double, Double)]
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(rec)
     val failed = try eachQuery(selected) { query =>
       val obs = (1 to iters).map { it =>
         val last = it == iters
-        if (last) jobs.clear()
+        if (last) rec.drainJobs(spark)
         val (tc, df) = timed(query.build(spark, sfDir))
         if (last) drainJobs("construct")
         val (tp, _) = timed(df.queryExecution.executedPlan)
-        if (last) { stages.clear(); taskMax.clear() }
+        if (last) { rec.stages.clear(); rec.taskMax.clear() }
         val (te, _) = timed(df.queryExecution.toRdd.count())
         if (last) drainJobs("exec")
         (tc, tp, te)
       }
       val (c, p, e) = (obs.map(_._1).min, obs.map(_._2).min, obs.map(_._3).min)
       println(f"PROF ${query.name}%-36s construct=$c%7.3f plan=$p%7.3f exec=$e%7.3f total=${c + p + e}%7.3f")
-      stages.asScala.toSeq.sortBy(-_._3).take(12).foreach {
+      rec.stages.asScala.toSeq.sortBy(-_._3).take(12).foreach {
         case (id, n, run, mx, sr, sw) =>
           println(f"  STAGE $id%5d tasks=$n%4d runSum=${run / 1e3}%7.2fs taskMax=${mx / 1e3}%6.2fs shufR=${sr >> 10}%8dK shufW=${sw >> 10}%8dK")
       }
       rows += ((query.name, c, p, e))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally spark.sparkContext.removeSparkListener(rec)
     println("==== sorted by total (construct+plan+exec) ====")
     rows.result().sortBy(r => -(r._2 + r._3 + r._4)).foreach { case (n, c, p, e) =>
       println(f"PROFSUM $n%-36s construct=$c%7.3f plan=$p%7.3f exec=$e%7.3f total=${c + p + e}%7.3f")
     }
     failed
+  }
+
+  /** The job and stage listener of `profile` and `warm`: every finished
+    * job's (id, wall ns, description), and per completed stage (stage,
+    * tasks, summed run ms, slowest task ms, shuffle read/write bytes). */
+  private final class Recorder extends SparkListener {
+    val stages = new ConcurrentLinkedQueue[(Int, Int, Long, Long, Long, Long)]()
+    val taskMax = new ConcurrentHashMap[Int, Long]()
+    private val jobs = new ConcurrentLinkedQueue[(Int, Long, String)]()
+    private val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null)
+        taskMax.merge(t.stageId, t.taskMetrics.executorRunTime, math.max)
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val i = s.stageInfo
+      stages.add((i.stageId, i.numTasks, i.taskMetrics.executorRunTime,
+        Option(taskMax.get(i.stageId)).getOrElse(0L),
+        i.taskMetrics.shuffleReadMetrics.totalBytesRead,
+        i.taskMetrics.shuffleWriteMetrics.bytesWritten))
+    }
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobStart.put(j.jobId, (System.nanoTime(),
+        Option(j.properties.getProperty("spark.job.description"))
+          .orElse(Option(j.properties.getProperty("callSite.short")))
+          .getOrElse(j.stageInfos.map(_.name.takeWhile(_ != ' '))
+            .mkString(s"stages=${j.stageInfos.size} ", ",", ""))))
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+      val st = jobStart.remove(j.jobId)
+      if (st != null) jobs.add((j.jobId, System.nanoTime() - st._1, st._2))
+    }
+    /** The jobs finished since the last drain, by id, once the listener
+      * bus has delivered every event posted so far. */
+    def drainJobs(spark: SparkSession): Seq[(Int, Long, String)] = {
+      GraftShim.drainListeners(spark.sparkContext)
+      val done = jobs.asScala.toSeq.sortBy(_._1)
+      jobs.clear()
+      done
+    }
+  }
+
+  /** The index write path as a receipt: each [[SparkEntry.warmIndexes]]
+    * step in order — saves, append/delete/split waves, checked loads —
+    * with its wall time and the Spark jobs it ran, one `WARM` line each.
+    * Persisted fixtures are rewritten by every fresh session, so each
+    * step pays its full build. */
+  private[graft] def warm(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("sum(id)").collect()
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    try SparkEntry.warmSteps.foreach { step =>
+      rec.drainJobs(spark)
+      val t0 = System.nanoTime()
+      step.run(spark, sfDir)
+      val ms = (System.nanoTime() - t0) / 1e6
+      println(f"WARM ${step.name}%-22s $ms%9.1f ms jobs=${rec.drainJobs(spark).size}%4d")
+    } finally spark.sparkContext.removeSparkListener(rec)
   }
 
   /** Replication scaling probe (the SCALE.md measurement harness): the

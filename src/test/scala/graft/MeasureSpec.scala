@@ -41,6 +41,8 @@ class MeasureSpec extends AnyFunSuite with SparkTest with BeforeAndAfterAll {
       .getMessage.startsWith("usage: graft.Measure"))
     assert(intercept[IllegalArgumentException](Measure.parse(Seq("profile", Sf0001, "--run")))
       .getMessage.startsWith("usage: graft.Measure"))
+    assert(intercept[IllegalArgumentException](Measure.parse(Seq("warm", Sf0001, "q1_agg")))
+      .getMessage.startsWith("usage: graft.Measure"))
     assert(intercept[IllegalArgumentException](
       Measure.parse(Seq("plan", Sf0001, "q_distinct_sort,q_nope")))
       .getMessage === "requirement failed: unknown queries: 'q_nope'")
