@@ -51,6 +51,16 @@ import org.apache.spark.sql.functions._
   *     staleness guard): appends, deletions AND in-place mutations all
   *     change it, and work stays ∝ wave — never a corpus rescan. Run the
   *     check per ingest wave; per-query callers use the unchecked loaders.
+  *
+  * THE SHARED FAMILY BODIES on top of the protocol, each written once:
+  *   - one quantile body for the scalar and grouped sample families (the
+  *     wave writer, load, delete wave and rank rule; an optional group
+  *     column tells them apart — [[writeQuantileWave]]);
+  *   - one IVF cell-rewrite wave behind split and merge ([[rewriteCells]]);
+  *   - one erased-key re-ingest guard over the ledgers keyed by id or by
+  *     hash ([[requireUnerased]]);
+  *   - one bucket-count read behind the stats catalog's histogram
+  *     selectivity and quantile.
   */
 object IndexStore {
 
@@ -223,14 +233,17 @@ object IndexStore {
       .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
       .where(col(cnt) > 0)
 
-  /** Anti-join `rel` against the committed tombstones on `key` —
-    * broadcast by construction (bounded by delete volume; compactions
-    * purge them physically), free when no ledger exists. */
+  /** Anti-join `rel` against the committed tombstones, `rel`'s `key`
+    * against the ledger's `ledgerKey` — broadcast by construction
+    * (bounded by delete volume; compactions purge them physically), free
+    * when no ledger exists: `batches` is then never read. */
   private def minusTombstones(spark: SparkSession, path: String,
-      batches: Seq[Long], rel: DataFrame, key: String): DataFrame =
+      batches: => Seq[Long], rel: DataFrame, key: String,
+      ledgerKey: String = ""): DataFrame =
     if (!hasDataFiles(spark, s"$path/tombstones")) rel
     else rel.join(broadcast(committedRows(spark, path, "tombstones", batches)
-      .select(key)), Seq(key), "left_anti")
+      .select(col(if (ledgerKey.isEmpty) key else ledgerKey).as(key))),
+      Seq(key), "left_anti")
 
   /** One opened wave: its commit-marker id and the family's committed
     * marker set, read once. */
@@ -302,9 +315,10 @@ object IndexStore {
     * computed only once a record exists — and refuse a mismatch with the
     * repair instruction. A path with no committed marker refuses as never
     * completed; a committed index saved without its source has no
-    * fingerprint record and refuses as uncheckable. */
-  private def requireFresh(spark: SparkSession, family: String, path: String)(
-      corpus: => (Long, java.math.BigDecimal)): Unit = {
+    * fingerprint record and refuses as uncheckable. Returns `load`, run
+    * only once the index is proven fresh. */
+  private def requireFresh[T](spark: SparkSession, family: String,
+      path: String)(corpus: => (Long, java.math.BigDecimal))(load: => T): T = {
     val f = familyOf(family)
     val committed = committedBatches(spark, s"$path/${f.marker}")
     require(committed.nonEmpty, s"${f.label} index at $path has no " +
@@ -323,6 +337,7 @@ object IndexStore {
           "silently miss every row added or changed since the last " +
           s"commit; appendBatch${f.stem} the missing wave or rebuild with " +
           f.rebuild)
+    load
   }
 
   /** An index's recorded fingerprint: Σ of the committed batches' (n, fp)
@@ -366,16 +381,6 @@ object IndexStore {
     case None => dropDirs(spark, path, "fprint")
   }
 
-  /** The wave's `(id, __content)` rows NOT already erased by a committed
-    * delete wave: repeated erasure requests (two requests naming one
-    * user) must never double-decrement sizes/counts/df nor
-    * double-subtract the fingerprint; the wave still commits. */
-  private def unerased(spark: SparkSession, path: String,
-      committed: Seq[Long], deleted: DataFrame, idCol: String,
-      contentCol: String): DataFrame =
-    minusTombstones(spark, path, committed, deleted.select(
-      col(idCol).as("id"), col(contentCol).as("__content")), "id")
-
   /** A delete wave's shared bookkeeping: the erased ids as tombstones
     * (unless the family deletes by fingerprint alone) + the NEGATIVE
     * `(n, fp)` delta in the family's fingerprint table — for a family
@@ -391,15 +396,20 @@ object IndexStore {
       contentCol)), mid, s"$path/${familyOf(family).fprint}", all = false)
   }
 
-  /** An id-keyed delete wave: the guard, the [[unerased]] rows
-    * (checkpointed when `commit` reads them again), [[writeDeleteWave]],
-    * then `commit` writes the family's own deltas and its marker LAST. */
+  /** An id-keyed delete wave: the guard, the wave's `(id, __content)`
+    * rows NOT already erased by a committed delete wave (checkpointed
+    * when `commit` reads them again) — repeated erasure requests (two
+    * requests naming one user) must never double-decrement
+    * sizes/counts/df nor double-subtract the fingerprint; the wave still
+    * commits — [[writeDeleteWave]], then `commit` writes the family's own
+    * deltas and its marker LAST. */
   private def deleteById(family: String, deleted: DataFrame, idCol: String,
       contentCol: String, path: String, batchId: Long, issuer: String,
       checkpoint: Boolean)(commit: (Wave, DataFrame) => Unit): Unit = {
     val spark = deleted.sparkSession
     inWave(spark, family, path, "delete", batchId, issuer) { w =>
-      val rows0 = unerased(spark, path, w.committed, deleted, idCol, contentCol)
+      val rows0 = minusTombstones(spark, path, w.committed, deleted.select(
+        col(idCol).as("id"), col(contentCol).as("__content")), "id")
       val rows = if (checkpoint) rows0.localCheckpoint(true) else rows0
       writeDeleteWave(rows, "id", "__content", family, path, w.mid,
         tombstones = true)
@@ -584,7 +594,13 @@ object IndexStore {
     val lo = math.max(maxWave, floor + 1L)
     // waves at/below the floor were folded away — their provenance is
     // stale (a surviving checkpoint must get fresh post-floor waves)
-    val prov = readDeleteProv(spark, path).filter(_._1 > floor)
+    // (wave, issuer, src_batch) rows — tiny (one per delete wave)
+    val prov = (if (!hasDataFiles(spark, s"$path/delete_prov")) Seq.empty
+      else spark.read.parquet(s"$path/delete_prov")
+        .select(col("wave").cast("long"), col("issuer"),
+          col("src_batch").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq)
+      .filter(_._1 > floor)
     prov.find(p => p._2 == issuer && p._3 == batchId) match {
       case Some((w, _, _)) => w // this exact batch, replayed
       case None =>
@@ -599,17 +615,6 @@ object IndexStore {
         wave
     }
   }
-
-  /** (wave, issuer, src_batch) provenance rows under `path/delete_prov`
-    * — tiny (one row per delete wave), read whole. */
-  private def readDeleteProv(spark: SparkSession, path: String)
-      : Seq[(Long, String, Long)] =
-    if (!hasDataFiles(spark, s"$path/delete_prov")) Seq.empty
-    else spark.read.parquet(s"$path/delete_prov")
-      .select(col("wave").cast("long"), col("issuer"),
-        col("src_batch").cast("long"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
 
   // ------------------------------------------------------------------ BM25
   //
@@ -762,10 +767,9 @@ object IndexStore {
     * index missing newly-ingested documents silently never surfaces
     * them. */
   def loadBm25Checked(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): Bm25Index = {
-    requireFresh(spark, "bm25", path)(corpusFingerprint(docs, idCol, textCol))
-    loadBm25(spark, path)
-  }
+      idCol: String, textCol: String): Bm25Index =
+    requireFresh(spark, "bm25", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadBm25(spark, path))
 
   /** Fold every committed batch back into a single base partition —
     * the maintenance job that keeps file counts and the load-time term_df
@@ -852,10 +856,9 @@ object IndexStore {
     * sketch index missing newly-ingested vectors silently never pairs
     * against them. */
   def loadSignLshChecked(spark: SparkSession, path: String, embs: DataFrame,
-      idCol: String, embCol: String): DataFrame = {
-    requireFresh(spark, "signlsh", path)(corpusFingerprint(embs, idCol, embCol))
-    loadSignLsh(spark, path)
-  }
+      idCol: String, embCol: String): DataFrame =
+    requireFresh(spark, "signlsh", path)(corpusFingerprint(embs, idCol, embCol))(
+      loadSignLsh(spark, path))
 
   def compactSignLsh(spark: SparkSession, path: String): Unit = {
     saveSignLsh(loadSignLsh(spark, path), s"$path/.compact")
@@ -981,11 +984,10 @@ object IndexStore {
     * against an index missing newly-ingested documents silently never
     * pairs against them. */
   def loadContainmentChecked(spark: SparkSession, path: String,
-      docs: DataFrame, idCol: String, textCol: String): ContainmentIndex = {
+      docs: DataFrame, idCol: String, textCol: String): ContainmentIndex =
     requireFresh(spark, "containment", path)(
-      corpusFingerprint(docs, idCol, textCol))
-    loadContainment(spark, path)
-  }
+      corpusFingerprint(docs, idCol, textCol))(
+      loadContainment(spark, path))
 
   /** Fold every committed batch back into a single base partition, plus
     * one containment-specific payoff: prefixes are RE-RANKED against the
@@ -1103,10 +1105,9 @@ object IndexStore {
     * an index missing newly-ingested documents silently treats their
     * grams as novel. */
   def loadGramsChecked(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): GramIndex = {
-    requireFresh(spark, "grams", path)(corpusFingerprint(docs, idCol, textCol))
-    loadGrams(spark, path)
-  }
+      idCol: String, textCol: String): GramIndex =
+    requireFresh(spark, "grams", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadGrams(spark, path))
 
   /** Fold every committed batch back into one base partition, re-running
     * the global distinct so cross-batch duplicate hashes collapse. */
@@ -1190,10 +1191,9 @@ object IndexStore {
     * index missing newly-ingested documents silently reports their
     * occurrences as absent. */
   def loadPhraseChecked(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): PhraseIndex = {
-    requireFresh(spark, "phrase", path)(corpusFingerprint(docs, idCol, textCol))
-    loadPhrase(spark, path)
-  }
+      idCol: String, textCol: String): PhraseIndex =
+    requireFresh(spark, "phrase", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadPhrase(spark, path))
 
   def compactPhrase(spark: SparkSession, path: String): Unit = {
     val snapshot = loadPhrase(spark, path)
@@ -1333,10 +1333,9 @@ object IndexStore {
     * against an index missing newly-ingested documents silently scores
     * them absent. */
   def loadWindowsChecked(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): WindowIndex = {
-    requireFresh(spark, "windows", path)(corpusFingerprint(docs, idCol, textCol))
-    loadWindows(spark, path)
-  }
+      idCol: String, textCol: String): WindowIndex =
+    requireFresh(spark, "windows", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadWindows(spark, path))
 
   /** DELETE one wave of documents from the window index; the
     * late-interaction rerank then never scores erased documents, and the
@@ -1894,17 +1893,6 @@ object IndexStore {
       .toDF("cluster", "centroid"), s"$path/centroids")
   }
 
-  /** The largest cluster id the sizes table ever named (sentinels
-    * excluded) — fresh child ids are minted past it. */
-  private def maxCluster(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/sizes").where(col("cluster") =!= -1)
-      .agg(max(col("cluster"))).head().getInt(0)
-
-  private def requireLiveCell(idx: Ivf.IvfIndex, c: Int, path: String): Unit =
-    require(idx.sizes.contains(c),
-      s"cluster $c is not a live cell of the index at $path " +
-        s"(live: ${idx.sizes.keys.toSeq.sorted.mkString(", ")})")
-
   /** SPLIT one hot IVF cell in place — the maintenance middle path
     * between doing nothing (per-probe scan cost grows with the cell) and
     * a full retrain ([[executeRetrain]]: corpus-sized). Work ∝ cell
@@ -1915,18 +1903,12 @@ object IndexStore {
     * cell to the children. Routing is centroid-driven, so old assignment
     * rows become unreachable the moment their cluster id leaves the
     * centroids — there is no window where a member is visible twice or
-    * not at all:
-    *
-    *   1. child assignments (fresh cluster ids — NEVER the old id, which
-    *      would make rows double-visible) + a ZERO fprint delta (the
-    *      corpus did not change; the delta only keeps the fingerprint's
-    *      every-committed-batch coverage) + the sizes wave [(old, −sz,
-    *      −1), (cidA, nA, rA), (cidB, nB, rB)] — the commit. Children now
-    *      have mass but no centroid: probes still route to the old cell
-    *      and scan its still-present rows.
-    *   2. centroids rewrite (old out, children in) — the switch.
-    *   3. the old cell's assignment partition dirs deleted — physical
-    *      cleanup of rows already unreachable since step 2.
+    * not at all ([[rewriteCells]], the wave it shares with the merge).
+    * Children get fresh cluster ids — NEVER the old id, which would make
+    * rows double-visible; the ZERO fprint delta keeps the fingerprint's
+    * every-committed-batch coverage (the corpus did not change). After
+    * the sizes commit the children have mass but no centroid: probes
+    * still route to the old cell and scan its still-present rows.
     *
     * Run in the index's maintenance window (the [[finishFold]]
     * offline-window contract); a crash anywhere is repaired by
@@ -1939,69 +1921,94 @@ object IndexStore {
     * only OVER-report drift — the safe direction for an advisory
     * monitor. Commits under [[splitMarkerId]] (own namespace). */
   def splitClusterIvf(corpus: DataFrame, idCol: String, embCol: String,
-      path: String, cluster: Int, batchId: Long): Unit = {
+      path: String, cluster: Int, batchId: Long): Unit =
+    rewriteCells(corpus, idCol, embCol, path, "split", batchId, Seq(cluster)) {
+        (members, n, used) =>
+      require(n >= 2, s"cluster $cluster has $n live members — not splittable")
+      // deterministic 2-means over the members; its own cluster stats are
+      // the children's sizes and radii (same members, same centers)
+      val metric = corpus.sparkSession.read.parquet(s"$path/meta").head()
+        .getAs[String]("metric")
+      val sub = Ivf.build(members, "id", "__emb", numClusters = 2,
+        metric = metric)
+      // 2-means cell c becomes child used + 1 + c
+      (sub.assignments.select(col("id"),
+          (col("cluster") + lit(used + 1)).as("cluster")),
+        sub.sizes.map { case (c, sz) => (used + 1 + c) -> ((sz, sub.radii(c))) },
+        sub.centroids.map { case (c, v) => (used + 1 + c) -> v })
+    }
+
+  /** THE cell-rewrite wave behind [[splitClusterIvf]] and
+    * [[mergeClustersIvf]]: the `old` cells' members become `children`'
+    * cells, in the order that keeps every member reachable through
+    * exactly one live centroid:
+    *   1. open the wave in the `kind`'s marker namespace;
+    *   2. read the cells' LIVE members (tombstones out) — or, on a repair
+    *      re-run of a committed wave, its committed child rows (the old
+    *      partitions may be gone);
+    *   3. refuse a corpus that does not cover every member (it would
+    *      silently vanish from the index);
+    *   4. first run only: `children(members, n, max cluster id)` gives
+    *      the child (id, cluster) assignments, their (size, radius) and
+    *      centroids, with fresh ids minted past the sizes table's max;
+    *      write the assignments, the ZERO fprint delta and the child
+    *      centroids' `splits` sidecar — what makes a repair install the
+    *      EXACT vectors the radii were measured against;
+    *   5. commit the sizes wave [(old, −size, −1)…, (child, n, radius)…];
+    *   6. switch the centroid table (old out, children in);
+    *   7. drop the old cells' assignment partition dirs, unreachable
+    *      since the switch. */
+  private def rewriteCells(corpus: DataFrame, idCol: String, embCol: String,
+      path: String, kind: String, batchId: Long, old: Seq[Int])(
+      children: (DataFrame, Long, Int) =>
+        (DataFrame, Map[Int, (Long, Double)], Map[Int, Array[Double]])): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val w = openWave(spark, "ivf", path, "split", batchId, "")
-    // members: the cell's LIVE rows (tombstones out) — or, on a repair
-    // re-run, the committed child rows (the old partitions may be gone)
-    val memberIds =
+    val w = openWave(spark, "ivf", path, kind, batchId, "")
+    val (memberIds, oldSizes) =
       if (w.done)
-        committedRows(spark, path, "assignments", Seq(w.mid)).select("id")
+        (committedRows(spark, path, "assignments", Seq(w.mid)).select("id"),
+          Map.empty[Int, Long])
       else {
         val idx = loadIvf(spark, path)
-        requireLiveCell(idx, cluster, path)
-        idx.assignments.where(col("cluster") === cluster).select("id")
+        for (c <- old) require(idx.sizes.contains(c),
+          s"cluster $c is not a live cell of the index at $path " +
+            s"(live: ${idx.sizes.keys.toSeq.sorted.mkString(", ")})")
+        (idx.assignments.where(col("cluster").isin(old: _*)).select("id"),
+          idx.sizes)
       }
     val members = corpus
       .select(col(idCol).as("id"), col(embCol).as("__emb"))
       .join(memberIds, "id").localCheckpoint(true)
-    val sz = members.count()
-    require(sz == memberIds.count(),
-      s"corpus does not cover cluster $cluster's members — a member " +
-        "missing from the corpus would silently vanish from the index")
-    require(sz >= 2, s"cluster $cluster has $sz live members — not splittable")
-    // THE WAVE (first run only): deterministic 2-means over the members,
-    // fresh child ids minted past the sizes table's max, assignments +
-    // zero fprint delta + centroid sidecar written before the sizes
-    // commit. The sidecar is what makes a repair re-run install the EXACT
-    // vectors the committed radii were measured against — recomputing
-    // member means would drift from the 2-means centers (Lloyd's last
-    // update precedes the final assignment) and silently understate a
-    // ball radius, breaking knnJoinExact's bound.
-    val childCentroids: Map[Int, Array[Double]] =
+    val n = members.count()
+    require(n == memberIds.count(), "corpus does not cover " +
+      (if (old.size == 1) s"cluster ${old.head}'s" else "the cells'") +
+      " members — a member missing from the corpus would silently " +
+      "vanish from the index")
+    val kids: Map[Int, Array[Double]] =
       if (w.done) ivfCentroids(committedRows(spark, path, "splits", Seq(w.mid)))
       else {
-        val metric = spark.read.parquet(s"$path/meta").head()
-          .getAs[String]("metric")
-        val sub = Ivf.build(members, "id", "__emb", numClusters = 2,
-          metric = metric)
-        val used = maxCluster(spark, path)
-        val (cidA, cidB) = (used + 1, used + 2)
-        val childAssigned = sub.assignments
-          .select(col("id"),
-            when(col("cluster") === 0, lit(cidA)).otherwise(lit(cidB))
-              .as("cluster"))
-        writeBatch(childAssigned, w.mid, s"$path/assignments", all = false,
+        // fresh ids past the largest the sizes table ever named
+        // (sentinels excluded)
+        val (assigned, stats, kids) = children(members, n,
+          spark.read.parquet(s"$path/sizes").where(col("cluster") =!= -1)
+            .agg(max(col("cluster"))).head().getInt(0))
+        writeBatch(assigned, w.mid, s"$path/assignments", all = false,
           "cluster")
         writeFp(spark, (0L, java.math.BigDecimal.ZERO), w.mid,
           s"$path/fprint", all = false)
-        val kids = Map(cidA -> sub.centroids(0), cidB -> sub.centroids(1))
         writeBatch(kids.toSeq.map { case (cid, c) => (cid, c.toSeq) }
           .toDF("cluster", "centroid"), w.mid, s"$path/splits", all = false)
-        val kidStats = Ivf.clusterStats(
-          childAssigned.join(members, "id"), "cluster", "__emb", kids)
-        writeBatch((Seq((cluster, -sz, -1.0)) ++ kidStats.toSeq.map {
-            case (cid, (n, r)) => (cid, n, r) })
+        writeBatch((old.map(c => (c, -oldSizes(c), -1.0)) ++
+            stats.toSeq.map { case (cid, (sz, r)) => (cid, sz, r) })
           .toDF("cluster", "size", "radius"), w.mid, s"$path/sizes",
           all = false)
         kids
       }
     writeCentroids(spark, ivfCentroids(spark.read.parquet(s"$path/centroids"))
-      - cluster ++ childCentroids, path)
-    // cleanup: the old cell's rows, unreachable since the switch
-    dropDirs(spark, path, w.committed.filter(_ != w.mid)
-      .map(b => s"assignments/batch=$b/cluster=$cluster"): _*)
+      -- old ++ kids, path)
+    dropDirs(spark, path, (for (b <- w.committed if b != w.mid; c <- old)
+      yield s"assignments/batch=$b/cluster=$c"): _*)
     members.unpersist()
   }
 
@@ -2048,61 +2055,22 @@ object IndexStore {
     * children). */
   def mergeClustersIvf(corpus: DataFrame, idCol: String, embCol: String,
       path: String, clusterA: Int, clusterB: Int, batchId: Long): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val w = openWave(spark, "ivf", path, "merge", batchId, "")
     require(clusterA != clusterB, "merging a cell with itself is a no-op")
-    val (memberIds, szA, szB) =
-      if (w.done)
-        (committedRows(spark, path, "assignments", Seq(w.mid)).select("id"),
-          -1L, -1L)
-      else {
-        val idx = loadIvf(spark, path)
-        for (c <- Seq(clusterA, clusterB)) requireLiveCell(idx, c, path)
-        (idx.assignments
-           .where(col("cluster").isin(clusterA, clusterB)).select("id"),
-         idx.sizes(clusterA), idx.sizes(clusterB))
-      }
-    val members = corpus
-      .select(col(idCol).as("id"), col(embCol).as("__emb"))
-      .join(memberIds, "id").localCheckpoint(true)
-    val sz = members.count()
-    require(sz == memberIds.count(),
-      s"corpus does not cover the cells' members — a member missing " +
-        "from the corpus would silently vanish from the index")
-    val mergedCentroid: (Int, Array[Double]) =
-      if (w.done)
-        ivfCentroids(committedRows(spark, path, "splits", Seq(w.mid))).head
-      else {
-        val dim = spark.read.parquet(s"$path/meta").head().getAs[Int]("dim")
-        val c = members
-          .select(col("__emb").cast("array<double>").as("v"))
-          .agg(array((0 until dim).map(i => avg(col("v")(i))): _*))
-          .head().getSeq[Double](0).toArray
-        val cid = maxCluster(spark, path) + 1
-        writeBatch(members.select(col("id"), lit(cid).as("cluster")), w.mid,
-          s"$path/assignments", all = false, "cluster")
-        writeFp(spark, (0L, java.math.BigDecimal.ZERO), w.mid,
-          s"$path/fprint", all = false)
-        // the merged centroid rides the wave sidecar for the same
-        // reason as the split's: repair must install the vectors the
-        // radius was measured against
-        writeBatch(Seq((cid, c.toSeq)).toDF("cluster", "centroid"), w.mid,
-          s"$path/splits", all = false)
-        val (mn, mr) = Ivf.clusterStats(
+    rewriteCells(corpus, idCol, embCol, path, "merge", batchId,
+        Seq(clusterA, clusterB)) { (members, _, used) =>
+      val dim = corpus.sparkSession.read.parquet(s"$path/meta").head()
+        .getAs[Int]("dim")
+      val c = members
+        .select(col("__emb").cast("array<double>").as("v"))
+        .agg(array((0 until dim).map(i => avg(col("v")(i))): _*))
+        .head().getSeq[Double](0).toArray
+      val cid = used + 1
+      (members.select(col("id"), lit(cid).as("cluster")),
+        Ivf.clusterStats(
           members.select(col("id"), lit(cid).as("cluster"), col("__emb")),
-          "cluster", "__emb", Map(cid -> c))(cid)
-        writeBatch(Seq((clusterA, -szA, -1.0), (clusterB, -szB, -1.0),
-            (cid, mn, mr)).toDF("cluster", "size", "radius"), w.mid,
-          s"$path/sizes", all = false)
-        cid -> c
-      }
-    writeCentroids(spark, ivfCentroids(spark.read.parquet(s"$path/centroids"))
-      - clusterA - clusterB + mergedCentroid, path)
-    // cleanup: the old cells' rows, unreachable since the switch
-    dropDirs(spark, path, (for (b <- w.committed if b != w.mid;
-      c <- Seq(clusterA, clusterB)) yield s"assignments/batch=$b/cluster=$c"): _*)
-    members.unpersist()
+          "cluster", "__emb", Map(cid -> c)),
+        Map(cid -> c))
+    }
   }
 
   /** Advise WHICH two cells to merge — [[adviseSplitIvf]]'s twin. Mass
@@ -2154,27 +2122,18 @@ object IndexStore {
     val cells = index.sizes.collect {
       case (c, s) if s <= factor * even => c
     }.toArray.sorted
-    var best = -1.0; var bestA = -1; var bestB = -1
-    var i = 0
-    while (i < cells.length) {
-      var j = i + 1
-      while (j < cells.length) {
-        val (a, b) = (cells(i), cells(j))
-        if (index.sizes(a) + index.sizes(b) <= factor * even) {
-          val d = dist(a, b)
-          if (bestA < 0 || d < best ||
-              (d == best && (a < bestA || (a == bestA && b < bestB)))) {
-            best = d; bestA = a; bestB = b
-          }
-        }
-        j += 1
-      }
-      i += 1
-    }
-    if (bestA >= 0)
-      MergeAdvice(bestA, bestB, index.sizes(bestA) + index.sizes(bestB),
-        even, best, advise = true)
-    else {
+    // closest pair; ascending (a, b) order, so the first minimum is the
+    // smallest (a, b) on a tie
+    val pairs = for {
+      i <- cells.indices.iterator; j <- (i + 1 until cells.length).iterator
+      (a, b) = (cells(i), cells(j))
+      if index.sizes(a) + index.sizes(b) <= factor * even
+    } yield (dist(a, b), a, b)
+    if (pairs.hasNext) {
+      val (best, a, b) = pairs.reduce((x, y) => if (y._1 < x._1) y else x)
+      MergeAdvice(a, b, index.sizes(a) + index.sizes(b), even, best,
+        advise = true)
+    } else {
       val bySize = index.sizes.toSeq.sortBy { case (c, s) => (s, c) }
       val (ca, _) = bySize(0); val (cb, _) = bySize(1)
       MergeAdvice(ca, cb, index.sizes(ca) + index.sizes(cb), even,
@@ -2318,10 +2277,9 @@ object IndexStore {
     * computed from a vector that has since changed is exactly as stale
     * as a missing one). */
   def loadIvfChecked(spark: SparkSession, path: String, corpus: DataFrame,
-      idCol: String, embCol: String): Ivf.IvfIndex = {
-    requireFresh(spark, "ivf", path)(corpusFingerprint(corpus, idCol, embCol))
-    loadIvf(spark, path)
-  }
+      idCol: String, embCol: String): Ivf.IvfIndex =
+    requireFresh(spark, "ivf", path)(corpusFingerprint(corpus, idCol, embCol))(
+      loadIvf(spark, path))
 
   /** Fold every committed batch back into a single base partition.
     * Folding does NOT re-train centroids; that is a fresh `Ivf.build`. */
@@ -2425,11 +2383,9 @@ object IndexStore {
   def executeRetrain(spark: SparkSession, path: String, plan: RetrainPlan,
       corpus: DataFrame, idCol: String,
       embCol: String, numClusters: Int = 0, seed: Long = 42L,
-      metric: String = "cosine"): Boolean = {
-    if (!plan.recommend) return false
-    createIvf(corpus, idCol, embCol, path, numClusters, seed, metric)
-    true
-  }
+      metric: String = "cosine"): Boolean =
+    rebuildIfRecommended(plan)(
+      createIvf(corpus, idCol, embCol, path, numClusters, seed, metric))
 
   /** The PQ rendition of [[executeRetrain]]: re-train codebooks on the
     * full current corpus when the plan recommends it — fresh fingerprint,
@@ -2437,11 +2393,16 @@ object IndexStore {
   def executeRetrainPq(spark: SparkSession, path: String,
       plan: RetrainPlan, corpus: DataFrame,
       idCol: String, embCol: String, m: Int = 8, ksub: Int = 16,
-      seed: Long = 42L, metric: String = "cosine"): Boolean = {
-    if (!plan.recommend) return false
-    savePq(Pq.build(corpus, idCol, embCol, m, ksub, seed, metric), path,
-      source = Some((corpus, idCol, embCol)))
-    true
+      seed: Long = 42L, metric: String = "cosine"): Boolean =
+    rebuildIfRecommended(plan)(
+      savePq(Pq.build(corpus, idCol, embCol, m, ksub, seed, metric), path,
+        source = Some((corpus, idCol, embCol))))
+
+  /** Run `rebuild` only when `plan` recommends it; whether it ran. */
+  private def rebuildIfRecommended(plan: RetrainPlan)(rebuild: => Any)
+      : Boolean = {
+    if (plan.recommend) rebuild
+    plan.recommend
   }
 
   // -------------------------------------------------------------------- PQ
@@ -2569,10 +2530,9 @@ object IndexStore {
 
   /** [[loadPq]] with the staleness guard. */
   def loadPqChecked(spark: SparkSession, path: String, corpus: DataFrame,
-      idCol: String, embCol: String): Pq.PqIndex = {
-    requireFresh(spark, "pq", path)(corpusFingerprint(corpus, idCol, embCol))
-    loadPq(spark, path)
-  }
+      idCol: String, embCol: String): Pq.PqIndex =
+    requireFresh(spark, "pq", path)(corpusFingerprint(corpus, idCol, embCol))(
+      loadPq(spark, path))
 
   /** Fold every committed batch back into a single base partition.
     * Folding does NOT re-train codebooks; that is a fresh `Pq.build`. */
@@ -2659,13 +2619,12 @@ object IndexStore {
     * routed==exact contract holds instead of silently under-recalling
     * after an unindexed append. */
   def loadPrefixChecked(spark: SparkSession, path: String, corpus: DataFrame,
-      idCol: String, embCol: String): DataFrame = {
+      idCol: String, embCol: String): DataFrame =
     requireFresh(spark, "prefix", path)(
-      corpusFingerprint(corpus, idCol, embCol))
-    loadPrefix(spark, path)
-      .withColumnRenamed("id", idCol)
-      .withColumnRenamed("embedding", embCol)
-  }
+      corpusFingerprint(corpus, idCol, embCol))(
+      loadPrefix(spark, path)
+        .withColumnRenamed("id", idCol)
+        .withColumnRenamed("embedding", embCol))
 
   /** Fold every committed prefix batch back into a single base
     * partition. The marks hashed FULL vectors at commit time and the
@@ -2867,11 +2826,8 @@ object IndexStore {
     inWave(spark, "stats", path, "delete", batchId, "") { w =>
       // anti-join on the caller's id column: statsDelta needs the wave's
       // ORIGINAL field columns
-      val rows = (if (!hasDataFiles(spark, s"$path/tombstones")) deleted
-        else deleted.join(broadcast(committedRows(spark, path, "tombstones",
-            w.committed).select(col("id").as("__erased_id"))),
-          deleted(idCol) === col("__erased_id"), "left_anti"))
-        .localCheckpoint(true)
+      val rows = minusTombstones(spark, path, w.committed, deleted, idCol,
+        "id").localCheckpoint(true)
       writeDeleteWave(rows, idCol, contentCol, "stats", path, w.mid,
         tombstones = true)
       writeStatsBatch(statsDelta(rows, statsFields(spark, path),
@@ -2885,11 +2841,10 @@ object IndexStore {
     * an ingest wave can flip the planner's filtered-ANN break-even the
     * wrong way with no error and no wrong hash. */
   def loadStatsChecked(spark: SparkSession, path: String, corpus: DataFrame,
-      idCol: String, contentCol: String): DataFrame = {
+      idCol: String, contentCol: String): DataFrame =
     requireFresh(spark, "stats", path)(
-      corpusFingerprint(corpus, idCol, contentCol))
-    loadStats(spark, path)
-  }
+      corpusFingerprint(corpus, idCol, contentCol))(
+      loadStats(spark, path))
 
   /** Fold every committed stats batch back into a single base partition;
     * the guarded writer re-asserts the cardinality cap on the MERGED
@@ -2956,14 +2911,17 @@ object IndexStore {
     * rather than guessing. NULL rows count in the denominator only (a
     * NULL satisfies no range predicate). */
   def histSelectivity(stats: DataFrame, field: String,
-      h: HistSpec, qlo: Long, qhi: Long): Double = {
-    val counts = stats.where(col("field") === field)
+      h: HistSpec, qlo: Long, qhi: Long): Double =
+    histSelectivityFromCounts(bucketCounts(stats, field),
+      statsRows(stats, field), h, qlo, qhi)
+
+  /** `field`'s non-null catalog rows as bucket index → count. */
+  private def bucketCounts(stats: DataFrame, field: String): Map[Long, Long] =
+    stats.where(col("field") === field)
       .select(col("value"), col("cnt"))
       .collect()
       .flatMap(r => Option(r.getString(0)).map(v => v.toLong -> r.getLong(1)))
       .toMap
-    histSelectivityFromCounts(counts, statsRows(stats, field), h, qlo, qhi)
-  }
 
   /** The pure arithmetic behind [[histSelectivity]], over already-
     * collected bucket counts — the form plan-time consumers that hold a
@@ -3034,11 +2992,7 @@ object IndexStore {
     * catalog's NULL-value row) — see the arithmetic form's contract. */
   def histQuantile(stats: DataFrame, field: String,
       h: HistSpec, p: Double): (Long, Long) = {
-    val counts = stats.where(col("field") === field)
-      .select(col("value"), col("cnt"))
-      .collect()
-      .flatMap(r => Option(r.getString(0)).map(v => v.toLong -> r.getLong(1)))
-      .toMap
+    val counts = bucketCounts(stats, field)
     require(counts.nonEmpty,
       s"stats catalog has no non-null values for field '$field'")
     histQuantileFromCounts(counts, counts.values.sum, h, p)
@@ -3108,7 +3062,7 @@ object IndexStore {
   //                   queries scan the committed tail fully
   //   meta/           (x_name, x_lo, x_hi, y_name, y_lo, y_hi, bits) DDL
   //   marks/batch=N/  (n, fp) fingerprint delta = commit marker; the
-  //                   fingerprint hashes the WHOLE row ([[zorderFingerprint]])
+  //                   fingerprint hashes the WHOLE row ([[zorderRowHash]])
   //
   // Box queries are EXACT at every lifecycle point: base ∪ committed tail
   // is definitionally the whole table and the residual predicate always
@@ -3123,13 +3077,17 @@ object IndexStore {
   case class ZOrderMeta(x: graft.util.ZOrder.Dim, y: graft.util.ZOrder.Dim,
       bits: Int)
 
-  /** (count, Σ xxhash64 over ALL data columns in sorted-name order) — the
-    * layout's fingerprint is content-sensitive on the whole row (a payload
-    * mutation without a re-append is as stale as a missing row), and the
-    * sorted order makes it schema-order-independent so the checked loader
-    * can take the corpus with its columns in any arrangement. */
-  private def zorderFingerprint(df: DataFrame): (Long, java.math.BigDecimal) =
-    fingerprint(df, xxhash64(df.columns.filterNot(_ == "__zb").sorted.map(col): _*))
+  /** The layout's content-address: xxhash64 over ALL data columns in
+    * sorted-name order. The fingerprint sums it, so content-addressed
+    * erasure and the staleness guard can never disagree about what a row
+    * "is"; it is content-sensitive on the whole row (a payload mutation
+    * without a re-append is as stale as a missing row), and the sorted
+    * order makes it schema-order-independent so the checked loader can
+    * take the corpus with its columns in any arrangement. */
+  private def zorderRowHash(df: DataFrame): org.apache.spark.sql.Column =
+    xxhash64(df.columns.filterNot(c => c == "__zb" || c == "batch").sorted
+      .map(col): _*)
+
 
   private def writeZOrderMeta(spark: SparkSession, m: ZOrderMeta,
       dir: String): Unit = {
@@ -3150,7 +3108,8 @@ object IndexStore {
     dropDirs(spark, path, "tail", "tombstones")
     graft.util.ZOrder.writeLayout(df, x, y, bits, s"$path/base", validate)
     writeZOrderMeta(spark, ZOrderMeta(x, y, bits), s"$path/meta")
-    writeFp(spark, zorderFingerprint(df), -1L, s"$path/marks", all = true)
+    writeFp(spark, fingerprint(df, zorderRowHash(df)), -1L, s"$path/marks",
+      all = true)
   }
 
   private def zorderMeta(r: org.apache.spark.sql.Row): ZOrderMeta =
@@ -3185,23 +3144,16 @@ object IndexStore {
           s" — e.g. ${bad.mkString(", ")}; re-save the layout with wider dims" +
           " (a later fold would put them in edge buckets where base pruning" +
           " silently skips them)")
-      requireNoResurrectedHashes(spark, path, w.committed,
-        batch.select(zorderRowHash(batch).as("h")), "z-order", "compactZOrder")
+      requireUnerased(spark, "zorder", path, w.committed, batchId,
+        batch.select(zorderRowHash(batch).as("h")))
       writeBatch(batch.withColumn("__zb",
         graft.util.ZOrder.zbucket(m.x, m.y, m.bits)), batchId, s"$path/tail",
         all = false)
-      writeFp(spark, zorderFingerprint(batch), batchId, s"$path/marks",
+      writeFp(spark, fingerprint(batch, zorderRowHash(batch)), batchId,
+        s"$path/marks",
         all = false)
     }
   }
-
-  /** The layout's content-address: xxhash64 over ALL data columns in
-    * sorted-name order — the SAME per-row bytes [[zorderFingerprint]]
-    * sums, so content-addressed erasure and the staleness guard can
-    * never disagree about what a row "is". */
-  private def zorderRowHash(df: DataFrame): org.apache.spark.sql.Column =
-    xxhash64(df.columns.filterNot(c => c == "__zb" || c == "batch").sorted
-      .map(col): _*)
 
   /** DELETE one wave of rows from the layout — CONTENT-ADDRESSED
     * erasure for the one family with no id column: the layout IS the
@@ -3225,52 +3177,15 @@ object IndexStore {
     val spark = deleted.sparkSession
     inWave(spark, "zorder", path, "delete", batchId, "") { w =>
       val wave0 = deleted.drop("__zb").drop("batch")
-      val rows = minusZOrderTombstones(spark, path, w.committed, wave0)
-        .withColumn("__h", zorderRowHash(wave0)).localCheckpoint(true)
+      val rows = minusTombstones(spark, path, w.committed,
+        wave0.withColumn("__h", zorderRowHash(wave0)), "__h", "h")
+        .localCheckpoint(true)
       writeBatch(rows.select(col("__h").as("h")).distinct(), w.mid,
         s"$path/tombstones", all = false)
       writeFp(spark, negated(fingerprint(rows, col("__h"))), w.mid,
         s"$path/marks", all = false)
     }
   }
-
-  /** Refuse an append wave that re-ingests hashes still sitting in a
-    * HASH-ADDRESSED tombstone ledger (z-order content hashes, quantile
-    * id-hashes). Re-appending a tombstoned hash before compaction is a
-    * SILENT correctness hole, not a staleness the fprint guard can see:
-    * the append's +fp mark exactly cancels the erasure wave's −fp, so
-    * the checked loader passes, while the ledger's anti-join keeps
-    * hiding the legitimately re-appended LIVE row from every query. The
-    * ledger cannot tell "erased copy" from "re-ingest" (that ambiguity
-    * is what content/hash addressing trades for id-freedom), so the
-    * family refuses loudly: fold first (compaction purges the ledger),
-    * then append. Cost: one broadcast semi-join per APPEND WAVE, and
-    * only when a ledger exists — wave-time work ∝ batch, never a
-    * per-query cost. */
-  private def requireNoResurrectedHashes(spark: SparkSession, path: String,
-      committed: Seq[Long], waveHashes: DataFrame, family: String,
-      compactHint: String): Unit = {
-    if (!hasDataFiles(spark, s"$path/tombstones")) return
-    val hit = waveHashes.join(broadcast(committedRows(spark, path,
-        "tombstones", committed).select(col("h").as("__ts_h"))),
-        col("h") === col("__ts_h"), "left_semi")
-      .limit(1).count() > 0
-    require(!hit,
-      s"$family append at $path re-ingests rows whose hashes are still " +
-        "tombstoned: the wave's +fp mark would cancel the erasure's −fp " +
-        "(the checked loader passes) while the ledger's anti-join keeps " +
-        "hiding the re-appended LIVE rows from every query — run " +
-        s"$compactHint first (the fold purges the ledger), then append")
-  }
-
-  /** Anti-join a layout relation against the committed content
-    * tombstones — free when no ledger exists. */
-  private def minusZOrderTombstones(spark: SparkSession, path: String,
-      committed: => Seq[Long], rel: DataFrame): DataFrame =
-    if (!hasDataFiles(spark, s"$path/tombstones")) rel
-    else rel.join(broadcast(committedRows(spark, path, "tombstones",
-        committed).select(col("h").as("__ts_h"))),
-      zorderRowHash(rel) === col("__ts_h"), "left_anti")
 
   /** `base` ∪ the committed tail (the bookkeeping `batch` dropped, `__zb`
     * normalized to long — the base's partition-directory inference
@@ -3281,10 +3196,12 @@ object IndexStore {
     // read only when a tail or a ledger exists (a fresh save has neither)
     lazy val committed = committedOf(spark, "zorder", path)
     lazy val tail = committed.filter(_ >= 0)
-    minusZOrderTombstones(spark, path, committed,
+    val rel =
       if (!hasDataFiles(spark, s"$path/tail") || tail.isEmpty) base
       else base.unionByName(committedRows(spark, path, "tail", tail)
-        .drop("batch").withColumn("__zb", col("__zb").cast("long"))))
+        .drop("batch").withColumn("__zb", col("__zb").cast("long")))
+    minusTombstones(spark, path, committed,
+      rel.withColumn("__h", zorderRowHash(rel)), "__h", "h").drop("__h")
   }
 
   /** The whole LIVE table: clustered base ∪ committed tail, minus any
@@ -3295,10 +3212,10 @@ object IndexStore {
 
   /** [[loadZOrder]] with the staleness guard. */
   def loadZOrderChecked(spark: SparkSession, path: String,
-      corpus: DataFrame): DataFrame = {
-    requireFresh(spark, "zorder", path)(zorderFingerprint(corpus))
-    loadZOrder(spark, path)
-  }
+      corpus: DataFrame): DataFrame =
+    requireFresh(spark, "zorder", path)(
+      fingerprint(corpus, zorderRowHash(corpus)))(
+      loadZOrder(spark, path))
 
   /** Exact 2-D box query across the lifecycle: IN-list partition pruning
     * on the base (directory pruning over ≤ 4^bits bucket ids — driver
@@ -3546,75 +3463,29 @@ object IndexStore {
     * mg, kmv — milliseconds of work each), so loading N sources
     * SEQUENTIALLY pays N × per-job scheduling latency — at 20 sources
     * that was the single most expensive line of the whole report (10+ s
-    * of driver round-trips for ~0 bytes of data). Spark job submission
-    * is thread-safe; submitting the loads concurrently collapses the
-    * wall-clock to ~the slowest single load. Returns in input order. */
-  /** Per-family timeout for [[loadSummaries]] — each load is a handful
-    * of tiny local sidecar reads, so minutes of slack already means
-    * something is WRONG (a hung FS handle, a dead executor), and an
-    * unbounded await would block the whole report forever with no
-    * diagnostic. */
-  val SummaryLoadTimeout: scala.concurrent.duration.FiniteDuration =
-    scala.concurrent.duration.Duration(5, "min")
-
-  /** Submission-parallelism cap for [[loadSummaries]] — fleet
-    * cardinality is unbounded while any shared pool is not; 16 in-flight
-    * loads saturate the scheduling-latency win without monopolizing a
-    * pool. */
-  val SummaryLoadParallelism = 16
-
+    * of driver round-trips for ~0 bytes of data). [[Par.all]] submits
+    * the loads concurrently, collapsing the wall-clock to ~the slowest
+    * single load; a failing load cancels its siblings' Spark jobs and
+    * is rethrown naming its family (the read error alone names only a
+    * path fragment, useless against a 50-source fleet). Returns in
+    * input order. */
   def loadSummaries(spark: SparkSession, paths: Seq[(String, String)])
-      : Seq[(String, SummaryIndex)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-    import scala.concurrent.duration.Deadline
-    // a DEDICATED bounded pool: these futures BLOCK on Spark actions, and
-    // parking them on ExecutionContext.global would (a) cap fleet loads
-    // at CPU count for IO-latency-bound work and (b) starve any other
-    // user of the global pool for the duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(SummaryLoadParallelism, math.max(1, paths.size)),
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-summary-load-${n.getAndIncrement}")
-          t.setDaemon(true)
-          t
-        }
-      })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val deadline = Deadline.now + SummaryLoadTimeout
-      val futures = paths.map { case (name, path) =>
-        (name, path, Future(blocking { name -> loadSummary(spark, path) }))
+      : Seq[(String, SummaryIndex)] =
+    Par.all(paths.map { case (name, path) => () =>
+      try name -> loadSummary(spark, path)
+      catch { case e: Exception =>
+        throw new IllegalStateException(
+          s"loadSummaries: family '$name' at $path failed to load: " +
+            s"${e.getMessage}", e)
       }
-      // await each under the SHARED deadline, naming the family that hung
-      futures.map { case (name, path, f) =>
-        try Await.result(f, deadline.timeLeft)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            throw new java.util.concurrent.TimeoutException(
-              s"loadSummaries: family '$name' at $path did not load " +
-                s"within $SummaryLoadTimeout — a summary load is " +
-                "milliseconds of sidecar reads; investigate the path/FS " +
-                "instead of waiting")
-          case e: Exception =>
-            // name the family — the underlying read error only names a
-            // path fragment, useless against a 50-source fleet
-            throw new IllegalStateException(
-              s"loadSummaries: family '$name' at $path failed to load: " +
-                s"${e.getMessage}", e)
-        }
-      }
-    } finally pool.shutdownNow()
-  }
+    })
 
   /** [[loadSummary]] with the staleness guard: a summary missing an
     * ingest wave silently under-counts every report. */
   def loadSummaryChecked(spark: SparkSession, path: String, items: DataFrame,
-      itemCol: String): SummaryIndex = {
-    requireFresh(spark, "summary", path)(summaryFingerprint(items, itemCol))
-    loadSummary(spark, path)
-  }
+      itemCol: String): SummaryIndex =
+    requireFresh(spark, "summary", path)(summaryFingerprint(items, itemCol))(
+      loadSummary(spark, path))
 
   /** EXACT heavy hitters from the persisted summary — items whose
     * frequency strictly exceeds n/kReport, with exact counts: the merged
@@ -3666,52 +3537,44 @@ object IndexStore {
   // vetoes re-ingest of a ledgered id (whose next erasure request would
   // dedupe against the old entry and silently never subtract).
 
-  /** Refuse an append wave that re-ingests a ledgered id (one
-    * wave-sized anti-probe against the broadcast ledger — only when a
-    * ledger exists). */
-  private def ledgerRefuseReingest(spark: SparkSession, path: String,
-      committed: Seq[Long], docs: DataFrame, idCol: String, family: String,
-      batchId: Long): Unit =
+  /** THE re-ingest guard of the erasure ledgers: refuse an append wave
+    * whose key — the single column of `wave`, named as in the ledger —
+    * is still in the committed tombstones. One wave-sized broadcast
+    * semi-join, only when a ledger exists: wave-time work ∝ batch, never
+    * a per-query cost.
+    *   - `id` (the fold-only count families' string-rendered erased ids):
+    *     a ledgered id cannot re-enter — its next erasure request would
+    *     dedupe against the old entry and silently never subtract.
+    *   - `h` (z-order content hashes, quantile id-hashes): the append's
+    *     +fp mark would exactly cancel the erasure wave's −fp, so the
+    *     checked loader passes while the ledger's anti-join keeps hiding
+    *     the legitimately re-appended LIVE row from every query. The
+    *     ledger cannot tell "erased copy" from "re-ingest" (what hash
+    *     addressing trades for id-freedom), so the family refuses until a
+    *     fold purges the ledger. */
+  private def requireUnerased(spark: SparkSession, family: String,
+      path: String, committed: Seq[Long], batchId: Long,
+      wave: DataFrame): Unit =
     if (hasDataFiles(spark, s"$path/tombstones")) {
-      val offender = docs.select(col(idCol).cast("string").as("id"))
-        .join(broadcast(committedRows(spark, path, "tombstones", committed)
-          .select(col("id").cast("string").as("id"))), Seq("id"), "left_semi")
-        .limit(1).collect()
-      require(offender.isEmpty,
-        s"$family append wave $batchId re-ingests erased id " +
-          s"'${offender.headOption.map(_.getString(0)).getOrElse("")}' — " +
-          "an id in the erased-id ledger cannot re-enter (its next " +
-          "erasure request would dedupe against the old entry and " +
-          "silently never subtract); rebuild the family if the id " +
-          "legitimately returns")
-    }
-
-  /** Dedupe a delete wave against the committed ledger: rows whose
-    * string-rendered id (the [[erasureAudit]] canonical form) has NO
-    * committed ledger entry, carrying the ORIGINAL id column as
-    * `__origid` — xxhash64 fingerprints are type-sensitive, and the
-    * append side hashed the raw column, so the delta must hash the same
-    * bytes. localCheckpoint'd: three consumers follow (ledger write,
-    * count deltas, fingerprint). */
-  private def ledgerDedupe(spark: SparkSession, path: String,
-      committed: Seq[Long], docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    minusTombstones(spark, path, committed,
-        docs.select(col(idCol).cast("string").as("id"),
-          col(idCol).as("__origid"), col(textCol).as("__text")), "id")
-      .localCheckpoint(true)
-
-  /** Re-base the committed ledger under the folded batch=-1 marker —
-    * the compaction step that keeps post-fold dedupe working. Returns
-    * the dir to swap in (none when there is no ledger). */
-  private def stageLedger(spark: SparkSession, path: String,
-      batches: Seq[Long], staged: String): Seq[String] =
-    if (!hasDataFiles(spark, s"$path/tombstones")) Nil
-    else {
-      writeBatch(committedRows(spark, path, "tombstones", batches)
-        .select(col("id").cast("string").as("id")).distinct(), -1L,
-        s"$staged/tombstones", all = true)
-      Seq("tombstones")
+      val key = wave.columns.head
+      val hits = wave.join(broadcast(committedRows(spark, path, "tombstones",
+        committed).select(key)), Seq(key), "left_semi").limit(1)
+      val f = familyOf(family)
+      require(hits.count() == 0,
+        if (key == "id")
+          s"${f.label} append wave $batchId re-ingests erased id " +
+            s"'${hits.collect().head.getString(0)}' — " +
+            "an id in the erased-id ledger cannot re-enter (its next " +
+            "erasure request would dedupe against the old entry and " +
+            "silently never subtract); rebuild the family if the id " +
+            "legitimately returns"
+        else
+          s"${f.label} append at $path re-ingests rows whose hashes are " +
+            "still tombstoned: the wave's +fp mark would cancel the " +
+            "erasure's −fp (the checked loader passes) while the ledger's " +
+            "anti-join keeps hiding the re-appended LIVE rows from every " +
+            s"query — run compact${f.stem} first (the fold purges the " +
+            "ledger), then append")
     }
 
   // ------------------------------- count families (wc, lm, lm3; fold-only)
@@ -3792,8 +3655,8 @@ object IndexStore {
       textCol: String, path: String, batchId: Long): Unit = {
     val spark = docs.sparkSession
     inWave(spark, family, path, "stream", batchId, "") { w =>
-      ledgerRefuseReingest(spark, path, w.committed, docs, idCol,
-        familyOf(family).label, batchId)
+      requireUnerased(spark, family, path, w.committed, batchId,
+        docs.select(col(idCol).cast("string").as("id")))
       writeCountWave(family, docs, idCol, textCol, path, batchId,
         all = false, negate = false)
     }
@@ -3808,7 +3671,15 @@ object IndexStore {
       textCol: String, path: String, batchId: Long, issuer: String): Unit = {
     val spark = docs.sparkSession
     inWave(spark, family, path, "delete", batchId, issuer) { w =>
-      val fresh = ledgerDedupe(spark, path, w.committed, docs, idCol, textCol)
+      // rows whose string-rendered id (the [[erasureAudit]] canonical
+      // form) has NO committed ledger entry, carrying the ORIGINAL id as
+      // `__origid` — xxhash64 fingerprints are type-sensitive, and the
+      // append side hashed the raw column. Checkpointed: three consumers
+      // follow (ledger write, count deltas, fingerprint).
+      val fresh = minusTombstones(spark, path, w.committed,
+          docs.select(col(idCol).cast("string").as("id"),
+            col(idCol).as("__origid"), col(textCol).as("__text")), "id")
+        .localCheckpoint(true)
       writeBatch(fresh.select("id"), w.mid, s"$path/tombstones", all = false)
       writeCountWave(family, fresh, "__origid", "__text", path, w.mid,
         all = false, negate = true)
@@ -3835,7 +3706,14 @@ object IndexStore {
     for ((dir, cnt, keys) <- countTables(family))
       writeBatch(foldCounts(spark, path, dir, batches, cnt, keys: _*), -1L,
         s"$staged/$dir", all = true)
-    val ledger = stageLedger(spark, path, batches, staged)
+    // the ledger is re-based under the folded batch=-1 marker, which keeps
+    // post-fold dedupe working
+    val ledger = if (!hasDataFiles(spark, s"$path/tombstones")) Nil else {
+      writeBatch(committedRows(spark, path, "tombstones", batches)
+        .select(col("id").cast("string").as("id")).distinct(), -1L,
+        s"$staged/tombstones", all = true)
+      Seq("tombstones")
+    }
     stageAsofFloor(spark, path, batches, staged)
     // asof_floor swaps FIRST — see compactBm25's fail-safe ordering note
     finishFold(spark, family, path, batches,
@@ -3880,10 +3758,9 @@ object IndexStore {
 
   /** [[loadWordCounts]] with the staleness guard. */
   def loadWordCountsChecked(spark: SparkSession, path: String,
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    requireFresh(spark, "wc", path)(corpusFingerprint(docs, idCol, textCol))
-    loadWordCounts(spark, path)
-  }
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    requireFresh(spark, "wc", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadWordCounts(spark, path))
 
   def compactWordCounts(spark: SparkSession, path: String): Unit =
     compactCounts(spark, "wc", path)
@@ -3925,10 +3802,9 @@ object IndexStore {
 
   /** [[loadLm]] with the staleness guard. */
   def loadLmChecked(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): graft.text.LanguageModel.BigramLm = {
-    requireFresh(spark, "lm", path)(corpusFingerprint(docs, idCol, textCol))
-    loadLm(spark, path)
-  }
+      idCol: String, textCol: String): graft.text.LanguageModel.BigramLm =
+    requireFresh(spark, "lm", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadLm(spark, path))
 
   def compactLm(spark: SparkSession, path: String): Unit =
     compactCounts(spark, "lm", path)
@@ -3962,10 +3838,9 @@ object IndexStore {
 
   /** [[loadLm3]] with the staleness guard. */
   def loadLm3Checked(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): graft.text.LanguageModel.TrigramLm = {
-    requireFresh(spark, "lm3", path)(corpusFingerprint(docs, idCol, textCol))
-    loadLm3(spark, path)
-  }
+      idCol: String, textCol: String): graft.text.LanguageModel.TrigramLm =
+    requireFresh(spark, "lm3", path)(corpusFingerprint(docs, idCol, textCol))(
+      loadLm3(spark, path))
 
   def compactLm3(spark: SparkSession, path: String): Unit =
     compactCounts(spark, "lm3", path)
@@ -4026,13 +3901,9 @@ object IndexStore {
     def complete: Boolean = m.toLong == n
     /** Rank-⌈p·m⌉ smallest value of the kept rows — exact when
       * [[complete]], else the uniform-sample estimate. */
-    def quantile(p: Double): Double = {
-      require(p > 0 && p <= 1, s"p must be in (0, 1], got $p")
-      require(m > 0, "empty quantile sample — nothing has been ingested " +
-        "(or everything was erased); rebuild or append a wave")
-      val byValue = sample.map(_._2).sorted
-      byValue(math.ceil(p * m).toInt - 1)
-    }
+    def quantile(p: Double): Double =
+      rankValue(sample, p, "empty quantile sample — nothing has been " +
+        "ingested (or everything was erased); rebuild or append a wave")
 
     /** Selectivity of `lo ≤ v < hi` as the sample fraction — the
       * planner input ([[histSelectivityFromCounts]]'s role) for a field
@@ -4050,106 +3921,6 @@ object IndexStore {
     }
   }
 
-  /** The rows a quantile wave ingests: non-null (id, value-as-double) —
-    * the bytes the fingerprint hashes on every side. */
-  private def quantileClean(rows: DataFrame, idCol: String,
-      valueCol: String): DataFrame =
-    rows.where(col(idCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(idCol).as("__id"), col(valueCol).cast("double").as("v"))
-
-  /** The ids' hash60 — the sample key and the erasure ledger's key. */
-  private def idHash(id: org.apache.spark.sql.Column) =
-    graft.functions.Text.hash60(id.cast("string"))
-
-  /** The wave's bottom-k rows + commit mark. */
-  private def writeQuantileBatch(rows: DataFrame, idCol: String,
-      valueCol: String, k: Int, path: String, batchId: Long,
-      all: Boolean): Unit = {
-    val clean = quantileClean(rows, idCol, valueCol)
-    // bounded TakeOrderedAndProject, no full sort
-    writeBatch(clean.select(idHash(col("__id")).as("h"), col("v"))
-      .orderBy("h").limit(k), batchId, s"$path/q", all)
-    writeFp(rows.sparkSession, corpusFingerprint(clean, "__id", "v"),
-      batchId, s"$path/marks", all)
-  }
-
-  /** Build and persist the quantile sample over `rows` — Overwrite = S7
-    * `--replace`. `k` trades precision for footprint: the complete regime
-    * (exact quantiles) holds while the corpus stays ≤ k rows; beyond it
-    * the rank error decays as O(1/√k). */
-  def saveQuantile(rows: DataFrame, idCol: String, valueCol: String, k: Int,
-      path: String): Unit = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = rows.sparkSession
-    import spark.implicits._
-    writeTable(Seq(k).toDF("k"), s"$path/meta")
-    dropDirs(spark, path, "tombstones")
-    writeQuantileBatch(rows, idCol, valueCol, k, path, -1L, all = true)
-  }
-
-  /** Accrete one ingest wave — ≤ k sample rows written however large the
-    * wave is. */
-  def appendBatchQuantile(rows: DataFrame, idCol: String, valueCol: String,
-      path: String, batchId: Long): Unit = {
-    val spark = rows.sparkSession
-    inWave(spark, "quantile", path, "stream", batchId, "") { w =>
-      val k = meta(spark, "quantile", path).getAs[Int]("k")
-      // hash only the rows the append would actually INGEST — a
-      // tombstoned id riding a NULL-value row contributes nothing and
-      // must not refuse the wave
-      requireNoResurrectedHashes(spark, path, w.committed,
-        quantileClean(rows, idCol, valueCol).select(idHash(col("__id")).as("h")),
-        "quantile", "compactQuantile")
-      writeQuantileBatch(rows, idCol, valueCol, k, path, batchId, all = false)
-    }
-  }
-
-  /** DELETE one wave of rows from the quantile sample — the one sketch
-    * where erasure is mathematically sound (family comment): tombstoned
-    * hashes leave the sample at load, the marks subtract (n, fp), and
-    * already-erased ids are anti-joined out first (by hash — the ledger
-    * keeps no ids). The wave must carry (id, value). */
-  def deleteBatchQuantile(deleted: DataFrame, idCol: String,
-      valueCol: String, path: String, batchId: Long): Unit = {
-    val spark = deleted.sparkSession
-    inWave(spark, "quantile", path, "delete", batchId, "") { w =>
-      val rows = minusTombstones(spark, path, w.committed,
-        quantileClean(deleted, idCol, valueCol)
-          .withColumn("h", idHash(col("__id"))), "h").localCheckpoint(true)
-      writeBatch(rows.select("h"), w.mid, s"$path/tombstones", all = false)
-      writeFp(spark, negated(corpusFingerprint(rows, "__id", "v")), w.mid,
-        s"$path/marks", all = false)
-    }
-  }
-
-  /** Fold the committed deltas into one [[QuantileSketch]] — bounded
-    * driver work: ≤ batches·k rows ever shuffle, the final take-k rides a
-    * TakeOrderedAndProject, and the collect is ≤ k rows. Order matters
-    * (family comment): merged bottom-k FIRST, erasures removed AFTER. */
-  def loadQuantile(spark: SparkSession, path: String): QuantileSketch = {
-    val k = spark.read.parquet(s"$path/meta").head().getAs[Int]("k")
-    val batches = committedOf(spark, "quantile", path)
-    // a fully-erased-then-compacted sketch has a committed marks row but
-    // NO q data files — an empty sketch is a legal state, not a
-    // schema-inference crash; quantile(p) still refuses on m = 0
-    val sample = if (!hasDataFiles(spark, s"$path/q"))
-      Array.empty[(Long, Double)]
-    else minusTombstones(spark, path, batches,
-        committedRows(spark, path, "q", batches).select("h", "v")
-          .orderBy("h").limit(k), "h")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    QuantileSketch(sample,
-      summedFp(committedRows(spark, path, "marks", batches))._1, k)
-  }
-
-  /** [[loadQuantile]] with the staleness guard. */
-  def loadQuantileChecked(spark: SparkSession, path: String,
-      corpus: DataFrame, idCol: String, valueCol: String): QuantileSketch = {
-    requireFresh(spark, "quantile", path)(corpusFingerprint(
-      quantileClean(corpus, idCol, valueCol), "__id", "v"))
-    loadQuantile(spark, path)
-  }
-
   // ---- grouped variant: per-group bottom-k — the "p95 doc length per
   // source / language" shape a curation pipeline asks constantly. The
   // same theorems apply PER GROUP (the hash is group-independent, so
@@ -4157,10 +3928,11 @@ object IndexStore {
   // group's rows): merge = per-group k-smallest-of-union = the
   // single-pass per-group bottom-k; deletion shrinks a group's sample
   // without bias. Extra layout vs the ungrouped family: q rows carry
-  // the group, and a gn/batch=N (g, n) table accretes per-group live
-  // counts (bounded by the group cardinality — capped at
-  // [[StatsMaxDistinct]] like the stats catalog, and for the same
-  // reason: "grouped" means low-cardinality dimensions, not free text).
+  // the group, meta records the group column, and a gn/batch=N (g, n)
+  // table accretes per-group live counts (bounded by the group
+  // cardinality — capped at [[StatsMaxDistinct]] like the stats catalog,
+  // and for the same reason: "grouped" means low-cardinality dimensions,
+  // not free text).
 
   /** A loaded grouped sample: per-group (h, v) rows below each group's
     * merged threshold + per-group live counts. */
@@ -4174,137 +3946,250 @@ object IndexStore {
     def complete(g: String): Boolean =
       nByGroup.get(g).contains(m(g).toLong)
     /** Rank-⌈p·m_g⌉ value of group `g`'s kept rows. */
-    def quantile(g: String, p: Double): Double = {
-      require(p > 0 && p <= 1, s"p must be in (0, 1], got $p")
-      require(m(g) > 0, s"group '$g' has no sampled rows")
-      val byValue = samples(g).map(_._2).sorted
-      byValue(math.ceil(p * m(g)).toInt - 1)
-    }
+    def quantile(g: String, p: Double): Double =
+      rankValue(samples.getOrElse(g, Array.empty), p,
+        s"group '$g' has no sampled rows")
   }
 
-  private def groupedClean(rows: DataFrame, idCol: String, groupCol: String,
-      valueCol: String): DataFrame =
-    rows.where(col(idCol).isNotNull && col(groupCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .select(col(idCol).as("__id"), col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
+  /** The one rank rule of both sketches: the rank-⌈p·m⌉ smallest value of
+    * `sample`'s m rows. */
+  private def rankValue(sample: Array[(Long, Double)], p: Double,
+      empty: => String): Double = {
+    require(p > 0 && p <= 1, s"p must be in (0, 1], got $p")
+    require(sample.nonEmpty, empty)
+    sample.map(_._2).sorted.apply(math.ceil(p * sample.length).toInt - 1)
+  }
 
-  /** (non-null count, Σ xxhash64(id, group, value)) — three columns, so
-    * a row whose GROUP moved is as stale as a changed value. */
-  private def groupedFingerprint(clean: DataFrame)
-      : (Long, java.math.BigDecimal) =
-    fingerprint(clean, xxhash64(col("__id"), col("g"), col("v")))
+  // ---- the one body of both families: `group` is the caller's group
+  // column for the grouped family (`gquantile`), None for the scalar one
 
-  /** Per-group bottom-k: a window rank (shuffle ∝ the relation, bounded
-    * output ∝ groups × k). */
-  private def groupBottomK(ghv: DataFrame, k: Int): DataFrame =
-    ghv.withColumn("__rk", row_number().over(
+  private def quantileFamily(group: Option[String]): String =
+    if (group.isEmpty) "quantile" else "gquantile"
+
+  /** The rows a quantile wave ingests: non-null (id, [group,] value) as
+    * (`__id`, [`g` as string,] `v` as double) — the bytes the fingerprint
+    * hashes on every side. */
+  private def quantileClean(rows: DataFrame, idCol: String,
+      group: Option[String], valueCol: String): DataFrame =
+    rows.where((idCol +: group.toSeq :+ valueCol).map(col(_).isNotNull)
+        .reduce(_ && _))
+      .select((col(idCol).as("__id") +:
+        group.toSeq.map(col(_).cast("string").as("g")) :+
+        col(valueCol).cast("double").as("v")): _*)
+
+  /** (rows, Σ xxhash64(id, [group,] value)) — with the group hashed, a
+    * row whose group moved is as stale as a changed value. */
+  private def quantileFp(clean: DataFrame): (Long, java.math.BigDecimal) =
+    fingerprint(clean,
+      xxhash64(Seq("__id", "g", "v").filter(clean.columns.contains).map(col): _*))
+
+  /** The ids' hash60 — the sample key and the erasure ledger's key. */
+  private def idHash(id: org.apache.spark.sql.Column) =
+    graft.functions.Text.hash60(id.cast("string"))
+
+  /** The k smallest-`h` rows, per group when the rows carry `g`: a bounded
+    * TakeOrderedAndProject (no full sort) for the scalar family, a window
+    * rank (shuffle ∝ the relation, output ∝ groups × k) for the grouped. */
+  private def bottomK(ghv: DataFrame, k: Int): DataFrame =
+    if (!ghv.columns.contains("g")) ghv.orderBy("h").limit(k)
+    else ghv.withColumn("__rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("g").orderBy("h")))
       .where(col("__rk") <= k).drop("__rk")
 
-  private def writeGroupedQuantileBatch(rows: DataFrame, idCol: String,
-      groupCol: String, valueCol: String, k: Int, path: String,
-      batchId: Long, all: Boolean): Unit = {
-    val clean = groupedClean(rows, idCol, groupCol, valueCol)
-      .localCheckpoint(true)
-    val gCounts = clean.groupBy("g").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    require(gCounts.count() <= StatsMaxDistinct,
-      s"grouped quantile sketch caps group cardinality at " +
-        s"$StatsMaxDistinct — a free-text group column would turn the " +
-        "bounded sketch into a corpus mirror; bucket or drop the column")
-    writeBatch(groupBottomK(clean.select(col("g"),
-      idHash(col("__id")).as("h"), col("v")), k), batchId, s"$path/q", all)
-    writeBatch(gCounts, batchId, s"$path/gn", all)
-    writeFp(rows.sparkSession, groupedFingerprint(clean), batchId,
-      s"$path/marks", all)
-    clean.unpersist(); gCounts.unpersist()
+  private def writeQuantileMeta(spark: SparkSession, k: Int,
+      group: Option[String], dir: String): Unit = {
+    import spark.implicits._
+    writeTable(group.fold(Seq(k).toDF("k"))(gc =>
+      Seq((k, gc)).toDF("k", "group_col")), dir)
   }
+
+  /** One wave: the bottom-k sample rows, the grouped family's per-group
+    * counts, then the commit mark; `all` = the save, which first writes
+    * the DDL and drops a previous incarnation's erasure ledger. */
+  private def writeQuantileWave(rows: DataFrame, idCol: String,
+      group: Option[String], valueCol: String, k: Int, path: String,
+      batchId: Long, all: Boolean): Unit = {
+    if (all) {
+      require(k >= 1, s"k must be >= 1, got $k")
+      writeQuantileMeta(rows.sparkSession, k, group, s"$path/meta")
+      dropDirs(rows.sparkSession, path, "tombstones")
+    }
+    val clean0 = quantileClean(rows, idCol, group, valueCol)
+    // the grouped wave reads its rows three times: sample, counts, mark
+    val clean = if (group.isEmpty) clean0 else clean0.localCheckpoint(true)
+    val gCounts = group.map { _ =>
+      val c = clean.groupBy("g").agg(count(lit(1)).as("n"))
+        .localCheckpoint(true)
+      require(c.count() <= StatsMaxDistinct,
+        s"grouped quantile sketch caps group cardinality at " +
+          s"$StatsMaxDistinct — a free-text group column would turn the " +
+          "bounded sketch into a corpus mirror; bucket or drop the column")
+      c
+    }
+    writeBatch(bottomK(clean.select((group.toSeq.map(_ => col("g")) ++
+      Seq(idHash(col("__id")).as("h"), col("v"))): _*), k), batchId,
+      s"$path/q", all)
+    gCounts.foreach(writeBatch(_, batchId, s"$path/gn", all))
+    writeFp(rows.sparkSession, quantileFp(clean), batchId, s"$path/marks", all)
+    clean.unpersist(); gCounts.foreach(_.unpersist())
+  }
+
+  private def appendQuantileBody(rows: DataFrame, idCol: String,
+      group: Option[String], valueCol: String, path: String,
+      batchId: Long): Unit = {
+    val spark = rows.sparkSession
+    val family = quantileFamily(group)
+    inWave(spark, family, path, "stream", batchId, "") { w =>
+      val k = meta(spark, family, path).getAs[Int]("k")
+      // hash only the rows the append would actually INGEST — a
+      // tombstoned id riding a NULL row contributes nothing and must not
+      // refuse the wave
+      requireUnerased(spark, family, path, w.committed, batchId,
+        quantileClean(rows, idCol, group, valueCol)
+          .select(idHash(col("__id")).as("h")))
+      writeQuantileWave(rows, idCol, group, valueCol, k, path, batchId,
+        all = false)
+    }
+  }
+
+  /** Already-erased ids are anti-joined out first (by hash — the ledger
+    * keeps no ids); then the ledger, the grouped family's negative group
+    * counts, and the negative mark. */
+  private def deleteQuantileBody(deleted: DataFrame, idCol: String,
+      group: Option[String], valueCol: String, path: String,
+      batchId: Long): Unit = {
+    val spark = deleted.sparkSession
+    inWave(spark, quantileFamily(group), path, "delete", batchId, "") { w =>
+      val rows = minusTombstones(spark, path, w.committed,
+        quantileClean(deleted, idCol, group, valueCol)
+          .withColumn("h", idHash(col("__id"))), "h").localCheckpoint(true)
+      writeBatch(rows.select("h"), w.mid, s"$path/tombstones", all = false)
+      if (group.isDefined)
+        writeBatch(rows.groupBy("g").agg((-count(lit(1))).as("n")), w.mid,
+          s"$path/gn", all = false)
+      writeFp(spark, negated(quantileFp(rows)), w.mid, s"$path/marks",
+        all = false)
+    }
+  }
+
+  /** The one load: the DDL k, the committed batches, and the sample as
+    * ([g,] h, v) rows — bounded driver work: ≤ batches·k (× groups) rows
+    * ever shuffle and the collect is ≤ k (× groups) rows. Order matters
+    * (family comment): merged bottom-k FIRST, each threshold fixed where
+    * the merge theorem holds, erasures removed AFTER. A fully-erased,
+    * then compacted sketch has committed marks but NO q data files — an
+    * empty sample is a legal state, not a schema-inference crash. */
+  private def loadQuantileBody(spark: SparkSession, family: String,
+      path: String): (Int, Seq[Long], Array[org.apache.spark.sql.Row]) = {
+    val k = spark.read.parquet(s"$path/meta").head().getAs[Int]("k")
+    val batches = committedOf(spark, family, path)
+    val cols = (if (family == "gquantile") Seq("g") else Nil) ++ Seq("h", "v")
+    val rows = if (!hasDataFiles(spark, s"$path/q"))
+      Array.empty[org.apache.spark.sql.Row]
+    else minusTombstones(spark, path, batches, bottomK(
+        committedRows(spark, path, "q", batches).select(cols.map(col): _*), k),
+        "h")
+      // the anti-join moves its key first — pin the projection
+      .select(cols.map(col): _*).collect()
+    (k, batches, rows)
+  }
+
+  /** Stage a fold's sample (and group counts) under the new DDL k, then
+    * swap it in; the erasure ledger is purged — the folded sample already
+    * excludes its rows. */
+  private def stageQuantileFold(spark: SparkSession, group: Option[String],
+      path: String, batches: Seq[Long], k: Int, q: DataFrame,
+      gn: Option[DataFrame]): Unit = {
+    val staged = s"$path/.compact"
+    writeBatch(q, -1L, s"$staged/q", all = true)
+    gn.foreach(writeBatch(_, -1L, s"$staged/gn", all = true))
+    writeQuantileMeta(spark, k, group, s"$staged/meta")
+    finishFold(spark, quantileFamily(group), path, batches,
+      "q" +: gn.map(_ => "gn").toSeq :+ "meta", Seq("tombstones"))
+  }
+
+  /** Build and persist the quantile sample over `rows` — Overwrite = S7
+    * `--replace`. `k` trades precision for footprint: the complete regime
+    * (exact quantiles) holds while the corpus stays ≤ k rows; beyond it
+    * the rank error decays as O(1/√k). */
+  def saveQuantile(rows: DataFrame, idCol: String, valueCol: String, k: Int,
+      path: String): Unit =
+    writeQuantileWave(rows, idCol, None, valueCol, k, path, -1L, all = true)
+
+  /** Accrete one ingest wave — ≤ k sample rows written however large the
+    * wave is. */
+  def appendBatchQuantile(rows: DataFrame, idCol: String, valueCol: String,
+      path: String, batchId: Long): Unit =
+    appendQuantileBody(rows, idCol, None, valueCol, path, batchId)
+
+  /** DELETE one wave of rows from the quantile sample — the one sketch
+    * where erasure is mathematically sound (family comment): tombstoned
+    * hashes leave the sample at load and the marks subtract (n, fp). The
+    * wave must carry (id, value). */
+  def deleteBatchQuantile(deleted: DataFrame, idCol: String,
+      valueCol: String, path: String, batchId: Long): Unit =
+    deleteQuantileBody(deleted, idCol, None, valueCol, path, batchId)
+
+  /** Fold the committed deltas into one [[QuantileSketch]]. */
+  def loadQuantile(spark: SparkSession, path: String): QuantileSketch = {
+    val (k, batches, rows) = loadQuantileBody(spark, "quantile", path)
+    QuantileSketch(rows.map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1),
+      summedFp(committedRows(spark, path, "marks", batches))._1, k)
+  }
+
+  /** [[loadQuantile]] with the staleness guard. */
+  def loadQuantileChecked(spark: SparkSession, path: String,
+      corpus: DataFrame, idCol: String, valueCol: String): QuantileSketch =
+    requireFresh(spark, "quantile", path)(
+      quantileFp(quantileClean(corpus, idCol, None, valueCol)))(
+      loadQuantile(spark, path))
 
   /** Build and persist the grouped sample — Overwrite = S7 `--replace`. */
   def saveGroupedQuantile(rows: DataFrame, idCol: String, groupCol: String,
-      valueCol: String, k: Int, path: String): Unit = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = rows.sparkSession
-    import spark.implicits._
-    writeTable(Seq((k, groupCol)).toDF("k", "group_col"), s"$path/meta")
-    dropDirs(spark, path, "tombstones")
-    writeGroupedQuantileBatch(rows, idCol, groupCol, valueCol, k, path,
-      -1L, all = true)
-  }
+      valueCol: String, k: Int, path: String): Unit =
+    writeQuantileWave(rows, idCol, Some(groupCol), valueCol, k, path, -1L,
+      all = true)
 
   /** Accrete one ingest wave — ≤ groups × k sample rows + ≤ groups count
     * rows written however large the wave is. */
   def appendBatchGroupedQuantile(rows: DataFrame, idCol: String,
       groupCol: String, valueCol: String, path: String,
-      batchId: Long): Unit = {
-    val spark = rows.sparkSession
-    inWave(spark, "gquantile", path, "stream", batchId, "") { w =>
-      val k = meta(spark, "gquantile", path).getAs[Int]("k")
-      // ingested rows only (groupedClean drops NULL id/group/value)
-      requireNoResurrectedHashes(spark, path, w.committed,
-        groupedClean(rows, idCol, groupCol, valueCol)
-          .select(idHash(col("__id")).as("h")),
-        "grouped-quantile", "compactGroupedQuantile")
-      writeGroupedQuantileBatch(rows, idCol, groupCol, valueCol, k, path,
-        batchId, all = false)
-    }
-  }
+      batchId: Long): Unit =
+    appendQuantileBody(rows, idCol, Some(groupCol), valueCol, path, batchId)
 
   /** DELETE one wave — [[deleteBatchQuantile]] semantics per group:
     * tombstoned hashes leave their group's sample, the group counts and
     * the fingerprint subtract, and erasure SHRINKS samples without bias. */
   def deleteBatchGroupedQuantile(deleted: DataFrame, idCol: String,
       groupCol: String, valueCol: String, path: String,
-      batchId: Long): Unit = {
-    val spark = deleted.sparkSession
-    inWave(spark, "gquantile", path, "delete", batchId, "") { w =>
-      val rows = minusTombstones(spark, path, w.committed,
-        groupedClean(deleted, idCol, groupCol, valueCol)
-          .withColumn("h", idHash(col("__id"))), "h").localCheckpoint(true)
-      writeBatch(rows.select("h"), w.mid, s"$path/tombstones", all = false)
-      writeBatch(rows.groupBy("g").agg((-count(lit(1))).as("n")), w.mid,
-        s"$path/gn", all = false)
-      writeFp(spark, negated(groupedFingerprint(rows)), w.mid,
-        s"$path/marks", all = false)
-    }
-  }
+      batchId: Long): Unit =
+    deleteQuantileBody(deleted, idCol, Some(groupCol), valueCol, path,
+      batchId)
 
-  /** Fold the committed deltas — per-group merged bottom-k FIRST (each
-    * group's threshold fixed where the merge theorem holds), tombstoned
-    * hashes out AFTER, collect bounded by groups × k. */
+  /** Fold the committed deltas into one [[GroupedQuantileSketch]]; an
+    * empty gn (everything erased, then folded) is a legal state too. */
   def loadGroupedQuantile(spark: SparkSession, path: String)
       : GroupedQuantileSketch = {
-    val k = spark.read.parquet(s"$path/meta").head().getAs[Int]("k")
-    val batches = committedOf(spark, "gquantile", path)
-    // empty q/gn (everything erased, then folded) is a legal state — the
-    // scalar family's loadQuantile guard, per directory
-    val samples = if (!hasDataFiles(spark, s"$path/q"))
-      Map.empty[String, Array[(Long, Double)]]
-    else minusTombstones(spark, path, batches, groupBottomK(
-        committedRows(spark, path, "q", batches).select("g", "h", "v"), k),
-        "h")
-      // the anti-join moves its key first — pin the projection
-      .select("g", "h", "v").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1)
-      .map { case (g, rs) => g -> rs.map(r => (r._2, r._3)).sortBy(_._1) }
+    val (k, batches, rows) = loadQuantileBody(spark, "gquantile", path)
     val nByGroup = if (!hasDataFiles(spark, s"$path/gn"))
       Map.empty[String, Long]
     else foldCounts(spark, path, "gn", batches, "n", "g").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    GroupedQuantileSketch(samples, nByGroup, k)
+    GroupedQuantileSketch(
+      rows.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1)
+        .map { case (g, rs) => g -> rs.map(r => (r._2, r._3)).sortBy(_._1) },
+      nByGroup, k)
   }
 
   /** [[loadGroupedQuantile]] with the staleness guard (the hash covers
     * (id, group, value), so a row whose group moved refuses). */
   def loadGroupedQuantileChecked(spark: SparkSession, path: String,
       corpus: DataFrame, idCol: String, groupCol: String,
-      valueCol: String): GroupedQuantileSketch = {
-    requireFresh(spark, "gquantile", path)(groupedFingerprint(
-      groupedClean(corpus, idCol, groupCol, valueCol)))
-    loadGroupedQuantile(spark, path)
-  }
+      valueCol: String): GroupedQuantileSketch =
+    requireFresh(spark, "gquantile", path)(
+      quantileFp(quantileClean(corpus, idCol, Some(groupCol), valueCol)))(
+      loadGroupedQuantile(spark, path))
 
   /** Fold every committed batch back into a single base partition — the
     * [[compactQuantile]] honesty rule applied per group, with one
@@ -4335,16 +4220,12 @@ object IndexStore {
         "survivors")
     val gc = spark.read.parquet(s"$path/meta").head()
       .getAs[String]("group_col")
-    val staged = s"$path/.compact"
     import spark.implicits._
-    writeBatch(s.samples.toSeq
-      .flatMap { case (g, rs) => rs.map { case (h, v) => (g, h, v) } }
-      .toDF("g", "h", "v"), -1L, s"$staged/q", all = true)
-    writeBatch(s.nByGroup.toSeq.toDF("g", "n"), -1L, s"$staged/gn",
-      all = true)
-    writeTable(Seq((s.k, gc)).toDF("k", "group_col"), s"$staged/meta")
-    finishFold(spark, "gquantile", path, batches, Seq("q", "gn", "meta"),
-      Seq("tombstones"))
+    stageQuantileFold(spark, Some(gc), path, batches, s.k,
+      s.samples.toSeq
+        .flatMap { case (g, rs) => rs.map { case (h, v) => (g, h, v) } }
+        .toDF("g", "h", "v"),
+      Some(s.nByGroup.toSeq.toDF("g", "n")))
   }
 
   /** Fold every committed batch back into a single base partition. The
@@ -4369,12 +4250,9 @@ object IndexStore {
         "incomplete AND every sampled row was erased, so the hash " +
         "threshold cannot re-expand and the folded k would be 0 — " +
         "rebuild with saveQuantile over the survivors")
-    val staged = s"$path/.compact"
     import spark.implicits._
-    writeBatch(s.sample.toSeq.toDF("h", "v"), -1L, s"$staged/q", all = true)
-    writeTable(Seq(newK).toDF("k"), s"$staged/meta")
-    finishFold(spark, "quantile", path, committedOf(spark, "quantile", path),
-      Seq("q", "meta"), Seq("tombstones"))
+    stageQuantileFold(spark, None, path, committedOf(spark, "quantile", path),
+      newK, s.sample.toSeq.toDF("h", "v"), None)
   }
 
   // ----------------------------------------------------- compaction advisor
